@@ -356,21 +356,13 @@ class GraftSQL(spark: SparkSession, val catalog: TableCatalog) {
         require(!viewDefs.keys.exists(_.equalsIgnoreCase(name)),
           s"CREATE TABLE $name: a session view with this name exists")
         val df = runSelect(selectBody)
-        txn match {
-          case Some(t) => t.createTable(name, df.schema); t.insert(name, df)
-          case None    =>
-            catalog.createTable(name, df.schema)
-            // create-then-insert is two steps outside a txn: a failed
-            // insert (source write error) must not leave an empty
-            // committed table behind that wedges every CTAS retry with
-            // "table already exists"
-            try catalog.insert(name, df)
-            catch {
-              case e: Throwable =>
-                try catalog.dropTable(name) catch { case _: Throwable => () }
-                throw e
-            }
-        }
+        // outside a txn, CTAS is a single-statement txn: a failed insert
+        // (source write error) leaves no table behind
+        val t = txn.getOrElse(catalog.begin())
+        try {
+          t.createTable(name, df.schema); t.insert(name, df)
+          if (txn.isEmpty) t.commit()
+        } catch { case e: Throwable => if (txn.isEmpty) t.rollback(); throw e }
         // row count from the WRITTEN table (parquet footer metadata) —
         // df.count() would re-execute the entire source query
         val n = txn.map(_.scan(name)).getOrElse(catalog.scan(name)).count()

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions.col
 
 /** Sibling-PROCESS catalog worker for the cross-process concurrency
   * stress spec: the in-JVM rootLock cannot serialize two JVMs, so the
-  * CREATE_NEW manifest-claim machinery (TableCatalog.claimPublish) is
+  * CREATE_NEW manifest-claim machinery (TableCatalog.claimVersion) is
   * the only thing standing between two processes and a lost update.
   * This main runs a batch of operations against a shared catalog root
   * and exits 0 on success — the spec forks it next to its own

@@ -42,7 +42,8 @@ class TableCatalog(spark: SparkSession, val root: String) {
 
   // One lock object per normalized root, shared by every TableCatalog
   // instance over the same directory: the conflict-check → publish
-  // window of commits and non-txn DML is check-then-act on the version
+  // window of txn commits (every DML statement) and of the one-table
+  // publishes (COMPACT, RESTORE, ALTER) is check-then-act on the version
   // pointer, so without mutual exclusion two in-process writers could
   // both pass the check and silently lose one txn's writes. Cross-
   // process writers are covered by the manifest claim (CREATE_NEW) in
@@ -976,8 +977,8 @@ class TableCatalog(spark: SparkSession, val root: String) {
     * [min,max]. Appends with monotone keys (the common ingest shape)
     * then validate against ~zero existing files instead of scanning
     * the whole table — the reference's per-row index probe, in
-    * distributed form. `existing`/`pruned` supply the snapshot (a txn
-    * passes its own view and no pruning). */
+    * distributed form. `existing`/`pruned` supply the txn's view of the
+    * snapshot (no pruning once the txn has staged dirs for the table). */
   private def validateInsert(
       m: TableMeta, name: String, batch: DataFrame,
       existing: () => DataFrame,
@@ -1052,9 +1053,9 @@ class TableCatalog(spark: SparkSession, val root: String) {
   }
 
   /** References map alone, without the full TableMeta parse — the
-    * reverse-FK scan below runs over EVERY table per DML attempt
-    * (twice: fingerprint outside the lock, re-check inside), and the
-    * schema-JSON parse is the expensive part of meta(). */
+    * reverse-FK scan below runs over EVERY table per DML statement
+    * (RESTRICT checks, then the commit's re-check under the lock), and
+    * the schema-JSON parse is the expensive part of meta(). */
   private def quickReferences(name: String): Map[String, String] = {
     val json = Files.readString(metaPath(name))
     val body = jsonObjBody(json, "references").getOrElse("")
@@ -1088,14 +1089,19 @@ class TableCatalog(spark: SparkSession, val root: String) {
 
   // ------------------------------------------- optimistic write publish
   //
-  // Non-txn DML is optimistic, not serialized: validation and parquet
-  // writes (the expensive Spark jobs) run OUTSIDE the root lock against
-  // a snapshot; the lock is held only for the fingerprint re-check +
-  // manifest claim + pointer move (file operations, microseconds). A
-  // writer that loses the race deletes its dir and RETRIES against the
-  // new state — so concurrent inserts to unrelated tables never queue
-  // behind each other's Spark jobs, and concurrent inserts to the same
-  // table each land (first-committer-wins per attempt, bounded retry).
+  // Every DML statement is a transaction, as in the reference (BEGIN,
+  // the statement, COMMIT): an autocommit INSERT/UPDATE/DELETE/MERGE is
+  // a single-statement [[Txn]] — the txn pins a snapshot, the staged
+  // verb validates and writes its data dir OUTSIDE the root lock (the
+  // expensive Spark jobs), and Txn.commit holds the lock only for the
+  // conflict checks + manifest claim + pointer move (file operations,
+  // microseconds). A commit that loses the race publishes nothing; the
+  // statement drops its staging and RETRIES on a fresh snapshot — so
+  // concurrent writers to unrelated tables never queue behind each
+  // other's Spark jobs, and concurrent writers to the same table each
+  // land (first-committer-wins per attempt, bounded retry). COMPACT and
+  // RESTORE are not DML: they keep their own fingerprint-checked
+  // publish below.
 
   // generous: under N-way same-table contention a writer expects ~N
   // lost races before landing, and each retry is cheap relative to a
@@ -1105,9 +1111,9 @@ class TableCatalog(spark: SparkSession, val root: String) {
   /** Versions of every table whose state this write's pre-publish
     * checks read: the table itself (anchored to m.version — the
     * snapshot the caller actually validated against, NOT a re-read
-    * that could silently advance past it), its FK parents (INSERT
-    * validated rows against them), and its referencing children
-    * (UPDATE/DELETE RESTRICT-checked against them). The map also
+    * that could silently advance past it), its FK parents (rows were
+    * validated against them), and its referencing children (removed
+    * keys were RESTRICT-checked against them). The map also
     * carries the root's DDL epoch: a DROP+CREATE lands the recreated
     * table back at version 0, which version numbers alone cannot
     * distinguish from the original — the epoch can. If ANY entry
@@ -1154,17 +1160,16 @@ class TableCatalog(spark: SparkSession, val root: String) {
     * would wedge the table's writes forever. */
   private val StaleClaimMs = 60000L
 
-  /** Claim version m.version+1's manifest and move the pointer. Call
-    * ONLY inside rootLock with the fingerprint verified. Returns false
-    * when another PROCESS holds a fresh claim (its publish is
-    * in-flight; the JVM lock cannot see it). */
-  private def claimPublish(name: String, m: TableMeta, dirs: Seq[String],
+  /** Claim version `base + 1`'s manifest. Call ONLY inside rootLock.
+    * Returns false when another PROCESS holds a fresh claim (its
+    * publish is in-flight; the JVM lock cannot see it). */
+  private def claimVersion(name: String, base: Int, dirs: Seq[String],
       stats: Seq[FileStat]): Boolean = {
-    val next = m.version + 1
+    val next = base + 1
     def tryClaim(): Boolean =
       try { writeManifest(name, next, dirs, stats); true }
       catch { case _: WriteConflictException => false }
-    val claimed = tryClaim() || {
+    tryClaim() || {
       // conflict: v_next's manifest already exists. It is reclaimable
       // ONLY if provably orphaned: the pointer must still be at OUR
       // base (a pointer at/past next means the manifest is a LIVE
@@ -1177,76 +1182,67 @@ class TableCatalog(spark: SparkSession, val root: String) {
       val age =
         try System.currentTimeMillis - Files.getLastModifiedTime(p).toMillis
         catch { case _: java.io.IOException => Long.MaxValue } // gone = free
-      quickVersion(name) == m.version && age >= StaleClaimMs && {
+      quickVersion(name) == base && age >= StaleClaimMs && {
         Files.deleteIfExists(p)
         tryClaim() // may still lose to a cross-process re-claim
       }
     }
-    claimed && {
-      // re-verify the pointer right before moving it: if THIS writer
-      // stalled long enough between claim and here for another process
-      // to reclaim its manifest and publish (pause > StaleClaimMs),
-      // moving the pointer now would roll it back over that commit.
-      // Abort without touching the manifest — if it is still ours it
-      // becomes a stale orphan the reclaim path self-heals later.
-      quickVersion(name) == m.version && {
-        try {
-          writeMeta(name, m.copy(version = next))
-          journalRecord(Map(name -> next))
-          true
-        }
-        catch { case scala.util.control.NonFatal(e) =>
-          // un-claim so a failed pointer move cannot wedge the table —
-          // but only while the pointer still says the claim is ours
-          if (quickVersion(name) == m.version)
-            Files.deleteIfExists(manifestPath(name, next))
-          throw e
-        }
-      }
-    }
   }
 
-  /** Append-only INSERT: writes one new data dir, no existing bytes
-    * move. Missing columns take declared defaults (or NULL). Validation
-    * + write run lock-free against a snapshot; publish re-checks the
-    * fingerprint under the lock and retries on a lost race (see the
-    * optimistic-publish note above). */
-  def insert(name: String, df: DataFrame): Int =
-    publishWithRetry(s"INSERT INTO $name") { () =>
-      val m = meta(name)
-      val fp = fkFingerprint(name, m)
-      // cache across validation + write (the Txn.update/merge pattern):
-      // the batch is often an expensive upstream plan, and without the
-      // cache the validation aggregate, the clash/FK joins and the
-      // parquet write would each re-run it from the source
-      val aligned = applyDefaults(name, m, df).cache()
-      val next = m.version + 1
-      // dir name unique per writer: two writers appending version n+1
-      // concurrently must never target the same path — the fingerprint
-      // check picks the winner, and the loser's dir is deleted below
-      val rel = s"data/delta-$next-${TableCatalog.freshSuffix()}"
+  /** Move each claimed table's pointer from `m.version` to the next
+    * version, writing `m` as its metadata. Call ONLY inside rootLock,
+    * with every claim held. Returns false, moving nothing, unless every
+    * pointer still reads its base: if THIS writer stalled long enough
+    * between claim and here for another process to reclaim its manifest
+    * and publish (pause > StaleClaimMs), moving the pointer now would
+    * roll it back over that commit. Such an abort leaves the manifests
+    * alone — one still ours becomes a stale orphan the reclaim path
+    * self-heals later. */
+  private def movePointers(claims: Seq[(String, TableMeta)]): Boolean =
+    claims.forall { case (name, m) => quickVersion(name) == m.version } && {
       try {
-        validateInsert(m, name, aligned,
-          existing = () => scan(name),
-          pruned = Some(f => scan(name, f)),
-          fkResolve = scan)
-        writeData(m, aligned, absTableDir(name).resolve(rel).toString)
-      } finally aligned.unpersist() // failed validation must not leak cache
-      val fresh = collectStats(m, name, rel)
-      val ok =
-        try rootLock.synchronized {
-          fkFingerprint(name, meta(name)) == fp &&
-            claimPublish(name, m, readManifest(name, m.version) :+ rel,
-              readStats(name, m.version) ++ fresh)
-        } catch { case scala.util.control.NonFatal(e) =>
-          // a publish that ERRORED (vs lost the race) still owns its
-          // data dir — clean it up before propagating
-          TableCatalog.deleteRecursively(absTableDir(name).resolve(rel))
-          throw e
+        claims.foreach { case (name, m) => writeMeta(name, m.copy(version = m.version + 1)) }
+        true
+      } catch { case scala.util.control.NonFatal(e) =>
+        // un-claim so a failed pointer move cannot wedge a table — but
+        // only while its pointer still says the claim is ours
+        claims.foreach { case (name, m) =>
+          if (quickVersion(name) == m.version)
+            Files.deleteIfExists(manifestPath(name, m.version + 1))
         }
-      if (ok) Some(next)
-      else { TableCatalog.deleteRecursively(absTableDir(name).resolve(rel)); None }
+        throw e
+      }
     }
+
+  /** Claim version m.version+1's manifest and move the pointer — the
+    * one-table publish of COMPACT, RESTORE, ALTER and CREATE/DROP INDEX.
+    * Call ONLY inside rootLock with the fingerprint verified. */
+  private def claimPublish(name: String, m: TableMeta, dirs: Seq[String],
+      stats: Seq[FileStat]): Boolean =
+    claimVersion(name, m.version, dirs, stats) && movePointers(Seq(name -> m)) && {
+      journalRecord(Map(name -> (m.version + 1)))
+      true
+    }
+
+  /** Autocommit DML: BEGIN, the staged [[Txn]] verb, COMMIT. A commit
+    * that loses a race publishes nothing, so the statement drops its
+    * staging and re-runs against the new snapshot (see the
+    * optimistic-publish note above). Returns the version of `name` the
+    * commit published. */
+  private def autocommit(what: String, name: String)(stage: Txn => Unit): Int =
+    publishWithRetry(what) { () =>
+      val t = register(new Txn(autocommit = true))
+      try { stage(t); Some(t.publish()(name)) }
+      catch {
+        case _: TableCatalog.CommitConflict => t.rollback(); None
+        case e: Throwable => t.rollback(); throw e
+      }
+    }
+
+  /** Append-only INSERT: writes one new data dir, no existing bytes
+    * move. Missing columns take declared defaults (or NULL). */
+  def insert(name: String, df: DataFrame): Int =
+    autocommit(s"INSERT INTO $name", name)(_.insert(name, df))
 
   /** SET keys resolved against the declared schema case-INSENSITIVELY
     * (Spark's own resolver is) — and every key must resolve: a typo'd
@@ -1276,18 +1272,7 @@ class TableCatalog(spark: SparkSession, val root: String) {
     * REFERENCED primary-key value is RESTRICT-checked like a delete of
     * the old key — otherwise child rows would be silently orphaned. */
   def update(name: String, set0: Map[String, Column], where: Column): Int =
-    publishWithRetry(s"UPDATE $name") { () =>
-      val m = meta(name)
-      val fp = fkFingerprint(name, m)
-      val set = resolveSetKeys(m, name, set0)
-      for (pk <- m.primaryKey if set.contains(pk)) {
-        val changedKeys = dmlView(name).filter(coalesce(where, lit(false)))
-          .filter(!(set(pk).cast(m.schema(pk).dataType) <=> col(pk)))
-          .select(col(pk)).distinct()
-        restrictReferenced(name, changedKeys, referencingTables(name), scan, "UPDATE")
-      }
-      rewriteAttempt(name, m, fp, updatedFrame(m, set, where, dmlView(name)))
-    }
+    autocommit(s"UPDATE $name", name)(_.update(name, set0, where))
 
   /** The exact snapshot frame an UPDATE would publish — ONE definition
     * shared by the executing path and EXPLAIN, so the explained plan is
@@ -1306,14 +1291,6 @@ class TableCatalog(spark: SparkSession, val root: String) {
   private def deletedFrame(current: DataFrame, where: Column): DataFrame =
     current.filter(!coalesce(where, lit(false)))
 
-  /** The target frame a DML predicate binds against: the current scan
-    * ALIASED with the table's name, so a predicate may qualify target
-    * columns the way standard SQL allows (`DELETE FROM t WHERE EXISTS
-    * (SELECT 1 FROM u WHERE u.k = t.k)` — the correlated outer
-    * reference `t.k` needs the alias to resolve). Alias-only: schema
-    * and rows are the scan's. */
-  private def dmlView(name: String): DataFrame = scan(name).alias(name)
-
   // ---------------------------------------------------- EXPLAIN support
   // The reference's Explain(Box<Statement>) plans ANY statement and
   // dumps the node tree without executing it (ast.rs:17,
@@ -1323,10 +1300,10 @@ class TableCatalog(spark: SparkSession, val root: String) {
   // validation, no write, no version publish.
   def explainUpdate(name: String, set0: Map[String, Column], where: Column): DataFrame = {
     val m = meta(name)
-    updatedFrame(m, resolveSetKeys(m, name, set0), where, dmlView(name))
+    updatedFrame(m, resolveSetKeys(m, name, set0), where, scan(name).alias(name))
   }
   def explainDelete(name: String, where: Column): DataFrame =
-    deletedFrame(dmlView(name), where)
+    deletedFrame(scan(name).alias(name), where)
   def explainMerge(name: String, source: DataFrame): DataFrame = {
     val m = meta(name)
     mergedFrame(m, name, source, scan(name), validate = false)
@@ -1338,45 +1315,7 @@ class TableCatalog(spark: SparkSession, val root: String) {
     * semantics: rows whose PK is still referenced by another table's
     * FK cannot be deleted. */
   def delete(name: String, where: Column): Int =
-    publishWithRetry(s"DELETE FROM $name") { () =>
-      val m = meta(name)
-      val fp = fkFingerprint(name, m)
-      for (pk <- m.primaryKey) {
-        val removedKeys = dmlView(name).filter(coalesce(where, lit(false)))
-          .select(col(pk)).distinct()
-        restrictReferenced(name, removedKeys, referencingTables(name), scan, "DELETE")
-      }
-      rewriteAttempt(name, m, fp, deletedFrame(dmlView(name), where))
-    }
-
-  /** One copy-on-write attempt: validate + write the snapshot outside
-    * the lock, publish only if the fingerprint (this table, FK parents,
-    * referencing children) is unchanged — the RESTRICT/uniqueness
-    * checks above were computed against exactly that state. None =
-    * lost the race; the caller rebuilds against the new state.
-    * `revalidate = false` skips constraint validation — only for
-    * row-preserving rewrites (compaction), where the rows already
-    * satisfied every constraint when first published. */
-  private def rewriteAttempt(name: String, m: TableMeta, fp: Map[String, Long],
-      df: DataFrame, revalidate: Boolean = true,
-      layoutOverride: Seq[String] = Nil): Option[Int] = {
-    val next = m.version + 1
-    val rel = s"data/snap-$next-${TableCatalog.freshSuffix()}"
-    try {
-      if (revalidate) validate(m, name, df.cache())
-      writeData(m, df, absTableDir(name).resolve(rel).toString, layoutOverride)
-    } finally df.unpersist() // a failed validation must not leak cache
-    val stats = collectStats(m, name, rel)
-    val ok =
-      try rootLock.synchronized {
-        fkFingerprint(name, meta(name)) == fp && claimPublish(name, m, Seq(rel), stats)
-      } catch { case scala.util.control.NonFatal(e) =>
-        TableCatalog.deleteRecursively(absTableDir(name).resolve(rel))
-        throw e
-      }
-    if (ok) Some(next)
-    else { TableCatalog.deleteRecursively(absTableDir(name).resolve(rel)); None }
-  }
+    autocommit(s"DELETE FROM $name", name)(_.delete(name, where))
 
   /** Metadata-only schema evolution, publish-atomic: the new schema
     * ships as a NEW VERSION whose manifest lists the SAME data dirs —
@@ -1449,20 +1388,14 @@ class TableCatalog(spark: SparkSession, val root: String) {
     * missing declared columns takes defaults/NULL — the INSERT
     * alignment rule); the source must be key-unique, else which copy
     * wins is undefined. All constraints revalidate on the merged
-    * snapshot; publish is the same optimistic fingerprint-checked
-    * race as UPDATE/DELETE. */
+    * snapshot. */
   def merge(name: String, source: DataFrame): Int =
-    publishWithRetry(s"MERGE INTO $name") { () =>
-      val m = meta(name)
-      val fp = fkFingerprint(name, m)
-      rewriteAttempt(name, m, fp, mergedFrame(m, name, source, scan(name)))
-    }
+    autocommit(s"MERGE INTO $name", name)(_.merge(name, source))
 
-  /** The merged (upserted) snapshot shared by [[merge]] and
-    * [[Txn.merge]]: source rows validated (key present and unique)
+  /** The merged (upserted) snapshot shared by [[Txn.merge]] and both
+    * EXPLAIN paths: source rows validated (key present and unique)
     * and aligned, current rows with matching keys dropped, source
-    * appended. ONE definition — the upsert semantics cannot drift
-    * between the staged and unstaged paths. */
+    * appended. */
   private def mergedFrame(m: TableMeta, name: String, source: DataFrame,
       current: DataFrame, validate: Boolean = true): DataFrame = {
     val pk = m.primaryKey.getOrElse(
@@ -1499,8 +1432,7 @@ class TableCatalog(spark: SparkSession, val root: String) {
     * mutation.rs). Clauses of each kind apply in statement order,
     * first-match-wins; a matched row hitting no clause survives
     * unchanged; an unmatched source row hitting no insert clause is
-    * not inserted. One copy-on-write snapshot version; the same
-    * optimistic fingerprint-checked publish as UPDATE/DELETE; RESTRICT
+    * not inserted. One copy-on-write snapshot version; RESTRICT
     * semantics when a reachable matched action removes or re-keys a
     * referenced primary key. */
   def mergeUsing(name: String, source: DataFrame, tAlias: String,
@@ -1508,14 +1440,8 @@ class TableCatalog(spark: SparkSession, val root: String) {
       matched: Seq[TableCatalog.MergeClause],
       insert: Seq[TableCatalog.InsertClause],
       bySource: Seq[TableCatalog.MergeClause] = Nil): Int =
-    publishWithRetry(s"MERGE INTO $name") { () =>
-      val m = meta(name)
-      val fp = fkFingerprint(name, m)
-      mergeUsingRestrict(m, name, scan(name), source, tAlias, sAlias,
-        cond, matched, bySource, referencingTables(name), scan)
-      rewriteAttempt(name, m, fp, mergeUsingFrame(m, name, scan(name),
-        source, tAlias, sAlias, cond, matched, insert, bySource))
-    }
+    autocommit(s"MERGE INTO $name", name)(
+      _.mergeUsing(name, source, tAlias, sAlias, cond, matched, insert, bySource))
 
   def explainMergeUsing(name: String, source: DataFrame, tAlias: String,
       sAlias: String, cond: Column,
@@ -1536,11 +1462,10 @@ class TableCatalog(spark: SparkSession, val root: String) {
     conds.take(k).foldLeft(holds(conds(k)))((acc, prev) => acc && !holds(prev))
   }
 
-  /** FK RESTRICT for the clause form, shared by the unstaged and txn
-    * paths: any reachable DELETE (or UPDATE that changes the primary
-    * key) — matched OR not-matched-by-source — removes keys other
-    * tables may reference; each clause's removed-key set is computed
-    * under its own first-match-wins gate. */
+  /** FK RESTRICT for the clause form: any reachable DELETE (or UPDATE
+    * that changes the primary key) — matched OR not-matched-by-source —
+    * removes keys other tables may reference; each clause's removed-key
+    * set is computed under its own first-match-wins gate. */
   private def mergeUsingRestrict(m: TableMeta, name: String,
       current: DataFrame, source: DataFrame, tAlias: String, sAlias: String,
       cond: Column, matched: Seq[TableCatalog.MergeClause],
@@ -1574,9 +1499,9 @@ class TableCatalog(spark: SparkSession, val root: String) {
     }
 
   /** The snapshot frame a clause-form MERGE would publish — ONE
-    * definition shared by [[mergeUsing]], [[Txn.mergeUsing]] and both
-    * EXPLAIN paths. Shape: target rows with no source match survive
-    * unchanged; each matched row takes the FIRST matched clause whose
+    * definition shared by [[Txn.mergeUsing]] and both EXPLAIN paths.
+    * Shape: target rows with no source match survive unchanged; each
+    * matched row takes the FIRST matched clause whose
     * condition holds (UPDATE projects its SET expressions over the
     * joined row; DELETE drops it; no clause matching keeps it); each
     * unmatched source row takes the first insert clause whose
@@ -1721,8 +1646,21 @@ class TableCatalog(spark: SparkSession, val root: String) {
           (base.withColumn(TableCatalog.ZCol, zOrderKey(base, m, layout)),
             Seq(TableCatalog.ZCol))
         }
-      rewriteAttempt(name, m, fp, df, revalidate = false,
-        layoutOverride = layoutCols)
+      // publish only if the fingerprint is unchanged; a lost race
+      // deletes the rewrite and retries against the new state
+      val next = m.version + 1
+      val rel = s"data/snap-$next-${TableCatalog.freshSuffix()}"
+      writeData(m, df, absTableDir(name).resolve(rel).toString, layoutCols)
+      val stats = collectStats(m, name, rel)
+      val ok =
+        try rootLock.synchronized {
+          fkFingerprint(name, meta(name)) == fp && claimPublish(name, m, Seq(rel), stats)
+        } catch { case scala.util.control.NonFatal(e) =>
+          TableCatalog.deleteRecursively(absTableDir(name).resolve(rel))
+          throw e
+        }
+      if (ok) Some(next)
+      else { TableCatalog.deleteRecursively(absTableDir(name).resolve(rel)); None }
     }
 
   /** The Morton (Z-order) sort key over `cols`: each column is rank-
@@ -2121,8 +2059,9 @@ class TableCatalog(spark: SparkSession, val root: String) {
     * txn machinery as in engine/kv.rs).
     *
     * Staged writes land in data dirs unique to this txn
-    * (`data/txn-<id>-<n>`), so two concurrent txns on the same table
-    * never write the same path — and NO manifest or version pointer is
+    * (`data/txn-<id>-<n>`; `data/stmt-<id>-<n>` for an autocommit
+    * statement's single-statement txn), so two concurrent txns on the
+    * same table never write the same path — and NO manifest or version pointer is
     * touched before commit, so staged state is invisible to readers
     * and to `asOf` time travel. A staged CREATE TABLE builds the whole
     * table inside a txn-private nested catalog (`.txn-<id>/`) and
@@ -2132,7 +2071,7 @@ class TableCatalog(spark: SparkSession, val root: String) {
     * everything first (first-committer-wins), then publishes; ROLLBACK
     * deletes all staging outright. Reads inside the txn see its own
     * writes and its own DDL. */
-  class Txn private[TableCatalog] () {
+  class Txn private[TableCatalog] (autocommit: Boolean) {
     private val txnId = java.util.UUID.randomUUID().toString.take(8)
     // per-table versions AND metadata pinned AT BEGIN, under ONE
     // rootLock acquisition: every read inside the txn — and every
@@ -2336,6 +2275,15 @@ class TableCatalog(spark: SparkSession, val root: String) {
       }
     }
 
+    /** FK-parent resolution: the txn view, except for a table not
+      * physically under this catalog's root — the outer table a staging
+      * catalog's FK names — which resolves through the catalog's own
+      * overridable scan (the staging catalog's reads through to the
+      * outer txn's view). */
+    private def fkScan(name: String): DataFrame =
+      if (createdTables.contains(name) || TableCatalog.this.exists(name)) scan(name)
+      else TableCatalog.this.scan(name)
+
     private def baseOf(name: String): Int =
       staged.get(name).map(_._1).getOrElse(snapshotVersion(name))
 
@@ -2343,9 +2291,14 @@ class TableCatalog(spark: SparkSession, val root: String) {
       staged.get(name).map(_._2)
         .getOrElse(readManifest(name, snapshotVersion(name)))
 
+    // an explicit txn stages under `data/txn-*`, which vacuum never
+    // collects (an open txn may stage for longer than any grace
+    // window); a single-statement txn publishes within its statement,
+    // so vacuum's grace window covers its staging and its dirs stay
+    // collectable once superseded
     private def freshDir(name: String): String = {
       seq += 1
-      val rel = s"data/txn-$txnId-$seq"
+      val rel = s"data/${if (autocommit) "stmt" else "txn"}-$txnId-$seq"
       createdDirs += absTableDir(name).resolve(rel)
       rel
     }
@@ -2358,13 +2311,22 @@ class TableCatalog(spark: SparkSession, val root: String) {
       val m = pinnedMetaOf(name)
       val base = baseOf(name)
       val dirs = viewDirs(name)
-      // cache across validation + write (the Txn.update/merge pattern)
+      // cache across validation + write: the batch is often an
+      // expensive upstream plan, and without the cache the validation
+      // aggregate, the clash/FK joins and the parquet write would each
+      // re-run it from the source
       val aligned = applyDefaults(name, m, df).cache()
       val rel = freshDir(name)
+      // an unwritten table's view IS its pinned manifest, whose zone
+      // maps range-prune the existing side of the key-uniqueness check;
+      // staged dirs carry no manifest yet → full-view check
+      val pruned =
+        if (staged.contains(name)) None
+        else Some((f: Column) => frameOf(m.schema,
+          resolveDirs(name, planFilesAt(name, snapshotVersion(name), f)._1)).filter(f))
       try {
-        // txn view has no manifest yet → no range pruning, full-view check
         validateInsert(m, name, aligned,
-          existing = () => scan(name), pruned = None, fkResolve = scan)
+          existing = () => scan(name), pruned = pruned, fkResolve = fkScan)
         writeData(m, aligned, absTableDir(name).resolve(rel).toString)
       } finally aligned.unpersist() // failed validation must not leak cache
       dirStats(rel) = collectStats(m, name, rel)
@@ -2373,8 +2335,12 @@ class TableCatalog(spark: SparkSession, val root: String) {
 
     /** Staged copy-on-write UPDATE: the txn view is rewritten into one
       * txn-unique snapshot dir; SET expressions see the pre-update row.
-      * PK-changing updates are RESTRICT-checked like the unstaged path,
-      * against the txn's referencing-table view. */
+      * PK-changing updates are RESTRICT-checked against the txn's
+      * referencing-table view. The target binds ALIASED with the
+      * table's name (here and in DELETE), so a predicate may qualify
+      * target columns the way standard SQL allows (`DELETE FROM t WHERE
+      * EXISTS (SELECT 1 FROM u WHERE u.k = t.k)` — the correlated outer
+      * reference `t.k` needs the alias to resolve). */
     def update(name: String, set0: Map[String, Column], where: Column): Unit = {
       open(); visible(name)
       if (createdTables.contains(name)) { stagedCat.update(name, set0, where); return }
@@ -2390,16 +2356,15 @@ class TableCatalog(spark: SparkSession, val root: String) {
       val updated = updatedFrame(m, set, where, scan(name).alias(name))
       val rel = freshDir(name)
       try {
-        validate(m, name, updated.cache(), scan)
+        validate(m, name, updated.cache(), fkScan)
         writeData(m, updated, absTableDir(name).resolve(rel).toString)
       } finally updated.unpersist() // failed validation must not leak cache
       dirStats(rel) = collectStats(m, name, rel)
       staged(name) = (base, Seq(rel))
     }
 
-    /** Staged MERGE (upsert on the primary key): same semantics as the
-      * unstaged [[TableCatalog.merge]] (shared [[mergedFrame]]),
-      * against the txn view. */
+    /** Staged MERGE (upsert on the primary key) against the txn view
+      * (shared [[mergedFrame]]). */
     def merge(name: String, source: DataFrame): Unit = {
       open(); visible(name)
       if (createdTables.contains(name)) { stagedCat.merge(name, source); return }
@@ -2408,17 +2373,16 @@ class TableCatalog(spark: SparkSession, val root: String) {
       val merged = mergedFrame(m, name, source, scan(name))
       val rel = freshDir(name)
       try {
-        validate(m, name, merged.cache(), scan)
+        validate(m, name, merged.cache(), fkScan)
         writeData(m, merged, absTableDir(name).resolve(rel).toString)
       } finally merged.unpersist()
       dirStats(rel) = collectStats(m, name, rel)
       staged(name) = (base, Seq(rel))
     }
 
-    /** Staged clause-form MERGE (USING source): same semantics as the
-      * unstaged [[TableCatalog.mergeUsing]] (shared
-      * [[mergeUsingFrame]]), against the txn view, with FK RESTRICT
-      * against the txn's referencing-table view. */
+    /** Staged clause-form MERGE (USING source) against the txn view
+      * (shared [[mergeUsingFrame]]), with FK RESTRICT against the
+      * txn's referencing-table view. */
     def mergeUsing(name: String, source: DataFrame, tAlias: String,
         sAlias: String, cond: Column,
         matched: Seq[TableCatalog.MergeClause],
@@ -2438,7 +2402,7 @@ class TableCatalog(spark: SparkSession, val root: String) {
         sAlias, cond, matched, insert, bySource)
       val rel = freshDir(name)
       try {
-        validate(m, name, merged.cache(), scan)
+        validate(m, name, merged.cache(), fkScan)
         writeData(m, merged, absTableDir(name).resolve(rel).toString)
       } finally merged.unpersist()
       dirStats(rel) = collectStats(m, name, rel)
@@ -2502,38 +2466,48 @@ class TableCatalog(spark: SparkSession, val root: String) {
       mergedFrame(m, name, source, scan(name), validate = false)
     }
 
+    /** Publish every staged write and DDL (see [[publish]]). A lost
+      * race throws an IllegalArgumentException with nothing published;
+      * call rollback() to drop the staging. */
+    def commit(): Unit = { publish(); () }
+
     /** First-committer-wins publish: conflict-check every table (writes
       * AND DDL), then publish — manifests + version pointers for
       * writes, an atomic directory move for created tables, directory
       * deletion for drops. (The reference gets multi-table atomicity
       * from its Raft log; on a filesystem each individual publish is an
-      * atomic rename.) */
-    def commit(): Unit = rootLock.synchronized {
+      * atomic rename.) Returns the version each written or created
+      * table was published at. */
+    private[TableCatalog] def publish(): Map[String, Int] = rootLock.synchronized {
       // the root lock spans conflict check AND publish: without it a
       // concurrent commit could pass the same version check (TOCTOU)
       // and both would publish base+1, silently losing one txn's writes
       open()
+      def conflictUnless(ok: Boolean, msg: => String): Unit =
+        if (!ok) throw new TableCatalog.CommitConflict(msg)
+      // any outer DDL since BEGIN (another txn's committed CREATE/DROP,
+      // or a direct one) can alias version numbers — a DROP+CREATE
+      // lands the recreated table back at its old version, which bare
+      // version comparison cannot see (and whose DROP deleted this
+      // txn's staged dirs). DDL is rare; conflict coarsely.
+      val ddlMoved = TableCatalog.ddlEpoch(root).get() != beginDdlEpoch
       staged.foreach { case (name, (base, _)) =>
-        require(currentVersion(name) == base, s"write-write conflict on $name")
+        conflictUnless(!ddlMoved && currentVersion(name) == base,
+          s"write-write conflict on $name")
       }
       // FK-relative serialization check: this txn's RESTRICT and FK
       // validations ran against the BEGIN snapshot of the staged
       // tables' parents and children. If any of those moved since —
-      // e.g. a non-txn DELETE removed a parent key this txn's staged
-      // child row references (the delete's own fingerprint cannot see
+      // e.g. another commit removed a parent key this txn's staged
+      // child row references (that commit's own checks cannot see
       // unpublished staged rows) — committing would publish a
       // referential-integrity violation. Conflict instead.
-      // any outer DDL since BEGIN (another txn's committed CREATE/DROP,
-      // or a direct one) can alias version numbers — a DROP+CREATE
-      // lands the recreated table back at its old version, which bare
-      // version comparison cannot see. DDL is rare; conflict coarsely.
-      val ddlMoved = TableCatalog.ddlEpoch(root).get() != beginDdlEpoch
       def checkRelated(owner: String, related: Set[String]): Unit =
         related.filter(TableCatalog.this.exists).foreach { t =>
           snapshot.get(t) match {
-            case Some(base) => require(!ddlMoved && currentVersion(t) == base,
+            case Some(base) => conflictUnless(!ddlMoved && currentVersion(t) == base,
               s"serialization conflict: $t (FK-related to $owner) changed since BEGIN")
-            case None => require(false,
+            case None => throw new TableCatalog.CommitConflict(
               s"serialization conflict: $t (FK-related to $owner) created since BEGIN")
           }
         }
@@ -2551,7 +2525,7 @@ class TableCatalog(spark: SparkSession, val root: String) {
           stagedCat.meta(name).references.values.toSet -- createdTables -- staged.keys)
       }
       createdTables.foreach { name =>
-        require(!TableCatalog.this.exists(name) || droppedTables.contains(name),
+        conflictUnless(!TableCatalog.this.exists(name) || droppedTables.contains(name),
           s"write-write conflict on $name: created concurrently")
       }
       droppedTables.foreach { name =>
@@ -2562,25 +2536,27 @@ class TableCatalog(spark: SparkSession, val root: String) {
         // dropTable (which would leave a half-published txn)
         val refs = referencingTables(name).map(_._1)
           .filterNot(droppedTables.contains).distinct
-        require(refs.isEmpty,
+        conflictUnless(refs.isEmpty,
           s"DROP TABLE $name conflict: now referenced by ${refs.mkString(", ")}")
       }
       // claim phase: create every staged table's next manifest
-      // (atomic CREATE_NEW — the cross-process conflict gate) BEFORE
-      // any version pointer moves. A lost claim un-claims what this
-      // commit already created and aborts with nothing published.
-      val claims = scala.collection.mutable.ArrayBuffer[(String, TableMeta, Int)]()
+      // (atomic CREATE_NEW — the cross-process conflict gate, with a
+      // dead writer's stale claim reclaimed) BEFORE any version pointer
+      // moves. A lost claim un-claims what this commit already created
+      // and aborts with nothing published.
+      val claims = scala.collection.mutable.ArrayBuffer[(String, TableMeta)]()
       try {
         staged.foreach { case (name, (_, dirs)) =>
           val m = meta(name)
-          val next = m.version + 1
           // index stats: inherit entries for dirs the new version keeps,
           // add the stats collected for this txn's own dirs
+          val kept = dirs.toSet
           val inherited = readStats(name, m.version)
-            .filter(st => dirs.exists(d => st.path.startsWith(d + "/")))
+            .filter(st => kept(st.path.take(st.path.lastIndexOf('/'))))
           val fresh = dirs.flatMap(d => dirStats.getOrElse(d, Nil))
-          writeManifest(name, next, dirs, inherited ++ fresh)
-          claims += ((name, m, next))
+          conflictUnless(claimVersion(name, m.version, dirs, inherited ++ fresh),
+            s"write-write conflict on $name: version ${m.version + 1} claimed by another writer")
+          claims += (name -> m)
         }
       } catch {
         // ANY failure mid-claim (conflict, IO error, manifest parse
@@ -2588,8 +2564,8 @@ class TableCatalog(spark: SparkSession, val root: String) {
         // created — a surviving orphan claim would wedge that table's
         // writes until the stale-claim reclaim kicks in
         case scala.util.control.NonFatal(e) =>
-          claims.foreach { case (name, _, next) =>
-            Files.deleteIfExists(manifestPath(name, next)) }
+          claims.foreach { case (name, m) =>
+            Files.deleteIfExists(manifestPath(name, m.version + 1)) }
           throw e
       }
       // point of no return: from here staged dirs become referenced by
@@ -2599,8 +2575,10 @@ class TableCatalog(spark: SparkSession, val root: String) {
       // rollback's.
       val cleanupCandidates = createdDirs.toList
       createdDirs.clear()
-      claims.foreach { case (name, m, next) =>
-        writeMeta(name, m.copy(version = next))
+      if (!movePointers(claims.toSeq)) {
+        createdDirs ++= cleanupCandidates // nothing moved: rollback may delete
+        throw new TableCatalog.CommitConflict(
+          s"write-write conflict on ${claims.map(_._1).mkString(", ")}")
       }
       droppedTables.foreach(n => TableCatalog.this.dropTableImpl(n, journal = false))
       createdTables.foreach { name =>
@@ -2611,12 +2589,11 @@ class TableCatalog(spark: SparkSession, val root: String) {
       // created table (at the version its staging reached) and drop
       // becomes visible at one global version — the multi-table
       // atomicity the reference gets from its Raft log
-      journalRecord(
-        claims.map { case (name, _, next) => name -> next }.toMap ++
-          createdTables.map(n => n -> TableCatalog.this.quickVersion(n)).toMap,
-        droppedTables.toSeq)
-      // published DDL invalidates in-flight optimistic fingerprints
-      // exactly like direct createTable/dropTable would
+      val published = claims.map { case (name, m) => name -> (m.version + 1) }.toMap ++
+        createdTables.map(n => n -> TableCatalog.this.quickVersion(n)).toMap
+      journalRecord(published, droppedTables.toSeq)
+      // published DDL moves the epoch in-flight commits and
+      // fingerprints check, exactly like direct createTable/dropTable
       if (createdTables.nonEmpty) TableCatalog.ddlEpoch(root).incrementAndGet()
       closed = true
       // staged dirs replaced mid-txn (e.g. insert then update) are
@@ -2629,6 +2606,7 @@ class TableCatalog(spark: SparkSession, val root: String) {
       TableCatalog.releaseLock(Paths.get(root, s".txn-$txnId").toString)
       dropPin()
       activeTxns.remove(this)
+      published
     }
 
     /** Abandon all staged state: staged dirs and the txn-private
@@ -2689,11 +2667,9 @@ class TableCatalog(spark: SparkSession, val root: String) {
   private def pinnedByOpenTxns(name: String): Set[Int] =
     activeTxns.asScala.flatMap(_.pinnedVersion(name)).toSet ++ pinnedByPinFiles(name)
 
-  def begin(): Txn = {
-    val t = new Txn()
-    activeTxns.add(t)
-    t
-  }
+  def begin(): Txn = register(new Txn(autocommit = false))
+
+  private def register(t: Txn): Txn = { activeTxns.add(t); t }
 }
 
 object TableCatalog {
@@ -2702,6 +2678,13 @@ object TableCatalog {
     * statement) aborted with nothing published; retry against the new
     * current version. */
   class WriteConflictException(msg: String) extends IllegalStateException(msg)
+
+  /** A COMMIT lost a first-committer-wins race (write-write,
+    * FK-relative or DDL) and published nothing. An
+    * IllegalArgumentException, as an explicit COMMIT's conflict always
+    * was; autocommit DML retries on it. */
+  private[sources] final class CommitConflict(msg: String)
+    extends IllegalArgumentException(msg)
 
   /** The WHEN MATCHED action of a clause-form MERGE (USING source). */
   sealed trait MergeAction
@@ -2797,11 +2780,16 @@ object TableCatalog {
   // (Txn.heartbeatTask): one thread serves every catalog in the JVM;
   // daemon, so it never blocks JVM exit. The period is configurable
   // for tests via -Dgraft.pin.heartbeat.ms (default: a quarter of the
-  // 1 h pin staleness window).
-  private lazy val pinScheduler =
-    java.util.concurrent.Executors.newSingleThreadScheduledExecutor { r =>
+  // 1 h pin staleness window). Cancelled tasks leave the queue at once:
+  // every DML statement opens (and closes) a txn, and a cancelled task
+  // waiting out its period would keep its Txn reachable until then.
+  private lazy val pinScheduler = {
+    val s = new java.util.concurrent.ScheduledThreadPoolExecutor(1, { (r: Runnable) =>
       val t = new Thread(r, "graft-pin-heartbeat"); t.setDaemon(true); t
-    }
+    })
+    s.setRemoveOnCancelPolicy(true)
+    s
+  }
 
   /** How long an open txn may sit with NO operation before its daemon
     * stops refreshing the pin (it then goes stale after PinStaleMs and

@@ -1152,6 +1152,84 @@ class CatalogSpec extends AnyFunSuite {
     assert(cat.scan("t").count() == 2)
   }
 
+  test("an explicit txn commits over a STALE orphan claim, not a wedge") {
+    val cat = freshCatalog()
+    cat.createTable("t", schema)
+    cat.insert("t", Seq((1L, "a", 0.0)).toDF("id", "name", "balance"))
+    // a crashed writer's claim on v2, minutes old, with no pointer move
+    val claim = java.nio.file.Paths.get(cat.root, "t", "versions", "v2.json")
+    java.nio.file.Files.writeString(claim, """{"dirs": [], "stats": []}""")
+    java.nio.file.Files.setLastModifiedTime(claim,
+      java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis - 120000L))
+    val t = cat.begin()
+    t.insert("t", Seq((2L, "b", 0.0)).toDF("id", "name", "balance"))
+    t.commit()
+    assert(cat.currentVersion("t") == 2)
+    assert(cat.scan("t").count() == 2)
+  }
+
+  test("commit conflicts when its written table was dropped and recreated since BEGIN") {
+    val cat = freshCatalog()
+    cat.createTable("t", schema)
+    val t = cat.begin()
+    t.insert("t", Seq((1L, "a", 0.0)).toDF("id", "name", "balance"))
+    // the recreated table is back at version 0 — the txn's base — and
+    // the DROP deleted the txn's staged dir
+    cat.dropTable("t")
+    cat.createTable("t", schema)
+    intercept[IllegalArgumentException] { t.commit() }
+    t.rollback()
+    assert(cat.currentVersion("t") == 0)
+    assert(cat.scan("t").count() == 0)
+  }
+
+  test("no lost update: explicit UPDATE txns beside concurrent autocommit INSERT/MERGE on one table") {
+    val cat = freshCatalog()
+    cat.createTable("t", schema, primaryKey = Some("id"))
+    cat.insert("t", Seq((0L, "counter", 0.0)).toDF("id", "name", "balance")) // v1
+    val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val commits = new java.util.concurrent.atomic.AtomicInteger()
+    val conflicts = new java.util.concurrent.atomic.AtomicInteger()
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val auto = new Thread(() => {
+      start.await()
+      (1 to 3).foreach { i =>
+        try {
+          cat.insert("t", Seq((i.toLong, s"ins$i", 0.0)).toDF("id", "name", "balance"))
+          // copy-on-write: a merge built on a stale snapshot would drop
+          // a concurrently committed increment
+          cat.merge("t", Seq((100L + i, s"m$i", 0.0)).toDF("id", "name", "balance"))
+        } catch { case e: Throwable => errs.add(e) }
+      }
+    })
+    val explicit = new Thread(() => {
+      start.await()
+      (1 to 4).foreach { _ =>
+        val t = cat.begin()
+        try {
+          t.update("t", Map("balance" -> (col("balance") + 1.0)), col("id") === 0L)
+          t.commit()
+          commits.incrementAndGet()
+        } catch {
+          case e: IllegalArgumentException if e.getMessage.contains("conflict") =>
+            t.rollback(); conflicts.incrementAndGet()
+          case e: Throwable => t.rollback(); errs.add(e)
+        }
+      }
+    })
+    Seq(auto, explicit).foreach(_.start()); start.countDown()
+    Seq(auto, explicit).foreach(_.join())
+    assert(errs.isEmpty, s"unexpected failures: ${errs.asScala.map(_.getMessage)}")
+    assert(commits.get + conflicts.get == 4)
+    val rows = cat.scan("t").collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
+    // every autocommit statement landed ...
+    assert(rows.keySet == Set(0L, 1L, 2L, 3L, 101L, 102L, 103L), rows)
+    // ... and so did every acknowledged explicit increment
+    assert(rows(0L) == commits.get.toDouble, s"$rows after ${commits.get} commits")
+    // one version per publish: the seed insert, 6 statements, each commit
+    assert(cat.currentVersion("t") == 1 + 6 + commits.get)
+  }
+
   test("UNIQUE permits multiple NULLs, and later UPDATE/DELETE still revalidate cleanly") {
     val cat = freshCatalog()
     cat.createTable("u", StructType(Seq(

@@ -1073,6 +1073,27 @@ class GraftSQLSpec extends AnyFunSuite {
     assert(g2.execute("SELECT count(*) AS n FROM derived").collect()(0).getLong(0) == 3)
   }
 
+  test("CTAS outside a txn is one statement: a failing SELECT leaves no table, a retry lands") {
+    val g = session()
+    g.execute("CREATE TABLE csrc (id INTEGER PRIMARY KEY, v INTEGER)")
+    g.execute("INSERT INTO csrc VALUES (1, 10), (2, 20), (3, 30)")
+    // the SELECT plans fine and fails only while the rows are written
+    intercept[Exception] {
+      g.execute("CREATE TABLE cdst AS SELECT id, " +
+        "CASE WHEN v > 20 THEN raise_error('boom') ELSE v END AS v FROM csrc")
+    }
+    assert(!g.catalog.exists("cdst"), "a failed CTAS must not leave its table")
+    g.execute("CREATE TABLE cdst AS SELECT id, v FROM csrc")
+    assert(g.execute("SELECT count(*) AS n FROM cdst").collect()(0).getLong(0) == 3)
+    val leftovers = java.nio.file.Files.list(java.nio.file.Paths.get(g.catalog.root))
+    try {
+      import scala.jdk.CollectionConverters._
+      val stray = leftovers.iterator().asScala
+        .map(_.getFileName.toString).filter(_.startsWith(".txn-")).toList
+      assert(stray.isEmpty, s"leaked staging: $stray")
+    } finally leftovers.close()
+  }
+
   test("MERGE INTO upserts through SQL text, inside and outside a txn") {
     val g = session()
     g.execute("CREATE TABLE kv (id INTEGER PRIMARY KEY, v STRING)")
