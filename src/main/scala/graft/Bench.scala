@@ -79,7 +79,7 @@ object Bench {
     // must stay as small as possible for tail-capture parsers. -1
     // (failed query) prints as -1.0, never a deceptively fast success.
     def fmt(v: Double): String =
-      if (v < 0) "-1.0" else f"$v%.3f"
+      if (v < 0) "-1.0" else "%.3f".formatLocal(java.util.Locale.ROOT, v)
     val qs = results.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
       .mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum

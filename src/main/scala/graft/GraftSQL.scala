@@ -405,7 +405,7 @@ class GraftSQL(spark: SparkSession, val catalog: TableCatalog) {
           case Some(t) => t.insert(name, df)
           case None    => catalog.insert(name, df)
         }
-        Seq(s"INSERT ${df.count()}").toDF("status")
+        Seq(s"INSERT ${valuesRowCount(df)}").toDF("status")
 
       case mergeUsingRe(name, tAlias, rest) =>
         require(!readOnly, "read-only transaction")
@@ -433,7 +433,7 @@ class GraftSQL(spark: SparkSession, val catalog: TableCatalog) {
           case Some(t) => t.merge(name, df)
           case None    => catalog.merge(name, df)
         }
-        Seq(s"MERGE ${df.count()}").toDF("status")
+        Seq(s"MERGE ${valuesRowCount(df)}").toDF("status")
 
       case updateRe(name, body) =>
         require(!readOnly, "read-only transaction")
@@ -542,6 +542,15 @@ class GraftSQL(spark: SparkSession, val catalog: TableCatalog) {
       .collect { case (_, vs) if vs.size > 1 => vs.head }
     require(dups.isEmpty, s"$what: duplicate column(s) ${dups.mkString(", ")}")
   }
+
+  /** Rows of a `VALUES` frame, read driver-side from its analyzed
+    * inline table — the tuples are already parsed, so counting them
+    * needs no Spark job. Any other plan shape is counted by a job. */
+  private def valuesRowCount(df: DataFrame): Long =
+    df.queryExecution.analyzed.collectFirst {
+      case t: org.apache.spark.sql.catalyst.analysis.ResolvedInlineTable => t.rows.size.toLong
+      case r: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => r.data.size.toLong
+    }.getOrElse(df.count())
 
   private def alignCols(raw: DataFrame, colList: String, name: String,
       verb: String, defaultToOwnColumns: Boolean = false): DataFrame = {

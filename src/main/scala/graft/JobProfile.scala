@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler._
-import scala.collection.mutable
 
 /** Per-job profile of one declared query (optimization-round dev tool):
   * runs `<query>` once against `<sfDir>` through the bench's noop sink
@@ -18,8 +17,9 @@ object JobProfile {
     GraftSession.prepare(spark)
     sources.Tables.lineitem(spark, sfDir).groupBy("l_returnflag").count().collect()
 
-    val starts = mutable.Map.empty[Int, (Long, String)]
-    val lines = mutable.ArrayBuffer.empty[String]
+    // written on the listener-bus thread, read and cleared on this one
+    val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
+    val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val listener = new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit = {
         // the final stage's name carries the action's call site — the
@@ -27,11 +27,12 @@ object JobProfile {
         val site = j.stageInfos.lastOption.map(_.name).getOrElse("")
         val desc = Option(j.properties.getProperty("spark.job.description"))
           .filter(_.nonEmpty).getOrElse(site)
-        starts(j.jobId) = (System.nanoTime(), desc)
+        starts.put(j.jobId, (System.nanoTime(), desc))
       }
       override def onJobEnd(j: SparkListenerJobEnd): Unit =
-        starts.remove(j.jobId).foreach { case (t0, desc) =>
-          lines += f"  job ${j.jobId}%4d ${(System.nanoTime() - t0) / 1e9}%7.3f s  $desc"
+        Option(starts.remove(j.jobId)).foreach { case (t0, desc) =>
+          lines.add("  job %4d %7.3f s  %s".formatLocal(java.util.Locale.ROOT,
+            j.jobId, (System.nanoTime() - t0) / 1e9, desc))
         }
     }
     val fn = SparkEntry.queries(name)
@@ -47,10 +48,11 @@ object JobProfile {
       // a fixed sleep silently dropped lines whenever the bus ran behind
       Thread.sleep(50) // let queued start events land first
       val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-      while (starts.nonEmpty && System.nanoTime() < deadline) Thread.sleep(20)
+      while (!starts.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
       spark.sparkContext.removeSparkListener(listener)
-      println(f"== $name run $r: $total%.3f s, ${lines.size} jobs")
-      lines.foreach(println)
+      println("== %s run %d: %.3f s, %d jobs".formatLocal(java.util.Locale.ROOT,
+        name, r, total, lines.size))
+      lines.forEach(println(_))
     }
     operators.FrameCache.clear()
     spark.stop()

@@ -53,45 +53,73 @@ object GraftColumnBridge {
 
   /** `(column, comparator, literal-as-string, literal-is-string)` for
     * every top-level AND conjunct of an UNANALYZED Column that has the
-    * shape `col <op> literal` (either side), with the comparator
-    * normalized to the column-on-the-left direction. The is-string
-    * flag carries the literal's RUNTIME type to the pruning layer: a
-    * numeric literal compared against a string column evaluates
-    * NUMERICALLY in Spark (the string side is coerced), so byte-order
-    * stats pruning would be unsound for it — the consumer must skip
-    * those. A freshly built Column holds sql-api ColumnNodes
-    * (operators are UnresolvedFunction nodes), and those node classes
-    * are private[sql] — hence this bridge. Used by the catalog's
-    * manifest-stats index pruning. */
+    * shape `col <op> literal` (either side) or `col BETWEEN lo AND hi`
+    * (two conjuncts), with the comparator normalized to the
+    * column-on-the-left direction. The is-string flag carries the
+    * literal's RUNTIME type to the pruning layer: a numeric literal
+    * compared against a string column evaluates NUMERICALLY in Spark
+    * (the string side is coerced), so byte-order stats pruning would be
+    * unsound for it — the consumer must skip those.
+    *
+    * Any Column is first converted to its Catalyst expression (eagerly:
+    * `expression(c)` would only wrap the node for the analyzer), so the
+    * two ways a predicate reaches the catalog read the same: the
+    * Column-API form (`col(k) >= lit(3)`, whose operators convert to
+    * `UnresolvedFunction` nodes) and SQL text parsed by the session
+    * parser (`k BETWEEN 3 AND 9`, whose comparators arrive as Catalyst
+    * comparison nodes wrapped in an expression node). The literal side
+    * may be any deterministic foldable expression (`-5`, `2 * 3`).
+    * Used by the catalog's manifest-stats index pruning. */
   def rangeConjuncts(c: Column): Seq[(String, String, String, Boolean)] = {
-    import org.apache.spark.sql.internal.{ColumnNode, UnresolvedAttribute, UnresolvedFunction, Literal => LitNode}
-    def conjuncts(n: ColumnNode): Seq[ColumnNode] = n match {
-      case f: UnresolvedFunction if f.functionName.equalsIgnoreCase("and") =>
-        f.arguments.flatMap(conjuncts)
-      case other => Seq(other)
+    import org.apache.spark.sql.catalyst.CatalystTypeConverters
+    import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedFunction}
+    import org.apache.spark.sql.catalyst.expressions._
+    def fn(f: UnresolvedFunction, name: String, arity: Int): Boolean =
+      f.nameParts.length == 1 && f.nameParts.head.equalsIgnoreCase(name) &&
+        f.arguments.length == arity && !f.isDistinct
+    // (lhs, comparator, rhs) triples: AND splits, BETWEEN expands to
+    // its two bounds, anything else is not a range and contributes none
+    def conjuncts(e: Expression): Seq[(Expression, String, Expression)] = e match {
+      case And(l, r) => conjuncts(l) ++ conjuncts(r)
+      case f: UnresolvedFunction if fn(f, "and", 2) => f.arguments.flatMap(conjuncts)
+      case f: UnresolvedFunction if fn(f, "between", 3) =>
+        Seq((f.arguments(0), ">=", f.arguments(1)), (f.arguments(0), "<=", f.arguments(2)))
+      case EqualTo(x, y)            => Seq((x, "=", y))
+      case GreaterThan(x, y)        => Seq((x, ">", y))
+      case GreaterThanOrEqual(x, y) => Seq((x, ">=", y))
+      case LessThan(x, y)           => Seq((x, "<", y))
+      case LessThanOrEqual(x, y)    => Seq((x, "<=", y))
+      case f: UnresolvedFunction
+          if Seq("=", "==", ">", ">=", "<", "<=").exists(fn(f, _, 2)) =>
+        Seq((f.arguments(0), f.nameParts.head, f.arguments(1)))
+      case _ => Nil
     }
-    def attr(n: ColumnNode): Option[String] = n match {
-      case a: UnresolvedAttribute => Some(a.nameParts.mkString("."))
+    // a single-part name only: a qualified `t.c` could name another
+    // relation's column inside the predicate
+    def attr(e: Expression): Option[String] = e match {
+      case a: UnresolvedAttribute if a.nameParts.length == 1 => Some(a.nameParts.head)
       case _ => None
     }
-    def litStr(n: ColumnNode): Option[(String, Boolean)] = n match {
-      case l: LitNode if l.value != null =>
-        Some((l.value.toString, l.value.isInstanceOf[String]))
-      case _ => None
-    }
+    // the folded literal converted back to its external Scala form, so
+    // a string literal is told apart from a numeric one; a collated
+    // string literal compares under its collation, not byte order
+    def litStr(e: Expression): Option[(String, Boolean)] =
+      if (!e.deterministic || !e.foldable) None
+      else try e.dataType match {
+        case st: types.StringType if st != types.StringType => None
+        case dt => Option(e.eval(null)).map(v =>
+          (CatalystTypeConverters.convertToScala(v, dt).toString, dt == types.StringType))
+      } catch { case scala.util.control.NonFatal(_) => None }
     def flip(op: String): String = op match {
       case ">" => "<"; case ">=" => "<="; case "<" => ">"; case "<=" => ">="
       case other => other
     }
-    conjuncts(c.node).flatMap {
-      case f: UnresolvedFunction if f.arguments.length == 2 =>
-        val Seq(x, y) = f.arguments
-        (attr(x), litStr(y), attr(y), litStr(x)) match {
-          case (Some(cn), Some((v, s)), _, _) => Some((cn, f.functionName, v, s))
-          case (_, _, Some(cn), Some((v, s))) => Some((cn, flip(f.functionName), v, s))
-          case _ => None
-        }
-      case _ => None
+    conjuncts(classic.ColumnNodeToExpressionConverter(c.node)).flatMap { case (x, op, y) =>
+      (attr(x), litStr(y), attr(y), litStr(x)) match {
+        case (Some(cn), Some((v, s)), _, _) => Some((cn, op, v, s))
+        case (_, _, Some(cn), Some((v, s))) => Some((cn, flip(op), v, s))
+        case _ => None
+      }
     }
   }
 }

@@ -377,27 +377,29 @@ class TableCatalog(spark: SparkSession, val root: String) {
     }
   }
 
-  /** Row count of one immutable data dir from its parquet FOOTERS —
-    * pure metadata reads, never a Spark job. Cached per (table, dir):
-    * copy-on-write dirs never change after publish. */
+  /** Row count of one immutable manifest entry — a data dir, or a
+    * single file of one — from its parquet FOOTERS: pure metadata
+    * reads, never a Spark job. Cached per (table, entry): copy-on-write
+    * files never change after publish. */
   private val dirRowsCache = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
   private def dirRowCount(name: String, rel: String): Long = {
     val key = s"$name|$rel"
     val cached = dirRowsCache.get(key)
     if (cached != null) return cached
     val abs = absTableDir(name).resolve(rel)
+    val files =
+      if (Files.isDirectory(abs)) {
+        val listing = Files.list(abs)
+        try listing.iterator().asScala.toList finally listing.close()
+      } else if (Files.isRegularFile(abs)) List(abs)
+      else Nil
     var total = 0L
-    if (Files.isDirectory(abs)) {
-      val conf = spark.sessionState.newHadoopConf() // one clone per dir, not per file
-      val listing = Files.list(abs)
-      try listing.iterator().asScala.foreach { p =>
-        if (p.getFileName.toString.endsWith(".parquet")) {
-          val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-            new org.apache.hadoop.fs.Path(p.toUri), conf)
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-          try total += r.getRecordCount finally r.close()
-        }
-      } finally listing.close()
+    val conf = spark.sessionState.newHadoopConf() // one clone per entry, not per file
+    files.filter(_.getFileName.toString.endsWith(".parquet")).foreach { p =>
+      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(p.toUri), conf)
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+      try total += r.getRecordCount finally r.close()
     }
     dirRowsCache.put(key, total)
     total
@@ -692,8 +694,10 @@ class TableCatalog(spark: SparkSession, val root: String) {
 
   /** Scan the current snapshot. */
   /** Version history still on disk (DESCRIBE HISTORY, minimal form):
-    * one row per retained manifest — version, how many data dirs its
-    * snapshot comprises, row count, and whether it is current.
+    * one row per retained manifest — version, how many manifest
+    * entries its snapshot comprises (`n_dirs`: a data dir, or a single
+    * file of one that a pruned copy-on-write DML left untouched while
+    * rewriting its siblings), row count, and whether it is current.
     * Vacuumed versions disappear from the listing, exactly as they do
     * from time travel. Cost: a PURE FILE LISTING — row counts were
     * recorded in each manifest at publish time (the Iceberg/Delta
@@ -775,11 +779,18 @@ class TableCatalog(spark: SparkSession, val root: String) {
     * manifest stores its own zone maps, so time-travel / READ ONLY
     * reads prune exactly like current ones (the read schema is the
     * current one, matching [[asOf]]'s contract). */
-  def planFilesAt(name: String, version: Int, filter: Column): (Seq[String], Seq[String]) = {
-    val m = meta(name)
-    val dirs = readManifest(name, version)
-    val stats = readStats(name, version)
-    if (stats.isEmpty) return (dirs, dirs)
+  def planFilesAt(name: String, version: Int, filter: Column): (Seq[String], Seq[String]) =
+    pruneFiles(meta(name), name, readManifest(name, version), readStats(name, version), filter)
+
+  /** The zone-map pruning behind [[planFilesAt]], over any manifest
+    * view — a published version's entries and stats, or a [[Txn]]'s
+    * view with its staged dirs — so reads and copy-on-write DML pick
+    * their files by ONE rule. Entries are dirs or single files; returns
+    * (kept file paths, every file path), both table-relative. With no
+    * stats at all the entries themselves come back, unexpanded. */
+  private def pruneFiles(m: TableMeta, name: String, entries: Seq[String],
+      stats: Seq[FileStat], filter: Column): (Seq[String], Seq[String]) = {
+    if (stats.isEmpty) return (entries, entries)
     // universe: the ACTUAL parquet files on disk per dir (a driver-side
     // listing — what Spark's scan planning does anyway), never the
     // stats list: a dir whose stats cover only some files (older
@@ -793,19 +804,20 @@ class TableCatalog(spark: SparkSession, val root: String) {
         .map(p => d + "/" + p.getFileName.toString).toSeq
       finally listing.close()
     }
-    val allPaths = dirs.flatMap(expand)
+    val allPaths = entries.flatMap(expand)
     // prune on ANY numeric/string column — the manifest carries zone
     // maps for all of them since they're free at publish (footer
     // reads); an INDEX adds the sorted/clustered layout that makes
     // ranges selective, not the eligibility. Timestamp literals arrive
     // as epoch micros but stats as formatted strings — those columns
     // still get the sorted layout + parquet row-group stats when
-    // indexed, just no manifest pruning.
+    // indexed, just no manifest pruning. Column names resolve
+    // case-insensitively, as the analyzer resolves the predicate.
     val ranges = extractRanges(filter)
       .flatMap { case (c: String, (lo, hi)) =>
-        m.schema.fields.find(_.name == c).map(_.dataType) match {
+        m.schema.fields.find(_.name.equalsIgnoreCase(c)) match {
           case None => None
-          case Some(dt) => dt match {
+          case Some(f) => f.dataType match {
           // numeric columns: prune only on NUMERIC literals — both
           // sides then compare via BigDecimal in cmpTyped, exactly as
           // the query does. A STRING literal is excluded: Spark
@@ -814,14 +826,14 @@ class TableCatalog(spark: SparkSession, val root: String) {
           // rows an exact BigDecimal comparison would prune.
           case _: org.apache.spark.sql.types.NumericType =>
             val (l, h) = (lo.filterNot(_.isString), hi.filterNot(_.isString))
-            if (l.isEmpty && h.isEmpty) None else Some(c -> (l, h))
+            if (l.isEmpty && h.isEmpty) None else Some(f.name -> (l, h))
           // string columns: prune ONLY on string literals. Spark
           // evaluates `stringcol > 100` by coercing the COLUMN to a
           // number, so byte-order stats comparison against "100" would
           // prune files whose matching rows sort differently as text.
           case org.apache.spark.sql.types.StringType =>
             val (l, h) = (lo.filter(_.isString), hi.filter(_.isString))
-            if (l.isEmpty && h.isEmpty) None else Some(c -> (l, h))
+            if (l.isEmpty && h.isEmpty) None else Some(f.name -> (l, h))
           case _ => None
           }
         }
@@ -849,6 +861,20 @@ class TableCatalog(spark: SparkSession, val root: String) {
     }
     (kept, allPaths)
   }
+
+  /** The stats of `all` that describe files a manifest view keeps:
+    * a stat's path is itself a kept (file) entry, or lies in a kept dir. */
+  private def statsFor(entries: Seq[String], all: Seq[FileStat]): Seq[FileStat] = {
+    val kept = entries.toSet
+    all.filter(st => kept(st.path) || kept(st.path.take(st.path.lastIndexOf('/'))))
+  }
+
+  /** Data dirs (absolute) a manifest view references: a dir entry
+    * itself, a file entry through its parent dir. */
+  private def liveDirs(name: String, entries: Seq[String]): Set[Path] =
+    entries.map(r => absTableDir(name).resolve(r).normalize).flatMap { p =>
+      if (p.getFileName.toString.endsWith(".parquet")) Seq(p, p.getParent) else Seq(p)
+    }.toSet
 
   private case class Bound(value: String, inclusive: Boolean, isString: Boolean)
 
@@ -978,11 +1004,11 @@ class TableCatalog(spark: SparkSession, val root: String) {
     * then validate against ~zero existing files instead of scanning
     * the whole table — the reference's per-row index probe, in
     * distributed form. `existing`/`pruned` supply the txn's view of the
-    * snapshot (no pruning once the txn has staged dirs for the table). */
+    * table, staged dirs included. */
   private def validateInsert(
       m: TableMeta, name: String, batch: DataFrame,
       existing: () => DataFrame,
-      pruned: Option[Column => DataFrame],
+      pruned: Column => DataFrame,
       fkResolve: String => DataFrame): Unit = {
     val nullKeys = m.primaryKey.toSeq ++ m.notNull
     val keys = m.primaryKey.toSeq ++ m.unique
@@ -1010,8 +1036,7 @@ class TableCatalog(spark: SparkSession, val root: String) {
           val (lo, hi) = (row.get(row.fieldIndex(s"__lo_$k")),
             row.get(row.fieldIndex(s"__hi_$k")))
           val existingSide =
-            if (m.indexes.contains(k) && pruned.isDefined)
-              pruned.get(col(k) >= lit(lo) && col(k) <= lit(hi))
+            if (m.indexes.contains(k)) pruned(col(k) >= lit(lo) && col(k) <= lit(hi))
             else existing()
           val clashes = existingSide.select(col(k))
             .join(batch.select(col(k)).na.drop(), Seq(k), "left_semi")
@@ -1274,10 +1299,11 @@ class TableCatalog(spark: SparkSession, val root: String) {
   def update(name: String, set0: Map[String, Column], where: Column): Int =
     autocommit(s"UPDATE $name", name)(_.update(name, set0, where))
 
-  /** The exact snapshot frame an UPDATE would publish — ONE definition
-    * shared by the executing path and EXPLAIN, so the explained plan is
-    * the plan that would run. All SET expressions evaluate against the
-    * pre-update row (one select, not a sequential fold). */
+  /** The rows an UPDATE publishes from `current` — ONE definition
+    * shared by the executing path (over the files the predicate can
+    * touch) and EXPLAIN (over the whole snapshot, which it plans as the
+    * new version). All SET expressions evaluate against the pre-update
+    * row (one select, not a sequential fold). */
   private def updatedFrame(m: TableMeta, set: Map[String, Column],
       where: Column, current: DataFrame): DataFrame =
     current.select(m.schema.fields.map { f =>
@@ -1306,7 +1332,7 @@ class TableCatalog(spark: SparkSession, val root: String) {
     deletedFrame(scan(name).alias(name), where)
   def explainMerge(name: String, source: DataFrame): DataFrame = {
     val m = meta(name)
-    mergedFrame(m, name, source, scan(name), validate = false)
+    mergedFrame(m, name, applyDefaults(name, m, source), scan(name))
   }
   def explainInsert(name: String, df: DataFrame): DataFrame =
     applyDefaults(name, meta(name), df)
@@ -1392,33 +1418,41 @@ class TableCatalog(spark: SparkSession, val root: String) {
   def merge(name: String, source: DataFrame): Int =
     autocommit(s"MERGE INTO $name", name)(_.merge(name, source))
 
-  /** The merged (upserted) snapshot shared by [[Txn.merge]] and both
-    * EXPLAIN paths: source rows validated (key present and unique)
-    * and aligned, current rows with matching keys dropped, source
-    * appended. */
-  private def mergedFrame(m: TableMeta, name: String, source: DataFrame,
-      current: DataFrame, validate: Boolean = true): DataFrame = {
-    val pk = m.primaryKey.getOrElse(
-      throw new IllegalArgumentException(s"MERGE INTO $name: table has no primary key"))
-    val aligned0 = applyDefaults(name, m, source)
-    val aligned =
-      if (!validate) aligned0 // EXPLAIN plans the frame without running source jobs
-      else {
-        // materialize the source ONCE (released by the ContextCleaner
-        // when the frame is GC'd): the validation aggregate, the
-        // anti-join build side and the union would otherwise each
-        // re-run the source plan. ONE aggregation action carries both
-        // checks; NULL keys fail the first require before the
-        // duplicate compare, so count/count_distinct skipping NULLs
-        // matches the old groupBy exactly on every reachable input.
-        val m0 = aligned0.localCheckpoint()
-        val row = m0.agg(count(when(col(pk).isNull, lit(1))).as("nulls"),
-          count(col(pk)).as("cnt"), countDistinct(col(pk)).as("dst")).head()
-        require(row.getAs[Long]("nulls") == 0L, s"$name.$pk: NOT NULL violated")
-        require(row.getAs[Long]("cnt") == row.getAs[Long]("dst"),
-          s"MERGE INTO $name: duplicate keys in source")
-        m0
-      }
+  private def mergeKey(m: TableMeta, name: String): String = m.primaryKey.getOrElse(
+    throw new IllegalArgumentException(s"MERGE INTO $name: table has no primary key"))
+
+  /** A MERGE source aligned to the table (missing columns take
+    * defaults/NULL, the INSERT alignment rule), validated (key present
+    * and unique) and materialized ONCE — released by the ContextCleaner
+    * when the frame is GC'd; the validation aggregate, the anti-join
+    * build side and the union would otherwise each re-run the source
+    * plan. ONE aggregation action carries both checks and the key range
+    * `[min, max]` of the source, returned as the filter that picks the
+    * files a merge can touch. NULL keys fail the first require before
+    * the duplicate compare, so count/count_distinct skipping NULLs
+    * matches a groupBy on every reachable input. */
+  private def mergeSource(m: TableMeta, name: String,
+      source: DataFrame): (DataFrame, Column) = {
+    val pk = mergeKey(m, name)
+    val aligned = applyDefaults(name, m, source).localCheckpoint()
+    val row = aligned.agg(count(when(col(pk).isNull, lit(1))).as("nulls"),
+      count(col(pk)).as("cnt"), countDistinct(col(pk)).as("dst"),
+      min(col(pk)).as("lo"), max(col(pk)).as("hi")).head()
+    require(row.getAs[Long]("nulls") == 0L, s"$name.$pk: NOT NULL violated")
+    require(row.getAs[Long]("cnt") == row.getAs[Long]("dst"),
+      s"MERGE INTO $name: duplicate keys in source")
+    val range =
+      if (row.isNullAt(row.fieldIndex("lo"))) lit(true)
+      else col(pk) >= lit(row.getAs[Any]("lo")) && col(pk) <= lit(row.getAs[Any]("hi"))
+    (aligned, range)
+  }
+
+  /** The merged (upserted) rows shared by [[Txn.merge]] and both
+    * EXPLAIN paths: `current` rows with a source key dropped, the
+    * aligned source appended. */
+  private def mergedFrame(m: TableMeta, name: String, aligned: DataFrame,
+      current: DataFrame): DataFrame = {
+    val pk = mergeKey(m, name)
     current
       .join(aligned.select(col(pk)), Seq(pk), "left_anti")
       .unionByName(aligned)
@@ -1765,9 +1799,9 @@ class TableCatalog(spark: SparkSession, val root: String) {
     * manifest references. Time travel to a vacuumed version then
     * errors; retained versions are untouched. Unreferenced dirs
     * YOUNGER than `graceMs` are kept — an optimistic writer's data dir
-    * exists before any manifest references it, and a txn's staged dirs
-    * (`data/txn-*`, skipped entirely) live until COMMIT. Returns the
-    * number of versions removed. */
+    * exists before any manifest references it, and an open txn's
+    * staged dirs (`data/txn-*`, skipped entirely) live until COMMIT.
+    * Returns the number of versions removed. */
   /** Default vacuum grace: how long an UNREFERENCED data dir is left
     * alone. Must cover a writer's longest write→publish window — the
     * dir exists from writeData until claimPublish, and collectStats
@@ -1786,21 +1820,28 @@ class TableCatalog(spark: SparkSession, val root: String) {
       // isolation promises their reads keep working until they close
       val pinned = pinnedByOpenTxns(name)
       val retained = (cutoff to cur).toSet ++ pinned
-      val live = retained.toSeq
+      // a dir is live while any retained entry lies under it — the
+      // dir itself, or one of its files listed singly
+      val live = liveDirs(name, retained.toSeq
         .filter(v => Files.exists(manifestPath(name, v)))
-        .flatMap(v => readManifest(name, v))
-        .map(r => absTableDir(name).resolve(r).normalize)
-        .toSet
+        .flatMap(v => readManifest(name, v)))
       var removed = 0
       (0 until cutoff).filterNot(retained.contains).foreach { v =>
         if (Files.deleteIfExists(manifestPath(name, v))) removed += 1
       }
+      // an explicit txn's dirs (`data/txn-<id>-<n>`) stay staged while
+      // that txn is open — in this process, or in any process holding
+      // a fresh pin file; a committed one's dirs are ordinary data
+      val openTxns = openTxnIds()
       val dataDir = tableDir(name).resolve("data")
       if (Files.exists(dataDir)) {
         val children = Files.list(dataDir)
         try children.iterator().asScala.toList.foreach { p =>
           val abs = p.toAbsolutePath.normalize
-          val isStaged = p.getFileName.toString.startsWith("txn-")
+          val isStaged = p.getFileName.toString match {
+            case TableCatalog.StagedDir(id) => openTxns(id)
+            case _ => false
+          }
           val age =
             try System.currentTimeMillis - Files.getLastModifiedTime(p).toMillis
             catch { case _: java.io.IOException => 0L }
@@ -1871,27 +1912,28 @@ class TableCatalog(spark: SparkSession, val root: String) {
     Files.createDirectories(tableDir(dst).resolve("data"))
     val dirs = readManifest(src, m.version)
     val stats = readStats(src, m.version)
+    def link(f: Path, t: Path): Unit =
+      try Files.createLink(t, f)
+      catch {
+        // links unsupported (FS) or cross-device: degrade to copy
+        case _: UnsupportedOperationException |
+             _: java.nio.file.FileSystemException =>
+          Files.copy(f, t): Unit
+      }
     dirs.foreach { rel =>
       val from = absTableDir(src).resolve(rel)
       val to = absTableDir(dst).resolve(rel)
-      Files.createDirectories(to)
-      val listing = Files.list(from)
-      try {
-        val it = listing.iterator()
-        while (it.hasNext) {
-          val f = it.next()
-          if (Files.isRegularFile(f)) {
-            val t = to.resolve(f.getFileName.toString)
-            try Files.createLink(t, f)
-            catch {
-              // links unsupported (FS) or cross-device: degrade to copy
-              case _: UnsupportedOperationException |
-                   _: java.nio.file.FileSystemException =>
-                Files.copy(f, t): Unit
-            }
-          }
-        }
-      } finally listing.close()
+      if (Files.isDirectory(from)) {
+        Files.createDirectories(to)
+        val listing = Files.list(from)
+        try listing.iterator().asScala.filter(Files.isRegularFile(_))
+          .foreach(f => link(f, to.resolve(f.getFileName.toString)))
+        finally listing.close()
+      } else {
+        // a file entry links into its own parent dir, at the same path
+        Files.createDirectories(to.getParent)
+        link(from, to)
+      }
     }
     writeManifest(dst, 0, dirs, stats)
     writeMeta(dst, m.copy(version = 0))
@@ -1919,15 +1961,17 @@ class TableCatalog(spark: SparkSession, val root: String) {
     * a narrow, mostly-disjoint value range — what makes the per-file
     * min/max stats selective. (The clustered-storage analog of the
     * reference's B-tree secondary index: on immutable columnar files,
-    * an index IS sort order + zone metadata.) */
+    * an index IS sort order + zone metadata.) `parts` caps the range
+    * partitions; one partition needs no range sample and no shuffle. */
   private def writeData(m: TableMeta, df: DataFrame, dir: String,
-      layoutOverride: Seq[String] = Nil): Unit = {
+      layoutOverride: Seq[String] = Nil, parts: Int = Int.MaxValue): Unit = {
     val layout = if (layoutOverride.nonEmpty) layoutOverride else m.indexes
+    val n = math.max(1, math.min(parts, spark.sparkContext.defaultParallelism))
     val out =
       if (layout.isEmpty) df
       else {
         val cols = layout.map(col)
-        df.repartitionByRange(spark.sparkContext.defaultParallelism, cols: _*)
+        (if (n == 1) df.coalesce(1) else df.repartitionByRange(n, cols: _*))
           .sortWithinPartitions(cols: _*)
       }
     // a computed clustering key (ZORDER) orders the write but is not
@@ -2072,7 +2116,7 @@ class TableCatalog(spark: SparkSession, val root: String) {
     * deletes all staging outright. Reads inside the txn see its own
     * writes and its own DDL. */
   class Txn private[TableCatalog] (autocommit: Boolean) {
-    private val txnId = java.util.UUID.randomUUID().toString.take(8)
+    private[TableCatalog] val txnId = java.util.UUID.randomUUID().toString.take(8)
     // per-table versions AND metadata pinned AT BEGIN, under ONE
     // rootLock acquisition: every read inside the txn — and every
     // conflict base — resolves against this snapshot, so the txn has
@@ -2291,11 +2335,35 @@ class TableCatalog(spark: SparkSession, val root: String) {
       staged.get(name).map(_._2)
         .getOrElse(readManifest(name, snapshotVersion(name)))
 
-    // an explicit txn stages under `data/txn-*`, which vacuum never
-    // collects (an open txn may stage for longer than any grace
-    // window); a single-statement txn publishes within its statement,
-    // so vacuum's grace window covers its staging and its dirs stay
-    // collectable once superseded
+    /** Zone maps of the txn view's entries: the pinned manifest's for
+      * the entries the view keeps, and those collected for this txn's
+      * own dirs — what [[publish]] writes into the next manifest. */
+    private def viewStats(name: String, entries: Seq[String]): Seq[FileStat] =
+      statsFor(entries, readStats(name, snapshotVersion(name)) ++ dirStats.values.flatten)
+
+    /** The txn view of `name` split for a statement whose rows all
+      * satisfy `filter`: (entries it leaves as they are, files it
+      * rewrites). A file is rewritten unless its zone maps prove
+      * `filter` false on every row ([[pruneFiles]]); a dir with some
+      * rewritten files keeps its others as single-file entries.
+      * SOUNDNESS: only the top-level conjuncts of `filter` prune, so a
+      * skipped file holds no row on which `filter` is TRUE. */
+    private def candidates(name: String, m: TableMeta,
+        filter: Column): (Seq[String], Seq[String]) = {
+      val entries = viewDirs(name)
+      val (kept, all) = pruneFiles(m, name, entries, viewStats(name, entries), filter)
+      val rewrite = kept.toSet
+      val untouched = entries.flatMap { e =>
+        val files = all.filter(f => f == e || f.startsWith(e + "/"))
+        if (files.exists(rewrite)) files.filterNot(rewrite) else Seq(e)
+      }
+      (untouched, kept)
+    }
+
+    // an explicit txn stages under `data/txn-*`, which vacuum leaves
+    // alone while the txn is open (it may stage for longer than any
+    // grace window); a single-statement txn publishes within its
+    // statement, so vacuum's grace window covers its staging
     private def freshDir(name: String): String = {
       seq += 1
       val rel = s"data/${if (autocommit) "stmt" else "txn"}-$txnId-$seq"
@@ -2317,13 +2385,10 @@ class TableCatalog(spark: SparkSession, val root: String) {
       // re-run it from the source
       val aligned = applyDefaults(name, m, df).cache()
       val rel = freshDir(name)
-      // an unwritten table's view IS its pinned manifest, whose zone
-      // maps range-prune the existing side of the key-uniqueness check;
-      // staged dirs carry no manifest yet → full-view check
-      val pruned =
-        if (staged.contains(name)) None
-        else Some((f: Column) => frameOf(m.schema,
-          resolveDirs(name, planFilesAt(name, snapshotVersion(name), f)._1)).filter(f))
+      // the view's zone maps range-prune the existing side of the
+      // key-uniqueness check
+      val pruned = (f: Column) =>
+        frameOf(m.schema, resolveDirs(name, candidates(name, m, f)._2)).filter(f)
       try {
         validateInsert(m, name, aligned,
           existing = () => scan(name), pruned = pruned, fkResolve = fkScan)
@@ -2333,56 +2398,93 @@ class TableCatalog(spark: SparkSession, val root: String) {
       staged(name) = (base, dirs :+ rel)
     }
 
-    /** Staged copy-on-write UPDATE: the txn view is rewritten into one
-      * txn-unique snapshot dir; SET expressions see the pre-update row.
-      * PK-changing updates are RESTRICT-checked against the txn's
-      * referencing-table view. The target binds ALIASED with the
-      * table's name (here and in DELETE), so a predicate may qualify
-      * target columns the way standard SQL allows (`DELETE FROM t WHERE
-      * EXISTS (SELECT 1 FROM u WHERE u.k = t.k)` — the correlated outer
-      * reference `t.k` needs the alias to resolve). */
+    /** Stage one copy-on-write statement: `fresh` — the rows it
+      * publishes in place of the `rewritten` files — goes to one new
+      * txn dir, and the view becomes that dir followed by `untouched`
+      * (newest rows first, so a plan over the view names its staged
+      * dir). With `check`, the whole new view (untouched plus fresh
+      * rows) is validated first. No `fresh` (nothing to rewrite) keeps
+      * the view as it is; the statement still publishes its version. */
+    private def stageRewrite(name: String, m: TableMeta, untouched: Seq[String],
+        rewritten: Seq[String], fresh: Option[DataFrame], check: Boolean): Unit = {
+      val base = baseOf(name)
+      val rel = fresh.map { df0 =>
+        val df = if (check) df0.cache() else df0
+        val rel = freshDir(name)
+        try {
+          if (check) validate(m, name,
+            if (untouched.isEmpty) df
+            else frameOf(m.schema, resolveDirs(name, untouched)).unionByName(df), fkScan)
+          writeData(m, df, absTableDir(name).resolve(rel).toString,
+            parts = rewriteParts(name, untouched, rewritten))
+        } finally df.unpersist() // failed validation must not leak cache
+        dirStats(rel) = collectStats(m, name, rel)
+        rel
+      }
+      staged(name) = (base, rel.toSeq ++ untouched)
+    }
+
+    /** Files a copy-on-write rewrite writes back: a full rewrite
+      * re-lays the table out over every core; a partial one writes
+      * files of about the view's average size (by footer row counts),
+      * never more than it replaces — so rewriting one file of four is
+      * one unshuffled write task, not a range sample plus a shuffle. */
+    private def rewriteParts(name: String, untouched: Seq[String],
+        rewritten: Seq[String]): Int =
+      if (untouched.isEmpty) Int.MaxValue
+      else {
+        val rows = rewritten.map(dirRowCount(name, _)).sum
+        val total = rows + untouched.map(dirRowCount(name, _)).sum
+        val share = spark.sparkContext.defaultParallelism * rows.toDouble / math.max(1L, total)
+        math.min(rewritten.size, math.max(1, math.round(share).toInt))
+      }
+
+    /** Staged copy-on-write UPDATE: the files `where` can touch are
+      * rewritten into one txn-unique dir; SET expressions see the
+      * pre-update row. PK-changing updates are RESTRICT-checked against
+      * the txn's referencing-table view. An UPDATE that assigns no key,
+      * NOT NULL or FK column skips validation: the snapshot met every
+      * constraint and the columns they cover do not change. The target
+      * binds ALIASED with the table's name (here and in DELETE), so a
+      * predicate may qualify target columns the way standard SQL allows
+      * (`DELETE FROM t WHERE EXISTS (SELECT 1 FROM u WHERE u.k = t.k)` —
+      * the correlated outer reference `t.k` needs the alias to resolve). */
     def update(name: String, set0: Map[String, Column], where: Column): Unit = {
       open(); visible(name)
       if (createdTables.contains(name)) { stagedCat.update(name, set0, where); return }
       val m = pinnedMetaOf(name)
       val set = resolveSetKeys(m, name, set0)
-      val base = baseOf(name)
+      val (untouched, rewritten) = candidates(name, m, where)
+      val current = frameOf(m.schema, resolveDirs(name, rewritten)).alias(name)
       for (pk <- m.primaryKey if set.contains(pk)) {
-        val changedKeys = scan(name).alias(name).filter(coalesce(where, lit(false)))
+        val changedKeys = current.filter(coalesce(where, lit(false)))
           .filter(!(set(pk).cast(m.schema(pk).dataType) <=> col(pk)))
           .select(col(pk)).distinct()
         restrictReferenced(name, changedKeys, refsOf(name), scan, "UPDATE")
       }
-      val updated = updatedFrame(m, set, where, scan(name).alias(name))
-      val rel = freshDir(name)
-      try {
-        validate(m, name, updated.cache(), fkScan)
-        writeData(m, updated, absTableDir(name).resolve(rel).toString)
-      } finally updated.unpersist() // failed validation must not leak cache
-      dirStats(rel) = collectStats(m, name, rel)
-      staged(name) = (base, Seq(rel))
+      val constrained = m.primaryKey.toSet ++ m.unique ++ m.notNull ++ m.references.keys
+      stageRewrite(name, m, untouched, rewritten,
+        Option.when(rewritten.nonEmpty)(updatedFrame(m, set, where, current)),
+        check = set.keys.exists(constrained))
     }
 
     /** Staged MERGE (upsert on the primary key) against the txn view
-      * (shared [[mergedFrame]]). */
+      * (shared [[mergedFrame]]): only the files that may hold a key in
+      * the source's `[min, max]` are rewritten. */
     def merge(name: String, source: DataFrame): Unit = {
       open(); visible(name)
       if (createdTables.contains(name)) { stagedCat.merge(name, source); return }
       val m = pinnedMetaOf(name)
-      val base = baseOf(name)
-      val merged = mergedFrame(m, name, source, scan(name))
-      val rel = freshDir(name)
-      try {
-        validate(m, name, merged.cache(), fkScan)
-        writeData(m, merged, absTableDir(name).resolve(rel).toString)
-      } finally merged.unpersist()
-      dirStats(rel) = collectStats(m, name, rel)
-      staged(name) = (base, Seq(rel))
+      val (aligned, keyRange) = mergeSource(m, name, source)
+      val (untouched, rewritten) = candidates(name, m, keyRange)
+      stageRewrite(name, m, untouched, rewritten, Some(mergedFrame(m, name, aligned,
+        frameOf(m.schema, resolveDirs(name, rewritten)))), check = true)
     }
 
     /** Staged clause-form MERGE (USING source) against the txn view
       * (shared [[mergeUsingFrame]]), with FK RESTRICT against the
-      * txn's referencing-table view. */
+      * txn's referencing-table view. Its ON condition yields no key
+      * range, so every file is rewritten. */
     def mergeUsing(name: String, source: DataFrame, tAlias: String,
         sAlias: String, cond: Column,
         matched: Seq[TableCatalog.MergeClause],
@@ -2395,18 +2497,12 @@ class TableCatalog(spark: SparkSession, val root: String) {
         return
       }
       val m = pinnedMetaOf(name)
-      val base = baseOf(name)
-      mergeUsingRestrict(m, name, scan(name), source, tAlias, sAlias,
+      val (untouched, rewritten) = candidates(name, m, lit(true))
+      val current = frameOf(m.schema, resolveDirs(name, rewritten))
+      mergeUsingRestrict(m, name, current, source, tAlias, sAlias,
         cond, matched, bySource, refsOf(name), scan)
-      val merged = mergeUsingFrame(m, name, scan(name), source, tAlias,
-        sAlias, cond, matched, insert, bySource)
-      val rel = freshDir(name)
-      try {
-        validate(m, name, merged.cache(), fkScan)
-        writeData(m, merged, absTableDir(name).resolve(rel).toString)
-      } finally merged.unpersist()
-      dirStats(rel) = collectStats(m, name, rel)
-      staged(name) = (base, Seq(rel))
+      stageRewrite(name, m, untouched, rewritten, Some(mergeUsingFrame(m, name, current,
+        source, tAlias, sAlias, cond, matched, insert, bySource)), check = true)
     }
 
     def explainMergeUsing(name: String, source: DataFrame, tAlias: String,
@@ -2420,23 +2516,22 @@ class TableCatalog(spark: SparkSession, val root: String) {
         matched, insert, bySource, validate = false)
     }
 
-    /** Staged copy-on-write DELETE with FK RESTRICT against the txn
-      * view of every referencing table. */
+    /** Staged copy-on-write DELETE of the rows `where` matches in the
+      * files it can touch, with FK RESTRICT against the txn view of
+      * every referencing table. */
     def delete(name: String, where: Column): Unit = {
       open(); visible(name)
       if (createdTables.contains(name)) { stagedCat.delete(name, where); return }
       val m = pinnedMetaOf(name)
-      val base = baseOf(name)
+      val (untouched, rewritten) = candidates(name, m, where)
+      val current = frameOf(m.schema, resolveDirs(name, rewritten)).alias(name)
       for (pk <- m.primaryKey) {
-        val removedKeys = scan(name).alias(name).filter(coalesce(where, lit(false)))
+        val removedKeys = current.filter(coalesce(where, lit(false)))
           .select(col(pk)).distinct()
         restrictReferenced(name, removedKeys, refsOf(name), scan, "DELETE")
       }
-      val remaining = deletedFrame(scan(name).alias(name), where)
-      val rel = freshDir(name)
-      writeData(m, remaining, absTableDir(name).resolve(rel).toString)
-      dirStats(rel) = collectStats(m, name, rel)
-      staged(name) = (base, Seq(rel))
+      stageRewrite(name, m, untouched, rewritten,
+        Option.when(rewritten.nonEmpty)(deletedFrame(current, where)), check = false)
     }
 
     // ------------------------------------------- txn-aware EXPLAIN DML
@@ -2463,7 +2558,7 @@ class TableCatalog(spark: SparkSession, val root: String) {
     def explainMerge(name: String, source: DataFrame): DataFrame = {
       open(); visible(name)
       val m = metaOf(name)
-      mergedFrame(m, name, source, scan(name), validate = false)
+      mergedFrame(m, name, applyDefaults(name, m, source), scan(name))
     }
 
     /** Publish every staged write and DDL (see [[publish]]). A lost
@@ -2548,13 +2643,10 @@ class TableCatalog(spark: SparkSession, val root: String) {
       try {
         staged.foreach { case (name, (_, dirs)) =>
           val m = meta(name)
-          // index stats: inherit entries for dirs the new version keeps,
-          // add the stats collected for this txn's own dirs
-          val kept = dirs.toSet
-          val inherited = readStats(name, m.version)
-            .filter(st => kept(st.path.take(st.path.lastIndexOf('/'))))
-          val fresh = dirs.flatMap(d => dirStats.getOrElse(d, Nil))
-          conflictUnless(claimVersion(name, m.version, dirs, inherited ++ fresh),
+          // index stats: the pinned manifest's for the entries the new
+          // version keeps (its version is m.version — checked above)
+          // plus those collected for this txn's own dirs
+          conflictUnless(claimVersion(name, m.version, dirs, viewStats(name, dirs)),
             s"write-write conflict on $name: version ${m.version + 1} claimed by another writer")
           claims += (name -> m)
         }
@@ -2598,9 +2690,7 @@ class TableCatalog(spark: SparkSession, val root: String) {
       closed = true
       // staged dirs replaced mid-txn (e.g. insert then update) are
       // unreferenced by the committed manifests — MVCC garbage; drop
-      val live = staged.flatMap { case (name, (_, dirs)) =>
-        dirs.map(absTableDir(name).resolve(_))
-      }.toSet
+      val live = staged.flatMap { case (name, (_, dirs)) => liveDirs(name, dirs) }.toSet
       cleanupCandidates.filterNot(live.contains).foreach(deleteDir)
       deleteDir(Paths.get(root, s".txn-$txnId"))
       TableCatalog.releaseLock(Paths.get(root, s".txn-$txnId").toString)
@@ -2639,33 +2729,43 @@ class TableCatalog(spark: SparkSession, val root: String) {
     * multi-hour Spark action never looks stale while its JVM lives. */
   private val PinStaleMs = 60L * 60 * 1000
 
-  /** Versions of `name` pinned by ANY process's open transactions —
-    * their pin files under `<root>/pins/`, staleness-filtered. Stale
-    * pins are garbage-collected here (vacuum is the only reader that
-    * acts on them). */
-  private def pinnedByPinFiles(name: String): Set[Int] = {
+  /** Pin files of ANY process's open transactions under `<root>/pins/`,
+    * staleness-filtered. Stale pins are garbage-collected here (vacuum
+    * is the only reader that acts on them). */
+  private def freshPins(): List[Path] = {
     val dir = Paths.get(root, "pins")
-    if (!Files.isDirectory(dir)) return Set.empty
+    if (!Files.isDirectory(dir)) return Nil
     val listing = Files.list(dir)
     val files = try listing.iterator().asScala.toList finally listing.close()
-    files.flatMap { p =>
+    files.filter { p =>
       val age =
         try System.currentTimeMillis - Files.getLastModifiedTime(p).toMillis
         catch { case _: java.io.IOException => Long.MaxValue } // gone = no pin
-      if (age >= PinStaleMs) {
+      age < PinStaleMs || {
         try Files.deleteIfExists(p) catch { case _: java.io.IOException => () }
-        Nil
-      } else {
-        val json = try Files.readString(p) catch { case _: java.io.IOException => "" }
-        jsonObjBody(json, "tables").toSeq.flatMap(body =>
-          "\"((?:[^\"\\\\]|\\\\.)*)\"\\s*:\\s*(\\d+)".r.findAllMatchIn(body)
-            .collect { case m if unesc(m.group(1)) == name => m.group(2).toInt })
+        false
       }
-    }.toSet
+    }
   }
+
+  /** Versions of `name` pinned by ANY process's open transactions. */
+  private def pinnedByPinFiles(name: String): Set[Int] =
+    freshPins().flatMap { p =>
+      val json = try Files.readString(p) catch { case _: java.io.IOException => "" }
+      jsonObjBody(json, "tables").toSeq.flatMap(body =>
+        "\"((?:[^\"\\\\]|\\\\.)*)\"\\s*:\\s*(\\d+)".r.findAllMatchIn(body)
+          .collect { case m if unesc(m.group(1)) == name => m.group(2).toInt })
+    }.toSet
 
   private def pinnedByOpenTxns(name: String): Set[Int] =
     activeTxns.asScala.flatMap(_.pinnedVersion(name)).toSet ++ pinnedByPinFiles(name)
+
+  /** Ids of the txns open in this process or, by a fresh pin file, in
+    * any process — whose staged dirs vacuum must leave alone. A txn
+    * drops its pin only once it has committed or rolled back. */
+  private def openTxnIds(): Set[String] =
+    activeTxns.asScala.map(_.txnId).toSet ++
+      freshPins().map(_.getFileName.toString).collect { case TableCatalog.PinFile(id) => id }
 
   def begin(): Txn = register(new Txn(autocommit = false))
 
@@ -2806,6 +2906,11 @@ object TableCatalog {
   }
 
   private val suffixCounter = new java.util.concurrent.atomic.AtomicLong()
+
+  /** An explicit txn's staged data dir, `txn-<id>-<n>`, and its pin
+    * file, `txn-<id>.json` — both capture the txn id. */
+  private[sources] val StagedDir = "txn-([^-]+)-\\d+".r
+  private[sources] val PinFile = "txn-([^-]+)\\.json".r
 
   /** Writer-unique data-dir suffix: pid-scoped random plus a counter,
     * so concurrent writers (threads or processes) never target the

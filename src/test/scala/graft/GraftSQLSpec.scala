@@ -1383,4 +1383,35 @@ class GraftSQLSpec extends AnyFunSuite {
     val ids = g.execute("SELECT id FROM r ORDER BY id").collect().map(_.getLong(0)).toSeq
     assert(ids == Seq(1L, 2L), "the deleted row must be back")
   }
+
+  test("INSERT n / MERGE n status is counted driver-side: no Spark job after the write") {
+    val group = "graft-after-write"
+    // marks every job submitted on this thread once the catalog write returns
+    class Marking(root: String) extends TableCatalog(spark, root) {
+      override def insert(name: String, df: org.apache.spark.sql.DataFrame): Int = {
+        val v = super.insert(name, df); spark.sparkContext.setJobGroup(group, "status"); v
+      }
+      override def merge(name: String, source: org.apache.spark.sql.DataFrame): Int = {
+        val v = super.merge(name, source); spark.sparkContext.setJobGroup(group, "status"); v
+      }
+    }
+    val g = new GraftSQL(spark,
+      new Marking(java.nio.file.Files.createTempDirectory("graft-sql").toString))
+    g.execute("CREATE TABLE st (id INTEGER PRIMARY KEY, v STRING)")
+    def status(sql: String): String =
+      try g.execute(sql).collect()(0).getString(0)
+      finally spark.sparkContext.clearJobGroup()
+    assert(status("INSERT INTO st VALUES (1, 'a'), (2, 'b'), (3, 'c')") == "INSERT 3")
+    assert(status("INSERT INTO st (id) VALUES (4)") == "INSERT 1")
+    assert(status("MERGE INTO st VALUES (2, 'B'), (9, 'z')") == "MERGE 2")
+    org.apache.spark.sql.GraftListenerBridge.flush(spark)
+    val after = spark.sparkContext.statusTracker.getJobIdsForGroup(group)
+    assert(after.isEmpty, s"${after.length} job(s) ran after the write to count the VALUES rows")
+    // inside a txn the status is the same
+    g.execute("BEGIN")
+    assert(g.execute("INSERT INTO st VALUES (5, 'e'), (6, 'f')").collect()(0).getString(0) == "INSERT 2")
+    assert(g.execute("MERGE INTO st VALUES (5, 'E')").collect()(0).getString(0) == "MERGE 1")
+    g.execute("COMMIT")
+    assert(g.execute("SELECT count(*) FROM st").collect()(0).getLong(0) == 7)
+  }
 }
