@@ -66,7 +66,7 @@ object Bench {
         if (ok) Some((System.nanoTime() - t0) / 1e9) else None
       }
       // per-run detail to stderr: the JSON median is the artifact, but
-      // a spread across runs (cache build on run 1, load spike) should
+      // a spread across runs (JIT warm-up on run 1, load spike) should
       // be diagnosable from the round log without a re-run
       System.err.println(
         s"[bench] $name runs: ${times.map(t => f"$t%.2f").mkString(" ")}")
@@ -84,7 +84,8 @@ object Bench {
       .mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/tmp/bench_out.json")
-    val json = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"sf":"$sfDir","runs":$runs,"loadavg_before":"$loadBefore","loadavg_after":"${loadavg()}","out_file":"$outFile"}"""
+    val nproc = Runtime.getRuntime.availableProcessors
+    val json = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"sf":"$sfDir","runs":$runs,"nproc":$nproc,"loadavg_before":"$loadBefore","loadavg_after":"${loadavg()}","out_file":"$outFile"}"""
     // the COMPLETE artifact goes to a file: a 183-query JSON line can
     // outgrow a captured-stdout ring buffer, and a truncated artifact
     // can't support round-over-round comparisons
@@ -93,7 +94,6 @@ object Bench {
     catch { case e: Throwable =>
       System.err.println(s"[bench] could not write $outFile: $e")
     }
-    operators.FrameCache.clear() // release shared signature frames
     // stop Spark BEFORE printing the artifact lines: nothing (shutdown
     // logging included) may follow them on stdout from this program
     spark.stop()
@@ -102,6 +102,6 @@ object Bench {
     // stdout tail cuts the full line above mid-JSON, which has left
     // the driver's PERF comparison empty two rounds running); value
     // and unit mirror the full artifact, which lives in out_file
-    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n":${results.size},"sf":"$sfDir","runs":$runs,"out_file":"$outFile"}""")
+    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n":${results.size},"sf":"$sfDir","runs":$runs,"nproc":$nproc,"out_file":"$outFile"}""")
   }
 }

@@ -54,7 +54,6 @@ object JobProfile {
         name, r, total, lines.size))
       lines.forEach(println(_))
     }
-    operators.FrameCache.clear()
     spark.stop()
   }
 }

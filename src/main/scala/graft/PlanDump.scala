@@ -31,7 +31,6 @@ object PlanDump {
         println(s"[plandump] $name -> $outDir/$name.txt")
       }
     }
-    operators.FrameCache.clear()
     spark.stop()
   }
 }

@@ -79,7 +79,6 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    operators.FrameCache.clear() // release shared signature frames
     spark.stop()
   }
 }

@@ -35,12 +35,6 @@ object GraftColumnBridge {
         s"classic SparkSession required, got ${other.getClass.getName}")
     }
 
-  /** Collision-free session identity (sessionUUID is private[sql]). */
-  def sessionUUID(s: SparkSession): Option[String] = s match {
-    case c: classic.SparkSession => Some(c.sessionUUID)
-    case _ => None
-  }
-
   /** The physical plan of a streaming query's most recent micro-batch
     * (StreamingQueryWrapper / StreamExecution are private[sql]) — how
     * a spec asserts what a STREAMING query actually executed (e.g.

@@ -24,33 +24,21 @@ object Dedup {
   private val Seed     = 42L
 
   /** doc_id + minhash signature + exact shingle set, computed in ONE
-    * scan and cached per (session, dataset) via [[FrameCache]]. d02,
-    * d04 and d06 all consume this frame — the signature kernel (the
-    * dominant scan cost at corpus scale) runs exactly once per session
-    * instead of once per query, and the frame is persisted once, not
-    * leaked per call. A production 100 TB pipeline materializes these
-    * columns at ingest; the cache is the in-session analog. */
+    * scan. d02, d04, d06, d10 and d11 all start from this frame; each
+    * call builds it once and hands it down. The candidate build's
+    * checkpoint and the verify join are two actions over it, so it is
+    * checkpointed lazily: the first action stores its rows and the
+    * second reads them back, and the scan, the repartition and the
+    * signature kernels run once per call. A production 100 TB pipeline
+    * materializes these columns at ingest. */
   private def signed(s: SparkSession, d: String): DataFrame =
-    FrameCache.getOrBuild(s, s"dedup/signed|$d") {
-      Tables.documents(s, d)
-        .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
-        .select(
-          col("doc_id"),
-          minhash_sig(col("text"), ShingleN, MinhashK, Seed).as("sig"),
-          shingles64(col("text"), ShingleN).as("sh"))
-    }
-
-  /** Minhash-LSH candidate pairs, cached: d02 (estimate), d04 (exact
-    * verify) and d06 (clusters) all block on the same band self-join.
-    * The cache key carries the hot-bucket cap so a conf change never
-    * serves a stale candidate frame. */
-  private def candidates(s: SparkSession, d: String): DataFrame = {
-    val cap = s.conf.get(HotBucketConf, HotBucketDefault) + "," +
-      s.conf.get(HotFracConf, HotFracDefault)
-    FrameCache.getOrBuild(s, s"dedup/cand|$d|cap=$cap") {
-      minhashCandidates(signed(s, d).select("doc_id", "sig"))
-    }
-  }
+    Tables.documents(s, d)
+      .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
+      .select(
+        col("doc_id"),
+        minhash_sig(col("text"), ShingleN, MinhashK, Seed).as("sig"),
+        shingles64(col("text"), ShingleN).as("sh"))
+      .localCheckpoint(eager = false)
 
   /** LSH banding: one (band, bandhash) row per band per doc; equal
     * bandhash within a band ⇒ candidate pair. */
@@ -294,8 +282,7 @@ object Dedup {
     * (fraction of agreeing minhash positions ≈ Jaccard). */
   def d02Minhash(s: SparkSession, d: String): DataFrame = {
     val sig = signed(s, d).select("doc_id", "sig")
-    val cand = candidates(s, d)
-    cand
+    minhashCandidates(sig)
       .join(sig.as("sa"), col("doc_a") === col("sa.doc_id"))
       .join(sig.as("sb"), col("doc_b") === col("sb.doc_id"))
       .select(col("doc_a"), col("doc_b"),
@@ -341,29 +328,24 @@ object Dedup {
     * d06 consumes this (its edge checkpoint would otherwise
     * materialize a full range-partitioned sort it immediately
     * discards); d04's public result adds the ORDER BY. */
-  private def verifiedPairs(s: SparkSession, d: String): DataFrame =
-    FrameCache.getOrBuild(s, s"dedup/verified|$d|cap=" +
-        s.conf.get(HotBucketConf, HotBucketDefault) + "," +
-        s.conf.get(HotFracConf, HotFracDefault)) {
-      // cached ALONGSIDE the candidate frame: the exact-jaccard join
-      // ships two shingle-hash arrays per candidate pair — the single
-      // most expensive dedup stage at scale — and d04, d06, d10, d11
-      // and d12 all consume the same verified edge set (at 100 TB it
-      // is a table materialized at ingest, like the signatures)
-      val cand = candidates(s, d)
-      val sh = signed(s, d).select("doc_id", "sh")
-      cand
-        .join(sh.as("sa"), col("doc_a") === col("sa.doc_id"))
-        .join(sh.as("sb"), col("doc_b") === col("sb.doc_id"))
-        .select(col("doc_a"), col("doc_b"),
-          jaccard64(col("sa.sh"), col("sb.sh")).as("jaccard"))
-        .filter(col("jaccard") >= 0.8)
-    }
+  private def verifiedPairs(signed: DataFrame): DataFrame = {
+    // the exact-jaccard join ships two shingle-hash arrays per
+    // candidate pair — the single most expensive dedup stage at scale
+    // (at 100 TB the verified edge set is a table materialized at
+    // ingest, like the signatures)
+    val sh = signed.select("doc_id", "sh")
+    minhashCandidates(signed.select("doc_id", "sig"))
+      .join(sh.as("sa"), col("doc_a") === col("sa.doc_id"))
+      .join(sh.as("sb"), col("doc_b") === col("sb.doc_id"))
+      .select(col("doc_a"), col("doc_b"),
+        jaccard64(col("sa.sh"), col("sb.sh")).as("jaccard"))
+      .filter(col("jaccard") >= 0.8)
+  }
 
   /** n-gram Jaccard dedup: minhash-LSH candidates verified with the
     * *exact* shingle-set Jaccard (merge of sorted hash sets). */
   def d04NgramJaccard(s: SparkSession, d: String): DataFrame =
-    verifiedPairs(s, d).orderBy("doc_a", "doc_b")
+    verifiedPairs(signed(s, d)).orderBy("doc_a", "doc_b")
 
   // ---------------------------------------------------------------- d05
   /** Embedding near-dup: random-hyperplane LSH buckets as the blocking
@@ -372,16 +354,19 @@ object Dedup {
     * ([[Similarity.sigFrame]] — hyperplane bit j depends only on
     * (seed, j), so the low `bits` bits of sig0 ARE the bits-wide
     * signature): dedup blocking and ANN pruning share one signature
-    * materialization. At production thresholds (cos >= ~0.95) the
+    * definition. At production thresholds (cos >= ~0.95) the
     * filter replaces the limit; the synthetic vectors are
     * near-orthogonal so the operator surfaces ranked candidates
     * instead. */
   def d05Embedding(s: SparkSession, d: String): DataFrame = {
-    val base = Similarity.sigFrame(s, d)
+    // the count and the self-join are two actions over the signature
+    // frame: checkpointed lazily, the count stores its rows and the
+    // join reads them back, so the signature kernel runs once
+    val base = Similarity.sigFrame(s, d).localCheckpoint(eager = false)
     // bucket width scales with corpus size (target ~16 vectors/bucket):
     // fixed bits would make candidate volume quadratic in corpus growth;
-    // adaptive bits keep it ~linear at any SF. One cheap count() of the
-    // cached frame is the only extra pass.
+    // adaptive bits keep it ~linear at any SF. The count is the only
+    // extra pass.
     val n = base.count()
     val bits = math.max(8, math.min(24,
       math.ceil(math.log(math.max(1.0, n / 16.0)) / math.log(2)).toInt))
@@ -405,21 +390,16 @@ object Dedup {
     * graph diameter; near-dup graphs are unions of small cliques, so
     * it converges in 2-3 rounds. Each round is one shuffle
     * (join + groupBy min) — the large-graph-safe formulation. */
-  /** The converged cluster map (doc_id, cluster_rep), cached per
-    * (session, dataset): d06 presents it sorted, and the composing
-    * operators (d11 keep-best, p11 leak-safe split) broadcast it —
-    * the propagation loop runs once per session, exactly like the
-    * shared signature stage. A production pipeline materializes this
-    * map as a table right after dedup and every downstream split /
-    * selection job reads it. */
+  /** The converged cluster map (doc_id, cluster_rep), built per call:
+    * d06 presents it sorted, and the composing operators (d11
+    * keep-best, p11 leak-safe split) broadcast it. A production
+    * pipeline materializes this map as a table right after dedup and
+    * every downstream split / selection job reads it. */
   private[operators] def clusterMap(s: SparkSession, d: String): DataFrame =
-    FrameCache.getOrBuild(s, s"dedup/clusters|$d")(buildClusterMap(s, d))
+    propagateMinLabels(verifiedPairs(signed(s, d)).select("doc_a", "doc_b"))
 
   def d06Clusters(s: SparkSession, d: String): DataFrame =
     clusterMap(s, d).orderBy("doc_id")
-
-  private def buildClusterMap(s: SparkSession, d: String): DataFrame =
-    propagateMinLabels(verifiedPairs(s, d).select("doc_a", "doc_b"))
 
   /** Min-label propagation over one verified pair set — the loop
     * shared by the full build and the stored corpus map ([[d17]]'s
@@ -519,77 +499,19 @@ object Dedup {
 
   // ---------------------------------------------------------------- d07
   /** Corpus signatures MATERIALIZED into a versioned catalog table
-    * (the st07 ingest pattern), built once per (session, dataset):
-    * this is the table a production pipeline writes at ingest time,
-    * so an incremental batch run never re-computes a corpus
-    * signature — it scans stored sig/sh columns. */
-  private val sigStores =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), graft.sources.TableCatalog]
-
-  /** Best-effort recursive delete — deliberately NOT
-    * TableCatalog.deleteRecursively, whose first failed delete aborts
-    * the walk: shutdown-hook cleanup must keep going past a locked or
-    * concurrently-removed file and delete the rest of the tree. */
-  private def deleteDir(root: String): Unit = {
-    import java.nio.file.{Files, Path}
-    import scala.jdk.CollectionConverters._
-    val p = Path.of(root)
-    if (Files.exists(p)) {
-      val s = Files.walk(p)
-      try s.sorted(java.util.Comparator.reverseOrder[Path]())
-        .iterator().asScala.foreach(f =>
-          try Files.delete(f) catch { case _: Throwable => () })
-      finally s.close()
-    }
-  }
-
-  locally { // the stores live in java.io.tmpdir: clean up at JVM exit
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      sigStores.values.foreach(c => deleteDir(c.root))))
-  }
-
-  /** PER-KEY build locks (not one global lock): a cluster-table build
-    * on one dataset must not stall a signature lookup on another —
-    * the contention shape the TCP server's concurrent sessions
-    * produce. Within a key only ONE builder ever runs, so no losing
-    * store directory is orphaned. */
-  private val storeLocks =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Object]()
-
+    * (the st07 ingest pattern): this is the table a production
+    * pipeline writes at ingest time, so an incremental batch run never
+    * re-computes a corpus signature — it scans stored sig/sh columns.
+    * Built by the call that needs it, in a [[graft.sources
+    * .TableCatalog.tempRoot]] catalog (deleted at JVM exit), so the
+    * frames it returns stay readable after the call. */
   private def signatureStore(s: SparkSession, d: String): graft.sources.TableCatalog = {
-    // drop stores bound to stopped sessions (their frames are useless
-    // and the next live session would shadow them anyway) — a short
-    // map+file critical section, no Spark jobs
-    sigStores.synchronized {
-      sigStores.filterInPlace { case (k @ (owner, _), cat) =>
-        val live = !owner.sparkContext.isStopped
-        if (!live) {
-          deleteDir(cat.root)
-          // drop the per-key build lock with its store: the lock map
-          // would otherwise strongly hold every stopped SparkSession
-          // forever — a slow leak in a server JVM cycling sessions
-          storeLocks.remove(k)
-        }
-        live
-      }
-    }
-    val key = (s, d)
-    sigStores.get(key).getOrElse {
-      storeLocks.computeIfAbsent(key, _ => new Object).synchronized {
-        sigStores.getOrElseUpdate(key, {
-          val root = java.nio.file.Files.createTempDirectory("graft-sigstore-").toString
-          val cat = new graft.sources.TableCatalog(s, root)
-          val corpus = Tables.documents(s, d)
-            .filter(col("doc_id") % 2 === 0)
-            .select(col("doc_id"),
-              minhash_sig(col("text"), ShingleN, MinhashK, Seed).as("sig"),
-              shingles64(col("text"), ShingleN).as("sh"))
-          cat.createTable("corpus_signatures", corpus.schema)
-          cat.insert("corpus_signatures", corpus)
-          cat
-        })
-      }
-    }
+    val cat = new graft.sources.TableCatalog(s,
+      graft.sources.TableCatalog.tempRoot("graft-sigstore-"))
+    val corpus = signatureOf(Tables.documents(s, d).filter(col("doc_id") % 2 === 0))
+    cat.createTable("corpus_signatures", corpus.schema)
+    cat.insert("corpus_signatures", corpus)
+    cat
   }
 
   /** INCREMENTAL near-dup: dedup a NEW batch against an EXISTING
@@ -836,7 +758,7 @@ object Dedup {
     val heads = Tables.documents(s, d)
       .select(col("doc_id"), substring(col("text"), 1, 120).as("head"))
     val lev = levenshtein(col("ta.head"), col("tb.head"))
-    verifiedPairs(s, d)
+    verifiedPairs(signed(s, d))
       .join(heads.as("ta"), col("doc_a") === col("ta.doc_id"))
       .join(heads.as("tb"), col("doc_b") === col("tb.doc_id"))
       .select(col("doc_a"), col("doc_b"), col("jaccard"),
@@ -863,7 +785,7 @@ object Dedup {
     * rank's. */
   def d11KeepBest(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val clusters = clusterMap(s, d) // (doc_id, cluster_rep), session-cached
+    val clusters = clusterMap(s, d) // (doc_id, cluster_rep)
     val docs = Tables.documents(s, d)
       .select(col("doc_id"), TextAnalysis.qualityScoreCol.as("quality_score"))
     val withRep = docs
@@ -1004,25 +926,21 @@ object Dedup {
     * (embedding, centroid) pair), so the dedup query itself evaluates
     * NO quantizer — its plan is a parquet scan of stored columns
     * (spec-asserted: no nearest_centroid anywhere in the executed
-    * plan). Created on first use in the same per-(session, dataset)
-    * store as d07's signature table; doubles round-trip parquet
+    * plan). Written per call into a [[graft.sources.TableCatalog
+    * .tempRoot]] catalog, with the quantizer trained once for both
+    * the assignment and the centroid join; doubles round-trip parquet
     * bit-exactly, so the removal set is identical to the inline
     * derivation. */
   private def clusterTable(s: SparkSession, d: String): DataFrame = {
-    val cat = signatureStore(s, d)
-    // same PER-KEY lock as the store build: d13 and d07 on one dataset
-    // serialize with each other (they share the catalog), other
-    // datasets and sessions proceed in parallel
-    storeLocks.computeIfAbsent((s, d), _ => new Object).synchronized {
-      if (!cat.exists("corpus_clusters")) {
-        val assigned = Similarity.ivfAssigned(s, d)
-          .join(broadcast(Similarity.ivfCells(s, d)), "cell")
-          .select(col("vec_id"), col("embedding"), col("cell"),
-            cosine_sim(col("embedding"), col("centroid")).as("cent_sim"))
-        cat.createTable("corpus_clusters", assigned.schema)
-        cat.insert("corpus_clusters", assigned)
-      }
-    }
+    val cents = Similarity.ivfCents(s, d)
+    val assigned = Similarity.ivfAssigned(s, d, cents)
+      .join(broadcast(Similarity.ivfCells(s, cents)), "cell")
+      .select(col("vec_id"), col("embedding"), col("cell"),
+        cosine_sim(col("embedding"), col("centroid")).as("cent_sim"))
+    val cat = new graft.sources.TableCatalog(s,
+      graft.sources.TableCatalog.tempRoot("graft-d13-"))
+    cat.createTable("corpus_clusters", assigned.schema)
+    cat.insert("corpus_clusters", assigned)
     cat.scan("corpus_clusters")
   }
 
@@ -1161,27 +1079,21 @@ object Dedup {
     * spec can measure the prune independently of the verified output:
     * (doc_id, gh, mc) for every train (doc, distinct-gram) row, plus
     * the built filter's bit size (the task-resident memory bound). */
-  /** The eval-set Bloom filter, built ONCE per (session, dataset) —
-    * the stored-asset discipline (bpeAssets/nbModel): at production
+  /** The eval-set Bloom filter, built once per call. At production
     * the filter is written when the eval set publishes and every
     * decontamination run just loads it. */
-  private val bloomCache =
-    new KeyedMemo[org.apache.spark.util.sketch.BloomFilter]()
-  FrameCache.onClear(() => bloomCache.clear())
-
-  private def d15Filter(s: SparkSession, d: String): org.apache.spark.util.sketch.BloomFilter =
-    bloomCache.getOrBuild(FrameCache.sessionKey(s) + "|d15|" + d) {
-      val evalGrams = Tables.documents(s, d).filter(col("doc_id") % 20 === 0)
-        .select(explode(word_grams64(col("text"), 8)).as("gh")).distinct()
-      // one eval-side derivation, two driver actions: persist across
-      // the sizing count and the sketch build, then release
-      evalGrams.persist()
-      try
-        // Spark's own distributed sketch build: map-side partial
-        // filters OR-merged to one driver-side object (KBs at this fpp)
-        evalGrams.stat.bloomFilter("gh", math.max(evalGrams.count(), 1L), 0.01)
-      finally evalGrams.unpersist()
-    }
+  private def d15Filter(s: SparkSession, d: String): org.apache.spark.util.sketch.BloomFilter = {
+    val evalGrams = Tables.documents(s, d).filter(col("doc_id") % 20 === 0)
+      .select(explode(word_grams64(col("text"), 8)).as("gh")).distinct()
+    // one eval-side derivation, two driver actions: persist across
+    // the sizing count and the sketch build, then release
+    evalGrams.persist()
+    try
+      // Spark's own distributed sketch build: map-side partial
+      // filters OR-merged to one driver-side object (KBs at this fpp)
+      evalGrams.stat.bloomFilter("gh", math.max(evalGrams.count(), 1L), 0.01)
+    finally evalGrams.unpersist()
+  }
 
   private[graft] def d15Flagged(s: SparkSession, d: String): (DataFrame, Long) = {
     val bf = d15Filter(s, d)
@@ -1279,30 +1191,27 @@ object Dedup {
 
   // ---------------------------------------------------------------- d17
   /** The STORED corpus cluster map (doc_id, cluster_rep over the even
-    * half) — the at-ingest artifact d17 maintains, built ONCE from the
+    * half) — the at-ingest artifact d17 maintains, built from the
     * STORED signature table (no kernel re-runs: candidates band the
     * stored `sig` column, verification reads the stored `sh` sets) and
-    * published into the same per-(session, dataset) catalog as d07's
-    * signatures. Because LSH banding is per-document, the even half's
-    * candidate pairs computed alone equal the full corpus's candidate
-    * pairs restricted to even-even — the property that makes the
-    * incremental merge provably exact. */
-  private[graft] def corpusClusterMap(s: SparkSession, d: String): DataFrame = {
-    val cat = signatureStore(s, d)
-    storeLocks.computeIfAbsent((s, d), _ => new Object).synchronized {
-      if (!cat.exists("corpus_cluster_map")) {
-        val map = clusterMapOfSigs(cat.scan("corpus_signatures"))
-        cat.createTable("corpus_cluster_map", map.schema)
-        cat.insert("corpus_cluster_map", map)
-      }
-    }
+    * published into the same catalog as the signatures. Because LSH
+    * banding is per-document, the even half's candidate pairs
+    * computed alone equal the full corpus's candidate pairs restricted
+    * to even-even — the property that makes the incremental merge
+    * provably exact. */
+  private[graft] def corpusClusterMap(s: SparkSession, d: String): DataFrame =
+    corpusClusterMap(signatureStore(s, d))
+
+  private def corpusClusterMap(cat: graft.sources.TableCatalog): DataFrame = {
+    val map = clusterMapOfSigs(cat.scan("corpus_signatures"))
+    cat.createTable("corpus_cluster_map", map.schema)
+    cat.insert("corpus_cluster_map", map)
     cat.scan("corpus_cluster_map")
   }
 
   /** The converged (doc_id, cluster_rep) map of one signature frame —
     * LSH candidates from the stored `sig` column, verification from
-    * the stored `sh` sets, min-label propagation. Shared by the
-    * session store's build and [[d17InitStore]]'s bootstrap. */
+    * the stored `sh` sets, min-label propagation. */
   private def clusterMapOfSigs(sigs: DataFrame): DataFrame = {
     val cand = minhashCandidates(sigs.select("doc_id", "sig"))
     val pairs = cand
@@ -1326,9 +1235,7 @@ object Dedup {
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
     cat.createTable("corpus_signatures", corpusSig.schema)
     cat.insert("corpus_signatures", corpusSig)
-    val map = clusterMapOfSigs(cat.scan("corpus_signatures"))
-    cat.createTable("corpus_cluster_map", map.schema)
-    cat.insert("corpus_cluster_map", map)
+    corpusClusterMap(cat)
     cat.createTable("maintenance_log", StructType(Seq(
       StructField("batch_id", LongType, nullable = false))),
       primaryKey = Some("batch_id"))
@@ -1398,10 +1305,11 @@ object Dedup {
   /** The two delta-edge frames — (new-vs-corpus folded to stored reps,
     * new-vs-new) — split out so the spec can audit their plans for the
     * stored-asset discipline (corpus side reads stored tables only). */
-  private[graft] def d17DeltaFrames(s: SparkSession, d: String): (DataFrame, DataFrame) =
-    deltaFrames(corpusClusterMap(s, d),
-      signatureStore(s, d).scan("corpus_signatures"),
+  private[graft] def d17DeltaFrames(s: SparkSession, d: String): (DataFrame, DataFrame) = {
+    val cat = signatureStore(s, d)
+    deltaFrames(corpusClusterMap(cat), cat.scan("corpus_signatures"),
       newBatchSig(s, d).localCheckpoint())
+  }
 
   /** The delta-edge frames for one maintenance step over arbitrary
     * (stored map, corpus signatures, batch signatures) — pure in its
@@ -1432,10 +1340,11 @@ object Dedup {
     (nc, nn)
   }
 
-  def d17IncrementalClusters(s: SparkSession, d: String): DataFrame =
-    mergeDeltaClusters(s, corpusClusterMap(s, d),
-      signatureStore(s, d).scan("corpus_signatures"),
+  def d17IncrementalClusters(s: SparkSession, d: String): DataFrame = {
+    val cat = signatureStore(s, d)
+    mergeDeltaClusters(s, corpusClusterMap(cat), cat.scan("corpus_signatures"),
       newBatchSig(s, d).localCheckpoint())
+  }
 
   /** ONE maintenance step as a pure function of its frames: merge a
     * batch's near-dup delta into a stored cluster map. The OUTPUT
@@ -1463,8 +1372,9 @@ object Dedup {
     * repeats an edge once per matched corpus doc in the same cluster,
     * so a batch matching a large stored cluster is quadratic in
     * matches while its distinct edge set is O(batch × touched
-    * clusters). The distinct set is probed with collect(limit+1) — the
-    * driver materializes AT MOST limit+1 rows deciding the route — and
+    * clusters). The distinct set is probed with a per-partition
+    * take(limit+1) — the driver materializes AT MOST partitions ×
+    * (limit+1) rows deciding the route — and
     * above the limit the edges pre-collapse distributively
     * ([[propagateMinLabels]]) to one (node, component-min) row per
     * involved node, with the rep/miss and new-doc universes collected
@@ -1505,23 +1415,15 @@ object Dedup {
     require(limit > 0 && limit < Int.MaxValue,
       s"spark.graft.d17.foldPairLimit out of range: $limit")
     // nc probe, BOUNDED (round-10, closing the unbounded-collect hole):
-    // LocalLimit(limit+1) caps what each task ships, the scoped
-    // initialNumPartitions makes the probe ONE round instead of
-    // CollectLimit's incremental 1→4→16… scale-up, and a result of
-    // <= limit rows IS the complete row set (the limit returned
-    // everything there was) — so the common path's plan and job count
-    // are the unguarded collect's, and the driver never materializes
-    // more than partitions × (limit+1) narrow rows deciding the route.
-    val sess = stored.sparkSession
-    val limKey = "spark.sql.limit.initialNumPartitions"
-    val prevLim = sess.conf.getOption(limKey)
-    sess.conf.set(limKey, Int.MaxValue.toString)
-    val probe =
-      try nc.select("new_doc", "rep", "miss").limit(limit.toInt + 1).collect()
-      finally prevLim match {
-        case Some(v) => sess.conf.set(limKey, v)
-        case None    => sess.conf.unset(limKey)
-      }
+    // every partition ships at most limit+1 rows in ONE job over all
+    // partitions (no CollectLimit 1→4→16… scale-up rounds), and a
+    // result of <= limit rows IS the complete row set — so the common
+    // path's job count is the unguarded collect's, and the driver never
+    // materializes more than partitions × (limit+1) narrow rows
+    // deciding the route. The per-partition cut touches no session
+    // conf, so no other query on the session sees the probe.
+    val probe = nc.select("new_doc", "rep", "miss").rdd
+      .mapPartitions(_.take(limit.toInt + 1)).collect()
     val (unions, repMiss, newDocs) =
       if (probe.length <= limit) {
         val rows = probe.map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2)))

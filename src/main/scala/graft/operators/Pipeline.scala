@@ -436,35 +436,35 @@ object Pipeline {
     * nb_score, bucket) — e06's gates as at-ingest columns, the d13
     * stored-cluster precedent: at production st17 scores the stream
     * as it lands and the t21/t22 training jobs backfill, so the
-    * recurring cascade never recomputes a gate. Built once per
-    * (session, dataset) into a catalog table; LEFT joins keep EVERY
+    * recurring cascade never recomputes a gate. Built per call into a
+    * [[graft.sources.TableCatalog.tempRoot]] catalog table (deleted at
+    * JVM exit); LEFT joins keep EVERY
     * document in the table (a doc too short to score carries a NULL
     * bucket / nb_score — the gate filters drop them, preserving e06's
     * inner-join semantics in storage form). Doubles round-trip
     * parquet bit-exactly, so the stored path reproduces the inline
     * derivation value-for-value. */
-  private def scoreTable(s: SparkSession, d: String): DataFrame =
-    FrameCache.getOrBuild(s, s"e07/scores|$d") {
-      val docs = Tables.documents(s, d)
-      // lang/source ride along: ingest metadata the e09 manifest
-      // groups on — stored once like every other score column
-      val base = docs.select(Seq(col("doc_id"), col("lang"), col("source"),
-          nTokensCol.cast("long").as("n_tokens"),
-          xxhash64(col("text")).as("h")) ++
-          TextAnalysis.gopherMetricCols: _*)
-        .withColumn("gopher_keep", TextAnalysis.gopherKeepCol)
-        .select("doc_id", "lang", "source", "n_tokens", "h", "gopher_keep")
-      val scored = base
-        .join(TextAnalysis.nbScored(s, d).select("doc_id", "nb_score"),
-          Seq("doc_id"), "left")
-        .join(TextAnalysis.pplBucketFrame(s, d).select("doc_id", "bucket"),
-          Seq("doc_id"), "left")
-      val root = graft.sources.TableCatalog.tempRoot("graft-e07")
-      val cat = new graft.sources.TableCatalog(s, root)
-      cat.createTable("doc_scores", scored.schema, primaryKey = Some("doc_id"))
-      cat.insert("doc_scores", scored)
-      cat.scan("doc_scores")
-    }
+  private def scoreTable(s: SparkSession, d: String): DataFrame = {
+    val docs = Tables.documents(s, d)
+    // lang/source ride along: ingest metadata the e09 manifest
+    // groups on — stored once like every other score column
+    val base = docs.select(Seq(col("doc_id"), col("lang"), col("source"),
+        nTokensCol.cast("long").as("n_tokens"),
+        xxhash64(col("text")).as("h")) ++
+        TextAnalysis.gopherMetricCols: _*)
+      .withColumn("gopher_keep", TextAnalysis.gopherKeepCol)
+      .select("doc_id", "lang", "source", "n_tokens", "h", "gopher_keep")
+    val scored = base
+      .join(TextAnalysis.nbScored(s, d).select("doc_id", "nb_score"),
+        Seq("doc_id"), "left")
+      .join(TextAnalysis.pplBucketFrame(s, d).select("doc_id", "bucket"),
+        Seq("doc_id"), "left")
+    val root = graft.sources.TableCatalog.tempRoot("graft-e07")
+    val cat = new graft.sources.TableCatalog(s, root)
+    cat.createTable("doc_scores", scored.schema, primaryKey = Some("doc_id"))
+    cat.insert("doc_scores", scored)
+    cat.scan("doc_scores")
+  }
 
   /** e07: e06's STEADY-STATE form — the identical cascade run from
     * the STORED score table. The recurring query's plan touches ONLY
@@ -626,24 +626,21 @@ object Pipeline {
     * ≠ 3), v2 late-arrival insert (the % 7 = 3 docs), v3 takedown
     * delete (doc_id % 11 = 5 — the GDPR/opt-out pass), v4 in-place
     * correction (UPDATE prefixing text where doc_id % 13 = 6). Built
-    * once per (session, dataset), the pqCache/sigStore pattern. */
-  private val snapStores = new KeyedMemo[(graft.sources.TableCatalog, Int)]()
-  FrameCache.onClear(() => snapStores.clear()) // dirs die with tempRoot's hooks
-
-  private def snapshotStore(s: SparkSession, d: String): (graft.sources.TableCatalog, Int) =
-    snapStores.getOrBuild(FrameCache.sessionKey(s) + "|e10|" + d) {
-      val docs = Tables.documents(s, d).select("doc_id", "lang", "source", "text")
-      val root = graft.sources.TableCatalog.tempRoot("graft-e10")
-      val cat = new graft.sources.TableCatalog(s, root)
-      cat.createTable("docs_snap", docs.schema, primaryKey = Some("doc_id"))
-      val v1 = cat.insert("docs_snap", docs.filter(col("doc_id") % 7 =!= 3))
-      cat.insert("docs_snap", docs.filter(col("doc_id") % 7 === 3))
-      cat.delete("docs_snap", col("doc_id") % 11 === 5)
-      cat.update("docs_snap",
-        Map("text" -> concat(lit("edited "), col("text"))),
-        col("doc_id") % 13 === 6)
-      (cat, v1)
-    }
+    * per call in a [[graft.sources.TableCatalog.tempRoot]] catalog
+    * (deleted at JVM exit). */
+  private def snapshotStore(s: SparkSession, d: String): (graft.sources.TableCatalog, Int) = {
+    val docs = Tables.documents(s, d).select("doc_id", "lang", "source", "text")
+    val root = graft.sources.TableCatalog.tempRoot("graft-e10")
+    val cat = new graft.sources.TableCatalog(s, root)
+    cat.createTable("docs_snap", docs.schema, primaryKey = Some("doc_id"))
+    val v1 = cat.insert("docs_snap", docs.filter(col("doc_id") % 7 =!= 3))
+    cat.insert("docs_snap", docs.filter(col("doc_id") % 7 === 3))
+    cat.delete("docs_snap", col("doc_id") % 11 === 5)
+    cat.update("docs_snap",
+      Map("text" -> concat(lit("edited "), col("text"))),
+      col("doc_id") % 13 === 6)
+    (cat, v1)
+  }
 
   /** e10: SNAPSHOT DIFF — what changed between two versions of a
     * managed dataset (the lakehouse CDC/table_changes query, computed

@@ -410,7 +410,7 @@ object Sampling {
     * relative to the corpus (one row per clustered doc), broadcast
     * against the scan — no shuffle at all on the corpus side. */
   def p11LeakSafeSplit(s: SparkSession, d: String): DataFrame = {
-    val clusters = Dedup.clusterMap(s, d) // (doc_id, cluster_rep), session-cached
+    val clusters = Dedup.clusterMap(s, d) // (doc_id, cluster_rep)
     val bucket = pmod(
       pmod(col("cluster_rep") * lit(2654435761L), lit(4294967296L)),
       lit(100L))

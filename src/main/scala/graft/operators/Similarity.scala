@@ -12,8 +12,8 @@ import org.apache.spark.sql.functions._
   * s01 is the exact baseline: one scan, cosine against a broadcast
   * query vector, TakeOrdered top-k — O(n·dim) compute, no shuffle of
   * the vectors themselves. s02 is the scale path: the corpus carries
-  * PRE-COMPUTED 256-bit hyperplane signatures (stored columns — here a
-  * session cache, at 100 TB materialized at ingest next to the
+  * PRE-COMPUTED 256-bit hyperplane signatures (stored columns — here
+  * derived per call, at 100 TB materialized at ingest next to the
   * vectors), the probe's signature is evaluated ONCE driver-side into
   * literals, and the scan ranks rows by signature hamming distance — a
   * handful of XOR/popcounts per row instead of an O(dim) cosine. Only
@@ -32,21 +32,24 @@ object Similarity {
   private def sigCols = (0 until SigWords)
     .map(w => hyperplane_sig(col("embedding"), 64, Seed + w).as(s"sig$w"))
 
-  /** vec_id + embedding + 256-bit signature (4 longs), cached per
-    * (session, dataset): the stored-signature table every query
-    * prunes against. Shared with [[Dedup.d05Embedding]], whose LSH
-    * buckets are prefix bits of `sig0` — one signature
-    * materialization serves both dedup blocking and ANN pruning. */
+  /** vec_id + embedding + 256-bit signature (4 longs): the
+    * stored-signature table every query prunes against (at 100 TB,
+    * columns written at ingest). Shared with [[Dedup.d05Embedding]],
+    * whose LSH buckets are prefix bits of `sig0` — one signature
+    * derivation serves both dedup blocking and ANN pruning. */
   private[operators] def sigFrame(s: SparkSession, d: String): DataFrame =
-    FrameCache.getOrBuild(s, s"ann/sigs|$d") {
-      Tables.embeddings(s, d)
-        .select(col("vec_id") +: col("embedding") +: sigCols: _*)
-    }
+    Tables.embeddings(s, d)
+      .select(col("vec_id") +: col("embedding") +: sigCols: _*)
 
   /** The fixed probe: embedding of vec_id 0, broadcast to all rows. */
   private def probe(s: SparkSession, d: String): DataFrame =
     Tables.embeddings(s, d).filter(col("vec_id") === 0)
       .select(col("embedding").as("qv"))
+
+  /** The fixed probe vector on the driver (one pushed-filter point
+    * read). */
+  private def probeVec(s: SparkSession, d: String): Array[Float] =
+    probe(s, d).head().getSeq[Float](0).toArray
 
   // ---------------------------------------------------------------- s01
   /** Exact top-k, oracle-checked: DuckDB's list_cosine_similarity
@@ -76,8 +79,7 @@ object Similarity {
     // probe vector: one pushed-filter point read; signature computed
     // driver-side with the same kernel the stored columns used, so the
     // per-row cost is pure hamming against literals
-    val q = Tables.embeddings(s, d).filter(col("vec_id") === 0)
-      .select("embedding").head().getSeq[Float](0).toArray
+    val q = probeVec(s, d)
     val qSig = (0 until SigWords).map(w =>
       Kernels.hyperplaneSig(UnsafeArrayData.fromPrimitiveArray(q), 64, Seed + w))
     val ham = (0 until SigWords)
@@ -154,35 +156,36 @@ object Similarity {
   private val IvfIters  = 3
   private val IvfNprobe = 4
 
-  /** (cell, centroid) — the trained coarse quantizer, cached per
-    * (session, dataset) like the signature frame: at 100 TB this is a
+  /** The trained coarse quantizer's k centroids (cell i = row i),
+    * trained by the call that needs them and passed down: at 100 TB a
     * stored k-row table written at index-build time. */
-  private[graft] def ivfCells(s: SparkSession, d: String): DataFrame =
-    FrameCache.getOrBuild(s, s"ann/ivf_cells|$d") {
-      import s.implicits._
-      val cents = Ivf.train(
-        Tables.embeddings(s, d).select("vec_id", "embedding"), IvfK, IvfIters)
-      cents.zipWithIndex.map { case (c, i) => (i, c) }.toSeq.toDF("cell", "centroid")
-    }
+  private[operators] def ivfCents(s: SparkSession, d: String): Array[Array[Float]] =
+    Ivf.train(Tables.embeddings(s, d).select("vec_id", "embedding"), IvfK, IvfIters)
 
-  private def collectCents(cells: DataFrame): Array[Array[Float]] =
-    cells.orderBy("cell").collect().map(_.getSeq[Float](1).toArray)
+  /** (cell, centroid) — the quantizer as a k-row frame. */
+  private[operators] def ivfCells(s: SparkSession, cents: Array[Array[Float]]): DataFrame = {
+    import s.implicits._
+    cents.zipWithIndex.map { case (c, i) => (i, c) }.toSeq.toDF("cell", "centroid")
+  }
+
+  private[graft] def ivfCells(s: SparkSession, d: String): DataFrame =
+    ivfCells(s, ivfCents(s, d))
 
   /** vec_id + embedding + cell: the corpus organized into inverted
     * lists (at scale: a table PARTITIONED BY cell — probe = partition
     * pruning). */
+  private[operators] def ivfAssigned(s: SparkSession, d: String,
+      cents: Array[Array[Float]]): DataFrame =
+    Ivf.assign(Tables.embeddings(s, d).select("vec_id", "embedding"), cents)
+
   private[graft] def ivfAssigned(s: SparkSession, d: String): DataFrame =
-    FrameCache.getOrBuild(s, s"ann/ivf_assign|$d") {
-      Ivf.assign(Tables.embeddings(s, d).select("vec_id", "embedding"),
-        collectCents(ivfCells(s, d)))
-    }
+    ivfAssigned(s, d, ivfCents(s, d))
 
   /** Driver query: IVF top-k for the fixed probe, nprobe of k cells. */
   def s04IvfAnn(s: SparkSession, d: String): DataFrame = {
-    val cents = collectCents(ivfCells(s, d))
-    val q = Tables.embeddings(s, d).filter(col("vec_id") === 0)
-      .select("embedding").head().getSeq[Float](0).toArray
-    Ivf.topK(ivfAssigned(s, d).filter(col("vec_id") =!= 0), cents, q, IvfNprobe, K)
+    val cents = ivfCents(s, d)
+    Ivf.topK(ivfAssigned(s, d, cents).filter(col("vec_id") =!= 0), cents,
+      probeVec(s, d), IvfNprobe, K)
   }
 
   // ---------------------------------------------------------------- s06
@@ -445,8 +448,8 @@ object Similarity {
   /** k-NN GRAPH construction — every vector's approximate top-k
     * neighbors in one pass, the substrate for graph clustering,
     * semantic dedup sweeps, and diversity analysis. Blocking is the
-    * IVF COARSE QUANTIZER (s04's trained cells, shared via
-    * FrameCache): true neighbors co-locate in a cell, so candidates
+    * IVF COARSE QUANTIZER (s04's trained cells, trained once per call):
+    * true neighbors co-locate in a cell, so candidates
     * are each vector probed against its `KnnProbe` nearest CELLS —
     * per-vector cell ranking via the broadcast corpus×centroids
     * product (k rows per vector, s06's intended-broadcast pattern)
@@ -501,12 +504,13 @@ object Similarity {
   private val KnnInternalK = 10
 
   def s10KnnGraph(s: SparkSession, d: String): DataFrame = {
-    val assigned = ivfAssigned(s, d) // vec_id, embedding, cell
+    val cents = ivfCents(s, d)
+    val assigned = ivfAssigned(s, d, cents) // vec_id, embedding, cell
     val emb = assigned.select(col("vec_id"), col("embedding"))
     // per-vector cell ranking: k centroid rows broadcast against the
     // corpus, top nprobe cells per vector via the custom top-k node
     val scored = emb
-      .crossJoin(broadcast(ivfCells(s, d)))
+      .crossJoin(broadcast(ivfCells(s, cents)))
       .select(col("vec_id"), col("embedding"), col("cell"),
         cosine_sim(col("embedding"), col("centroid")).as("cc"))
     val probes = Scale.topKPerGroup(scored, Seq("vec_id"),
@@ -609,9 +613,9 @@ object Similarity {
     * exact-rerank candidates (s08's two-stage serving shape).
     *
     * Codebooks train with the same deterministic per-subspace Lloyd
-    * recipe as the IVF coarse quantizer (shared [[Ivf.train]]), cached
-    * per (session, dataset) — at scale a stored k×m table written at
-    * index-build time, trained on a sample. Rows-only (trained
+    * recipe as the IVF coarse quantizer (shared [[Ivf.train]]), once
+    * per call — at scale a stored k×m table written at index-build
+    * time, trained on a sample. Rows-only (trained
     * codebooks aren't SQL-derivable); the spec proves recall vs the
     * exact scan, code-range soundness, and partitioning determinism. */
   private val PqM      = 8
@@ -619,50 +623,52 @@ object Similarity {
   private val PqK      = 32
   private val PqCoarse = 100
 
-  private val pqCache = new KeyedMemo[Seq[Array[Array[Float]]]]()
-  FrameCache.onClear(() => pqCache.clear()) // released with the frame caches
-
-  private[operators] def pqCodebooks(s: SparkSession, d: String): Seq[Array[Array[Float]]] =
-    pqCache.getOrBuild(FrameCache.sessionKey(s) + "|pq|" + d) {
-      val emb = Tables.embeddings(s, d).select("vec_id", "embedding")
-      (0 until PqM).map { j =>
-        Ivf.train(emb.select(col("vec_id"),
-          slice(col("embedding"), j * PqDsub + 1, PqDsub).as("embedding")),
-          PqK, IvfIters)
-      }
-    }
-
-  /** vec_id + embedding + the PACKED m-byte code column (at scale: the
-    * stored BINARY code column, written at ingest — what the coarse
-    * scan reads instead of vectors). */
-  private[graft] def pqCodes(s: SparkSession, d: String): DataFrame = {
-    val cbs = pqCodebooks(s, d)
-    FrameCache.getOrBuild(s, s"ann/pq_codes|$d") {
-      Tables.embeddings(s, d).select(col("vec_id"), col("embedding"),
-        graft.functions.pack_codes(array((0 until PqM).map(j =>
-          nearest_centroid(slice(col("embedding"), j * PqDsub + 1, PqDsub),
-            Ivf.centroidsLit(cbs(j)))): _*)).as("codes"))
+  private[operators] def pqCodebooks(s: SparkSession, d: String): Seq[Array[Array[Float]]] = {
+    val emb = Tables.embeddings(s, d).select("vec_id", "embedding")
+    (0 until PqM).map { j =>
+      Ivf.train(emb.select(col("vec_id"),
+        slice(col("embedding"), j * PqDsub + 1, PqDsub).as("embedding")),
+        PqK, IvfIters)
     }
   }
 
-  def s11AnnPq(s: SparkSession, d: String): DataFrame = {
-    val cbs = pqCodebooks(s, d)
-    val q = Tables.embeddings(s, d).filter(col("vec_id") === 0)
-      .select("embedding").head().getSeq[Float](0).toArray
+  /** The PACKED m-byte code column of `embedding` under codebooks
+    * `cbs` (at scale: the stored BINARY code column, written at
+    * ingest — what the coarse scan reads instead of vectors). */
+  private def codesCol(cbs: Seq[Array[Array[Float]]]) =
+    graft.functions.pack_codes(array((0 until PqM).map(j =>
+      nearest_centroid(slice(col("embedding"), j * PqDsub + 1, PqDsub),
+        Ivf.centroidsLit(cbs(j)))): _*))
+
+  /** ADC coarse cosine of the `codes` column against probe `q`. The
+    * lookup tables are built driver-side: dot(q_j, c) and |c|² per
+    * (subspace, centroid) — two flattened m·k-double arrays indexed
+    * j·k + code_j by the PqAdc kernel over the packed byte column. */
+  private def adcCosine(cbs: Seq[Array[Array[Float]]], q: Array[Float]) = {
     val qNorm = math.sqrt(q.map(x => x.toDouble * x).sum)
-    // ADC lookup tables, driver-side: dot(q_j, c) and |c|² per
-    // (subspace, centroid) — two flattened m·k-double arrays indexed
-    // j·k + code_j by the PqAdc kernel over the packed byte column
     def sub(a: Array[Float], j: Int) = a.slice(j * PqDsub, (j + 1) * PqDsub)
     val dotLut = (0 until PqM).flatMap(j => cbs(j).map(c =>
       sub(q, j).zip(c).map { case (x, y) => x.toDouble * y }.sum))
     val nrmLut = (0 until PqM).flatMap(j => cbs(j).map(c =>
       c.map(x => x.toDouble * x).sum))
     def adc(lut: Seq[Double]) = graft.functions.pq_adc(col("codes"), lut, PqK)
-    pqCodes(s, d)
+    adc(dotLut) / (lit(qNorm) * sqrt(greatest(adc(nrmLut), lit(1e-12))))
+  }
+
+  /** vec_id + embedding + the packed code column. */
+  private def pqCodes(s: SparkSession, d: String,
+      cbs: Seq[Array[Array[Float]]]): DataFrame =
+    Tables.embeddings(s, d).select(col("vec_id"), col("embedding"), codesCol(cbs).as("codes"))
+
+  private[graft] def pqCodes(s: SparkSession, d: String): DataFrame =
+    pqCodes(s, d, pqCodebooks(s, d))
+
+  def s11AnnPq(s: SparkSession, d: String): DataFrame = {
+    val cbs = pqCodebooks(s, d)
+    val q = probeVec(s, d)
+    pqCodes(s, d, cbs)
       .filter(col("vec_id") =!= 0)
-      .withColumn("coarse",
-        adc(dotLut) / (lit(qNorm) * sqrt(greatest(adc(nrmLut), lit(1e-12)))))
+      .withColumn("coarse", adcCosine(cbs, q))
       .orderBy(col("coarse").desc, col("vec_id"))
       .limit(PqCoarse) // fixed exact-kernel budget, corpus-independent
       .select(col("vec_id"),
@@ -703,8 +709,7 @@ object Similarity {
     * so the spec can assert soundness (bound ≥ true cosine on EVERY
     * row) and the prune rate independently of the final filter. */
   private[graft] def s12CertifiedBounds(s: SparkSession, d: String): DataFrame = {
-    val q = Tables.embeddings(s, d).filter(col("vec_id") === 0)
-      .select("embedding").head().getSeq[Float](0).toArray
+    val q = probeVec(s, d)
     // the whole bound — row's affine SQ8 params, decode·q dot, ‖x‖,
     // slack term — is ONE codegen kernel call ([[graft.functions
     // .Sq8CosUb]]): two tight primitive passes per row instead of an
@@ -739,24 +744,21 @@ object Similarity {
 
   // ---------------------------------------------------------------- s14
   /** Quantizer trained on the CORPUS half only (even vec_ids — the
-    * "index build"), cached per (session, dataset): s14's stored
-    * centroid table. The new batch must never influence it, or the
-    * incremental-equals-rebuild claim would be circular. */
-  private val s14Cache = new KeyedMemo[Array[Array[Float]]]()
-  FrameCache.onClear(() => s14Cache.clear())
-
+    * "index build"): s14's stored centroid table. The new batch must
+    * never influence it, or the incremental-equals-rebuild claim would
+    * be circular. */
   private[graft] def s14Cents(s: SparkSession, d: String): Array[Array[Float]] =
-    s14Cache.getOrBuild(FrameCache.sessionKey(s) + "|s14|" + d) {
-      Ivf.train(Tables.embeddings(s, d).filter(col("vec_id") % 2 === 0)
-        .select("vec_id", "embedding"), IvfK, IvfIters)
-    }
+    Ivf.train(Tables.embeddings(s, d).filter(col("vec_id") % 2 === 0)
+      .select("vec_id", "embedding"), IvfK, IvfIters)
 
   /** The corpus half's stored inverted lists under [[s14Cents]]. */
+  private def s14CorpusAssigned(s: SparkSession, d: String,
+      cents: Array[Array[Float]]): DataFrame =
+    Ivf.assign(Tables.embeddings(s, d).filter(col("vec_id") % 2 === 0)
+      .select("vec_id", "embedding"), cents)
+
   private[graft] def s14CorpusAssigned(s: SparkSession, d: String): DataFrame =
-    FrameCache.getOrBuild(s, s"ann/s14_corpus|$d") {
-      Ivf.assign(Tables.embeddings(s, d).filter(col("vec_id") % 2 === 0)
-        .select("vec_id", "embedding"), s14Cents(s, d))
-    }
+    s14CorpusAssigned(s, d, s14Cents(s, d))
 
   /** s14: INCREMENTAL INDEX ADD — vector-index maintenance without a
     * rebuild (d07's incremental discipline on the serving side): the
@@ -780,9 +782,8 @@ object Similarity {
     // the ADD: only the new batch evaluates the quantizer kernel
     val added = Ivf.assign(Tables.embeddings(s, d)
       .filter(col("vec_id") % 2 =!= 0).select("vec_id", "embedding"), cents)
-    val merged = s14CorpusAssigned(s, d).union(added)
-    val q = Tables.embeddings(s, d).filter(col("vec_id") === 0)
-      .select("embedding").head().getSeq[Float](0).toArray
+    val merged = s14CorpusAssigned(s, d, cents).union(added)
+    val q = probeVec(s, d)
     Ivf.topK(merged.filter(col("vec_id") =!= 0), cents, q, IvfNprobe, K)
       .select(col("vec_id"), round(col("cos"), 4).as("cos"))
       .orderBy(col("cos").desc, col("vec_id"))
@@ -822,25 +823,22 @@ object Similarity {
     * `label` rides along as the filterable metadata column a serving
     * table carries for filtered search (s16) — at 100 TB it is a
     * stored column the scan's predicate pushdown prunes on. */
-  private[graft] def ivfPqServing(s: SparkSession, d: String): DataFrame = {
-    val cents = collectCents(ivfCells(s, d))
-    val cbs = pqCodebooks(s, d)
+  private def ivfPqServing(s: SparkSession, d: String, cents: Array[Array[Float]],
+      cbs: Seq[Array[Array[Float]]]): DataFrame =
     Tables.embeddings(s, d).select(col("vec_id"), col("label"), col("embedding"),
       nearest_centroid(col("embedding"), Ivf.centroidsLit(cents)).as("cell"),
-      graft.functions.pack_codes(array((0 until PqM).map(j =>
-        nearest_centroid(slice(col("embedding"), j * PqDsub + 1, PqDsub),
-          Ivf.centroidsLit(cbs(j)))): _*)).as("codes"))
-  }
+      codesCol(cbs).as("codes"))
+
+  /** The serving table under a freshly trained quantizer and codebooks. */
+  private[graft] def ivfPqServing(s: SparkSession, d: String): DataFrame =
+    ivfPqServing(s, d, ivfCents(s, d), pqCodebooks(s, d))
 
   private[graft] def ivfPqFrame(s: SparkSession, d: String): DataFrame =
-    FrameCache.getOrBuild(s, s"ann/ivfpq|$d")(ivfPqServing(s, d))
+    ivfPqServing(s, d)
 
-  /** The nprobe cell ids for the fixed probe — split out so the spec
-    * can assert candidate containment against the same ranking. */
-  private[graft] def ivfPqProbedCells(s: SparkSession, d: String): Seq[Int] = {
-    val cents = collectCents(ivfCells(s, d))
-    val q = Tables.embeddings(s, d).filter(col("vec_id") === 0)
-      .select("embedding").head().getSeq[Float](0).toArray
+  /** The nprobe cell ids for probe `q` — the ranking the coarse frame
+    * prunes on. */
+  private def probedCells(cents: Array[Array[Float]], q: Array[Float]): Seq[Int] = {
     val qa = UnsafeArrayData.fromPrimitiveArray(q)
     cents.zipWithIndex
       .map { case (c, i) => (i, Kernels.cosine(qa, UnsafeArrayData.fromPrimitiveArray(c))) }
@@ -848,37 +846,45 @@ object Similarity {
       .take(IvfPqNprobe).map(_._1).toSeq
   }
 
+  /** The nprobe cell ids for the fixed probe — split out so the spec
+    * can assert candidate containment against the same ranking. */
+  private[graft] def ivfPqProbedCells(s: SparkSession, d: String): Seq[Int] =
+    probedCells(ivfCents(s, d), probeVec(s, d))
+
   /** The ADC-scored coarse frame over the probed cells only — the
     * piece the plan spec audits for the cell-pruning filter. `serving`
     * lets s16 pass the label-FILTERED serving table through the same
     * pipeline (the filter composes below the cell prune, so both reach
     * the scan). */
-  private[graft] def s15CoarseFrameOf(s: SparkSession, d: String,
-      serving: DataFrame): DataFrame = {
-    val cbs = pqCodebooks(s, d)
-    val q = Tables.embeddings(s, d).filter(col("vec_id") === 0)
-      .select("embedding").head().getSeq[Float](0).toArray
-    val qNorm = math.sqrt(q.map(x => x.toDouble * x).sum)
-    def sub(a: Array[Float], j: Int) = a.slice(j * PqDsub, (j + 1) * PqDsub)
-    val dotLut = (0 until PqM).flatMap(j => cbs(j).map(c =>
-      sub(q, j).zip(c).map { case (x, y) => x.toDouble * y }.sum))
-    val nrmLut = (0 until PqM).flatMap(j => cbs(j).map(c =>
-      c.map(x => x.toDouble * x).sum))
-    def adc(lut: Seq[Double]) = graft.functions.pq_adc(col("codes"), lut, PqK)
+  private def coarseFrameOf(serving: DataFrame, cents: Array[Array[Float]],
+      cbs: Seq[Array[Array[Float]]], q: Array[Float]): DataFrame =
     serving
-      .filter(col("cell").isin(ivfPqProbedCells(s, d): _*)) // partition prune
+      .filter(col("cell").isin(probedCells(cents, q): _*)) // partition prune
       .filter(col("vec_id") =!= 0)
-      .withColumn("coarse",
-        adc(dotLut) / (lit(qNorm) * sqrt(greatest(adc(nrmLut), lit(1e-12)))))
+      .withColumn("coarse", adcCosine(cbs, q))
+
+  private[graft] def s15CoarseFrameOf(s: SparkSession, d: String,
+      serving: DataFrame): DataFrame =
+    coarseFrameOf(serving, ivfCents(s, d), pqCodebooks(s, d), probeVec(s, d))
+
+  /** s15's coarse frame (s16's with `labels`): the quantizer and the
+    * codebooks train once, and the serving table and the ADC scoring
+    * share them. */
+  private def ivfPqCoarse(s: SparkSession, d: String, q: Array[Float],
+      labels: Option[Seq[Int]]): DataFrame = {
+    val cents = ivfCents(s, d)
+    val cbs = pqCodebooks(s, d)
+    val serving = ivfPqServing(s, d, cents, cbs)
+    coarseFrameOf(labels.fold(serving)(l => serving.filter(col("label").isin(l: _*))),
+      cents, cbs, q)
   }
 
   private[graft] def s15CoarseFrame(s: SparkSession, d: String): DataFrame =
-    s15CoarseFrameOf(s, d, ivfPqFrame(s, d))
+    ivfPqCoarse(s, d, probeVec(s, d), None)
 
   def s15IvfPq(s: SparkSession, d: String): DataFrame = {
-    val q = Tables.embeddings(s, d).filter(col("vec_id") === 0)
-      .select("embedding").head().getSeq[Float](0).toArray
-    s15CoarseFrame(s, d)
+    val q = probeVec(s, d)
+    ivfPqCoarse(s, d, q, None)
       .orderBy(col("coarse").desc, col("vec_id"))
       .limit(PqCoarse) // fixed exact-rerank budget, corpus-independent
       .select(col("vec_id"),
@@ -895,9 +901,7 @@ object Similarity {
     * docs WHERE label ∈ …" shape over the index a billion-vector
     * deployment actually serves from. The metadata predicate applies
     * at the SERVING-TABLE SCAN, below the ADC scoring (spec-asserted:
-    * parquet PushedFilters when read from storage, the
-    * InMemoryTableScan pushed-filter list when session-cached — the
-    * scan enforces it either way), the coarse quantizer prunes to
+    * parquet PushedFilters), the coarse quantizer prunes to
     * nprobe cells, ADC
     * scores only the probed cells' SURVIVING rows, and a fixed exact
     * rerank restores s01's emit contract over the allowed subset.
@@ -913,13 +917,11 @@ object Similarity {
     * filter-selectivity of the corpus. Rows-only (trained quantizer +
     * codebooks, like s15). */
   private[graft] def s16CoarseFrame(s: SparkSession, d: String): DataFrame =
-    s15CoarseFrameOf(s, d,
-      ivfPqFrame(s, d).filter(col("label").isin(FilterLabels: _*)))
+    ivfPqCoarse(s, d, probeVec(s, d), Some(FilterLabels))
 
   def s16FilteredIvfPq(s: SparkSession, d: String): DataFrame = {
-    val q = Tables.embeddings(s, d).filter(col("vec_id") === 0)
-      .select("embedding").head().getSeq[Float](0).toArray
-    s16CoarseFrame(s, d)
+    val q = probeVec(s, d)
+    ivfPqCoarse(s, d, q, Some(FilterLabels))
       .orderBy(col("coarse").desc, col("vec_id"))
       .limit(PqCoarse) // fixed exact-rerank budget, corpus-independent
       .select(col("vec_id"), col("label"),

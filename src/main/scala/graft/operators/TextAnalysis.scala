@@ -1024,33 +1024,23 @@ object TextAnalysis {
     * sequence from a driver-side reference implementation. */
   private val BpeMerges = 10
 
-  /** Trained merge table (rank, left, right, pair_count) PLUS the id
-    * vocabulary (sorted base code points, then `</w>`, then merge
-    * products in rank order) — memoized per (session, dataset) so t19
-    * (training) and t20 (corpus-wide apply) derive from ONE training
-    * run, the trained-tokenizer-as-asset shape a real pipeline has.
-    * Values are vocabulary-sized driver Seqs (tens of entries here,
-    * ~100 KB at a production 30k-merge vocabulary). */
-  private val bpeMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (Seq[(Int, String, String, Long)], Seq[String])]()
-
-  /** Spark rounds the last (uncached) t19 training run paid —
-    * observability for the batched-merge claim (−1 until it trains). */
+  /** Spark rounds the last t19 training run paid — observability for
+    * the batched-merge claim (−1 until it trains). */
   @volatile private[graft] var t19TrainRounds: Int = -1
 
+  /** Trained merge table (rank, left, right, pair_count) PLUS the id
+    * vocabulary (sorted base code points, then `</w>`, then merge
+    * products in rank order), trained once per call — the
+    * trained-tokenizer-as-asset shape a real pipeline stores. Values
+    * are vocabulary-sized driver Seqs (tens of entries here, ~100 KB
+    * at a production 30k-merge vocabulary). */
   private[graft] def bpeAssets(
-      s: SparkSession, d: String): (Seq[(Int, String, String, Long)], Seq[String]) = {
-    val key = FrameCache.sessionKey(s) + "|" + d
-    val hit = bpeMemo.get(key)
-    if (hit != null) return hit
-    val computed = bpeTrainOn(s,
+      s: SparkSession, d: String): (Seq[(Int, String, String, Long)], Seq[String]) =
+    bpeTrainOn(s,
       Tables.documents(s, d)
         .select(termCol)
         .groupBy("term").agg(count(lit(1)).as("freq")),
       BpeMerges)
-    bpeMemo.putIfAbsent(key, computed)
-    bpeMemo.get(key)
-  }
 
   /** The training loop over an arbitrary (term, freq) word table and
     * merge budget — split from [[bpeAssets]] so a production-scale
@@ -1485,9 +1475,9 @@ object TextAnalysis {
 
   /** The TRAINED classifier, materialized: a per-feature log-odds
     * weight table w(f) = ln((n_pos+1)/(N_pos+V)) − ln((n_neg+1)/(N_neg+V))
-    * (vocabulary-sized, [[FrameCache]]-shared across t22/p15/st17 —
-    * the stored-asset precedent: at 100 TB the table trains once and
-    * ships to executors as a stored table) plus the log prior
+    * (vocabulary-sized, trained once per call by t22/p15/st17 — at
+    * 100 TB the table trains once and ships to executors as a stored
+    * table) plus the log prior
     * ln(d_pos/d_neg) (one 2-number aggregate per call). Scoring is
     * then prior + Σ w(f) over a document's feature occurrences — the
     * lookup the streaming twin pays statelessly. Class totals are
@@ -1496,18 +1486,16 @@ object TextAnalysis {
     * runs ONCE, not once per downstream action (the t19 recipe). */
   private[graft] def nbModel(s: SparkSession, d: String): (DataFrame, Double) = {
     val docs = Tables.documents(s, d)
-    val weights = FrameCache.getOrBuild(s, "nbweights|" + d) {
-      val feats = nbFeats(docs.withColumn("pos", nbPosCol), Seq("pos"))
-      val ft = feats.groupBy("feat").agg(
-        sum(when(col("pos"), 1L).otherwise(0L)).as("np"),
-        sum(when(!col("pos"), 1L).otherwise(0L)).as("nn"))
-        .localCheckpoint()
-      val t = ft.agg(sum("np"), sum("nn"), count(lit(1))).head()
-      val (tp, tn, v) = (t.getLong(0), t.getLong(1), t.getLong(2))
-      ft.select(col("feat"),
-        (log((col("np") + lit(1)).cast("double") / lit((tp + v).toDouble)) -
-         log((col("nn") + lit(1)).cast("double") / lit((tn + v).toDouble))).as("w"))
-    }
+    val feats = nbFeats(docs.withColumn("pos", nbPosCol), Seq("pos"))
+    val ft = feats.groupBy("feat").agg(
+      sum(when(col("pos"), 1L).otherwise(0L)).as("np"),
+      sum(when(!col("pos"), 1L).otherwise(0L)).as("nn"))
+      .localCheckpoint()
+    val t = ft.agg(sum("np"), sum("nn"), count(lit(1))).head()
+    val (tp, tn, v) = (t.getLong(0), t.getLong(1), t.getLong(2))
+    val weights = ft.select(col("feat"),
+      (log((col("np") + lit(1)).cast("double") / lit((tp + v).toDouble)) -
+       log((col("nn") + lit(1)).cast("double") / lit((tn + v).toDouble))).as("w"))
     val p = docs.agg(
       sum(when(nbPosCol, 1L).otherwise(0L)),
       sum(when(!nbPosCol, 1L).otherwise(0L))).head()

@@ -2807,30 +2807,35 @@ object TableCatalog {
     * by; never written (dropped by [[TableCatalog.writeData]]). */
   private[sources] val ZCol = "__graft_zorder"
 
-  /** EPHEMERAL catalog root: created now, deleted on
-    * `FrameCache.clear()` or JVM exit — the lifecycle the staged
-    * sentinel streams already use. The bounded verification/bench
-    * queries that build a catalog per run (st07/st10/st13/e02) go
-    * through here, so repeated rounds cannot accumulate orphan
-    * parquet trees under /tmp. Frames returned over such a catalog
-    * are only valid until the pipeline's clear — the same contract
-    * as the persisted FrameCache stages. */
+  /** EPHEMERAL catalog root: created now, deleted at JVM exit. The
+    * queries that build a catalog per call (st07/st10/st13/st20, e02,
+    * e07, e10, d07/d13/d17's signature and cluster stores) go through
+    * here, so repeated runs leave no orphan parquet trees under /tmp.
+    * Frames returned over such a catalog stay readable until the JVM
+    * exits. */
   def tempRoot(prefix: String): String = {
     val p = Files.createTempDirectory(prefix)
     tempRoots.add(p)
-    if (tempHooks.compareAndSet(false, true)) {
-      graft.operators.FrameCache.onClear(() => dropTempRoots())
-      Runtime.getRuntime.addShutdownHook(new Thread(() => dropTempRoots()))
-    }
+    if (tempHook.compareAndSet(false, true))
+      Runtime.getRuntime.addShutdownHook(new Thread(() => tempRoots.forEach(deleteTree(_))))
     p.toString
   }
   private val tempRoots =
     java.util.concurrent.ConcurrentHashMap.newKeySet[Path]()
-  private val tempHooks = new java.util.concurrent.atomic.AtomicBoolean(false)
-  private def dropTempRoots(): Unit = {
-    tempRoots.forEach(p => try deleteRecursively(p) catch { case _: Throwable => () })
-    tempRoots.clear()
-  }
+  private val tempHook = new java.util.concurrent.atomic.AtomicBoolean(false)
+
+  /** Best-effort recursive delete of a temporary tree — deliberately
+    * NOT [[deleteRecursively]], whose first failed delete aborts the
+    * walk: cleanup must keep going past a locked or concurrently
+    * removed file and delete the rest of the tree. */
+  private[graft] def deleteTree(root: Path): Unit =
+    try {
+      val walk = Files.walk(root)
+      try walk.sorted(java.util.Comparator.reverseOrder[Path]())
+        .iterator().asScala.foreach(f =>
+          try Files.delete(f) catch { case _: Throwable => () })
+      finally walk.close()
+    } catch { case _: java.io.IOException | _: java.io.UncheckedIOException => () }
 
   // one lock per normalized catalog root — every TableCatalog instance
   // over the same directory (in this JVM) shares it

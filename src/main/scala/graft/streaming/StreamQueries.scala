@@ -158,48 +158,24 @@ object StreamQueries {
     * [[Tables.normalizeTs]], and the sentinel rows carry user_id −1
     * for the consumer to filter. Returns None when the events table is
     * empty. Shared by st02 (custom keyed state), st12 (native session
-    * windows) and st13 (aggregate upsert); staged ONCE per (session,
-    * dataset) — the byte copy and the two sentinel writes are
-    * identical for every consumer, so the dir is cached like a
-    * FrameCache stage and released by `FrameCache.clear()` (or JVM
-    * exit — /dev/shm outlives the process). */
-  private val staged =
-    new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
-  private val stagedHooks = new java.util.concurrent.atomic.AtomicBoolean(false)
-  private def dropStaged(): Unit = {
-    staged.values.forEach(p =>
-      try graft.sources.TableCatalog.deleteRecursively(p)
-      catch { case _: Throwable => () })
-    staged.clear()
-  }
-
+    * windows) and st13 (aggregate upsert). Staged per call and deleted
+    * when `body` returns: every consumer drains the stream into a
+    * memory sink or a catalog table inside `body`, so no frame it
+    * returns reads the staged files. */
   private def withSentinelEventStream[T](s: SparkSession, d: String)
       (body: DataFrame => T): Option[T] = {
-    import java.nio.file.{Files => JFiles}
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // ts arrives as ns-LONG or µs-timestamp depending on the testdata
     // generation (Tables.scala documents both); every extraction below
     // branches on the actual type instead of assuming one encoding
     val rawSchema = s.read.parquet(s"$d/events.parquet").schema
-    val key = graft.operators.FrameCache.sessionKey(s) + "|" + d
-    val cached = staged.get(key)
-    val tmp =
-      if (cached != null && JFiles.isDirectory(cached.resolve("stream"))) cached
-      else stageSentinels(s, d, rawSchema) match {
-        case None => return None // empty events table
-        case Some(t) =>
-          staged.put(key, t)
-          if (stagedHooks.compareAndSet(false, true)) {
-            graft.operators.FrameCache.onClear(() => dropStaged())
-            Runtime.getRuntime.addShutdownHook(new Thread(() => dropStaged()))
-          }
-          t
-      }
-    val stream = Tables.normalizeTs(
-      s.readStream.schema(rawSchema)
-        .option("maxFilesPerTrigger", "2")
-        .parquet(tmp.resolve("stream").toString))
-    Some(body(stream))
+    stageSentinels(s, d, rawSchema).map { tmp =>
+      try body(Tables.normalizeTs(
+        s.readStream.schema(rawSchema)
+          .option("maxFilesPerTrigger", "2")
+          .parquet(tmp.resolve("stream").toString)))
+      finally graft.sources.TableCatalog.deleteTree(tmp)
+    }
   }
 
   /** Max event time in µs through the shared normalization branch —
@@ -392,39 +368,25 @@ object StreamQueries {
         return Seq.empty[(Long, Long, String, Double)]
           .toDF("event_id", "user_id", "event_type", "value")
       case Some(maxUs) =>
-        // staged ONCE per (session, dataset) like the sentinel staging
-        // — the byte copy, the duplicate rewrite, and the sentinels are
-        // identical for every run; released with FrameCache/JVM exit
-        val key = graft.operators.FrameCache.sessionKey(s) + "|st14|" + d
-        val cached = staged.get(key)
-        val tmp =
-          if (cached != null && JFiles.isDirectory(cached.resolve("stream"))) cached
-          else {
-            val t = stagingRoot()
-            val streamDir = t.resolve("stream")
-            JFiles.createDirectories(streamDir)
-            val chunk0 = streamDir.resolve("chunk-0000.parquet")
-            JFiles.copy(JPaths.get(d, "events.parquet"), chunk0)
-            chunk0.toFile.setLastModified(1700000000000L)
-            // chunk 1: the replayed duplicates — an exact-row subset of
-            // the source, re-written under the SOURCE encoding (the raw
-            // read preserves the physical ts values for every generation)
-            val dupStaging = t.resolve("chunk1")
-            s.read.parquet(s"$d/events.parquet")
-              .filter(pmod(col("user_id"), lit(7)) === 0)
-              .coalesce(1).write.parquet(dupStaging.toString)
-            publishChunk(dupStaging, streamDir, 1)
-            writeSentinel(s, t, streamDir, tsType, maxUs, 86400000L, 2)
-            writeSentinel(s, t, streamDir, tsType, maxUs, 172800000L, 3)
-            staged.put(key, t)
-            if (stagedHooks.compareAndSet(false, true)) {
-              graft.operators.FrameCache.onClear(() => dropStaged())
-              Runtime.getRuntime.addShutdownHook(new Thread(() => dropStaged()))
-            }
-            t
-          }
-        locally {
+        // staged per call like the sentinel staging, and deleted when
+        // the call returns: the result is read from the memory sink
+        val tmp = stagingRoot()
+        try {
           val streamDir = tmp.resolve("stream")
+          JFiles.createDirectories(streamDir)
+          val chunk0 = streamDir.resolve("chunk-0000.parquet")
+          JFiles.copy(JPaths.get(d, "events.parquet"), chunk0)
+          chunk0.toFile.setLastModified(1700000000000L)
+          // chunk 1: the replayed duplicates — an exact-row subset of
+          // the source, re-written under the SOURCE encoding (the raw
+          // read preserves the physical ts values for every generation)
+          val dupStaging = tmp.resolve("chunk1")
+          s.read.parquet(s"$d/events.parquet")
+            .filter(pmod(col("user_id"), lit(7)) === 0)
+            .coalesce(1).write.parquet(dupStaging.toString)
+          publishChunk(dupStaging, streamDir, 1)
+          writeSentinel(s, tmp, streamDir, tsType, maxUs, 86400000L, 2)
+          writeSentinel(s, tmp, streamDir, tsType, maxUs, 172800000L, 3)
           val stream = Tables.normalizeTs(
             s.readStream.schema(rawSchema)
               .option("maxFilesPerTrigger", "1") // dups land in a LATER batch
@@ -448,7 +410,7 @@ object StreamQueries {
           s.table("graft_st14_sink")
             .filter(col("user_id") >= 0) // sentinel rows out
             .orderBy("event_id")
-        }
+        } finally graft.sources.TableCatalog.deleteTree(tmp)
     }
   }
 

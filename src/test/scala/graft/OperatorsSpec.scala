@@ -437,31 +437,6 @@ class OperatorsSpec extends AnyFunSuite {
       cents.map(_.toSeq).toSeq)
   }
 
-  test("FrameCache.clear(session) evicts only that session's frames") {
-    import operators.FrameCache
-    val s2 = spark.newSession() // distinct sessionUUID, shared context
-    assert(FrameCache.sessionKey(s2) != FrameCache.sessionKey(spark))
-    // DIFFERENT plans per session: the context-wide cacheManager keys
-    // cached data by logical-plan equality, so identical plans in two
-    // sessions share one cache entry and could not be evicted
-    // independently anyway
-    val a = FrameCache.getOrBuild(spark, "test/evict") {
-      sources.Tables.region(spark, sf).select("r_regionkey")
-    }
-    val b = FrameCache.getOrBuild(s2, "test/evict") {
-      sources.Tables.nation(s2, sf).select("n_nationkey")
-    }
-    assert(FrameCache.cachedCount(spark) >= 1 && FrameCache.cachedCount(s2) == 1)
-    FrameCache.clear(s2)
-    assert(FrameCache.cachedCount(s2) == 0, "s2's entry must be gone")
-    assert(b.storageLevel == org.apache.spark.storage.StorageLevel.NONE,
-      "evicted frame must be unpersisted")
-    // the other session's identical tag is untouched and still cached
-    assert(FrameCache.cachedCount(spark) >= 1)
-    assert(a.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
-    FrameCache.clear(spark)
-  }
-
   test("d07 reads STORED corpus signatures: only the new batch evaluates the kernel") {
     val df = Dedup.d07Incremental(spark, sf)
     val planStr = df.queryExecution.executedPlan.toString
