@@ -61,10 +61,17 @@ class GraftSQL(spark: SparkSession, val catalog: TableCatalog) {
 
   // views the last SELECT registered (observable registration scope)
   private[graft] var lastRegistered: Seq[String] = Nil
+  // the read route each table of the last SELECT took (EXPLAIN prints
+  // one line per table), and this session's bindings per route
+  private[graft] var lastRoutes: Map[String, GraftSQL.Route] = Map.empty
+  private[graft] var localReads: Long = 0L
+  private[graft] var sparkReads: Long = 0L
   // (kept files, total files) per table the last SELECT index-pruned —
   // plan observability for specs, like the reference's EXPLAIN showing
   // an IndexLookup node instead of a Scan
-  private[graft] var lastPruned: Map[String, (Int, Int)] = Map.empty
+  private[graft] def lastPruned: Map[String, (Int, Int)] = lastRoutes.collect {
+    case (t, GraftSQL.Route(node, Some(r))) if node != "Scan" => t -> ((r.kept, r.all))
+  }
 
   private val typeMap: Map[String, DataType] = Map(
     "BOOLEAN" -> BooleanType, "BOOL" -> BooleanType,
@@ -145,9 +152,11 @@ class GraftSQL(spark: SparkSession, val catalog: TableCatalog) {
         val df = runSelect(inner)
         // surface the manifest pruning the bound scans applied — the
         // reference's EXPLAIN shows an IndexLookup node instead of a
-        // Scan; here the visible analog is kept/total data files
-        val pruneTxt = lastPruned.toSeq.sortBy(_._1).map { case (t, (k, a)) =>
-          s"IndexPrune: $t kept $k/$a files" }.mkString("\n")
+        // Scan; here the visible analogs are kept/total data files and
+        // the read route each table took
+        val pruneTxt = (lastPruned.toSeq.sortBy(_._1).map { case (t, (k, a)) =>
+          s"IndexPrune: $t kept $k/$a files" } ++
+          lastRoutes.toSeq.sortBy(_._1).map { case (t, r) => r.line(t) }).mkString("\n")
         val planTxt = GraftSession.explainPlan(df)
         return Seq(if (pruneTxt.isEmpty) planTxt else s"$pruneTxt\n$planTxt")
           .toDF("plan")
@@ -750,7 +759,8 @@ class GraftSQL(spark: SparkSession, val catalog: TableCatalog) {
     * scans and its version write each appear as one labeled execution,
     * in order. Session-mode rules are the executing statement's own:
     * a READ ONLY session accepts EXPLAIN ANALYZE SELECT and rejects
-    * EXPLAIN ANALYZE DML with the DML's error.
+    * EXPLAIN ANALYZE DML with the DML's error. A SELECT's report opens
+    * with the read route line of each bound table, as EXPLAIN prints.
     *
     * SCOPE: the listener registers on the shared SparkSession's
     * listenerManager, so a CONCURRENT GraftSQL session (the TCP
@@ -773,9 +783,10 @@ class GraftSQL(spark: SparkSession, val catalog: TableCatalog) {
       override def onFailure(funcName: String,
           qe: org.apache.spark.sql.execution.QueryExecution, exception: Exception): Unit = ()
     }
+    val isSelect = innerUp.startsWith("SELECT") || innerUp.startsWith("WITH")
     spark.listenerManager.register(listener)
     try {
-      if (innerUp.startsWith("SELECT") || innerUp.startsWith("WITH"))
+      if (isSelect)
         runSelect(inner).write.format("noop").mode("overwrite").save()
       else execute(inner)
     } finally {
@@ -793,9 +804,12 @@ class GraftSQL(spark: SparkSession, val catalog: TableCatalog) {
     val parts = captured.asScala.toSeq.zipWithIndex.map { case ((fn, qe), i) =>
       s"== Execution ${i + 1}: $fn ==\n" + GraftSQL.renderMetrics(qe.executedPlan)
     }
-    Seq(
+    // a SELECT's report opens with the read route of each bound table
+    val routes =
+      if (isSelect) lastRoutes.toSeq.sortBy(_._1).map { case (t, r) => r.line(t) } else Nil
+    Seq((routes :+ (
       if (parts.isEmpty) "== No Spark execution (metadata-only statement) =="
-      else parts.mkString("\n")).toDF("plan")
+      else parts.mkString("\n"))).mkString("\n")).toDF("plan")
   }
 
   /** A SELECT/WITH under the session's snapshot view bindings.
@@ -839,26 +853,31 @@ class GraftSQL(spark: SparkSession, val catalog: TableCatalog) {
     // parse ONCE: the same tree feeds the index-prune extraction and
     // (rewritten) the analyzer
     val plan = spark.sessionState.sqlParser.parsePlan(s)
-    lastPruned = Map.empty
-    // pruning applies to the plain session (current manifest) AND to
-    // pinned READ ONLY / AS OF sessions (each manifest stores its own
-    // zone maps, so the pinned version prunes against ITS stats). A
-    // write txn stays unpruned: its reads merge staged dirs the
-    // manifest doesn't describe, and that path stays single-sourced.
-    val prunes: Map[String, org.apache.spark.sql.Column] =
-      if (txn.isEmpty) indexPrunes(plan)
+    lastRoutes = Map.empty
+    // pruning and the local route apply to the plain session (current
+    // manifest) AND to pinned READ ONLY / AS OF sessions (each manifest
+    // stores its own zone maps, so the pinned version prunes against
+    // ITS stats). A write txn stays unpruned, on Spark: its reads merge
+    // staged dirs the manifest doesn't describe, and that path stays
+    // single-sourced. Each table's metadata is read once, here.
+    val metas: Map[String, TableCatalog.TableMeta] =
+      if (txn.isEmpty) lastRegistered.filter(catalog.exists).map(n => n -> catalog.meta(n)).toMap
       else Map.empty
+    val prunes = indexPrunes(plan, metas)
     val bindings = lastRegistered.map { n =>
-      n -> (prunes.get(n) match {
-        case Some(f) =>
-          val (kept, all) = roVersions match {
-            case Some(vs) => catalog.planFilesAt(n,
-              vs.getOrElse(n, sys.error(s"no such table in snapshot: $n")), f)
-            case None => catalog.planFiles(n, f)
-          }
-          lastPruned += n -> ((kept.size, all.size))
-          catalog.scanFiles(n, kept)
-        case None => currentScan(n)
+      n -> (metas.get(n) match {
+        case Some(m) =>
+          val version = roVersions.fold(m.version)(vs =>
+            vs.getOrElse(n, sys.error(s"no such table in snapshot: $n")))
+          val prune = prunes.get(n)
+          val (df, r) = catalog.bindRead(m, n, version, prune.map(_.filter))
+          lastRoutes += n -> GraftSQL.Route(prune.fold("Scan")(_.node), Some(r))
+          if (r.localRows.isDefined) localReads += 1 else sparkReads += 1
+          df
+        case None =>
+          lastRoutes += n -> GraftSQL.Route("Scan", None)
+          sparkReads += 1
+          currentScan(n)
       })
     }
     GraftSession.withTempViews(spark, bindings ++ viewBindings)(
@@ -892,26 +911,22 @@ class GraftSQL(spark: SparkSession, val catalog: TableCatalog) {
     *  - a name that actually resolves to a CTE makes the bound view
     *    unused, so pruning it is vacuously harmless. */
   private def indexPrunes(
-      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
-      : Map[String, org.apache.spark.sql.Column] = {
+      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
+      metas: Map[String, graft.sources.TableCatalog.TableMeta])
+      : Map[String, GraftSQL.Prune] = {
     import org.apache.spark.sql.Column
     import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedRelation}
     import org.apache.spark.sql.catalyst.expressions.{And, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual, SubqueryExpression}
     import org.apache.spark.sql.catalyst.plans.Inner
     import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, LogicalPlan, SubqueryAlias, UnresolvedWith}
     import org.apache.spark.sql.functions.{col, lit}
-    import graft.sources.TableCatalog.TableMeta
 
-    val metas = scala.collection.mutable.Map[String, Option[TableMeta]]()
-    def metaOf(t: String): Option[TableMeta] =
-      metas.getOrElseUpdate(t, if (catalog.exists(t)) Some(catalog.meta(t)) else None)
     def hasCol(t: String, c: String): Boolean =
-      metaOf(t).exists(_.schema.fieldNames.exists(_.equalsIgnoreCase(c)))
+      metas.get(t).exists(_.schema.fieldNames.exists(_.equalsIgnoreCase(c)))
     // cheap gate: no registered catalog table → nothing to extract.
     // (No index requirement: the manifest carries zone maps for every
     // prunable column, so any table's conjuncts are worth extracting.)
-    if (!lastRegistered.exists(n => metaOf(n).isDefined))
-      return Map.empty
+    if (metas.isEmpty) return Map.empty
 
     // leaf = one FROM-clause relation occurrence: the catalog table it
     // names (None = unknown — CTE reference or multipart name) and the
@@ -997,7 +1012,7 @@ class GraftSQL(spark: SparkSession, val catalog: TableCatalog) {
           case _ => None
         }
         target.foreach { t =>
-          val canonical = metaOf(t).get.schema.fieldNames
+          val canonical = metas(t).schema.fieldNames
             .find(_.equalsIgnoreCase(attr.nameParts.last)).get
           val cr = col(canonical)
           val c = op match {
@@ -1007,7 +1022,7 @@ class GraftSQL(spark: SparkSession, val catalog: TableCatalog) {
             case "<"  => cr < lit(v)
             case "<=" => cr <= lit(v)
           }
-          found(t) = found(t) :+ (canonical -> c)
+          found(t) = found(t) :+ (op -> c)
         }
       }
 
@@ -1040,9 +1055,12 @@ class GraftSQL(spark: SparkSession, val catalog: TableCatalog) {
     }
     walk(plan)
 
+    // an equality conjunct makes the binding a key lookup, ranges
+    // alone an index range lookup (the reference's two plan nodes)
     found.toMap.collect {
       case (t, conjs) if occurrences(t.toLowerCase) == 1 && conjs.nonEmpty =>
-        t -> conjs.map(_._2).reduce(_ && _)
+        t -> GraftSQL.Prune(conjs.map(_._2).reduce(_ && _),
+          if (conjs.exists(_._1 == "=")) "KeyLookup" else "IndexLookup")
     }
   }
 
@@ -1150,6 +1168,26 @@ class GraftSQL(spark: SparkSession, val catalog: TableCatalog) {
 
 /** Dialect shims shared by every [[GraftSQL]] instance. */
 object GraftSQL {
+
+  /** The conjuncts a SELECT attributed to one table and the lookup
+    * node they make of its binding: `KeyLookup` with an equality,
+    * `IndexLookup` with ranges only. */
+  private[graft] case class Prune(filter: Column, node: String)
+
+  /** How a SELECT bound one table: the node (`KeyLookup`,
+    * `IndexLookup`, or `Scan` when nothing was attributed to it) and
+    * the catalog's route — None for a write txn's staged scan. */
+  private[graft] case class Route(node: String, read: Option[TableCatalog.ReadRoute]) {
+    def line(table: String): String = read match {
+      case Some(r) =>
+        val files = s"${r.kept}/${r.all} files" + r.footerRows.fold("")(n => s", $n footer rows")
+        r.localRows match {
+          case Some(n) => s"$node: $table local $n rows ($files)"
+          case None    => s"$node: $table spark ($files over the local cap)"
+        }
+      case None => s"$node: $table spark (write txn)"
+    }
+  }
 
   /** One indented line per executed-plan node with its SQLMetric
     * VALUES — `nodeName [metric=value, …]` — descending through AQE's

@@ -93,6 +93,8 @@ object Shell {
             s"$versions published versions)")
           out.println(f"Storage:  ${bytes / 1e6}%.3f MB disk")
           out.println(s"Session:  $txnState")
+          // SELECT table bindings per read route (GraftSQL.bindRead's guard)
+          out.println(s"Reads:    ${g.localReads} local, ${g.sparkReads} spark")
         case ("!table", Seq(name)) => render(g.execute(s"SHOW CREATE TABLE $name"))
         case ("!tables", _) => g.visibleTables.foreach(out.println)
         case ("!exit" | "!quit", _) => done = true

@@ -49,12 +49,17 @@ object Scale {
     * [a, b] provably contains the target order statistics at ranks
     * k = ⌊p(n−1)⌋ and k+1: rank(a) ≤ (p−3ε)n < k and
     * rank(b) ≥ (p+3ε)n > k+1, with 3εn slack each side.
-    * Pass 2 (codegen filters): per group, |{v < a}| and the sorted
-    * ≈8εn in-bracket values. The exact k-th/(k+1)-th values are read
-    * off by index and interpolated with the percentile aggregate's own
-    * formula ((hi−pos)·lo + (pos−lo)·hi, pos = p·(n−1)) — the same
-    * double arithmetic, hence the same result bit for bit
-    * (spec-asserted against the aggregate on the real tables).
+    * Pass 2 (codegen filters): per group, |{v < a}|, |{v = a}|,
+    * |{v = b}| and the sorted values STRICTLY inside (a, b) — at most
+    * the ≈8εn ranks between the two sketch answers, however many rows
+    * tie at a bracket end. The order statistics are indexed over the
+    * run `a × |{v = a}| ++ inside ++ b × |{v = b}|` (one run when
+    * a = b) without materializing it. The exact k-th/(k+1)-th values
+    * are read off by index and interpolated with the percentile
+    * aggregate's own formula ((hi−pos)·lo + (pos−lo)·hi, pos = p·(n−1))
+    * — the same double arithmetic, hence the same result bit for bit
+    * (spec-asserted against the aggregate on the real tables and on
+    * groups of one or two distinct values).
     *
     * Driver memory is groups × 8n/accuracy rows (tune
     * spark.graft.percentile.accuracy upward for enormous groups). If a
@@ -63,7 +68,13 @@ object Scale {
     * guarded anyway), that group FALLS BACK to the exact aggregate —
     * correctness never rests on the sketch. */
   def exactPctl(s: SparkSession, df: DataFrame, groupCol: String,
-      value: Column, p: Double): Map[String, Double] = {
+      value: Column, p: Double): Map[String, Double] =
+    exactPctlBracketed(s, df, groupCol, value, p).map { case (g, (v, _)) => g -> v }
+
+  /** [[exactPctl]] with each group's collected in-bracket value count
+    * (what a spec bounds). */
+  private[graft] def exactPctlBracketed(s: SparkSession, df: DataFrame, groupCol: String,
+      value: Column, p: Double): Map[String, (Double, Int)] = {
     val acc = s.conf.get("spark.graft.percentile.accuracy", "10000").toInt
     val eps = 1.0 / acc
     val pLo = math.max(0.0, p - 4 * eps)
@@ -83,19 +94,29 @@ object Scale {
       when(col(groupCol) === g, lit(br.last)).otherwise(c) }
     val resolved = df.groupBy(groupCol)
       .agg(count(when(value < aOf, 1)).as("below"),
-        sort_array(collect_list(when(value >= aOf && value <= bOf, value)))
-          .as("bracket"))
+        count(when(value === aOf, 1)).as("atA"),
+        count(when(value === bOf, 1)).as("atB"),
+        sort_array(collect_list(when(value > aOf && value < bOf, value)))
+          .as("inside"))
       .collect()
-      .map(r => r.getString(0) -> (r.getLong(1), r.getSeq[Double](2)))
+      .map(r => r.getString(0) ->
+        (r.getLong(1), r.getLong(2), r.getLong(3), r.getSeq[Double](4)))
       .toMap
-    sketch.map { case (g, n, _) =>
+    sketch.map { case (g, n, br) =>
       val pos = p * (n - 1)
       val lower = math.floor(pos).toLong
       val higher = math.ceil(pos).toLong
-      val (below, bracket) = resolved(g)
+      val (below, atA, atB0, inside) = resolved(g)
+      val (a, b) = (br.head, br.last)
+      // a = b under SQL equality (NaN = NaN, -0.0 = 0.0): one run
+      val atB = if (a == b || (a.isNaN && b.isNaN)) 0L else atB0
       def at(rank: Long): Option[Double] = {
         val i = rank - below
-        if (i >= 0 && i < bracket.length) Some(bracket(i.toInt)) else None
+        if (i < 0) None
+        else if (i < atA) Some(a)
+        else if (i - atA < inside.length) Some(inside((i - atA).toInt))
+        else if (i - atA - inside.length < atB) Some(b)
+        else None
       }
       val exact = (at(lower), at(higher)) match {
         case (Some(lo), Some(hi)) =>
@@ -105,7 +126,7 @@ object Scale {
           df.filter(col(groupCol) === g)
             .agg(percentile(value, lit(p))).head().getDouble(0)
       }
-      g -> exact
+      g -> (exact, inside.length)
     }.toMap
   }
 

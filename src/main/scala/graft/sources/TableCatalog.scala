@@ -36,7 +36,7 @@ import scala.jdk.CollectionConverters._
   */
 class TableCatalog(spark: SparkSession, val root: String) {
 
-  import TableCatalog.{FileStat, TableMeta, WriteConflictException}
+  import TableCatalog.{FileStat, LocalReadMaxBytes, LocalReadMaxFiles, LocalReadMaxRows, ReadRoute, TableMeta, WriteConflictException}
 
   Files.createDirectories(Paths.get(root))
 
@@ -383,9 +383,22 @@ class TableCatalog(spark: SparkSession, val root: String) {
     * files never change after publish. */
   private val dirRowsCache = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
   private def dirRowCount(name: String, rel: String): Long = {
+    val cached = dirRowsCache.get(s"$name|$rel")
+    if (cached != null) cached else footerTotals(name, rel)._1
+  }
+
+  /** Uncompressed bytes of one manifest entry's row groups, from the
+    * same footer read as [[dirRowCount]] and cached beside it. */
+  private val entryBytesCache = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+  private def entryBytes(name: String, rel: String): Long = {
+    val cached = entryBytesCache.get(s"$name|$rel")
+    if (cached != null) cached else footerTotals(name, rel)._2
+  }
+
+  /** (rows, uncompressed bytes) of one entry's parquet footers; fills
+    * both caches. */
+  private def footerTotals(name: String, rel: String): (Long, Long) = {
     val key = s"$name|$rel"
-    val cached = dirRowsCache.get(key)
-    if (cached != null) return cached
     val abs = absTableDir(name).resolve(rel)
     val files =
       if (Files.isDirectory(abs)) {
@@ -394,15 +407,20 @@ class TableCatalog(spark: SparkSession, val root: String) {
       } else if (Files.isRegularFile(abs)) List(abs)
       else Nil
     var total = 0L
+    var bytes = 0L
     val conf = spark.sessionState.newHadoopConf() // one clone per entry, not per file
     files.filter(_.getFileName.toString.endsWith(".parquet")).foreach { p =>
       val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
         new org.apache.hadoop.fs.Path(p.toUri), conf)
       val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try total += r.getRecordCount finally r.close()
+      try {
+        total += r.getRecordCount
+        r.getFooter.getBlocks.asScala.foreach(b => bytes += b.getTotalByteSize)
+      } finally r.close()
     }
     dirRowsCache.put(key, total)
-    total
+    entryBytesCache.put(key, bytes)
+    (total, bytes)
   }
 
   /** Stored per-dir row counts from a manifest (empty for manifests
@@ -737,9 +755,10 @@ class TableCatalog(spark: SparkSession, val root: String) {
   def asOf(name: String, version: Int): DataFrame =
     frameOf(meta(name).schema, resolveDirs(name, readManifest(name, version)))
 
-  /** Zone-map-pruned scan: the Spark-native analog of the reference's
-    * `IndexLookup` / `KeyLookup` plan nodes (plan/mod.rs:77-92) and its
-    * IndexLookup optimizer pass (plan/mod.rs:42). Simple range/equality
+  /** Zone-map-pruned scan, the programmatic form of the reference's
+    * IndexLookup optimizer pass (plan/mod.rs:42); the SQL front's
+    * `KeyLookup`/`IndexLookup` route, which also decodes small pruned
+    * snapshots on the driver, is [[bindRead]]. Simple range/equality
     * conjuncts over ANY prunable column — the manifest records per-file
     * min/max for every numeric/string column at publish, straight from
     * the parquet footers — are extracted from `filter` driver-side and
@@ -780,7 +799,119 @@ class TableCatalog(spark: SparkSession, val root: String) {
     * reads prune exactly like current ones (the read schema is the
     * current one, matching [[asOf]]'s contract). */
   def planFilesAt(name: String, version: Int, filter: Column): (Seq[String], Seq[String]) =
-    pruneFiles(meta(name), name, readManifest(name, version), readStats(name, version), filter)
+    planFilesAt(meta(name), name, version, filter)
+
+  private def planFilesAt(m: TableMeta, name: String, version: Int,
+      filter: Column): (Seq[String], Seq[String]) =
+    pruneFiles(m, name, readManifest(name, version), readStats(name, version), filter)
+
+  /** Bind one table of a SELECT at `version` (the SQL front's read
+    * route, the analog of the reference's `KeyLookup`/`IndexLookup`
+    * plan nodes, plan/mod.rs:77-92). `m` is the metadata the caller
+    * read once for the whole statement. The zone maps prune the files
+    * by `prune`, the conjuncts the SQL front attributed to this table;
+    * then one guard picks the route:
+    *  - local: the kept files' footers total at most [[LocalReadMaxRows]]
+    *    rows, [[LocalReadMaxBytes]] uncompressed bytes and
+    *    [[LocalReadMaxFiles]] files, and Spark's vectorized parquet
+    *    reader handles the schema. The files are decoded on the calling
+    *    thread ([[readLocal]]) into a `LocalRelation`, which Catalyst
+    *    folds Filter/Project/Limit into and collects with no Spark job;
+    *  - spark: otherwise the frame scans the kept files, as before.
+    * Returns the frame and the route taken. */
+  private[graft] def bindRead(m: TableMeta, name: String, version: Int,
+      prune: Option[Column]): (DataFrame, ReadRoute) = {
+    val entries = readManifest(name, version)
+    val (kept0, all0) = prune match {
+      case Some(f) => planFilesAt(m, name, version, f)
+      case None    => (entries, entries)
+    }
+    val (kept, all) = (kept0.flatMap(expandEntry(name, _)), all0.flatMap(expandEntry(name, _)))
+    // footers are read (once per file, cached) only under the file cap
+    val rows = if (kept.size > LocalReadMaxFiles) None else Some(kept.map(dirRowCount(name, _)).sum)
+    val fits = rows.exists(_ <= LocalReadMaxRows) &&
+      kept.map(entryBytes(name, _)).sum <= LocalReadMaxBytes &&
+      org.apache.spark.sql.execution.datasources.parquet.ParquetUtils
+        .isBatchReadSupportedForSchema(spark.sessionState.conf, m.schema)
+    if (!fits) (frameOf(m.schema, resolveDirs(name, kept)),
+      ReadRoute(kept.size, all.size, rows, None))
+    else {
+      val data = readLocal(m, name, kept, prune)
+      (org.apache.spark.sql.GraftColumnBridge.ofRows(spark,
+        org.apache.spark.sql.catalyst.plans.logical.LocalRelation(
+          org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(readSchema(m)),
+          data)),
+        ReadRoute(kept.size, all.size, rows, Some(data.size)))
+    }
+  }
+
+  // Spark's parquet reader per read schema, with the session conf it
+  // was built under: building one broadcasts the Hadoop conf, which
+  // costs more than decoding a small file, so a reader is reused until
+  // the session conf changes
+  private val localReaders = new java.util.concurrent.ConcurrentHashMap[StructType,
+    (Map[String, String], org.apache.spark.sql.execution.datasources.PartitionedFile =>
+      Iterator[org.apache.spark.sql.catalyst.InternalRow])]()
+
+  /** The schema a file scan of the table outputs: every column
+    * nullable, as Spark reads any file source (an older file may lack
+    * a column altogether). */
+  private def readSchema(m: TableMeta): StructType =
+    StructType(m.schema.fields.map(_.copy(nullable = true)))
+
+  /** Decode `files` (table-relative) on the calling thread with Spark's
+    * own parquet reader — the reader a scan task runs, under this
+    * session's conf, so columns missing from older files read as NULL,
+    * names match case-insensitively and timestamps, decimals and
+    * `nanosAsLong` come out as on executors. A row is dropped before
+    * its copy only when `prune` — null-rejecting conjuncts the SQL
+    * front attributed to this table, bound here by Catalyst to the
+    * table's attributes — evaluates to false or NULL on it; a row
+    * whose evaluation throws is kept, and the query's own WHERE still
+    * runs on top. Every reader is closed, and a file gone since
+    * planning fails the read instead of shrinking the result. */
+  protected def readLocal(m: TableMeta, name: String, files: Seq[String],
+      prune: Option[Column]): Seq[org.apache.spark.sql.catalyst.InternalRow] = {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{BindReferences, Predicate, UnsafeProjection}
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation}
+    import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
+    val schema = readSchema(m)
+    val attrs = org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(schema)
+    val keep = prune.map { f =>
+      val cond = org.apache.spark.sql.GraftColumnBridge.ofRows(spark, LocalRelation(attrs))
+        .filter(f).queryExecution.analyzed match {
+          case Filter(c, _) => c
+          case other => sys.error(s"unexpected analyzed prune filter: $other")
+        }
+      val p = Predicate.createInterpreted(BindReferences.bindReference(cond, attrs))
+      p.initialize(0)
+      p
+    }
+    val conf = spark.sessionState.conf.getAllConfs
+    val read = localReaders.compute(schema, (_, cached) =>
+      if (cached != null && cached._1 == conf) cached
+      else (conf, new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat()
+        .buildReaderWithPartitionValues(spark, schema, new StructType(), schema, Nil,
+          Map(FileFormat.OPTION_RETURNING_BATCH -> "false"), spark.sessionState.newHadoopConf())))._2
+    val copy = UnsafeProjection.create(schema)
+    val out = Vector.newBuilder[InternalRow]
+    files.foreach { rel =>
+      val p = absTableDir(name).resolve(rel)
+      val size = Files.size(p) // NoSuchFileException once vacuumed: fail, never skip
+      val it = read(PartitionedFile(InternalRow.empty,
+        org.apache.spark.paths.SparkPath.fromPath(new org.apache.hadoop.fs.Path(p.toUri)),
+        0L, size, Array.empty[String], 0L, size, Map.empty))
+      try it.foreach { row =>
+        if (keep.forall(k => try k.eval(row) catch { case scala.util.control.NonFatal(_) => true }))
+          out += copy(row).copy()
+      } finally it match {
+        case c: java.io.Closeable => c.close()
+        case _ =>
+      }
+    }
+    out.result()
+  }
 
   /** The zone-map pruning behind [[planFilesAt]], over any manifest
     * view — a published version's entries and stats, or a [[Txn]]'s
@@ -795,16 +926,7 @@ class TableCatalog(spark: SparkSession, val root: String) {
     // listing — what Spark's scan planning does anyway), never the
     // stats list: a dir whose stats cover only some files (older
     // layout, partial write) must still contribute every file
-    def expand(d: String): Seq[String] = {
-      val abs = absTableDir(name).resolve(d)
-      if (!Files.isDirectory(abs)) return Seq(d)
-      val listing = Files.list(abs)
-      try listing.iterator().asScala
-        .filter(_.getFileName.toString.endsWith(".parquet"))
-        .map(p => d + "/" + p.getFileName.toString).toSeq
-      finally listing.close()
-    }
-    val allPaths = entries.flatMap(expand)
+    val allPaths = entries.flatMap(expandEntry(name, _))
     // prune on ANY numeric/string column — the manifest carries zone
     // maps for all of them since they're free at publish (footer
     // reads); an INDEX adds the sorted/clustered layout that makes
@@ -860,6 +982,19 @@ class TableCatalog(spark: SparkSession, val root: String) {
       })
     }
     (kept, allPaths)
+  }
+
+  /** The parquet files of one manifest entry, table-relative: a data
+    * dir's listing, or the entry itself when it is a single file (or
+    * is gone, so that reading it fails). */
+  private def expandEntry(name: String, d: String): Seq[String] = {
+    val abs = absTableDir(name).resolve(d)
+    if (!Files.isDirectory(abs)) return Seq(d)
+    val listing = Files.list(abs)
+    try listing.iterator().asScala
+      .filter(_.getFileName.toString.endsWith(".parquet"))
+      .map(p => d + "/" + p.getFileName.toString).toSeq
+    finally listing.close()
   }
 
   /** The stats of `all` that describe files a manifest view keeps:
@@ -2586,8 +2721,12 @@ class TableCatalog(spark: SparkSession, val root: String) {
       // version comparison cannot see (and whose DROP deleted this
       // txn's staged dirs). DDL is rare; conflict coarsely.
       val ddlMoved = TableCatalog.ddlEpoch(root).get() != beginDdlEpoch
+      // each staged table's metadata, read once: the version check, the
+      // FK-relation check and the claim below all see this one read, so
+      // the claim targets exactly the version that was checked
+      val stagedMeta = staged.keys.map(n => n -> meta(n)).toMap
       staged.foreach { case (name, (base, _)) =>
-        conflictUnless(!ddlMoved && currentVersion(name) == base,
+        conflictUnless(!ddlMoved && stagedMeta(name).version == base,
           s"write-write conflict on $name")
       }
       // FK-relative serialization check: this txn's RESTRICT and FK
@@ -2607,7 +2746,7 @@ class TableCatalog(spark: SparkSession, val root: String) {
           }
         }
       staged.keys.foreach { name =>
-        val m = meta(name)
+        val m = stagedMeta(name)
         checkRelated(name, (m.references.values.toSet ++
           referencingTables(name).map(_._1).toSet) - name -- staged.keys)
       }
@@ -2642,7 +2781,7 @@ class TableCatalog(spark: SparkSession, val root: String) {
       val claims = scala.collection.mutable.ArrayBuffer[(String, TableMeta)]()
       try {
         staged.foreach { case (name, (_, dirs)) =>
-          val m = meta(name)
+          val m = stagedMeta(name)
           // index stats: the pinned manifest's for the entries the new
           // version keeps (its version is m.version — checked above)
           // plus those collected for this txn's own dirs
@@ -2932,6 +3071,26 @@ object TableCatalog {
       .iterator().asScala.foreach(Files.delete)
     finally walk.close()
   }
+
+  /** The caps of the SQL front's local read route ([[TableCatalog.bindRead]]).
+    * A local read decodes the kept files on ONE driver thread and holds
+    * every kept row in driver memory until the statement's result is
+    * collected, so the caps bound both. 2^16 rows is where one thread's
+    * decode (tens of ms for narrow rows) stops beating a job's fixed
+    * launch cost with its tasks decoding in parallel; 16 MiB of
+    * uncompressed row-group bytes bounds the memory of wide rows that
+    * the row count alone would admit; each file costs this thread one
+    * more open and footer parse. Above any cap the files go to Spark. */
+  private[sources] val LocalReadMaxRows: Long = 1L << 16
+  private[sources] val LocalReadMaxBytes: Long = 16L << 20
+  private[sources] val LocalReadMaxFiles: Int = 64
+
+  /** How [[TableCatalog.bindRead]] bound one table: `kept` of `all`
+    * files after zone-map pruning, the kept files' footer row total
+    * (None when the file count alone ruled the local route out), and
+    * `localRows` — Some(rows bound) when the files were decoded on the
+    * driver, None when Spark scans them. */
+  case class ReadRoute(kept: Int, all: Int, footerRows: Option[Long], localRows: Option[Int])
 
   /** Durable schema metadata of one managed table. */
   case class TableMeta(

@@ -9,6 +9,30 @@ class ScaleSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val sf = TestSpark.sf
 
+  test("exactPctl under value ties: equals the percentile aggregate, bracket stays bounded") {
+    // groups of 120k rows: one distinct value, two distinct values (a
+    // 70/30 split), and two values with one outlier between them — the
+    // shapes whose whole group ties at a bracket end
+    val n = 120000L
+    val df = spark.range(0, 3 * n).select(
+      (col("id") % 3).cast("string").as("g"),
+      (col("id") / 3).cast("long").as("i"))
+      .select(col("g"), when(col("g") === "0", lit(7.5))
+        .when(col("g") === "1", when(col("i") % 10 < 7, lit(-2.0)).otherwise(lit(3.0)))
+        .otherwise(when(col("i") === 5, lit(1.0))
+          .when(col("i") % 2 === 0, lit(0.0)).otherwise(lit(4.0))).as("v"))
+    val acc = spark.conf.get("spark.graft.percentile.accuracy", "10000").toInt
+    for (p <- Seq(0.0, 0.25, 0.5, 0.7, 0.9, 1.0)) {
+      val byAgg = df.groupBy("g").agg(percentile(col("v"), lit(p))).collect()
+        .map(r => r.getString(0) -> r.getDouble(1)).toMap
+      val bySel = Scale.exactPctlBracketed(spark, df, "g", col("v"), p)
+      assert(bySel.map { case (g, (v, _)) => g -> v } == byAgg, s"p=$p: $bySel vs $byAgg")
+      bySel.foreach { case (g, (_, inside)) =>
+        assert(inside <= 10 * n / acc, s"p=$p group $g collected $inside in-bracket values")
+      }
+    }
+  }
+
   test("salted join returns exactly the plain-join result") {
     val li = sources.Tables.lineitem(spark, sf).select("l_orderkey", "l_quantity")
     val o = sources.Tables.orders(spark, sf).select("o_orderkey", "o_totalprice")

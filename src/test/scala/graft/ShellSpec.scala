@@ -168,4 +168,24 @@ class ShellSpec extends AnyFunSuite {
     assert(stripPrompts(out).linesIterator.toSeq.reverse
       .dropWhile(_.trim.isEmpty).headOption.exists(_.trim == "1"), out)
   }
+
+  test("EXPLAIN names each table's read route and !status counts reads per route") {
+    val out = stripPrompts(script(
+      "CREATE TABLE r (id INTEGER PRIMARY KEY, v STRING);",
+      "INSERT INTO r VALUES (1, 'a'), (2, 'b');",
+      "INSERT INTO r VALUES (3, 'c');",
+      "SELECT v FROM r WHERE id = 3;",           // local
+      "BEGIN;",
+      "SELECT count(*) AS n FROM r;",            // write txn: Spark
+      "COMMIT;",
+      "EXPLAIN SELECT v FROM r WHERE id BETWEEN 1 AND 2;", // local
+      "!status"))
+    val route = raw"IndexLookup: r local (\d+) rows \((\d+)/(\d+) files, (\d+) footer rows\)".r
+      .findFirstMatchIn(out).getOrElse(fail(s"no route line in:\n$out"))
+    assert(route.group(1).toInt == 2, out)
+    assert(route.group(2).toInt <= route.group(3).toInt && route.group(4).toInt >= 2, out)
+    val reads = raw"Reads:\s+(\d+) local, (\d+) spark".r
+      .findFirstMatchIn(out).getOrElse(fail(s"no Reads line in:\n$out"))
+    assert((reads.group(1).toInt, reads.group(2).toInt) == ((2, 1)), out)
+  }
 }
