@@ -66,6 +66,11 @@ class GraftSQL(spark: SparkSession, val catalog: TableCatalog) {
   private[graft] var lastRoutes: Map[String, GraftSQL.Route] = Map.empty
   private[graft] var localReads: Long = 0L
   private[graft] var sparkReads: Long = 0L
+  // this session's INSERT/MERGE statements per check route, and the
+  // write route lines of the statement EXPLAIN ANALYZE last ran
+  private[graft] var driverWrites: Long = 0L
+  private[graft] var sparkWrites: Long = 0L
+  private var lastWriteLines: Seq[String] = Nil
   // (kept files, total files) per table the last SELECT index-pruned —
   // plan observability for specs, like the reference's EXPLAIN showing
   // an IndexLookup node instead of a Scan
@@ -371,6 +376,7 @@ class GraftSQL(spark: SparkSession, val catalog: TableCatalog) {
         try {
           t.createTable(name, df.schema); t.insert(name, df)
           if (txn.isEmpty) t.commit()
+          noteWrite(name)
         } catch { case e: Throwable => if (txn.isEmpty) t.rollback(); throw e }
         // row count from the WRITTEN table (parquet footer metadata) —
         // df.count() would re-execute the entire source query
@@ -385,6 +391,7 @@ class GraftSQL(spark: SparkSession, val catalog: TableCatalog) {
           case Some(t) => t.insert(name, df)
           case None    => catalog.insert(name, df)
         }
+        noteWrite(name)
         Seq(s"INSERT INTO $name FROM SELECT").toDF("status")
 
       case createRe(name, colsBody) =>
@@ -414,6 +421,7 @@ class GraftSQL(spark: SparkSession, val catalog: TableCatalog) {
           case Some(t) => t.insert(name, df)
           case None    => catalog.insert(name, df)
         }
+        noteWrite(name)
         Seq(s"INSERT ${valuesRowCount(df)}").toDF("status")
 
       case mergeUsingRe(name, tAlias, rest) =>
@@ -442,6 +450,7 @@ class GraftSQL(spark: SparkSession, val catalog: TableCatalog) {
           case Some(t) => t.merge(name, df)
           case None    => catalog.merge(name, df)
         }
+        noteWrite(name)
         Seq(s"MERGE ${valuesRowCount(df)}").toDF("status")
 
       case updateRe(name, body) =>
@@ -552,14 +561,19 @@ class GraftSQL(spark: SparkSession, val catalog: TableCatalog) {
     require(dups.isEmpty, s"$what: duplicate column(s) ${dups.mkString(", ")}")
   }
 
-  /** Rows of a `VALUES` frame, read driver-side from its analyzed
-    * inline table — the tuples are already parsed, so counting them
-    * needs no Spark job. Any other plan shape is counted by a job. */
+  /** Rows of a `VALUES` frame, read on the driver from the batch the
+    * catalog's write guard also sees ([[TableCatalog.localBatch]]), so
+    * counting them needs no Spark job. Any other plan shape is counted
+    * by a job. */
   private def valuesRowCount(df: DataFrame): Long =
-    df.queryExecution.analyzed.collectFirst {
-      case t: org.apache.spark.sql.catalyst.analysis.ResolvedInlineTable => t.rows.size.toLong
-      case r: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => r.data.size.toLong
-    }.getOrElse(df.count())
+    TableCatalog.localBatch(df).map(_.data.size.toLong).getOrElse(df.count())
+
+  /** Count the write route of the INSERT or MERGE just staged into
+    * `name`, and keep its line for EXPLAIN ANALYZE. */
+  private def noteWrite(name: String): Unit = catalog.lastWrite.foreach { w =>
+    if (w.driverChecked) driverWrites += 1 else sparkWrites += 1
+    lastWriteLines :+= w.line(name)
+  }
 
   private def alignCols(raw: DataFrame, colList: String, name: String,
       verb: String, defaultToOwnColumns: Boolean = false): DataFrame = {
@@ -760,7 +774,9 @@ class GraftSQL(spark: SparkSession, val catalog: TableCatalog) {
     * in order. Session-mode rules are the executing statement's own:
     * a READ ONLY session accepts EXPLAIN ANALYZE SELECT and rejects
     * EXPLAIN ANALYZE DML with the DML's error. A SELECT's report opens
-    * with the read route line of each bound table, as EXPLAIN prints.
+    * with the read route line of each bound table, as EXPLAIN prints;
+    * an INSERT's or MERGE's with its write route line (driver- or
+    * Spark-checked, and the write's part count).
     *
     * SCOPE: the listener registers on the shared SparkSession's
     * listenerManager, so a CONCURRENT GraftSQL session (the TCP
@@ -784,6 +800,7 @@ class GraftSQL(spark: SparkSession, val catalog: TableCatalog) {
           qe: org.apache.spark.sql.execution.QueryExecution, exception: Exception): Unit = ()
     }
     val isSelect = innerUp.startsWith("SELECT") || innerUp.startsWith("WITH")
+    lastWriteLines = Nil
     spark.listenerManager.register(listener)
     try {
       if (isSelect)
@@ -804,9 +821,11 @@ class GraftSQL(spark: SparkSession, val catalog: TableCatalog) {
     val parts = captured.asScala.toSeq.zipWithIndex.map { case ((fn, qe), i) =>
       s"== Execution ${i + 1}: $fn ==\n" + GraftSQL.renderMetrics(qe.executedPlan)
     }
-    // a SELECT's report opens with the read route of each bound table
+    // a SELECT's report opens with the read route of each bound table,
+    // an INSERT's or MERGE's with its check route and write parts
     val routes =
-      if (isSelect) lastRoutes.toSeq.sortBy(_._1).map { case (t, r) => r.line(t) } else Nil
+      if (isSelect) lastRoutes.toSeq.sortBy(_._1).map { case (t, r) => r.line(t) }
+      else lastWriteLines
     Seq((routes :+ (
       if (parts.isEmpty) "== No Spark execution (metadata-only statement) =="
       else parts.mkString("\n"))).mkString("\n")).toDF("plan")

@@ -69,7 +69,13 @@ final class Server(spark: SparkSession, root: String, port: Int = 0) {
     val g = new GraftSQL(session, new TableCatalog(session, root))
     val in = new BufferedReader(
       new InputStreamReader(c.getInputStream, StandardCharsets.UTF_8))
-    val out = new PrintStream(c.getOutputStream, true, "UTF-8")
+    // one segment per reply: Shell.run flushes once after each
+    // statement's rows and each meta reply, and with Nagle's algorithm
+    // off that flush goes out at once instead of waiting for the
+    // client's delayed ACK of the previous segment
+    c.setTcpNoDelay(true)
+    val out = new PrintStream(new java.io.BufferedOutputStream(c.getOutputStream, 1 << 16),
+      false, "UTF-8")
     try Shell.run(
       Iterator.continually(in.readLine()).takeWhile(_ != null),
       out, g, interactive = false)
@@ -78,6 +84,7 @@ final class Server(spark: SparkSession, root: String, port: Int = 0) {
       // a dropped connection must not leak an open transaction
       if (g.inTransaction || g.inReadOnly)
         try g.execute("ROLLBACK") catch { case NonFatal(_) => () }
+      out.flush()
       try c.close() catch { case NonFatal(_) => () }
     }
   }

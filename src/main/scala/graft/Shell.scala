@@ -34,7 +34,10 @@ import scala.util.control.NonFatal
 object Shell {
 
   /** One REPL session, parameterized over IO so a spec can script it.
-    * Returns when `in` is exhausted or `!exit` is read. */
+    * Returns when `in` is exhausted or `!exit` is read. `out` is
+    * flushed once per reply (a statement's rows or its `Error:` line, a
+    * meta command's output, a prompt), so a buffered socket stream
+    * sends each reply whole. */
   def run(in: Iterator[String], out: PrintStream, g: GraftSQL,
       interactive: Boolean = true): Unit = {
     var headers = false
@@ -91,10 +94,12 @@ object Shell {
             else if (g.inReadOnly) "read-only snapshot" else "idle"
           out.println(s"Catalog:  ${g.catalog.root} (${tables.size} tables, " +
             s"$versions published versions)")
-          out.println(f"Storage:  ${bytes / 1e6}%.3f MB disk")
+          out.println("Storage:  %.3f MB disk".formatLocal(java.util.Locale.ROOT, bytes / 1e6))
           out.println(s"Session:  $txnState")
-          // SELECT table bindings per read route (GraftSQL.bindRead's guard)
+          // SELECT table bindings per read route (GraftSQL.bindRead's
+          // guard), INSERT/MERGE statements per check route
           out.println(s"Reads:    ${g.localReads} local, ${g.sparkReads} spark")
+          out.println(s"Writes:   ${g.driverWrites} driver-checked, ${g.sparkWrites} spark-checked")
         case ("!table", Seq(name)) => render(g.execute(s"SHOW CREATE TABLE $name"))
         case ("!tables", _) => g.visibleTables.foreach(out.println)
         case ("!exit" | "!quit", _) => done = true
@@ -126,6 +131,7 @@ object Shell {
           catch { case NonFatal(e) =>
             out.println(s"Error: ${Option(e.getMessage).getOrElse(e.toString).linesIterator.next()}")
           }
+          out.flush()
         }
       }
       // residue that is nothing but comments/whitespace (a trailing
@@ -141,9 +147,9 @@ object Shell {
     if (interactive)
       out.println(s"Connected to graft catalog at ${g.catalog.root}. " +
         "Enter !help for instructions.")
-    while (!done && { if (interactive) out.print(prompt); in.hasNext }) {
+    while (!done && { if (interactive) { out.print(prompt); out.flush() }; in.hasNext }) {
       val line = in.next()
-      if (buffer.isEmpty && line.trim.startsWith("!")) meta(line)
+      if (buffer.isEmpty && line.trim.startsWith("!")) { meta(line); out.flush() }
       else if (line.trim.nonEmpty || buffer.nonEmpty) {
         buffer.append(line).append('\n')
         drainStatements()

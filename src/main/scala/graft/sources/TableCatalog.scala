@@ -1,7 +1,9 @@
 package graft.sources
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StructField, StructType}
 import scala.jdk.CollectionConverters._
@@ -36,7 +38,7 @@ import scala.jdk.CollectionConverters._
   */
 class TableCatalog(spark: SparkSession, val root: String) {
 
-  import TableCatalog.{FileStat, LocalReadMaxBytes, LocalReadMaxFiles, LocalReadMaxRows, ReadRoute, TableMeta, WriteConflictException}
+  import TableCatalog.{FileStat, LocalReadMaxBytes, LocalReadMaxFiles, LocalReadMaxRows, ReadRoute, TableMeta, WriteConflictException, WriteRoute}
 
   Files.createDirectories(Paths.get(root))
 
@@ -827,21 +829,31 @@ class TableCatalog(spark: SparkSession, val root: String) {
       case None    => (entries, entries)
     }
     val (kept, all) = (kept0.flatMap(expandEntry(name, _)), all0.flatMap(expandEntry(name, _)))
+    val (df, rows, local) = bindFiles(m, name, kept, prune)
+    (df, ReadRoute(kept.size, all.size, rows, local))
+  }
+
+  /** A frame over `files` (table-relative parquet files), decoded on
+    * the driver ([[readLocal]], dropping rows `prune` rejects) when they
+    * fit the local-read caps, else a Spark scan of them. The one guard
+    * behind SELECT binding ([[bindRead]]) and the key probes of DML.
+    * Returns the frame, the files' footer row total (None when the file
+    * count alone ruled the driver out) and the rows decoded (None on
+    * the Spark route). */
+  private def bindFiles(m: TableMeta, name: String, files: Seq[String],
+      prune: Option[Column]): (DataFrame, Option[Long], Option[Int]) = {
     // footers are read (once per file, cached) only under the file cap
-    val rows = if (kept.size > LocalReadMaxFiles) None else Some(kept.map(dirRowCount(name, _)).sum)
+    val rows = if (files.size > LocalReadMaxFiles) None else Some(files.map(dirRowCount(name, _)).sum)
     val fits = rows.exists(_ <= LocalReadMaxRows) &&
-      kept.map(entryBytes(name, _)).sum <= LocalReadMaxBytes &&
+      files.map(entryBytes(name, _)).sum <= LocalReadMaxBytes &&
       org.apache.spark.sql.execution.datasources.parquet.ParquetUtils
         .isBatchReadSupportedForSchema(spark.sessionState.conf, m.schema)
-    if (!fits) (frameOf(m.schema, resolveDirs(name, kept)),
-      ReadRoute(kept.size, all.size, rows, None))
+    if (!fits) (frameOf(m.schema, resolveDirs(name, files)), rows, None)
     else {
-      val data = readLocal(m, name, kept, prune)
-      (org.apache.spark.sql.GraftColumnBridge.ofRows(spark,
-        org.apache.spark.sql.catalyst.plans.logical.LocalRelation(
-          org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(readSchema(m)),
-          data)),
-        ReadRoute(kept.size, all.size, rows, Some(data.size)))
+      val data = readLocal(m, name, files, prune)
+      (GraftColumnBridge.ofRows(spark, LocalRelation(
+          org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(readSchema(m)), data)),
+        rows, Some(data.size))
     }
   }
 
@@ -879,8 +891,13 @@ class TableCatalog(spark: SparkSession, val root: String) {
     val schema = readSchema(m)
     val attrs = org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(schema)
     val keep = prune.map { f =>
-      val cond = org.apache.spark.sql.GraftColumnBridge.ofRows(spark, LocalRelation(attrs))
-        .filter(f).queryExecution.analyzed match {
+      // a long IN list (a DML key probe's) becomes a hash-set lookup,
+      // as the optimizer would make it, instead of a scan per row; a
+      // literal that fails to fold stays for the per-row evaluation
+      val analyzed = GraftColumnBridge.ofRows(spark, LocalRelation(attrs)).filter(f).queryExecution.analyzed
+      val cond = (try org.apache.spark.sql.catalyst.optimizer.OptimizeIn(
+          org.apache.spark.sql.catalyst.optimizer.ConstantFolding(analyzed))
+        catch { case scala.util.control.NonFatal(_) => analyzed }) match {
           case Filter(c, _) => c
           case other => sys.error(s"unexpected analyzed prune filter: $other")
         }
@@ -1028,7 +1045,7 @@ class TableCatalog(spark: SparkSession, val root: String) {
       // keep extra files, never drop matching ones
       perCol(c) = (lo.orElse(l0), hi.orElse(h0))
     }
-    org.apache.spark.sql.GraftColumnBridge.rangeConjuncts(filter).foreach {
+    GraftColumnBridge.rangeConjuncts(filter).foreach {
       case (c, "=" | "==", v, s) =>
         add(c, Some(Bound(v, inclusive = true, s)), Some(Bound(v, inclusive = true, s)))
       case (c, ">", v, s)  => add(c, Some(Bound(v, inclusive = false, s)), None)
@@ -1122,7 +1139,7 @@ class TableCatalog(spark: SparkSession, val root: String) {
     for ((c, parent) <- m.references) {
       val pk = fkTargetMeta(parent)
         .getOrElse(sys.error(s"FK $name.$c: unknown table $parent")).primaryKey.get
-      val orphans = df.select(col(c)).na.drop().distinct()
+      val orphans = df.select(col(c)).filter(col(c).isNotNull).distinct()
         .join(resolve(parent).select(col(pk).as(c)), Seq(c), "left_anti")
       require(orphans.isEmpty, s"$name.$c: FK into $parent.$pk violated")
     }
@@ -1133,16 +1150,14 @@ class TableCatalog(spark: SparkSession, val root: String) {
     * rows already satisfied their constraints, so NOT NULL and FK run
     * on the new batch alone; key uniqueness = duplicates WITHIN the
     * batch + a semi-join of the batch's keys against the existing
-    * table, where — for an INDEXED key — the existing side reads
-    * through the manifest's range pruning restricted to the batch's
-    * [min,max]. Appends with monotone keys (the common ingest shape)
-    * then validate against ~zero existing files instead of scanning
-    * the whole table — the reference's per-row index probe, in
-    * distributed form. `existing`/`pruned` supply the txn's view of the
-    * table, staged dirs included. */
+    * table, whose side reads through the manifest's range pruning
+    * restricted to the batch's [min,max]. Appends with monotone keys
+    * (the common ingest shape) then validate against ~zero existing
+    * files instead of scanning the whole table — the reference's
+    * per-row index probe, in distributed form. `pruned` supplies the
+    * files of the txn's view of the table, staged dirs included. */
   private def validateInsert(
       m: TableMeta, name: String, batch: DataFrame,
-      existing: () => DataFrame,
       pruned: Column => DataFrame,
       fkResolve: String => DataFrame): Unit = {
     val nullKeys = m.primaryKey.toSeq ++ m.notNull
@@ -1152,9 +1167,9 @@ class TableCatalog(spark: SparkSession, val root: String) {
     // frame is often an expensive upstream plan (a curation cascade, a
     // signature kernel pass), and the old one-job-per-check shape
     // re-evaluated it up to 3× per key before the write even started.
-    // Semantics unchanged: count/count_distinct/min/max all skip NULLs,
-    // matching the old na.drop'd newKeys, and the requires fire in the
-    // same order with the same messages.
+    // count/count_distinct/min/max all skip NULLs, as the joins below
+    // do (a NaN key is a value, never dropped), and the requires fire
+    // in the same order with the same messages.
     if (nullKeys.nonEmpty || keys.nonEmpty) {
       val aggs =
         nullKeys.map(k => count(when(col(k).isNull, lit(1))).as(s"__null_$k")) ++
@@ -1170,11 +1185,8 @@ class TableCatalog(spark: SparkSession, val root: String) {
         if (!row.isNullAt(row.fieldIndex(s"__lo_$k"))) {
           val (lo, hi) = (row.get(row.fieldIndex(s"__lo_$k")),
             row.get(row.fieldIndex(s"__hi_$k")))
-          val existingSide =
-            if (m.indexes.contains(k)) pruned(col(k) >= lit(lo) && col(k) <= lit(hi))
-            else existing()
-          val clashes = existingSide.select(col(k))
-            .join(batch.select(col(k)).na.drop(), Seq(k), "left_semi")
+          val clashes = pruned(col(k) >= lit(lo) && col(k) <= lit(hi)).select(col(k))
+            .join(batch.select(col(k)).filter(col(k).isNotNull), Seq(k), "left_semi")
           require(clashes.isEmpty, s"$name.$k: UNIQUE/PRIMARY KEY violated")
         }
       }
@@ -1182,10 +1194,92 @@ class TableCatalog(spark: SparkSession, val root: String) {
     for ((c, parent) <- m.references) {
       val pk = fkTargetMeta(parent)
         .getOrElse(sys.error(s"FK $name.$c: unknown table $parent")).primaryKey.get
-      val orphans = batch.select(col(c)).na.drop().distinct()
+      val orphans = batch.select(col(c)).filter(col(c).isNotNull).distinct()
         .join(fkResolve(parent).select(col(pk).as(c)), Seq(c), "left_anti")
       require(orphans.isEmpty, s"$name.$c: FK into $parent.$pk violated")
     }
+  }
+
+  /** [[validateInsert]] for a batch already on the driver
+    * ([[TableCatalog.localBatch]]): the same checks in the same order
+    * with the same messages, with no batch aggregate. NOT NULL,
+    * in-batch duplicates and each key's `[min, max]` come from the
+    * batch's rows under Spark's semantics ([[batchKeys]]). A key-clash
+    * or FK probe reads through `probe(table, range, exact)`: the rows
+    * satisfying `exact` in the statement's view of `table`, read from
+    * only the files whose zone maps admit `range` — None when no file
+    * does, so the probe is skipped. `exact` is an IN list of the
+    * batch's values rather than a join, so a probe over small kept
+    * files runs on the driver and a larger one is a single scan with a
+    * pushed filter. `retained` narrows the clash probes to the rows the
+    * statement keeps; `clashFree` names keys whose clash needs no probe
+    * (see [[Txn.merge]]). */
+  private def checkLocal(m: TableMeta, name: String, batch: LocalRelation,
+      probe: (String, Column, Column) => Option[DataFrame],
+      retained: Column = lit(true), clashFree: Set[String] = Set.empty): Unit = {
+    val nullKeys = m.primaryKey.toSeq ++ m.notNull
+    val keys = m.primaryKey.toSeq ++ m.unique
+    for (k <- nullKeys)
+      require(!batchKeys(batch, k)._2, s"$name.$k: NOT NULL violated")
+    for (k <- keys) {
+      val (vals, _, dup) = batchKeys(batch, k)
+      require(!dup, s"$name.$k: UNIQUE/PRIMARY KEY violated")
+      if (vals.nonEmpty && !clashFree(k))
+        probe(name, keyRange(k, vals), keyIn(k, vals) && retained).foreach(clashes =>
+          require(clashes.isEmpty, s"$name.$k: UNIQUE/PRIMARY KEY violated"))
+    }
+    for ((c, parent) <- m.references) {
+      val pk = fkTargetMeta(parent)
+        .getOrElse(sys.error(s"FK $name.$c: unknown table $parent")).primaryKey.get
+      val vals = batchKeys(batch, c)._1
+      if (vals.nonEmpty) {
+        val found = probe(parent, keyRange(pk, vals), keyIn(pk, vals)).toSeq.flatMap { p =>
+          val keys = p.select(col(pk))
+          val dt = keys.schema.head.dataType
+          keys.collect().map(r => Literal.create(r.get(0), dt))
+        }
+        // the orphan test runs over the batch's own LocalRelation, so
+        // Catalyst folds it on the driver
+        require(found.nonEmpty && GraftColumnBridge.ofRows(spark, batch)
+          .filter(col(c).isNotNull && !keyIn(c, found)).isEmpty,
+          s"$name.$c: FK into $parent.$pk violated")
+      }
+    }
+  }
+
+  /** The distinct non-NULL values of column `c` of a driver batch as
+    * typed literals, sorted by Spark's ordering for the type, plus
+    * whether the column held a NULL and whether a value repeated. The
+    * ordering is the one `min`/`max` use (NaN above every number), and
+    * it equates what `countDistinct` and join keys normalize: every
+    * NaN is one value, and −0.0 equals 0.0. */
+  private def batchKeys(batch: LocalRelation, c: String): (Seq[Literal], Boolean, Boolean) = {
+    val i = batch.output.indexWhere(_.name.equalsIgnoreCase(c))
+    val dt = batch.output(i).dataType
+    val ord = org.apache.spark.sql.catalyst.util.TypeUtils.getInterpretedOrdering(dt)
+    val vs = batch.data.filterNot(_.isNullAt(i)).map(_.get(i, dt)).toVector.sorted(ord)
+    val distinct = vs.take(1) ++ vs.sliding(2).collect { case Seq(a, b) if !ord.equiv(a, b) => b }
+    (distinct.map(Literal(_, dt)),
+      vs.size < batch.data.size, distinct.size < vs.size)
+  }
+
+  /** `c` between the least and greatest of `sorted`: the zone-map
+    * prune of a probe. */
+  private def keyRange(c: String, sorted: Seq[Literal]): Column = {
+    val lit = GraftColumnBridge.column _
+    col(c) >= lit(sorted.head) && col(c) <= lit(sorted.last)
+  }
+
+  /** `c IN (keys)`, with both signed zeros listed when either is: a
+    * long IN list may run as a hash-set lookup, which tells −0.0 from
+    * 0.0, where Spark's `=`, `countDistinct` and joins do not. */
+  private def keyIn(c: String, keys: Seq[Literal]): Column = {
+    import org.apache.spark.sql.types.{DoubleType, FloatType}
+    val zeros = keys.collectFirst {
+      case Literal(d: Double, DoubleType) if d == 0.0 => Seq(Literal(0.0), Literal(-0.0))
+      case Literal(f: Float, FloatType) if f == 0.0f => Seq(Literal(0.0f), Literal(-0.0f))
+    }.getOrElse(Nil)
+    col(c).isin((keys ++ zeros).map(GraftColumnBridge.column): _*)
   }
 
   /** Tables under this catalog root (directory listing = catalog scan). */
@@ -1384,6 +1478,11 @@ class TableCatalog(spark: SparkSession, val root: String) {
       true
     }
 
+  // the route of the last INSERT or MERGE this thread staged through
+  // this catalog, for EXPLAIN ANALYZE and the session's write counters
+  private val lastWriteRoute = new ThreadLocal[WriteRoute]
+  private[graft] def lastWrite: Option[WriteRoute] = Option(lastWriteRoute.get)
+
   /** Autocommit DML: BEGIN, the staged [[Txn]] verb, COMMIT. A commit
     * that loses a race publishes nothing, so the statement drops its
     * staging and re-runs against the new snapshot (see the
@@ -1420,7 +1519,7 @@ class TableCatalog(spark: SparkSession, val root: String) {
   private def restrictReferenced(name: String, removedKeys: DataFrame,
       refs: Seq[(String, String)], resolve: String => DataFrame, verb: String): Unit =
     for ((refTable, refCol) <- refs) {
-      val stillRef = resolve(refTable).select(refCol).na.drop()
+      val stillRef = resolve(refTable).select(refCol).filter(col(refCol).isNotNull)
         .join(removedKeys.toDF(refCol), Seq(refCol), "left_semi")
       require(stillRef.isEmpty,
         s"$verb on $name restricted: rows referenced by $refTable.$refCol")
@@ -1565,31 +1664,42 @@ class TableCatalog(spark: SparkSession, val root: String) {
     * `[min, max]` of the source, returned as the filter that picks the
     * files a merge can touch. NULL keys fail the first require before
     * the duplicate compare, so count/count_distinct skipping NULLs
-    * matches a groupBy on every reachable input. */
+    * matches a groupBy on every reachable input. A source already on
+    * the driver ([[TableCatalog.localBatch]]) is checked from its rows
+    * instead, with no job and no checkpoint, and comes back as the
+    * third value. */
   private def mergeSource(m: TableMeta, name: String,
-      source: DataFrame): (DataFrame, Column) = {
+      source: DataFrame): (DataFrame, Column, Option[(LocalRelation, Seq[Literal])]) = {
     val pk = mergeKey(m, name)
-    val aligned = applyDefaults(name, m, source).localCheckpoint()
-    val row = aligned.agg(count(when(col(pk).isNull, lit(1))).as("nulls"),
-      count(col(pk)).as("cnt"), countDistinct(col(pk)).as("dst"),
-      min(col(pk)).as("lo"), max(col(pk)).as("hi")).head()
-    require(row.getAs[Long]("nulls") == 0L, s"$name.$pk: NOT NULL violated")
-    require(row.getAs[Long]("cnt") == row.getAs[Long]("dst"),
-      s"MERGE INTO $name: duplicate keys in source")
-    val range =
-      if (row.isNullAt(row.fieldIndex("lo"))) lit(true)
-      else col(pk) >= lit(row.getAs[Any]("lo")) && col(pk) <= lit(row.getAs[Any]("hi"))
-    (aligned, range)
+    val aligned0 = applyDefaults(name, m, source)
+    val local = TableCatalog.localBatch(aligned0).map(b => (b, batchKeys(b, pk)))
+    val (aligned, nulls, dups, bounds) = local match {
+      case Some((batch, (keys, nulls, dups))) =>
+        (GraftColumnBridge.ofRows(spark, batch), nulls, dups,
+          Option.when(keys.nonEmpty)(keyRange(pk, keys)))
+      case None =>
+        val aligned = aligned0.localCheckpoint()
+        val row = aligned.agg(count(when(col(pk).isNull, lit(1))).as("nulls"),
+          count(col(pk)).as("cnt"), countDistinct(col(pk)).as("dst"),
+          min(col(pk)).as("lo"), max(col(pk)).as("hi")).head()
+        (aligned, row.getAs[Long]("nulls") != 0L, row.getAs[Long]("cnt") != row.getAs[Long]("dst"),
+          Option.when(!row.isNullAt(row.fieldIndex("lo")))(
+            col(pk) >= lit(row.getAs[Any]("lo")) && col(pk) <= lit(row.getAs[Any]("hi"))))
+    }
+    require(!nulls, s"$name.$pk: NOT NULL violated")
+    require(!dups, s"MERGE INTO $name: duplicate keys in source")
+    (aligned, bounds.getOrElse(lit(true)), local.map { case (b, (keys, _, _)) => (b, keys) })
   }
 
   /** The merged (upserted) rows shared by [[Txn.merge]] and both
     * EXPLAIN paths: `current` rows with a source key dropped, the
     * aligned source appended. */
   private def mergedFrame(m: TableMeta, name: String, aligned: DataFrame,
-      current: DataFrame): DataFrame = {
+      current: DataFrame, keys: Option[Seq[Literal]] = None): DataFrame = {
     val pk = mergeKey(m, name)
-    current
-      .join(aligned.select(col(pk)), Seq(pk), "left_anti")
+    // source keys already on the driver drop by a filter, not a join
+    keys.fold(current.join(aligned.select(col(pk)), Seq(pk), "left_anti"))(ks =>
+      current.filter(!keyIn(pk, ks)))
       .unionByName(aligned)
   }
 
@@ -2097,21 +2207,25 @@ class TableCatalog(spark: SparkSession, val root: String) {
     * min/max stats selective. (The clustered-storage analog of the
     * reference's B-tree secondary index: on immutable columnar files,
     * an index IS sort order + zone metadata.) `parts` caps the range
-    * partitions; one partition needs no range sample and no shuffle. */
+    * partitions, and the files of an unclustered write given a cap;
+    * one partition needs no range sample and no shuffle. Returns the
+    * partition count used, None when an uncapped unclustered write
+    * keeps the frame's own partitioning. */
   private def writeData(m: TableMeta, df: DataFrame, dir: String,
-      layoutOverride: Seq[String] = Nil, parts: Int = Int.MaxValue): Unit = {
+      layoutOverride: Seq[String] = Nil, parts: Int = Int.MaxValue): Option[Int] = {
     val layout = if (layoutOverride.nonEmpty) layoutOverride else m.indexes
     val n = math.max(1, math.min(parts, spark.sparkContext.defaultParallelism))
-    val out =
-      if (layout.isEmpty) df
+    val (out, used) =
+      if (layout.isEmpty) { if (parts == Int.MaxValue) (df, None) else (df.coalesce(n), Some(n)) }
       else {
         val cols = layout.map(col)
-        (if (n == 1) df.coalesce(1) else df.repartitionByRange(n, cols: _*))
-          .sortWithinPartitions(cols: _*)
+        ((if (n == 1) df.coalesce(1) else df.repartitionByRange(n, cols: _*))
+          .sortWithinPartitions(cols: _*), Some(n))
       }
     // a computed clustering key (ZORDER) orders the write but is not
     // part of the table: drop is a no-op for every other layout
     out.drop(TableCatalog.ZCol).write.mode("overwrite").parquet(dir)
+    used
   }
 
   /** Columns whose manifest zone maps can soundly drive [[planFiles]]
@@ -2507,31 +2621,73 @@ class TableCatalog(spark: SparkSession, val root: String) {
     }
 
     /** Staged append: validated against the txn view (read-your-writes,
-      * txn-view FK resolution), written to a txn-unique dir. */
+      * txn-view FK resolution), written to a txn-unique dir. One guard
+      * picks the route by the batch's plan shape:
+      *  - a batch already on the driver ([[TableCatalog.localBatch]]) is
+      *    checked from its rows ([[checkLocal]]) and written as its
+      *    share of the view's rows ([[shareParts]]), so a one-row append
+      *    is one unshuffled write task;
+      *  - any other batch is cached and checked by Spark aggregates and
+      *    joins ([[validateInsert]]), then written over every core. */
     def insert(name: String, df: DataFrame): Unit = {
       open(); visible(name)
-      if (createdTables.contains(name)) { stagedCat.insert(name, df); return }
+      if (createdTables.contains(name)) {
+        stagedCat.insert(name, df)
+        lastWriteRoute.set(stagedCat.lastWrite.orNull)
+        return
+      }
       val m = pinnedMetaOf(name)
       val base = baseOf(name)
       val dirs = viewDirs(name)
-      // cache across validation + write: the batch is often an
-      // expensive upstream plan, and without the cache the validation
-      // aggregate, the clash/FK joins and the parquet write would each
-      // re-run it from the source
-      val aligned = applyDefaults(name, m, df).cache()
+      val aligned = applyDefaults(name, m, df)
       val rel = freshDir(name)
-      // the view's zone maps range-prune the existing side of the
-      // key-uniqueness check
-      val pruned = (f: Column) =>
-        frameOf(m.schema, resolveDirs(name, candidates(name, m, f)._2)).filter(f)
-      try {
-        validateInsert(m, name, aligned,
-          existing = () => scan(name), pruned = pruned, fkResolve = fkScan)
-        writeData(m, aligned, absTableDir(name).resolve(rel).toString)
-      } finally aligned.unpersist() // failed validation must not leak cache
+      val dir = absTableDir(name).resolve(rel).toString
+      val route = TableCatalog.localBatch(aligned) match {
+        case Some(batch) =>
+          checkLocal(m, name, batch, probe)
+          // the rows checked are the rows written: the relation itself,
+          // not a re-optimized copy of the VALUES plan
+          WriteRoute(driverChecked = true,
+            writeData(m, GraftColumnBridge.ofRows(spark, batch), dir,
+              parts = shareParts(batch.data.size,
+                batch.data.size + dirs.map(dirRowCount(name, _)).sum)))
+        case None =>
+          // cache across validation + write: the batch is often an
+          // expensive upstream plan, and without the cache the
+          // validation aggregate, the clash/FK joins and the parquet
+          // write would each re-run it from the source
+          val cached = aligned.cache()
+          // the view's zone maps range-prune the existing side of the
+          // key-uniqueness check to files; the range stays off its rows,
+          // or Catalyst would infer it onto the cached batch, whose
+          // in-memory partition stats cannot bound a NaN key
+          val pruned = (f: Column) =>
+            frameOf(m.schema, resolveDirs(name, candidates(name, m, f)._2))
+          try {
+            validateInsert(m, name, cached, pruned = pruned, fkResolve = fkScan)
+            WriteRoute(driverChecked = false, writeData(m, cached, dir))
+          } finally cached.unpersist() // failed validation must not leak cache
+      }
       dirStats(rel) = collectStats(m, name, rel)
       staged(name) = (base, dirs :+ rel)
+      lastWriteRoute.set(route)
     }
+
+    /** The rows satisfying `exact` in the txn view of `name`, read from
+      * only the files whose zone maps admit `range` ([[candidates]]) and
+      * bound through the local-read guard ([[bindFiles]]): on the
+      * driver when the kept files fit its caps, else one scan with the
+      * filter pushed down. None when no file is kept. A table this
+      * catalog does not hold as a plain view (created in this txn, or
+      * the outer table a staging catalog's FK names) is scanned whole. */
+    private def probe(name: String, range: Column, exact: Column): Option[DataFrame] =
+      if (createdTables.contains(name) || droppedTables.contains(name) ||
+          !TableCatalog.this.exists(name)) Some(fkScan(name).filter(exact))
+      else {
+        val m = pinnedMetaOf(name)
+        val kept = candidates(name, m, range)._2.flatMap(expandEntry(name, _))
+        Option.when(kept.nonEmpty)(bindFiles(m, name, kept, Some(exact))._1.filter(exact))
+      }
 
     /** Stage one copy-on-write statement: `fresh` — the rows it
       * publishes in place of the `rewritten` files — goes to one new
@@ -2539,14 +2695,15 @@ class TableCatalog(spark: SparkSession, val root: String) {
       * (newest rows first, so a plan over the view names its staged
       * dir). With `check`, the whole new view (untouched plus fresh
       * rows) is validated first. No `fresh` (nothing to rewrite) keeps
-      * the view as it is; the statement still publishes its version. */
+      * the view as it is; the statement still publishes its version.
+      * Returns the write's part count ([[writeData]]). */
     private def stageRewrite(name: String, m: TableMeta, untouched: Seq[String],
-        rewritten: Seq[String], fresh: Option[DataFrame], check: Boolean): Unit = {
+        rewritten: Seq[String], fresh: Option[DataFrame], check: Boolean): Option[Int] = {
       val base = baseOf(name)
-      val rel = fresh.map { df0 =>
+      val written = fresh.map { df0 =>
         val df = if (check) df0.cache() else df0
         val rel = freshDir(name)
-        try {
+        val parts = try {
           if (check) validate(m, name,
             if (untouched.isEmpty) df
             else frameOf(m.schema, resolveDirs(name, untouched)).unionByName(df), fkScan)
@@ -2554,25 +2711,33 @@ class TableCatalog(spark: SparkSession, val root: String) {
             parts = rewriteParts(name, untouched, rewritten))
         } finally df.unpersist() // failed validation must not leak cache
         dirStats(rel) = collectStats(m, name, rel)
-        rel
+        (rel, parts)
       }
-      staged(name) = (base, rel.toSeq ++ untouched)
+      staged(name) = (base, written.map(_._1).toSeq ++ untouched)
+      written.flatMap(_._2)
     }
 
     /** Files a copy-on-write rewrite writes back: a full rewrite
       * re-lays the table out over every core; a partial one writes
-      * files of about the view's average size (by footer row counts),
-      * never more than it replaces — so rewriting one file of four is
-      * one unshuffled write task, not a range sample plus a shuffle. */
+      * files of about the view's average size ([[shareParts]]), never
+      * more than it replaces — so rewriting one file of four is one
+      * unshuffled write task, not a range sample plus a shuffle. */
     private def rewriteParts(name: String, untouched: Seq[String],
         rewritten: Seq[String]): Int =
       if (untouched.isEmpty) Int.MaxValue
       else {
         val rows = rewritten.map(dirRowCount(name, _)).sum
-        val total = rows + untouched.map(dirRowCount(name, _)).sum
-        val share = spark.sparkContext.defaultParallelism * rows.toDouble / math.max(1L, total)
-        math.min(rewritten.size, math.max(1, math.round(share).toInt))
+        math.min(rewritten.size, shareParts(rows, rows + untouched.map(dirRowCount(name, _)).sum))
       }
+
+    /** Parts for writing `rows` of a view that then holds `total` rows
+      * (footer row counts): the rows' share of `defaultParallelism`,
+      * at least 1, so the files stay about the view's average size. A
+      * small append is one part; a bulk load into an empty table
+      * spreads over every core. */
+    private def shareParts(rows: Long, total: Long): Int =
+      math.max(1, math.round(
+        spark.sparkContext.defaultParallelism * rows.toDouble / math.max(1L, total)).toInt)
 
     /** Staged copy-on-write UPDATE: the files `where` can touch are
       * rewritten into one txn-unique dir; SET expressions see the
@@ -2605,15 +2770,41 @@ class TableCatalog(spark: SparkSession, val root: String) {
 
     /** Staged MERGE (upsert on the primary key) against the txn view
       * (shared [[mergedFrame]]): only the files that may hold a key in
-      * the source's `[min, max]` are rewritten. */
+      * the source's `[min, max]` are rewritten.
+      *
+      * A source on the driver is validated with the INSERT rules
+      * ([[checkLocal]]) instead of re-aggregating the whole new view,
+      * and the new view cannot break anything those rules leave out:
+      *  - PRIMARY KEY: [[mergedFrame]] drops every source key from the
+      *    rewritten files, and [[candidates]] keeps every file whose
+      *    zone maps admit a key in the source's `[min, max]`, so the
+      *    untouched files hold no source key either. The new view's
+      *    keys are then the untouched keys, the rewritten files' other
+      *    keys and the source keys: three disjoint sets, each unique
+      *    (the view was valid, the source is checked). No clash probe.
+      *  - UNIQUE: probed against the view minus the rows the source
+      *    replaces (`retained`), the only rows the source sits beside.
+      *  - NOT NULL and FK: every kept row met them; the source is
+      *    checked. No key leaves the table, so no RESTRICT applies.
+      * Any other source is validated over the whole new view. */
     def merge(name: String, source: DataFrame): Unit = {
       open(); visible(name)
-      if (createdTables.contains(name)) { stagedCat.merge(name, source); return }
+      if (createdTables.contains(name)) {
+        stagedCat.merge(name, source)
+        lastWriteRoute.set(stagedCat.lastWrite.orNull)
+        return
+      }
       val m = pinnedMetaOf(name)
-      val (aligned, keyRange) = mergeSource(m, name, source)
+      val (aligned, keyRange, local) = mergeSource(m, name, source)
       val (untouched, rewritten) = candidates(name, m, keyRange)
-      stageRewrite(name, m, untouched, rewritten, Some(mergedFrame(m, name, aligned,
-        frameOf(m.schema, resolveDirs(name, rewritten)))), check = true)
+      local.foreach { case (batch, keys) =>
+        val pk = mergeKey(m, name)
+        checkLocal(m, name, batch, probe, retained = !keyIn(pk, keys), clashFree = Set(pk))
+      }
+      val parts = stageRewrite(name, m, untouched, rewritten, Some(mergedFrame(m, name, aligned,
+        frameOf(m.schema, resolveDirs(name, rewritten)), local.map(_._2))),
+        check = local.isEmpty)
+      lastWriteRoute.set(WriteRoute(local.isDefined, parts))
     }
 
     /** Staged clause-form MERGE (USING source) against the txn view
@@ -3091,6 +3282,26 @@ object TableCatalog {
     * `localRows` — Some(rows bound) when the files were decoded on the
     * driver, None when Spark scans them. */
   case class ReadRoute(kept: Int, all: Int, footerRows: Option[Long], localRows: Option[Int])
+
+  /** How an INSERT or MERGE batch was checked and written: on the
+    * driver (its rows were a `LocalRelation`, see [[localBatch]]) or by
+    * Spark aggregates and joins, and the parts the write used. */
+  case class WriteRoute(driverChecked: Boolean, parts: Option[Int]) {
+    def line(table: String): String =
+      s"Write: $table ${if (driverChecked) "driver" else "spark"}-checked, " +
+        parts.fold("the batch's own partitioning")(n => s"$n part${if (n == 1) "" else "s"}")
+  }
+
+  /** The rows of `df` when its optimized plan is a `LocalRelation`: a
+    * batch already on the driver, as every `INSERT … VALUES` and
+    * `MERGE … VALUES` is (Catalyst folds the VALUES casts and aliases
+    * into the relation). Optimizing runs no Spark job. None for any
+    * other plan shape. */
+  private[graft] def localBatch(df: DataFrame): Option[LocalRelation] =
+    df.queryExecution.optimizedPlan match {
+      case r: LocalRelation if !r.isStreaming => Some(r)
+      case _ => None
+    }
 
   /** Durable schema metadata of one managed table. */
   case class TableMeta(

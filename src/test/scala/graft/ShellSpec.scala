@@ -170,16 +170,22 @@ class ShellSpec extends AnyFunSuite {
   }
 
   test("EXPLAIN names each table's read route and !status counts reads per route") {
-    val out = stripPrompts(script(
+    // a comma-decimal default locale must not reach the status lines
+    val locale = java.util.Locale.getDefault
+    java.util.Locale.setDefault(java.util.Locale.GERMANY)
+    val out = try stripPrompts(script(
       "CREATE TABLE r (id INTEGER PRIMARY KEY, v STRING);",
-      "INSERT INTO r VALUES (1, 'a'), (2, 'b');",
-      "INSERT INTO r VALUES (3, 'c');",
+      "INSERT INTO r VALUES (1, 'a'), (2, 'b');",  // driver-checked
+      "INSERT INTO r VALUES (3, 'c');",            // driver-checked
       "SELECT v FROM r WHERE id = 3;",           // local
       "BEGIN;",
       "SELECT count(*) AS n FROM r;",            // write txn: Spark
+      // not a LocalRelation: spark-checked
+      "INSERT INTO r (id, v) SELECT v.* FROM VALUES (4, 'd') AS v CROSS JOIN range(1);",
       "COMMIT;",
       "EXPLAIN SELECT v FROM r WHERE id BETWEEN 1 AND 2;", // local
       "!status"))
+    finally java.util.Locale.setDefault(locale)
     val route = raw"IndexLookup: r local (\d+) rows \((\d+)/(\d+) files, (\d+) footer rows\)".r
       .findFirstMatchIn(out).getOrElse(fail(s"no route line in:\n$out"))
     assert(route.group(1).toInt == 2, out)
@@ -187,5 +193,11 @@ class ShellSpec extends AnyFunSuite {
     val reads = raw"Reads:\s+(\d+) local, (\d+) spark".r
       .findFirstMatchIn(out).getOrElse(fail(s"no Reads line in:\n$out"))
     assert((reads.group(1).toInt, reads.group(2).toInt) == ((2, 1)), out)
+    val writes = raw"Writes:\s+(\d+) driver-checked, (\d+) spark-checked".r
+      .findFirstMatchIn(out).getOrElse(fail(s"no Writes line in:\n$out"))
+    assert((writes.group(1).toInt, writes.group(2).toInt) == ((2, 1)), out)
+    val storage = raw"Storage:\s+(\S+) MB disk".r
+      .findFirstMatchIn(out).getOrElse(fail(s"no Storage line in:\n$out"))
+    assert(storage.group(1).matches("\\d+\\.\\d{3}") && storage.group(1).toDouble > 0, out)
   }
 }
