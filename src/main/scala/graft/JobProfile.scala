@@ -5,7 +5,11 @@ import org.apache.spark.scheduler._
 /** Per-job profile of one declared query (optimization-round dev tool):
   * runs `<query>` once against `<sfDir>` through the bench's noop sink
   * and prints every Spark job's wall time, so fixed per-job overhead is
-  * distinguishable from real compute. Args: <sfDir> <name> [runs]. */
+  * distinguishable from real compute. Each run's header splits the
+  * time and the jobs into construct (until `fn(spark, dir)` returns:
+  * the driver-side actions that build the frame) and execute (the
+  * drain); a job's phase is the local property its submitting thread
+  * carried. Args: <sfDir> <name> [runs]. */
 object JobProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
@@ -18,8 +22,10 @@ object JobProfile {
     sources.Tables.lineitem(spark, sfDir).groupBy("l_returnflag").count().collect()
 
     // written on the listener-bus thread, read and cleared on this one
-    val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
+    val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String, String)]()
     val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val jobs = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+    val phaseKey = "graft.jobprofile.phase"
     val listener = new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit = {
         // the final stage's name carries the action's call site — the
@@ -27,21 +33,30 @@ object JobProfile {
         val site = j.stageInfos.lastOption.map(_.name).getOrElse("")
         val desc = Option(j.properties.getProperty("spark.job.description"))
           .filter(_.nonEmpty).getOrElse(site)
-        starts.put(j.jobId, (System.nanoTime(), desc))
+        val phase = Option(j.properties).flatMap(p => Option(p.getProperty(phaseKey)))
+        starts.put(j.jobId, (System.nanoTime(), desc, phase.getOrElse("unscoped")))
       }
       override def onJobEnd(j: SparkListenerJobEnd): Unit =
-        Option(starts.remove(j.jobId)).foreach { case (t0, desc) =>
-          lines.add("  job %4d %7.3f s  %s".formatLocal(java.util.Locale.ROOT,
-            j.jobId, (System.nanoTime() - t0) / 1e9, desc))
+        Option(starts.remove(j.jobId)).foreach { case (t0, desc, phase) =>
+          jobs.merge(phase, 1, (a, b) => a + b)
+          lines.add("  job %4d %-9s %7.3f s  %s".formatLocal(java.util.Locale.ROOT,
+            j.jobId, phase, (System.nanoTime() - t0) / 1e9, desc))
         }
     }
     val fn = SparkEntry.queries(name)
+    val sc = spark.sparkContext
     (1 to runs).foreach { r =>
       lines.clear()
-      spark.sparkContext.addSparkListener(listener)
+      jobs.clear()
+      sc.addSparkListener(listener)
+      sc.setLocalProperty(phaseKey, "construct")
       val t0 = System.nanoTime()
-      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      val total = (System.nanoTime() - t0) / 1e9
+      val df = fn(spark, sfDir)
+      val t1 = System.nanoTime()
+      sc.setLocalProperty(phaseKey, "execute")
+      df.write.format("noop").mode("overwrite").save()
+      val t2 = System.nanoTime()
+      sc.setLocalProperty(phaseKey, null)
       // drain the listener deterministically (listenerBus.waitUntilEmpty
       // is private[spark]): the bus delivers in order, so once every
       // started job has ended in OUR listener, its lines are complete —
@@ -49,9 +64,12 @@ object JobProfile {
       Thread.sleep(50) // let queued start events land first
       val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
       while (!starts.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
-      spark.sparkContext.removeSparkListener(listener)
-      println("== %s run %d: %.3f s, %d jobs".formatLocal(java.util.Locale.ROOT,
-        name, r, total, lines.size))
+      sc.removeSparkListener(listener)
+      def n(phase: String): Int = jobs.getOrDefault(phase, 0)
+      println("== %s run %d: construct %.3f s, %d jobs; execute %.3f s, %d jobs%s"
+        .formatLocal(java.util.Locale.ROOT, name, r, (t1 - t0) / 1e9, n("construct"),
+          (t2 - t1) / 1e9, n("execute"),
+          if (n("unscoped") > 0) s"; ${n("unscoped")} unscoped jobs" else ""))
       lines.forEach(println(_))
     }
     spark.stop()

@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.functions._
 import graft.sources.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.functions._
 
@@ -101,55 +101,62 @@ object Similarity {
     * reaches the driver (assignment is a scan with a literal centroid
     * list; the update is the constant-bytes-per-group [[graft
     * .functions.VectorAgg]] fold — one shuffle of k buffers per
-    * round). Query: rank cells by probe-to-centroid cosine driver-side
-    * (k tiny), scan ONLY the nprobe best cells' rows for the exact
-    * kernel. At 100 TB the assignment frame is a table partitioned by
+    * round, however many quantizer spaces [[Ivf.train]] fits
+    * together). Query: rank cells by probe-to-centroid cosine
+    * driver-side (k tiny), scan ONLY the nprobe best cells' rows for
+    * the exact kernel. At 100 TB the assignment frame is a table partitioned by
     * `cell`, so probing nprobe cells is partition pruning — the scan
     * reads nprobe/k of the corpus, corpus-size-independent per cell. */
   object Ivf {
-    def centroidsLit(cents: Array[Array[Float]]) =
-      typedLit(cents.map(_.toSeq).toSeq)
+    def centroidsLit(cents: Array[Array[Float]]) = typedLit(cents.map(_.toSeq).toSeq)
 
-    /** Deterministic k-means: init = k rows by hashed id (seeded
-      * pseudo-random, stable across partitionings), then `iters` Lloyd
-      * rounds. Cells that lose all members keep their old centroid. */
-    def train(emb: DataFrame, k: Int, iters: Int): Array[Array[Float]] = {
-      var cents = emb.orderBy(xxhash64(col("vec_id")), col("vec_id")).limit(k)
-        .select("embedding").collect().map(_.getSeq[Float](0).toArray)
-      var it = 0
-      while (it < iters && cents.nonEmpty) {
-        val upd = emb
-          .select(nearest_centroid(col("embedding"), centroidsLit(cents)).as("cell"),
-            col("embedding"))
-          .groupBy("cell")
-          .agg(graft.functions.VectorAgg.centroid_agg(col("embedding")).as("c"))
-          .collect().map(r => r.getInt(0) -> r.getSeq[Float](1).toArray).toMap
-        cents = Array.tabulate(cents.length)(i => upd.getOrElse(i, cents(i)))
-        it += 1
+    /** Deterministic k-means over quantizer spaces, each a (sub-)vector
+      * column of `emb` and its k. Init: the first k rows by hashed id
+      * (seeded, stable across partitionings) — the same rows in every
+      * space, so one collect seeds all. Each of `iters` Lloyd rounds is
+      * ONE scan and ONE groupBy(space, cell) centroid_agg, over the
+      * members a space would have alone. Cells that lose all members
+      * keep their old centroid. */
+    def train(emb: DataFrame, spaces: Seq[(Column, Int)], iters: Int): Seq[Array[Array[Float]]] = {
+      val init = emb.orderBy(xxhash64(col("vec_id")), col("vec_id")).limit(spaces.map(_._2).max)
+        .select(spaces.map(_._1): _*).collect()
+      var cents = spaces.indices.map(j => init.take(spaces(j)._2).map(_.getSeq[Float](j).toArray))
+      for (_ <- 1 to iters if init.nonEmpty) {
+        val upd = emb.select(explode(array(spaces.zipWithIndex.map { case ((v, _), j) =>
+            struct(lit(j).as("space"), nearest_centroid(v, centroidsLit(cents(j))).as("cell"), v.as("v"))
+          }: _*)).as("r"))
+          .groupBy("r.space", "r.cell").agg(VectorAgg.centroid_agg(col("r.v")))
+          .collect().map(r => (r.getInt(0), r.getInt(1)) -> r.getSeq[Float](2).toArray).toMap
+        cents = cents.zipWithIndex.map { case (cs, j) => cs.indices.map(i => upd.getOrElse((j, i), cs(i))).toArray }
       }
       cents
     }
+
+    /** One space, the whole `embedding`: a coarse quantizer. */
+    def train(emb: DataFrame, k: Int, iters: Int): Array[Array[Float]] =
+      train(emb, Seq(col("embedding") -> k), iters).head
 
     /** The corpus with its IVF cell id — the inverted lists. */
     def assign(emb: DataFrame, cents: Array[Array[Float]]): DataFrame =
       emb.withColumn("cell", nearest_centroid(col("embedding"), centroidsLit(cents)))
 
-    /** Top-k by exact cosine over the `nprobe` cells whose centroids
-      * are most cosine-similar to the probe (ranked driver-side — the
-      * centroid table is k rows). */
-    def topK(assigned: DataFrame, cents: Array[Array[Float]], q: Array[Float],
-        nprobe: Int, k: Int): DataFrame = {
+    /** The `nprobe` cells whose centroids are most cosine-similar to
+      * `q` (ranked driver-side — the centroid table is k rows). */
+    def probedCells(cents: Array[Array[Float]], q: Array[Float], nprobe: Int): Seq[Int] = {
       val qa = UnsafeArrayData.fromPrimitiveArray(q)
-      val cells = cents.zipWithIndex
-        .map { case (c, i) =>
-          (i, Kernels.cosine(qa, UnsafeArrayData.fromPrimitiveArray(c))) }
+      cents.zipWithIndex
+        .map { case (c, i) => (i, Kernels.cosine(qa, UnsafeArrayData.fromPrimitiveArray(c))) }
         .sortBy { case (i, cos) => (-cos, i) }
-        .take(nprobe).map(_._1)
-      assigned.filter(col("cell").isin(cells: _*))
+        .take(nprobe).map(_._1).toSeq
+    }
+
+    /** Top-k by exact cosine over the [[probedCells]]. */
+    def topK(assigned: DataFrame, cents: Array[Array[Float]], q: Array[Float],
+        nprobe: Int, k: Int): DataFrame =
+      assigned.filter(col("cell").isin(probedCells(cents, q, nprobe): _*))
         .select(col("vec_id"), cosine_sim(col("embedding"), typedLit(q.toSeq)).as("cos"))
         .orderBy(col("cos").desc, col("vec_id"))
         .limit(k)
-    }
   }
 
   private val IvfK      = 16
@@ -160,7 +167,7 @@ object Similarity {
     * trained by the call that needs them and passed down: at 100 TB a
     * stored k-row table written at index-build time. */
   private[operators] def ivfCents(s: SparkSession, d: String): Array[Array[Float]] =
-    Ivf.train(Tables.embeddings(s, d).select("vec_id", "embedding"), IvfK, IvfIters)
+    Ivf.train(Tables.embeddings(s, d), IvfK, IvfIters)
 
   /** (cell, centroid) — the quantizer as a k-row frame. */
   private[operators] def ivfCells(s: SparkSession, cents: Array[Array[Float]]): DataFrame = {
@@ -612,10 +619,10 @@ object Similarity {
     * the vector column is touched only for the fixed PqCoarse=50
     * exact-rerank candidates (s08's two-stage serving shape).
     *
-    * Codebooks train with the same deterministic per-subspace Lloyd
-    * recipe as the IVF coarse quantizer (shared [[Ivf.train]]), once
-    * per call — at scale a stored k×m table written at index-build
-    * time, trained on a sample. Rows-only (trained
+    * The m codebooks are m spaces of ONE [[Ivf.train]] call (the IVF
+    * coarse quantizer's recipe): one init collect and one scan per
+    * Lloyd round for all subspaces, once per call — at scale a stored
+    * k×m table written at index-build time. Rows-only (trained
     * codebooks aren't SQL-derivable); the spec proves recall vs the
     * exact scan, code-range soundness, and partitioning determinism. */
   private val PqM      = 8
@@ -623,14 +630,10 @@ object Similarity {
   private val PqK      = 32
   private val PqCoarse = 100
 
-  private[operators] def pqCodebooks(s: SparkSession, d: String): Seq[Array[Array[Float]]] = {
-    val emb = Tables.embeddings(s, d).select("vec_id", "embedding")
-    (0 until PqM).map { j =>
-      Ivf.train(emb.select(col("vec_id"),
-        slice(col("embedding"), j * PqDsub + 1, PqDsub).as("embedding")),
-        PqK, IvfIters)
-    }
-  }
+  private def pqSpaces = (0 until PqM).map(j => slice(col("embedding"), j * PqDsub + 1, PqDsub) -> PqK)
+
+  private[operators] def pqCodebooks(s: SparkSession, d: String): Seq[Array[Array[Float]]] =
+    Ivf.train(Tables.embeddings(s, d), pqSpaces, IvfIters)
 
   /** The PACKED m-byte code column of `embedding` under codebooks
     * `cbs` (at scale: the stored BINARY code column, written at
@@ -748,8 +751,7 @@ object Similarity {
     * never influence it, or the incremental-equals-rebuild claim would
     * be circular. */
   private[graft] def s14Cents(s: SparkSession, d: String): Array[Array[Float]] =
-    Ivf.train(Tables.embeddings(s, d).filter(col("vec_id") % 2 === 0)
-      .select("vec_id", "embedding"), IvfK, IvfIters)
+    Ivf.train(Tables.embeddings(s, d).filter(col("vec_id") % 2 === 0), IvfK, IvfIters)
 
   /** The corpus half's stored inverted lists under [[s14Cents]]. */
   private def s14CorpusAssigned(s: SparkSession, d: String,
@@ -829,27 +831,24 @@ object Similarity {
       nearest_centroid(col("embedding"), Ivf.centroidsLit(cents)).as("cell"),
       codesCol(cbs).as("codes"))
 
+  /** The coarse quantizer and the m codebooks from ONE (1 + m)-space
+    * [[Ivf.train]] call: the IVF and PQ rounds share their scans. */
+  private[operators] def ivfPqQuantizers(s: SparkSession, d: String) = {
+    val all = Ivf.train(Tables.embeddings(s, d), (col("embedding") -> IvfK) +: pqSpaces, IvfIters)
+    (all.head, all.tail)
+  }
+
   /** The serving table under a freshly trained quantizer and codebooks. */
   private[graft] def ivfPqServing(s: SparkSession, d: String): DataFrame =
-    ivfPqServing(s, d, ivfCents(s, d), pqCodebooks(s, d))
+    ivfPqQuantizers(s, d) match { case (cents, cbs) => ivfPqServing(s, d, cents, cbs) }
 
   private[graft] def ivfPqFrame(s: SparkSession, d: String): DataFrame =
     ivfPqServing(s, d)
 
-  /** The nprobe cell ids for probe `q` — the ranking the coarse frame
-    * prunes on. */
-  private def probedCells(cents: Array[Array[Float]], q: Array[Float]): Seq[Int] = {
-    val qa = UnsafeArrayData.fromPrimitiveArray(q)
-    cents.zipWithIndex
-      .map { case (c, i) => (i, Kernels.cosine(qa, UnsafeArrayData.fromPrimitiveArray(c))) }
-      .sortBy { case (i, cos) => (-cos, i) }
-      .take(IvfPqNprobe).map(_._1).toSeq
-  }
-
   /** The nprobe cell ids for the fixed probe — split out so the spec
     * can assert candidate containment against the same ranking. */
   private[graft] def ivfPqProbedCells(s: SparkSession, d: String): Seq[Int] =
-    probedCells(ivfCents(s, d), probeVec(s, d))
+    Ivf.probedCells(ivfCents(s, d), probeVec(s, d), IvfPqNprobe)
 
   /** The ADC-scored coarse frame over the probed cells only — the
     * piece the plan spec audits for the cell-pruning filter. `serving`
@@ -859,21 +858,20 @@ object Similarity {
   private def coarseFrameOf(serving: DataFrame, cents: Array[Array[Float]],
       cbs: Seq[Array[Array[Float]]], q: Array[Float]): DataFrame =
     serving
-      .filter(col("cell").isin(probedCells(cents, q): _*)) // partition prune
+      .filter(col("cell").isin(Ivf.probedCells(cents, q, IvfPqNprobe): _*)) // partition prune
       .filter(col("vec_id") =!= 0)
       .withColumn("coarse", adcCosine(cbs, q))
 
   private[graft] def s15CoarseFrameOf(s: SparkSession, d: String,
       serving: DataFrame): DataFrame =
-    coarseFrameOf(serving, ivfCents(s, d), pqCodebooks(s, d), probeVec(s, d))
+    ivfPqQuantizers(s, d) match { case (cents, cbs) => coarseFrameOf(serving, cents, cbs, probeVec(s, d)) }
 
   /** s15's coarse frame (s16's with `labels`): the quantizer and the
-    * codebooks train once, and the serving table and the ADC scoring
-    * share them. */
+    * codebooks train together in one (1 + m)-space call, and the
+    * serving table and the ADC scoring share them. */
   private def ivfPqCoarse(s: SparkSession, d: String, q: Array[Float],
       labels: Option[Seq[Int]]): DataFrame = {
-    val cents = ivfCents(s, d)
-    val cbs = pqCodebooks(s, d)
+    val (cents, cbs) = ivfPqQuantizers(s, d)
     val serving = ivfPqServing(s, d, cents, cbs)
     coarseFrameOf(labels.fold(serving)(l => serving.filter(col("label").isin(l: _*))),
       cents, cbs, q)

@@ -397,6 +397,19 @@ class TableCatalog(spark: SparkSession, val root: String) {
     if (cached != null) cached else footerTotals(name, rel)._2
   }
 
+  // the Hadoop conf footer reads go through: building one parses
+  // Hadoop's XML resources, so it is rebuilt only when the session
+  // conf changes (the guard of `localReaders`)
+  private val footerConfs = new java.util.concurrent.atomic.AtomicReference[
+    (Map[String, String], org.apache.hadoop.conf.Configuration)]()
+
+  private def footerConf(): org.apache.hadoop.conf.Configuration = {
+    val conf = spark.sessionState.conf.getAllConfs
+    footerConfs.updateAndGet(cached =>
+      if (cached != null && cached._1 == conf) cached
+      else (conf, spark.sessionState.newHadoopConf()))._2
+  }
+
   /** (rows, uncompressed bytes) of one entry's parquet footers; fills
     * both caches. */
   private def footerTotals(name: String, rel: String): (Long, Long) = {
@@ -410,7 +423,7 @@ class TableCatalog(spark: SparkSession, val root: String) {
       else Nil
     var total = 0L
     var bytes = 0L
-    val conf = spark.sessionState.newHadoopConf() // one clone per entry, not per file
+    val conf = footerConf()
     files.filter(_.getFileName.toString.endsWith(".parquet")).foreach { p =>
       val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
         new org.apache.hadoop.fs.Path(p.toUri), conf)
@@ -805,7 +818,7 @@ class TableCatalog(spark: SparkSession, val root: String) {
 
   private def planFilesAt(m: TableMeta, name: String, version: Int,
       filter: Column): (Seq[String], Seq[String]) =
-    pruneFiles(m, name, readManifest(name, version), readStats(name, version), filter)
+    pruneFiles(m, name, readManifest(name, version), readStats(name, version), Seq(filter))
 
   /** Bind one table of a SELECT at `version` (the SQL front's read
     * route, the analog of the reference's `KeyLookup`/`IndexLookup`
@@ -933,11 +946,13 @@ class TableCatalog(spark: SparkSession, val root: String) {
   /** The zone-map pruning behind [[planFilesAt]], over any manifest
     * view — a published version's entries and stats, or a [[Txn]]'s
     * view with its staged dirs — so reads and copy-on-write DML pick
-    * their files by ONE rule. Entries are dirs or single files; returns
-    * (kept file paths, every file path), both table-relative. With no
-    * stats at all the entries themselves come back, unexpanded. */
+    * their files by ONE rule. A file is kept when its zone maps admit
+    * at least one of `filters` (a driver MERGE passes one per source
+    * key). Entries are dirs or single files; returns (kept file paths,
+    * every file path), both table-relative. With no stats at all the
+    * entries themselves come back, unexpanded. */
   private def pruneFiles(m: TableMeta, name: String, entries: Seq[String],
-      stats: Seq[FileStat], filter: Column): (Seq[String], Seq[String]) = {
+      stats: Seq[FileStat], filters: Seq[Column]): (Seq[String], Seq[String]) = {
     if (stats.isEmpty) return (entries, entries)
     // universe: the ACTUAL parquet files on disk per dir (a driver-side
     // listing — what Spark's scan planning does anyway), never the
@@ -952,7 +967,7 @@ class TableCatalog(spark: SparkSession, val root: String) {
     // still get the sorted layout + parquet row-group stats when
     // indexed, just no manifest pruning. Column names resolve
     // case-insensitively, as the analyzer resolves the predicate.
-    val ranges = extractRanges(filter)
+    val perFilter = filters.map(filter => extractRanges(filter)
       .flatMap { case (c: String, (lo, hi)) =>
         m.schema.fields.find(_.name.equalsIgnoreCase(c)) match {
           case None => None
@@ -976,11 +991,11 @@ class TableCatalog(spark: SparkSession, val root: String) {
           case _ => None
           }
         }
-      }
-    if (ranges.isEmpty) return (allPaths, allPaths)
+      })
+    if (perFilter.exists(_.isEmpty)) return (allPaths, allPaths)
     val byFile = stats.groupBy(_.path)
     val kept = allPaths.filter { f =>
-      byFile.get(f).forall(_.forall { st =>
+      perFilter.exists(ranges => byFile.get(f).forall(_.forall { st =>
         // empty min/max = null-marker (no non-null values seen): keep
         st.min.isEmpty || st.max.isEmpty || ranges.get(st.column).forall { case (lo, hi) =>
           val dt = m.schema(st.column).dataType
@@ -996,7 +1011,7 @@ class TableCatalog(spark: SparkSession, val root: String) {
           hi.forall(b =>
             cmpTyped(dt, st.min, b.value).forall(_ <= (if (b.inclusive) 0 else -1)))
         }
-      })
+      }))
     }
     (kept, allPaths)
   }
@@ -1666,29 +1681,30 @@ class TableCatalog(spark: SparkSession, val root: String) {
     * the duplicate compare, so count/count_distinct skipping NULLs
     * matches a groupBy on every reachable input. A source already on
     * the driver ([[TableCatalog.localBatch]]) is checked from its rows
-    * instead, with no job and no checkpoint, and comes back as the
-    * third value. */
+    * instead, with no job and no checkpoint, comes back as the third
+    * value, and picks its files by one filter per key, so keys far
+    * apart skip the files between them. */
   private def mergeSource(m: TableMeta, name: String,
-      source: DataFrame): (DataFrame, Column, Option[(LocalRelation, Seq[Literal])]) = {
+      source: DataFrame): (DataFrame, Seq[Column], Option[(LocalRelation, Seq[Literal])]) = {
     val pk = mergeKey(m, name)
     val aligned0 = applyDefaults(name, m, source)
     val local = TableCatalog.localBatch(aligned0).map(b => (b, batchKeys(b, pk)))
     val (aligned, nulls, dups, bounds) = local match {
       case Some((batch, (keys, nulls, dups))) =>
         (GraftColumnBridge.ofRows(spark, batch), nulls, dups,
-          Option.when(keys.nonEmpty)(keyRange(pk, keys)))
+          Option.when(keys.nonEmpty)(keys.map(k => keyRange(pk, Seq(k)))))
       case None =>
         val aligned = aligned0.localCheckpoint()
         val row = aligned.agg(count(when(col(pk).isNull, lit(1))).as("nulls"),
           count(col(pk)).as("cnt"), countDistinct(col(pk)).as("dst"),
           min(col(pk)).as("lo"), max(col(pk)).as("hi")).head()
         (aligned, row.getAs[Long]("nulls") != 0L, row.getAs[Long]("cnt") != row.getAs[Long]("dst"),
-          Option.when(!row.isNullAt(row.fieldIndex("lo")))(
-            col(pk) >= lit(row.getAs[Any]("lo")) && col(pk) <= lit(row.getAs[Any]("hi"))))
+          Option.when(!row.isNullAt(row.fieldIndex("lo")))(Seq(
+            col(pk) >= lit(row.getAs[Any]("lo")) && col(pk) <= lit(row.getAs[Any]("hi")))))
     }
     require(!nulls, s"$name.$pk: NOT NULL violated")
     require(!dups, s"MERGE INTO $name: duplicate keys in source")
-    (aligned, bounds.getOrElse(lit(true)), local.map { case (b, (keys, _, _)) => (b, keys) })
+    (aligned, bounds.getOrElse(Seq(lit(true))), local.map { case (b, (keys, _, _)) => (b, keys) })
   }
 
   /** The merged (upserted) rows shared by [[Txn.merge]] and both
@@ -2268,7 +2284,7 @@ class TableCatalog(spark: SparkSession, val root: String) {
         .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
       finally listing.close()
     var dirRows = 0L
-    val conf = spark.sessionState.newHadoopConf() // one clone per publish, not per file
+    val conf = footerConf()
     val out = files.flatMap { p =>
       val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
         new org.apache.hadoop.fs.Path(p.toUri), conf)
@@ -2590,17 +2606,17 @@ class TableCatalog(spark: SparkSession, val root: String) {
     private def viewStats(name: String, entries: Seq[String]): Seq[FileStat] =
       statsFor(entries, readStats(name, snapshotVersion(name)) ++ dirStats.values.flatten)
 
-    /** The txn view of `name` split for a statement whose rows all
-      * satisfy `filter`: (entries it leaves as they are, files it
-      * rewrites). A file is rewritten unless its zone maps prove
-      * `filter` false on every row ([[pruneFiles]]); a dir with some
-      * rewritten files keeps its others as single-file entries.
-      * SOUNDNESS: only the top-level conjuncts of `filter` prune, so a
-      * skipped file holds no row on which `filter` is TRUE. */
+    /** The txn view of `name` split for a statement whose rows each
+      * satisfy one of `filters`: (entries it leaves as they are, files
+      * it rewrites). A file is rewritten unless its zone maps prove
+      * every filter false on every row ([[pruneFiles]]); a dir with
+      * some rewritten files keeps its others as single-file entries.
+      * SOUNDNESS: only the top-level conjuncts of a filter prune, so a
+      * skipped file holds no row on which any filter is TRUE. */
     private def candidates(name: String, m: TableMeta,
-        filter: Column): (Seq[String], Seq[String]) = {
+        filters: Column*): (Seq[String], Seq[String]) = {
       val entries = viewDirs(name)
-      val (kept, all) = pruneFiles(m, name, entries, viewStats(name, entries), filter)
+      val (kept, all) = pruneFiles(m, name, entries, viewStats(name, entries), filters)
       val rewrite = kept.toSet
       val untouched = entries.flatMap { e =>
         val files = all.filter(f => f == e || f.startsWith(e + "/"))
@@ -2769,16 +2785,17 @@ class TableCatalog(spark: SparkSession, val root: String) {
     }
 
     /** Staged MERGE (upsert on the primary key) against the txn view
-      * (shared [[mergedFrame]]): only the files that may hold a key in
-      * the source's `[min, max]` are rewritten.
+      * (shared [[mergedFrame]]): only the files that may hold a source
+      * key are rewritten — per key for a source on the driver, by the
+      * source's `[min, max]` otherwise.
       *
       * A source on the driver is validated with the INSERT rules
       * ([[checkLocal]]) instead of re-aggregating the whole new view,
       * and the new view cannot break anything those rules leave out:
       *  - PRIMARY KEY: [[mergedFrame]] drops every source key from the
       *    rewritten files, and [[candidates]] keeps every file whose
-      *    zone maps admit a key in the source's `[min, max]`, so the
-      *    untouched files hold no source key either. The new view's
+      *    zone maps admit at least one source key, so the untouched
+      *    files hold no source key either. The new view's
       *    keys are then the untouched keys, the rewritten files' other
       *    keys and the source keys: three disjoint sets, each unique
       *    (the view was valid, the source is checked). No clash probe.
@@ -2795,8 +2812,8 @@ class TableCatalog(spark: SparkSession, val root: String) {
         return
       }
       val m = pinnedMetaOf(name)
-      val (aligned, keyRange, local) = mergeSource(m, name, source)
-      val (untouched, rewritten) = candidates(name, m, keyRange)
+      val (aligned, keyFilters, local) = mergeSource(m, name, source)
+      val (untouched, rewritten) = candidates(name, m, keyFilters: _*)
       local.foreach { case (batch, keys) =>
         val pk = mergeKey(m, name)
         checkLocal(m, name, batch, probe, retained = !keyIn(pk, keys), clashFree = Set(pk))

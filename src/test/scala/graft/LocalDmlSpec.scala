@@ -220,6 +220,23 @@ class LocalDmlSpec extends AnyFunSuite {
     assert(report.contains("Write: t driver-checked, 1 part"), report)
   }
 
+  test("a driver MERGE rewrites only the files that hold a source key") {
+    val (d, s) = pair(keyed)
+    def files(g: GraftSQL) = g.catalog.planFiles("t", lit(true))._2.toSet
+    val before = files(d)
+    // 20 lies in the first file, 7200 past every file's max: the keys'
+    // [min, max] would admit every file between them
+    val jobs = jobsOf("graft-localdml-merge-keys")(d.execute(
+      "MERGE INTO t (k, u, v, p) VALUES (20, 'm20', 'x', 2), (7200, 'm7200', 'x', 3)").collect())
+    assert(jobs >= 1 && jobs <= 3, s"$jobs jobs")
+    assert(before.size == 4 && (before -- files(d)).size == 1,
+      s"rewrote ${(before -- files(d)).size} of ${before.size} files")
+    s.catalog.merge("t", spark.sql("SELECT * FROM VALUES (20L, 'm20', 'x', 2L), " +
+      "(7200L, 'm7200', 'x', 3L) AS v(k, u, v, p)").crossJoin(spark.range(1)).drop("id"))
+    assert(d.driverWrites == 1 && s.catalog.lastWrite.exists(!_.driverChecked))
+    assert(rows(d, "t") == rows(s, "t") && rows(d, "t").size == 2001)
+  }
+
   test("a small append adds one file; a bulk VALUES into an empty table spreads over every core") {
     val g = session()
     val cat = g.catalog
