@@ -778,13 +778,13 @@ class GraftSQL(spark: SparkSession, val catalog: TableCatalog) {
     * an INSERT's or MERGE's with its write route line (driver- or
     * Spark-checked, and the write's part count).
     *
-    * SCOPE: the listener registers on the shared SparkSession's
-    * listenerManager, so a CONCURRENT GraftSQL session (the TCP
-    * server's other connections) executing during the window would
-    * appear in the report — the same visibility any engine's
-    * instrumented-run view has under concurrency. The report is an
-    * observability surface, not a result: row values never flow
-    * through it. */
+    * SCOPE: the listener registers on this session's listenerManager,
+    * which only hears executions of this SparkSession. The TCP server
+    * gives each connection its own `newSession()`, so another
+    * connection's concurrent statements never appear in the report
+    * (spec-checked); a second GraftSQL sharing THIS session would. The
+    * report is an observability surface, not a result: row values
+    * never flow through it. */
   private def explainAnalyze(inner: String): DataFrame = {
     import spark.implicits._
     val innerUp = inner.trim.toUpperCase

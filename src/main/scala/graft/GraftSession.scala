@@ -28,6 +28,10 @@ object GraftSession {
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // TIMESTAMP(NANOS) parquet reads as raw longs (Tables.events);
+      // set on the context, so every session of it inherits the key,
+      // newSession() included, and no operator sets it per call
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
 
   def create(master: String = "local[32]"): SparkSession = {
     val spark = builder(master).getOrCreate()
@@ -37,12 +41,11 @@ object GraftSession {
   }
 
   /** Idempotent per-session setup: registers the graft SQL functions
-    * and declares the TIMESTAMP(NANOS) parquet handling session-wide
-    * (the events table needs it; without the conf Spark refuses such
-    * files outright, so setting it up front makes the behavior explicit
-    * instead of dependent on which loader happened to run first).
-    * Safe to call on an externally-created session (the driver's
-    * Verify/Bench mains own their session). */
+    * and declares the TIMESTAMP(NANOS) parquet handling (the events
+    * table needs it; without the conf Spark refuses such files
+    * outright). [[builder]] already puts the conf on the context; the
+    * set here covers sessions it did not build (the Verify main owns
+    * its session). */
   def prepare(spark: SparkSession): SparkSession = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     functions.Registry.registerAll(spark)

@@ -19,25 +19,16 @@ import org.apache.spark.sql.functions._
   * the ones it lacks (column pruning into the scan, partial map-side
   * aggregation, broadcast joins, AQE).
   *
-  * Determinism: money aggregates go through DECIMAL so sums are exact
-  * (order-independent bit-stable under any partitioning — required for
-  * distributed correctness at 100 TB, where partial-agg order is
-  * arbitrary); every oracle-checked query ends in a total ORDER BY.
+  * Determinism: money aggregates are exact integer sums finished
+  * through DECIMAL ([[money]]), so they are order-independent and
+  * bit-stable under any partitioning — required for distributed
+  * correctness at 100 TB, where partial-agg order is arbitrary; every
+  * oracle-checked query ends in a total ORDER BY.
   */
 object Relational {
 
   /** Exact money arithmetic: DOUBLE column → DECIMAL(18,2). */
   private def dec(c: Column): Column = c.cast("decimal(18,2)")
-  private val oneDec: Column = lit(1).cast("decimal(18,2)")
-
-  /** Deployments whose money sums exceed the LONG-CENTS exactness
-    * bound (|Σ| ≤ 2^53 cents ≈ $90·10^12, or 2^53 ten-thousandths for
-    * the product sums) opt back into the DECIMAL plan here — same
-    * query shape, the documented at-scale swap (like
-    * spark.graft.percentile.approx). */
-  private def decimalMoney: Boolean =
-    org.apache.spark.sql.SparkSession.active.conf
-      .get("spark.graft.moneySum.decimal", "false").toBoolean
 
   /** The exact integer CENTS of a 2-decimal money double. The stored
     * double is the nearest representation of a value with exactly two
@@ -46,36 +37,36 @@ object Relational {
     * correctly-rounded multiply keeps the error far below 0.5 and
     * round() recovers the exact cents. NULL propagates like the
     * decimal cast. */
-  private def cents(c: Column): Column = round(c * 100).cast("long")
+  private[graft] def cents(c: Column): Column = round(c * 100).cast("long")
 
-  /** DECIMAL-exact sum surfaced as DOUBLE (bit-identical to DuckDB's
-    * CAST(SUM(CAST(x AS DECIMAL(18,2))) AS DOUBLE)) — computed on the
-    * LONG-CENTS fast path by default: the long sum is the exact
-    * Σcents (order-independent), its long→double conversion is exact
-    * while |Σ| ≤ 2^53, and the /100.0 is ONE correctly-rounded IEEE
-    * division — the same single rounding the decimal path's
-    * Decimal.toDouble performs on the same exact rational, hence the
-    * same double bit for bit (spec-asserted path-vs-path on the real
-    * tables). A decimal(18,2) sum buffers at precision 28 — past the
-    * compact-long Decimal representation, so every row pays BigDecimal
-    * arithmetic; the cents path is one codegen long add per row. */
-  private def dsum(c: Column): Column =
-    if (decimalMoney) sum(dec(c)).cast("double")
-    else sum(cents(c)).cast("double") / 100.0
+  /** p·(1−d) in exact 10^-4 units: the value decimal(18,2)×decimal(18,2)
+    * carries at scale 4. */
+  private[graft] def discUnits(p: Column, d: Column): Column =
+    cents(p) * (lit(100L) - cents(d))
 
-  /** Σ p·(1−d) (the TPC-H discounted-price aggregate), exact:
-    * cents(p)·(100−cents(d)) is the exact product in 10^-4 units — the
-    * same value decimal(18,2)×decimal(18,2) carries at scale 4 — and
-    * the bound/rounding argument is dsum's with 2^53 ten-thousandths
-    * as the exactness ceiling. */
-  private def dsumDisc(p: Column, d: Column): Column =
-    if (decimalMoney) sum(dec(p) * (oneDec - dec(d))).cast("double")
-    else sum(cents(p) * (lit(100L) - cents(d))).cast("double") / 10000.0
+  /** A finished exact LONG sum in 10^-`scale` units, surfaced as the
+    * double the DECIMAL plan yields (DuckDB's
+    * CAST(SUM(CAST(x AS DECIMAL(18,2))) AS DOUBLE)). Rows add as codegen
+    * longs, which are exact and order-independent; a decimal(18,2) sum
+    * would buffer at precision 28 and pay BigDecimal arithmetic per
+    * row. Only the finished sum, once per group or window row, goes
+    * through DECIMAL: the scaling multiply is exact, and the cast is
+    * the same correctly-rounded Decimal.toDouble that the decimal plan
+    * applies to the same rational. So the double is the decimal plan's
+    * bit for bit at every |Σ| < 2^63 units. Past that the ANSI long sum
+    * raises ARITHMETIC_OVERFLOW rather than return a value. */
+  private[graft] def money(units: Column, scale: Int): Column =
+    (units.cast("decimal(20,0)") * lit(BigDecimal(1, scale))).cast("double")
 
-  /** Σ p·d — dsumDisc's sibling for the plain product aggregate. */
-  private def dsumProd(p: Column, d: Column): Column =
-    if (decimalMoney) sum(dec(p) * dec(d)).cast("double")
-    else sum(cents(p) * cents(d)).cast("double") / 10000.0
+  /** Σ c, exact (see [[money]]). */
+  private[graft] def dsum(c: Column): Column = money(sum(cents(c)), 2)
+
+  /** Σ p·(1−d), the TPC-H discounted-price aggregate, exact. */
+  private[graft] def dsumDisc(p: Column, d: Column): Column = money(sum(discUnits(p, d)), 4)
+
+  /** Σ p·d, the plain product aggregate, exact. */
+  private[graft] def dsumProd(p: Column, d: Column): Column =
+    money(sum(cents(p) * cents(d)), 4)
 
   // ---------------------------------------------------------------- q01
   def q01ScanProject(s: SparkSession, d: String): DataFrame =
@@ -300,18 +291,8 @@ object Relational {
         col("o_custkey"), col("o_orderkey"), col("o_totalprice"),
         row_number().over(w).as("rn"),
         rank().over(w).as("rnk"),
-        (if (decimalMoney)
-            sum(dec(col("o_totalprice")))
-              .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-              .cast("double")
-          else
-            // exact long cents through the running frame: every frame
-            // sum is the exact Σcents, so each row's double is the
-            // decimal path's bit for bit — and the per-row window add
-            // is a codegen long, not a precision-28 BigDecimal
-            sum(cents(col("o_totalprice")))
-              .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-              .cast("double") / 100.0).as("running_spent"))
+        money(sum(cents(col("o_totalprice")))
+          .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)), 2).as("running_spent"))
       .filter(col("rn") <= 3)
       .orderBy("o_custkey", "rn")
   }
@@ -1266,7 +1247,13 @@ object Relational {
     * NULL aggregates SILENTLY — so the spec asserts every published
     * moment is non-null, and inputs wider than ~10⁵ should pre-scale
     * (divide by a power of ten, multiply back in the finisher) rather
-    * than widen the decimal (38 digits is the physical cap). */
+    * than widen the decimal (38 digits is the physical cap).
+    *
+    * Why DECIMAL and not [[money]]'s long sums: Σy² in 10^-4 units is
+    * already 0.80·2^63 per l_returnflag group at sf0.1 (three groups,
+    * so it grows linearly with the table) and passes 2^63 at about
+    * sf0.125. A long would raise there; DECIMAL(38,4) is the one exact
+    * representation at that magnitude. */
   def q59StatsAgg(s: SparkSession, d: String): DataFrame = {
     val x = dec(col("l_quantity"))            // ≤ 50.00
     val y = dec(col("l_extendedprice"))       // ≤ ~100k.00
@@ -1363,7 +1350,7 @@ object Relational {
     * corpus collapses FIRST (one groupBy to n_nation rows, map-side
     * partials), and only the bounded aggregate flows through the
     * empty-frame window — the total is computed over ≤ 25 rows however
-    * large the fact table. DECIMAL sums keep shares bit-stable. */
+    * large the fact table. Exact long sums keep shares bit-stable. */
   def q62RatioToReport(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val rev = Tables.lineitem(s, d)
@@ -1371,22 +1358,15 @@ object Relational {
       .join(Tables.customer(s, d), col("o_custkey") === col("c_custkey"))
       .join(Tables.nation(s, d), col("c_nationkey") === col("n_nationkey"))
       .groupBy("n_name")
-      .agg((if (decimalMoney)
-          sum(dec(col("l_extendedprice")) * (oneDec - dec(col("l_discount"))))
-        else
-          sum(cents(col("l_extendedprice")) * (lit(100L) - cents(col("l_discount")))))
-        .as("rev"))
-    // the DIVISION runs on doubles derived from the exact sums — on
-    // the fast path `rev` rides the window as exact LONG
-    // ten-thousandths and converts to the identical double at the end
-    // (decimal÷decimal result scale differs between engines; identical
-    // doubles divide bit-identically)
-    def toMoney(c: Column): Column =
-      if (decimalMoney) c.cast("double") else c.cast("double") / 10000.0
+      .agg(sum(discUnits(col("l_extendedprice"), col("l_discount"))).as("rev"))
+    // `rev` rides the window as exact LONG ten-thousandths; the
+    // DIVISION runs on the doubles of the finished sums (decimal÷decimal
+    // result scale differs between engines; identical doubles divide
+    // bit-identically)
     rev
-      .select(col("n_name"), toMoney(col("rev")).as("revenue"),
-        round(toMoney(col("rev")) /
-          toMoney(sum(col("rev")).over(Window.partitionBy())), 6)
+      .select(col("n_name"), money(col("rev"), 4).as("revenue"),
+        round(money(col("rev"), 4) /
+          money(sum(col("rev")).over(Window.partitionBy()), 4), 6)
           .as("share"))
       .orderBy("n_name")
   }
@@ -1645,7 +1625,14 @@ object Relational {
     * are integers, value·weight products are DECIMAL sums — so the
     * emitted double is bit-identical on both engines regardless of
     * partitioning (the q59 order-independence discipline). One shuffle
-    * on the (user, day) window key; the groupBy reuses it. */
+    * on the (user, day) window key; the groupBy reuses it.
+    *
+    * Why DECIMAL and not [[money]]'s long sums: a (user, day) group
+    * holds at most 8.64·10^10 µs of weight, so its sum does not grow
+    * with the table (2.9·10^-4 of 2^63 at sf0.1). But in cents·µs one
+    * row overflows a long once |value| passes about $1.07·10^6 held for
+    * a day, and nothing bounds `value`. The long path would raise on
+    * inputs that DECIMAL(38,2) sums exactly. */
   def q70TimeWeightedAvg(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("user_id"), col("day"))

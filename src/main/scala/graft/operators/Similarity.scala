@@ -42,14 +42,14 @@ object Similarity {
       .select(col("vec_id") +: col("embedding") +: sigCols: _*)
 
   /** The fixed probe: embedding of vec_id 0, broadcast to all rows. */
-  private def probe(s: SparkSession, d: String): DataFrame =
-    Tables.embeddings(s, d).filter(col("vec_id") === 0)
-      .select(col("embedding").as("qv"))
+  private def probe(s: SparkSession, d: String): DataFrame = probe(Tables.embeddings(s, d))
+  private def probe(emb: DataFrame): DataFrame =
+    emb.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
 
   /** The fixed probe vector on the driver (one pushed-filter point
     * read). */
-  private def probeVec(s: SparkSession, d: String): Array[Float] =
-    probe(s, d).head().getSeq[Float](0).toArray
+  private def probeVec(emb: DataFrame): Array[Float] = probe(emb).head().getSeq[Float](0).toArray
+  private def probeVec(s: SparkSession, d: String): Array[Float] = probeVec(Tables.embeddings(s, d))
 
   // ---------------------------------------------------------------- s01
   /** Exact top-k, oracle-checked: DuckDB's list_cosine_similarity
@@ -632,8 +632,8 @@ object Similarity {
 
   private def pqSpaces = (0 until PqM).map(j => slice(col("embedding"), j * PqDsub + 1, PqDsub) -> PqK)
 
-  private[operators] def pqCodebooks(s: SparkSession, d: String): Seq[Array[Array[Float]]] =
-    Ivf.train(Tables.embeddings(s, d), pqSpaces, IvfIters)
+  private[operators] def pqCodebooks(emb: DataFrame): Seq[Array[Array[Float]]] =
+    Ivf.train(emb, pqSpaces, IvfIters)
 
   /** The PACKED m-byte code column of `embedding` under codebooks
     * `cbs` (at scale: the stored BINARY code column, written at
@@ -659,17 +659,19 @@ object Similarity {
   }
 
   /** vec_id + embedding + the packed code column. */
-  private def pqCodes(s: SparkSession, d: String,
-      cbs: Seq[Array[Array[Float]]]): DataFrame =
-    Tables.embeddings(s, d).select(col("vec_id"), col("embedding"), codesCol(cbs).as("codes"))
+  private def pqCodes(emb: DataFrame, cbs: Seq[Array[Array[Float]]]): DataFrame =
+    emb.select(col("vec_id"), col("embedding"), codesCol(cbs).as("codes"))
 
   private[graft] def pqCodes(s: SparkSession, d: String): DataFrame =
-    pqCodes(s, d, pqCodebooks(s, d))
+    pqCodes(Tables.embeddings(s, d), pqCodebooks(Tables.embeddings(s, d)))
 
+  /** One `embeddings` frame serves the trainer, the probe and the code
+    * scan: each load is a schema-inference job. */
   def s11AnnPq(s: SparkSession, d: String): DataFrame = {
-    val cbs = pqCodebooks(s, d)
-    val q = probeVec(s, d)
-    pqCodes(s, d, cbs)
+    val emb = Tables.embeddings(s, d)
+    val cbs = pqCodebooks(emb)
+    val q = probeVec(emb)
+    pqCodes(emb, cbs)
       .filter(col("vec_id") =!= 0)
       .withColumn("coarse", adcCosine(cbs, q))
       .orderBy(col("coarse").desc, col("vec_id"))
@@ -825,22 +827,24 @@ object Similarity {
     * `label` rides along as the filterable metadata column a serving
     * table carries for filtered search (s16) — at 100 TB it is a
     * stored column the scan's predicate pushdown prunes on. */
-  private def ivfPqServing(s: SparkSession, d: String, cents: Array[Array[Float]],
+  private def ivfPqServing(emb: DataFrame, cents: Array[Array[Float]],
       cbs: Seq[Array[Array[Float]]]): DataFrame =
-    Tables.embeddings(s, d).select(col("vec_id"), col("label"), col("embedding"),
+    emb.select(col("vec_id"), col("label"), col("embedding"),
       nearest_centroid(col("embedding"), Ivf.centroidsLit(cents)).as("cell"),
       codesCol(cbs).as("codes"))
 
   /** The coarse quantizer and the m codebooks from ONE (1 + m)-space
     * [[Ivf.train]] call: the IVF and PQ rounds share their scans. */
-  private[operators] def ivfPqQuantizers(s: SparkSession, d: String) = {
-    val all = Ivf.train(Tables.embeddings(s, d), (col("embedding") -> IvfK) +: pqSpaces, IvfIters)
+  private[operators] def ivfPqQuantizers(emb: DataFrame) = {
+    val all = Ivf.train(emb, (col("embedding") -> IvfK) +: pqSpaces, IvfIters)
     (all.head, all.tail)
   }
 
   /** The serving table under a freshly trained quantizer and codebooks. */
-  private[graft] def ivfPqServing(s: SparkSession, d: String): DataFrame =
-    ivfPqQuantizers(s, d) match { case (cents, cbs) => ivfPqServing(s, d, cents, cbs) }
+  private[graft] def ivfPqServing(s: SparkSession, d: String): DataFrame = {
+    val emb = Tables.embeddings(s, d)
+    ivfPqQuantizers(emb) match { case (cents, cbs) => ivfPqServing(emb, cents, cbs) }
+  }
 
   private[graft] def ivfPqFrame(s: SparkSession, d: String): DataFrame =
     ivfPqServing(s, d)
@@ -864,25 +868,28 @@ object Similarity {
 
   private[graft] def s15CoarseFrameOf(s: SparkSession, d: String,
       serving: DataFrame): DataFrame =
-    ivfPqQuantizers(s, d) match { case (cents, cbs) => coarseFrameOf(serving, cents, cbs, probeVec(s, d)) }
+    ivfPqQuantizers(Tables.embeddings(s, d)) match {
+      case (cents, cbs) => coarseFrameOf(serving, cents, cbs, probeVec(s, d)) }
 
   /** s15's coarse frame (s16's with `labels`): the quantizer and the
     * codebooks train together in one (1 + m)-space call, and the
-    * serving table and the ADC scoring share them. */
-  private def ivfPqCoarse(s: SparkSession, d: String, q: Array[Float],
+    * serving table and the ADC scoring share them. `emb` is the
+    * caller's one `embeddings` frame, which the probe also reads. */
+  private def ivfPqCoarse(emb: DataFrame, q: Array[Float],
       labels: Option[Seq[Int]]): DataFrame = {
-    val (cents, cbs) = ivfPqQuantizers(s, d)
-    val serving = ivfPqServing(s, d, cents, cbs)
+    val (cents, cbs) = ivfPqQuantizers(emb)
+    val serving = ivfPqServing(emb, cents, cbs)
     coarseFrameOf(labels.fold(serving)(l => serving.filter(col("label").isin(l: _*))),
       cents, cbs, q)
   }
 
   private[graft] def s15CoarseFrame(s: SparkSession, d: String): DataFrame =
-    ivfPqCoarse(s, d, probeVec(s, d), None)
+    ivfPqCoarse(Tables.embeddings(s, d), probeVec(s, d), None)
 
   def s15IvfPq(s: SparkSession, d: String): DataFrame = {
-    val q = probeVec(s, d)
-    ivfPqCoarse(s, d, q, None)
+    val emb = Tables.embeddings(s, d)
+    val q = probeVec(emb)
+    ivfPqCoarse(emb, q, None)
       .orderBy(col("coarse").desc, col("vec_id"))
       .limit(PqCoarse) // fixed exact-rerank budget, corpus-independent
       .select(col("vec_id"),
@@ -915,11 +922,12 @@ object Similarity {
     * filter-selectivity of the corpus. Rows-only (trained quantizer +
     * codebooks, like s15). */
   private[graft] def s16CoarseFrame(s: SparkSession, d: String): DataFrame =
-    ivfPqCoarse(s, d, probeVec(s, d), Some(FilterLabels))
+    ivfPqCoarse(Tables.embeddings(s, d), probeVec(s, d), Some(FilterLabels))
 
   def s16FilteredIvfPq(s: SparkSession, d: String): DataFrame = {
-    val q = probeVec(s, d)
-    ivfPqCoarse(s, d, q, Some(FilterLabels))
+    val emb = Tables.embeddings(s, d)
+    val q = probeVec(emb)
+    ivfPqCoarse(emb, q, Some(FilterLabels))
       .orderBy(col("coarse").desc, col("vec_id"))
       .limit(PqCoarse) // fixed exact-rerank budget, corpus-independent
       .select(col("vec_id"), col("label"),

@@ -28,14 +28,13 @@ object Tables {
   def lineitem(s: SparkSession, d: String): DataFrame   = load(s, d, "lineitem")
   /** The events table's `ts` has shipped in two parquet encodings
     * across testdata generations: TIMESTAMP(NANOS), which Spark only
-    * reads as raw longs (legacy nanosAsLong conf), and plain µs
+    * reads as raw longs (the legacy nanosAsLong conf, which every
+    * graft session carries from [[graft.GraftSession]]), and plain µs
     * timestamps (NTZ when written tz-naive). Surface both as
     * microsecond TimestampType — matching DuckDB's reading of the same
     * file, so oracles stay comparable. */
-  def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+  def events(s: SparkSession, d: String): DataFrame =
     normalizeTs(s.read.parquet(s"$d/events.parquet"))
-  }
 
   /** Normalize a frame's `ts` column to µs TimestampType regardless of
     * which physical encoding the parquet carried. The session timezone

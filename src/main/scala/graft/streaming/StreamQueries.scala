@@ -73,7 +73,6 @@ object StreamQueries {
     * branch the batch loader uses). ONE definition, so the timestamp
     * handling cannot drift between queries or testdata generations. */
   private def rawEventsStream(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     Tables.normalizeTs(
       s.readStream
         .schema(s.read.parquet(s"$d/events.parquet").schema)
@@ -164,7 +163,6 @@ object StreamQueries {
     * returns reads the staged files. */
   private def withSentinelEventStream[T](s: SparkSession, d: String)
       (body: DataFrame => T): Option[T] = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // ts arrives as ns-LONG or µs-timestamp depending on the testdata
     // generation (Tables.scala documents both); every extraction below
     // branches on the actual type instead of assuming one encoding
@@ -360,7 +358,6 @@ object StreamQueries {
   def st14StreamDedupWatermark(s: SparkSession, d: String): DataFrame = {
     import java.nio.file.{Files => JFiles, Paths => JPaths}
     import s.implicits._
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val rawSchema = s.read.parquet(s"$d/events.parquet").schema
     val tsType = rawSchema("ts").dataType
     maxEventUs(s, d) match {
@@ -544,7 +541,6 @@ object StreamQueries {
     * oracle checks it equals the source exactly. */
   def st07StreamIngest(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.types._
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val root = graft.sources.TableCatalog.tempRoot("graft-st07")
     val cat = new graft.sources.TableCatalog(s, root)
     cat.createTable("events_ingest", StructType(Seq(

@@ -185,6 +185,55 @@ class GraftSQLSpec extends AnyFunSuite {
     g.execute("ROLLBACK")
   }
 
+  test("EXPLAIN ANALYZE reports only its own session's executions") {
+    // a server connection is its own newSession(): another session's
+    // concurrent SELECTs must not show up in this session's report
+    def on(s: org.apache.spark.sql.SparkSession): GraftSQL =
+      new GraftSQL(s, new TableCatalog(s,
+        java.nio.file.Files.createTempDirectory("graft-sql").toString))
+    val mineSession = spark.newSession()
+    val (a, b) = (on(mineSession), on(spark.newSession()))
+    a.execute("CREATE TABLE mine (k INTEGER PRIMARY KEY, v INTEGER)")
+    a.execute("INSERT INTO mine VALUES (1, 10), (2, 20)")
+    // `a`'s SELECT has no aggregate; the loop's GROUP BY is the marker
+    val loopSql = "SELECT w, count(*) AS n FROM theirs GROUP BY w"
+    /** `a`'s reports taken while `other` loops [[loopSql]], keeping
+      * only windows in which a loop SELECT finished. */
+    def reportsBeside(other: GraftSQL): Seq[String] = {
+      other.execute("CREATE TABLE theirs (k INTEGER PRIMARY KEY, w INTEGER)")
+      other.execute("INSERT INTO theirs VALUES (1, 5), (2, 6), (3, 7)")
+      val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+      val selects = new java.util.concurrent.atomic.AtomicInteger(0)
+      val loop = new Thread(() =>
+        while (!done.get()) {
+          other.execute(loopSql).collect()
+          selects.incrementAndGet()
+        })
+      loop.setDaemon(true)
+      loop.start()
+      try {
+        while (selects.get() == 0) Thread.sleep(10)
+        Iterator.continually {
+          val before = selects.get()
+          val r = a.execute("EXPLAIN ANALYZE SELECT v FROM mine WHERE k > 0").collect()(0).getString(0)
+          (r, selects.get() > before)
+        }.take(40).filter(_._2).map(_._1).take(3).toSeq
+      } finally {
+        done.set(true)
+        loop.join(60000)
+        other.execute("DROP TABLE theirs")
+      }
+    }
+    val apart = reportsBeside(b)
+    assert(apart.size == 3, "the other session never ran inside a report window")
+    apart.foreach { r =>
+      assert(r.contains("== Execution") && !r.contains("HashAggregate"), r)
+    }
+    // control: the same loop on `a`'s own session does reach the report
+    val shared = reportsBeside(on(mineSession))
+    assert(shared.nonEmpty && shared.exists(_.contains("HashAggregate")), shared.mkString("\n---\n"))
+  }
+
   test("PK violation through SQL is rejected and not published") {
     val g = session()
     g.execute("CREATE TABLE t (id INTEGER PRIMARY KEY, v STRING)")

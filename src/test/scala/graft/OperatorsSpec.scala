@@ -3616,47 +3616,100 @@ class OperatorsSpec extends AnyFunSuite {
   }
 
   test("long-cents money sums are bit-identical to the decimal plan on every consumer") {
+    import org.apache.spark.sql.{Column, DataFrame}
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions.{abs, lit, max, round}
+    import Relational.{cents, discUnits, dsum, dsumDisc, dsumProd, money}
+    def dec(c: Column) = c.cast("decimal(18,2)")
+    val one = lit(1).cast("decimal(18,2)")
     // PREMISE: every money double is the nearest representation of an
     // exactly-2-decimal value, so round(c·100) recovers exact cents
     // with error far below 0.5 (the proof's only data assumption)
-    val money = Seq(
-      sources.Tables.lineitem(spark, sf).select(col("l_extendedprice").as("c")),
-      sources.Tables.lineitem(spark, sf).select(col("l_discount").as("c")),
-      sources.Tables.lineitem(spark, sf).select(col("l_quantity").as("c")),
+    val li = sources.Tables.lineitem(spark, sf)
+    val money2 = Seq(
+      li.select(col("l_extendedprice").as("c")), li.select(col("l_discount").as("c")),
+      li.select(col("l_quantity").as("c")),
       sources.Tables.orders(spark, sf).select(col("o_totalprice").as("c")),
-      sources.Tables.part(spark, sf).select(col("p_retailprice").as("c")))
-    money.foreach { df =>
-      val dev = df.agg(org.apache.spark.sql.functions.max(
-          org.apache.spark.sql.functions.abs(col("c") * 100 -
-            org.apache.spark.sql.functions.round(col("c") * 100))))
-        .head().getDouble(0)
+      sources.Tables.part(spark, sf).select(col("p_retailprice").as("c")),
+      sources.Tables.events(spark, sf).select(col("value").as("c")))
+    money2.foreach { df =>
+      val dev = df.agg(max(abs(col("c") * 100 - round(col("c") * 100)))).head().getDouble(0)
       assert(dev < 1e-6, s"money column deviates from 2 decimals by $dev")
     }
-    // PATH EQUIVALENCE: every query on the cents fast path must
-    // produce the decimal plan's rows BIT FOR BIT (the DuckDB oracle
-    // pins the decimal semantics; == on boxed doubles is bitwise
-    // modulo NaN, and these columns are never NaN)
-    val affected = Seq("q04_agg_group", "q05_having", "q07_join_inner",
-      "q08_join_left", "q11_join_multiway", "q17_agg_global",
-      "q18_window_funcs", "q24_rollup", "q28_scalar_subquery",
-      "q34_moving_avg", "q35_cube", "q46_histogram", "q49_unpivot",
-      "q51_filtered_agg", "q54_session_window", "q62_ratio_to_report",
-      "q69_skew_join")
-    val key = "spark.graft.moneySum.decimal"
-    val prev = spark.conf.getOption(key)
-    try {
-      affected.foreach { name =>
-        spark.conf.unset(key) // default: the cents fast path
-        val fast = Relational.queries(name)(spark, sf).collect().toSeq
-        spark.conf.set(key, "true")
-        val slow = Relational.queries(name)(spark, sf).collect().toSeq
-        assert(fast == slow,
-          s"$name: cents path diverged from the decimal plan: " +
-            s"${fast.zip(slow).find { case (a, b) => a != b }}")
-      }
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
+    // EQUIVALENCE: each helper against the DECIMAL(18,2) plan the
+    // DuckDB oracle pins, grouped and global, on every shape the 17
+    // money queries use. Row == on boxed doubles is bitwise (never NaN).
+    def check(name: String, got: DataFrame, want: DataFrame): Unit = {
+      def rows(df: DataFrame) = df.collect().map(_.toSeq).sortBy(_.mkString("|")).toSeq
+      val (g, w) = (rows(got), rows(want))
+      assert(g.nonEmpty, name)
+      if (g != w) fail(s"$name diverged: ${g.zip(w).find { case (a, b) => a != b }}")
     }
+    def same(name: String, df: DataFrame, keys: Seq[Column], got: Column, want: Column): Unit = {
+      def agg(c: Column) = if (keys.isEmpty) df.agg(c) else df.groupBy(keys: _*).agg(c)
+      check(name, agg(got), agg(want))
+    }
+    def sums(name: String, df: DataFrame, keys: Seq[Column]): Unit = {
+      val (p, d) = (col("p"), col("d"))
+      same(s"$name dsum", df, keys, dsum(p), sum(dec(p)).cast("double"))
+      same(s"$name dsumDisc", df, keys, dsumDisc(p, d), sum(dec(p) * (one - dec(d))).cast("double"))
+      same(s"$name dsumProd", df, keys, dsumProd(p, d), sum(dec(p) * dec(d)).cast("double"))
+    }
+    // plain sums over every money column; the products over lineitem
+    // price × discount (and each column against the discount)
+    for (c <- Seq("l_extendedprice", "l_quantity", "l_discount"))
+      sums(c, li.select(col(c).as("p"), col("l_discount").as("d"), col("l_returnflag").as("g")), Seq(col("g")))
+    val o = sources.Tables.orders(spark, sf)
+    for ((df, c, g) <- Seq((o, "o_totalprice", "o_orderpriority"),
+        (sources.Tables.part(spark, sf), "p_retailprice", "p_brand"),
+        (sources.Tables.events(spark, sf), "value", "user_id"));
+        keys <- Seq(Nil, Seq(col(g))))
+      same(c, df, keys, dsum(col(c)), sum(dec(col(c))).cast("double"))
+    // q18: a running frame of long cents, finished per row
+    def running(df: DataFrame): Unit = {
+      val w = Window.partitionBy(col("g")).orderBy(col("p").desc, col("k"))
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      check("running frame", df.select(col("k"), money(sum(cents(col("p"))).over(w), 2)),
+        df.select(col("k"), sum(dec(col("p"))).over(w).cast("double")))
+    }
+    running(o.select(col("o_orderkey").as("k"), col("o_totalprice").as("p"), col("o_custkey").as("g")))
+    // q62: per-group long ten-thousandths, then a window total over them
+    def shareOf(df: DataFrame): Unit = {
+      val all = Window.partitionBy()
+      check("window total",
+        df.groupBy("g").agg(sum(discUnits(col("p"), col("d"))).as("r"))
+          .select(col("g"), money(col("r"), 4), money(sum(col("r")).over(all), 4)),
+        df.groupBy("g").agg(sum(dec(col("p")) * (one - dec(col("d")))).as("r"))
+          .select(col("g"), col("r").cast("double"), sum(col("r")).over(all).cast("double")))
+    }
+    shareOf(li.select(col("l_extendedprice").as("p"), col("l_discount").as("d"), col("l_returnflag").as("g")))
+
+    // HOSTILE: sums past 2^53 units in both scales. ~$5·10^10 per row
+    // with odd cents; 2,001 rows per group (an odd count, so Σcents is
+    // odd and not a double) put Σcents near 10^16 and Σ p·(1−d) near
+    // 10^18 ten-thousandths, under 2^63.
+    import spark.implicits._
+    val rng = new scala.util.Random(53)
+    val big = (0 until 32 * 2001).map { i =>
+      val c = 5000000000000L + rng.nextInt(1000000000) * 2L + 1 // odd cents
+      (i.toLong, s"g${i % 32}", BigDecimal(c, 2).toDouble, (rng.nextInt(10) + 1) / 100.0)
+    }.toDF("k", "g", "p", "d")
+    // premise: 32 groups, so that some planted sums are ones where
+    // long→double then /10^scale (two roundings) drifts from the exact
+    // quotient in each scale, and a path that takes it fails below
+    val perGroup = big.groupBy("g").agg(sum(cents(col("p"))), sum(discUnits(col("p"), col("d"))))
+      .collect().map(r => (r.getLong(1), r.getLong(2)))
+    assert(perGroup.forall { case (c, u) => c > (1L << 53) && u > (1L << 53) })
+    assert(perGroup.exists { case (c, _) => c.toDouble / 100.0 != BigDecimal(c, 2).toDouble })
+    assert(perGroup.exists { case (_, u) => u.toDouble / 10000.0 != BigDecimal(u, 4).toDouble })
+    sums("planted", big, Seq(col("g")))
+    running(big)
+    shareOf(big.filter(col("g").isin("g0", "g1")))
+    // past 2^63 units the long sum raises instead of returning a value
+    val over = (0 until 4).map(i => (i.toLong, "g", 3.0e16, 0.0)).toDF("k", "g", "p", "d")
+    val e = intercept[Exception](over.agg(dsum(col("p"))).collect())
+    def messages(t: Throwable): Seq[String] =
+      if (t == null) Nil else Option(t.getMessage).toSeq ++ messages(t.getCause)
+    assert(messages(e).exists(_.contains("ARITHMETIC_OVERFLOW")), e.toString)
   }
 }

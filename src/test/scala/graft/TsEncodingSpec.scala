@@ -166,4 +166,35 @@ class TsEncodingSpec extends AnyFunSuite {
       if (t == null) Nil else Option(t.getMessage).toSeq ++ messages(t.getCause)
     assert(messages(e).exists(_.contains("epoch-ns range")), e.toString)
   }
+
+  test("a bare newSession reads a TIMESTAMP(NANOS) events file through Tables.events") {
+    // the legacy nanosAsLong key rides the context that GraftSession's
+    // builder made, so a session that prepare() never touched reads the
+    // file, and no loader has to set the key on the session
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    val dir = Files.createTempDirectory("graft-enc-nanos")
+    val schema = MessageTypeParser.parseMessageType(
+      """message events {
+        |  required int64 event_id;
+        |  required int64 ts (TIMESTAMP(NANOS,true));
+        |  required int64 user_id;
+        |  required binary event_type (STRING);
+        |  required double value;
+        |  required binary props (STRING);
+        |}""".stripMargin)
+    val out = ExampleParquetWriter.builder(
+      new org.apache.hadoop.fs.Path(dir.resolve("events.parquet").toString)).withType(schema).build()
+    val groups = new SimpleGroupFactory(schema)
+    try rows.foreach { case (id, uid, tsUs, et, v, props) =>
+      out.write(groups.newGroup().append("event_id", id).append("ts", tsUs * 1000L)
+        .append("user_id", uid).append("event_type", et).append("value", v).append("props", props))
+    } finally out.close()
+    val bare = spark.newSession()
+    val got = Tables.events(bare, dir.toString)
+    assert(got.schema("ts").dataType == TimestampType)
+    assert(canon(got.select("event_id", "ts")) ==
+      canon(Tables.events(spark, ntzDir).select("event_id", "ts")))
+  }
 }

@@ -53,13 +53,13 @@ class QuantizerSpec extends AnyFunSuite {
   }
 
   test("the 8 PQ codebooks train together to the per-space centroids") {
-    val joint = Similarity.pqCodebooks(spark, sf)
+    val joint = Similarity.pqCodebooks(Tables.embeddings(spark, sf))
     assert(joint.size == 8 && joint.forall(_.length == 32))
     assert(asSeq(joint) == asSeq(oracle(pq)))
   }
 
   test("the coarse quantizer and the codebooks train together to the per-space centroids") {
-    val (cents, cbs) = Similarity.ivfPqQuantizers(spark, sf)
+    val (cents, cbs) = Similarity.ivfPqQuantizers(Tables.embeddings(spark, sf))
     assert(asSeq(cents +: cbs) == asSeq(oracle(coarse +: pq)))
   }
 
@@ -84,9 +84,9 @@ class QuantizerSpec extends AnyFunSuite {
 
   test("job budget: s11 and s15 train every space in one scan per Lloyd round") {
     // one init collect + 3 rounds × (shuffle map + result) = 7 training
-    // jobs, then the probe read, the table reads and the drain; the
-    // per-space trainer ran 61 (s11) and 69 (s15)
-    for ((q, budget) <- Seq("s11_ann_pq" -> 12, "s15_ann_ivfpq" -> 12)) {
+    // jobs, then the one `embeddings` schema read, the probe read and
+    // the drain; the per-space trainer ran 61 (s11) and 69 (s15)
+    for ((q, budget) <- Seq("s11_ann_pq" -> 10, "s15_ann_ivfpq" -> 10)) {
       val jobs = jobsOf(s"graft-quantizer-$q")(
         Similarity.queries(q)(spark, sf).write.format("noop").mode("overwrite").save())
       assert(jobs <= budget, s"$q ran $jobs jobs")
