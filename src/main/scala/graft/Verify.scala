@@ -5,18 +5,12 @@ import java.nio.file.{Files, Paths}
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
 
-  // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-  // — a tab or CR in builder-authored SQL would otherwise make the
-  // driver's json.load fail and silently zero the round's correctness.
-  private def q(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
+  /** A JSON object of string values, keys in the map's order. */
+  private def writeJson(path: String, kv: Iterable[(String, String)]): Unit = {
+    val o = graft.sources.CatalogCodec.mapper.createObjectNode()
+    kv.foreach { case (k, v) => o.put(k, v) }
+    Files.write(Paths.get(path), graft.sources.CatalogCodec.mapper.writeValueAsBytes(o))
+  }
 
   /** Runs every query and dumps its result under `outDir/<name>`.
     * Returns name → error for the ones that threw. COVERAGE CONTRACT:
@@ -42,9 +36,7 @@ object Verify {
         Some(name -> s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(500)}")
       }
     }
-    val errJson = errors.toSeq.sortBy(_._1)
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/errors.json"), errJson)
+    writeJson(s"$outDir/errors.json", errors.toSeq.sortBy(_._1))
     val dumped = queries.keySet.filter(n => Files.exists(Paths.get(outDir, n)))
     System.err.println(
       s"[verify] coverage: ${dumped.size}/${queries.size} dumped, ${errors.size} failed" +
@@ -76,9 +68,7 @@ object Verify {
       case None        => SparkEntry.queries
     }
     dumpAll(spark, sfDir, outDir, selected)
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    writeJson(s"$outDir/oracle_sql.json", SparkEntry.oracleSql)
     spark.stop()
   }
 }

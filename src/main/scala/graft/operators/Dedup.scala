@@ -932,8 +932,9 @@ object Dedup {
     * bit-exactly, so the removal set is identical to the inline
     * derivation. */
   private def clusterTable(s: SparkSession, d: String): DataFrame = {
-    val cents = Similarity.ivfCents(s, d)
-    val assigned = Similarity.ivfAssigned(s, d, cents)
+    val emb = Tables.embeddings(s, d)
+    val cents = Similarity.ivfCents(emb)
+    val assigned = Similarity.ivfAssigned(emb, cents)
       .join(broadcast(Similarity.ivfCells(s, cents)), "cell")
       .select(col("vec_id"), col("embedding"), col("cell"),
         cosine_sim(col("embedding"), col("centroid")).as("cent_sim"))

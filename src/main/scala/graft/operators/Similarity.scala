@@ -165,9 +165,13 @@ object Similarity {
 
   /** The trained coarse quantizer's k centroids (cell i = row i),
     * trained by the call that needs them and passed down: at 100 TB a
-    * stored k-row table written at index-build time. */
+    * stored k-row table written at index-build time. `emb` is the
+    * caller's one `embeddings` frame. */
+  private[operators] def ivfCents(emb: DataFrame): Array[Array[Float]] =
+    Ivf.train(emb, IvfK, IvfIters)
+
   private[operators] def ivfCents(s: SparkSession, d: String): Array[Array[Float]] =
-    Ivf.train(Tables.embeddings(s, d), IvfK, IvfIters)
+    ivfCents(Tables.embeddings(s, d))
 
   /** (cell, centroid) — the quantizer as a k-row frame. */
   private[operators] def ivfCells(s: SparkSession, cents: Array[Array[Float]]): DataFrame = {
@@ -181,18 +185,20 @@ object Similarity {
   /** vec_id + embedding + cell: the corpus organized into inverted
     * lists (at scale: a table PARTITIONED BY cell — probe = partition
     * pruning). */
-  private[operators] def ivfAssigned(s: SparkSession, d: String,
-      cents: Array[Array[Float]]): DataFrame =
-    Ivf.assign(Tables.embeddings(s, d).select("vec_id", "embedding"), cents)
+  private[operators] def ivfAssigned(emb: DataFrame, cents: Array[Array[Float]]): DataFrame =
+    Ivf.assign(emb.select("vec_id", "embedding"), cents)
 
-  private[graft] def ivfAssigned(s: SparkSession, d: String): DataFrame =
-    ivfAssigned(s, d, ivfCents(s, d))
+  private[graft] def ivfAssigned(s: SparkSession, d: String): DataFrame = {
+    val emb = Tables.embeddings(s, d)
+    ivfAssigned(emb, ivfCents(emb))
+  }
 
   /** Driver query: IVF top-k for the fixed probe, nprobe of k cells. */
   def s04IvfAnn(s: SparkSession, d: String): DataFrame = {
-    val cents = ivfCents(s, d)
-    Ivf.topK(ivfAssigned(s, d, cents).filter(col("vec_id") =!= 0), cents,
-      probeVec(s, d), IvfNprobe, K)
+    val emb = Tables.embeddings(s, d)
+    val cents = ivfCents(emb)
+    Ivf.topK(ivfAssigned(emb, cents).filter(col("vec_id") =!= 0), cents,
+      probeVec(emb), IvfNprobe, K)
   }
 
   // ---------------------------------------------------------------- s06
@@ -511,8 +517,9 @@ object Similarity {
   private val KnnInternalK = 10
 
   def s10KnnGraph(s: SparkSession, d: String): DataFrame = {
-    val cents = ivfCents(s, d)
-    val assigned = ivfAssigned(s, d, cents) // vec_id, embedding, cell
+    val corpus = Tables.embeddings(s, d)
+    val cents = ivfCents(corpus)
+    val assigned = ivfAssigned(corpus, cents) // vec_id, embedding, cell
     val emb = assigned.select(col("vec_id"), col("embedding"))
     // per-vector cell ranking: k centroid rows broadcast against the
     // corpus, top nprobe cells per vector via the custom top-k node
@@ -851,8 +858,10 @@ object Similarity {
 
   /** The nprobe cell ids for the fixed probe — split out so the spec
     * can assert candidate containment against the same ranking. */
-  private[graft] def ivfPqProbedCells(s: SparkSession, d: String): Seq[Int] =
-    Ivf.probedCells(ivfCents(s, d), probeVec(s, d), IvfPqNprobe)
+  private[graft] def ivfPqProbedCells(s: SparkSession, d: String): Seq[Int] = {
+    val emb = Tables.embeddings(s, d)
+    Ivf.probedCells(ivfCents(emb), probeVec(emb), IvfPqNprobe)
+  }
 
   /** The ADC-scored coarse frame over the probed cells only — the
     * piece the plan spec audits for the cell-pruning filter. `serving`

@@ -38,6 +38,7 @@ import scala.jdk.CollectionConverters._
   */
 class TableCatalog(spark: SparkSession, val root: String) {
 
+  import CatalogCodec.Manifest
   import TableCatalog.{FileStat, LocalReadMaxBytes, LocalReadMaxFiles, LocalReadMaxRows, ReadRoute, TableMeta, WriteConflictException, WriteRoute}
 
   Files.createDirectories(Paths.get(root))
@@ -57,205 +58,26 @@ class TableCatalog(spark: SparkSession, val root: String) {
   private def manifestPath(name: String, v: Int): Path =
     tableDir(name).resolve(s"versions/v$v.json")
 
-  // -------------------------------------------------------------- JSON
-  private def esc(s: String): String = "\"" + s.flatMap {
-    case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-  } + "\""
-
   private def writeMeta(name: String, m: TableMeta): Unit = {
-    val defaults = m.defaults.map { case (k, v) =>
-      s"${esc(k)}: ${v match {
-        case s: String => esc(s)
-        case other     => other.toString
-      }}"
-    }.mkString("{", ",", "}")
-    val refs = m.references
-      .map { case (k, v) => s"${esc(k)}: ${esc(v)}" }.mkString("{", ",", "}")
-    // scalar/structural fields first, the user-keyed objects (defaults,
-    // references — whose KEYS are arbitrary column names) last: even a
-    // reader that scanned positionally could not be shadowed by a
-    // column literally named "version". The readers are additionally
-    // anchored to top-level keys (see topLevel), so order is defense
-    // in depth, not a correctness requirement.
-    val json =
-      s"""{"version": ${m.version},
-         |"schema": ${esc(m.schema.json)},
-         |"primaryKey": ${m.primaryKey.map(esc).getOrElse("null")},
-         |"notNull": [${m.notNull.map(esc).mkString(",")}],
-         |"unique": [${m.unique.map(esc).mkString(",")}],
-         |"indexes": [${m.indexes.map(esc).mkString(",")}],
-         |"defaults": $defaults,
-         |"references": $refs}""".stripMargin
     val tmp = tableDir(name).resolve("meta.json.tmp")
-    Files.writeString(tmp, json)
+    Files.write(tmp, CatalogCodec.metaBytes(m))
     Files.move(tmp, metaPath(name), StandardCopyOption.ATOMIC_MOVE,
       StandardCopyOption.REPLACE_EXISTING)
   }
 
-  /** Index just past the closing '"' of the JSON string starting at
-    * `i` (json(i) is the opening quote); backslash-escape aware. */
-  private def skipJsonString(json: String, i0: Int): Int = {
-    var i = i0 + 1
-    while (i < json.length && json(i) != '"') {
-      if (json(i) == '\\') i += 1
-      i += 1
-    }
-    math.min(i + 1, json.length)
-  }
-
-  /** Raw value substring of the TOP-LEVEL `"key":` entry — a depth-1,
-    * quote-aware scan. The defaults/references objects carry arbitrary
-    * COLUMN NAMES as keys, so a positional regex over the whole
-    * document could match a column literally named "version" (or
-    * "primaryKey", "schema", ...) inside them and corrupt the parsed
-    * metadata; anchoring to depth 1 makes that class of collision
-    * impossible. */
-  private def topLevel(json: String, key: String): Option[String] = {
-    val pat = "\"" + key + "\""
-    var i = 0
-    var depth = 0
-    while (i < json.length) {
-      json(i) match {
-        case '"' =>
-          val start = i
-          i = skipJsonString(json, i)
-          if (depth == 1 && i - start == pat.length
-              && json.regionMatches(start, pat, 0, pat.length)) {
-            var j = i
-            while (j < json.length && json(j).isWhitespace) j += 1
-            if (j < json.length && json(j) == ':') {
-              j += 1
-              while (j < json.length && json(j).isWhitespace) j += 1
-              if (j >= json.length) return None
-              val end = json(j) match {
-                case '"' => skipJsonString(json, j)
-                case '{' | '[' => skipJsonBalanced(json, j)
-                case _ =>
-                  var k = j
-                  while (k < json.length && json(k) != ',' && json(k) != '}'
-                    && json(k) != ']') k += 1
-                  k
-              }
-              return Some(json.substring(j, end).trim)
-            }
-          }
-        case '{' | '[' => depth += 1; i += 1
-        case '}' | ']' => depth -= 1; i += 1
-        case _ => i += 1
-      }
-    }
-    None
-  }
-
-  /** Index just past the bracket matching the '{'/'[' at `i0`,
-    * quote-aware. */
-  private def skipJsonBalanced(json: String, i0: Int): Int = {
-    var i = i0
-    var depth = 0
-    while (i < json.length) {
-      json(i) match {
-        case '"' => i = skipJsonString(json, i)
-        case '{' | '[' => depth += 1; i += 1
-        case '}' | ']' => depth -= 1; i += 1; if (depth == 0) return i
-        case _ => i += 1
-      }
-    }
-    i
-  }
-
-  // top-level JSON field readers (schema string, string arrays, int)
-  private def jsonStr(json: String, key: String): Option[String] =
-    topLevel(json, key).filter(_.startsWith("\""))
-      .map(v => unesc(v.substring(1, v.length - 1))) // the scanner, not a replace chain
-  /** Elements of the JSON string array under top-level `key`, properly
-    * unescaped — the escaped-string regex (not a naive comma split)
-    * keeps quotes/commas/backslashes in column names intact. */
-  private def jsonStrArr(json: String, key: String): Seq[String] =
-    topLevel(json, key).filter(_.startsWith("[")).toSeq.flatMap(body =>
-      "\"((?:[^\"\\\\]|\\\\.)*)\"".r.findAllMatchIn(body).map(g => unesc(g.group(1))))
-  private def jsonInt(json: String, key: String): Int =
-    topLevel(json, key).flatMap(_.toIntOption)
-      .getOrElse(sys.error(s"missing $key"))
-
-  /** Inverse of [[esc]]: a left-to-right scanner, NOT chained
-    * String.replace calls — replace("\\n",…) first would misread the
-    * tail of an escaped backslash (`a\\nb` → corrupted), and the
-    * \\uXXXX forms esc emits need decoding too. */
-  private def unesc(s: String): String = {
-    val out = new StringBuilder(s.length)
-    var i = 0
-    while (i < s.length) {
-      val c = s(i)
-      if (c == '\\' && i + 1 < s.length) {
-        s(i + 1) match {
-          case '"'  => out += '"'; i += 2
-          case '\\' => out += '\\'; i += 2
-          case 'n'  => out += '\n'; i += 2
-          case 'u' if i + 5 < s.length =>
-            out += Integer.parseInt(s.substring(i + 2, i + 6), 16).toChar; i += 6
-          case other => out += '\\'; out += other; i += 2
-        }
-      } else { out += c; i += 1 }
-    }
-    out.toString
-  }
-
-  /** The brace-balanced, quote-aware body of the JSON object under the
-    * TOP-LEVEL `key` (the regex-only readers can't see past a '}'
-    * inside a string default, and a non-anchored indexOf could land on
-    * a same-named key nested in another object). */
-  private def jsonObjBody(json: String, key: String): Option[String] =
-    topLevel(json, key).filter(_.startsWith("{"))
-      .map(v => v.substring(1, v.length - 1))
-
-  /** Inverse of [[writeMeta]]'s defaults serialization: string, long,
-    * double, and boolean literals round-trip. Declared defaults are
-    * durable DDL state — a catalog reopened over an existing root must
-    * apply them, not silently insert NULL. */
-  private def parseDefaults(body: String): Map[String, Any] = {
-    val entry = ("\"((?:[^\"\\\\]|\\\\.)*)\"\\s*:\\s*" +
-      "(\"(?:[^\"\\\\]|\\\\.)*\"|[-+0-9.eE]+|true|false)").r
-    entry.findAllMatchIn(body).map { m =>
-      val k = unesc(m.group(1))
-      val raw = m.group(2)
-      val v: Any =
-        if (raw.startsWith("\"")) unesc(raw.substring(1, raw.length - 1))
-        else if (raw == "true") true
-        else if (raw == "false") false
-        else if (raw.exists(c => c == '.' || c == 'e' || c == 'E')) raw.toDouble
-        else raw.toLong
-      k -> v
-    }.toMap
-  }
-
   def meta(name: String): TableMeta = {
     require(exists(name), s"no such table: $name")
-    val json = Files.readString(metaPath(name))
-    val refsBody = jsonObjBody(json, "references").getOrElse("")
-    val refs = "\"((?:[^\"\\\\]|\\\\.)*)\"\\s*:\\s*\"((?:[^\"\\\\]|\\\\.)*)\"".r
-      .findAllMatchIn(refsBody)
-      .map(m => unesc(m.group(1)) -> unesc(m.group(2))).toMap
-    TableMeta(
-      schema = DataTypeBridge.structFromJson(jsonStr(json, "schema").get),
-      primaryKey = jsonStr(json, "primaryKey"),
-      notNull = jsonStrArr(json, "notNull"),
-      unique = jsonStrArr(json, "unique"),
-      defaults = jsonObjBody(json, "defaults").map(parseDefaults).getOrElse(Map.empty),
-      references = refs,
-      version = jsonInt(json, "version"),
-      indexes = jsonStrArr(json, "indexes"))
+    CatalogCodec.readMeta(metaPath(name))
   }
 
   // --------------------------------------------------------------- DDL
   def exists(name: String): Boolean = Files.exists(metaPath(name))
 
   /** Declared defaults must survive the meta.json round-trip:
-    * parseDefaults reads back String/Boolean/Long/Double literals
-    * only, and writeMeta serializes anything else via raw toString —
-    * a Date default would write invalid JSON that permanently wedges
-    * meta(), and a NaN/Infinity double silently becomes NULL on
-    * reopen. Reject both AT DECLARATION, not at first read. */
+    * [[CatalogCodec]] reads back String/Boolean/Long/Double literals
+    * only — a Date default has no JSON literal, and a NaN/Infinity
+    * double would come back as a string. Reject both AT DECLARATION,
+    * not at first read. */
   private def validateDefaults(name: String, defaults: Map[String, Any]): Unit =
     defaults.foreach { case (k, v) =>
       v match {
@@ -349,9 +171,6 @@ class TableCatalog(spark: SparkSession, val root: String) {
     * silently overwriting the winner's manifest. */
   private def writeManifest(name: String, v: Int, dirs: Seq[String],
       stats: Seq[FileStat] = Nil): Unit = {
-    val statJson = stats.map(f =>
-      s"""{"path": ${esc(f.path)}, "column": ${esc(f.column)}, """ +
-        s""""mn": ${esc(f.min)}, "mx": ${esc(f.max)}}""").mkString("[", ",", "]")
     // per-dir row counts recorded AT PUBLISH (parquet footer metadata —
     // no Spark job; a dir already counted by this process is cached,
     // CoW dirs are immutable so the cache can never go stale). SHOW
@@ -362,16 +181,13 @@ class TableCatalog(spark: SparkSession, val root: String) {
     // would footer-scan every retained dir under the lock — an
     // O(table-files) critical section; with it, only THIS publish's
     // new dirs are scanned (one JSON read + O(new files)).
-    if (v > 0) readDirRows(name, v - 1).foreach { case (dr, n) =>
-      dirRowsCache.putIfAbsent(s"$name|$dr", n)
-    }
-    val rowsJson = dirs.map(dr => s"${esc(dr)}: ${dirRowCount(name, dr)}")
-      .mkString("{", ",", "}")
-    val body = s"""{"dirs": [${dirs.map(esc).mkString(",")}], """ +
-      s""""dirRows": $rowsJson, "stats": $statJson}"""
-    try Files.write(manifestPath(name, v),
-      body.getBytes(java.nio.charset.StandardCharsets.UTF_8),
-      java.nio.file.StandardOpenOption.CREATE_NEW)
+    if (v > 0 && Files.exists(manifestPath(name, v - 1)))
+      manifest(name, v - 1).dirRows.foreach { case (dr, n) =>
+        dirRowsCache.putIfAbsent(s"$name|$dr", n)
+      }
+    val body = CatalogCodec.manifestBytes(
+      Manifest(dirs, dirs.map(dr => dr -> dirRowCount(name, dr)).toMap, stats))
+    try Files.write(manifestPath(name, v), body, java.nio.file.StandardOpenOption.CREATE_NEW)
     catch {
       case _: java.nio.file.FileAlreadyExistsException =>
         throw new WriteConflictException(
@@ -438,30 +254,10 @@ class TableCatalog(spark: SparkSession, val root: String) {
     (total, bytes)
   }
 
-  /** Stored per-dir row counts from a manifest (empty for manifests
-    * written before counts were recorded — readers fall back to the
-    * footer scan). */
-  private def readDirRows(name: String, v: Int): Map[String, Long] = {
-    if (!Files.exists(manifestPath(name, v))) return Map.empty
-    val json = topLevel(Files.readString(manifestPath(name, v)), "dirRows")
-      .getOrElse(return Map.empty)
-    val entry = """"((?:[^"\\]|\\.)*)": (\d+)""".r
-    entry.findAllMatchIn(json).map(m => unesc(m.group(1)) -> m.group(2).toLong).toMap
-  }
-
-  private def readManifest(name: String, v: Int): Seq[String] = {
+  /** Version `v`'s manifest: its entries, row counts and zone maps in one read. */
+  private def manifest(name: String, v: Int): Manifest = {
     require(Files.exists(manifestPath(name, v)), s"no version $v of $name")
-    jsonStrArr(Files.readString(manifestPath(name, v)), "dirs")
-  }
-
-  private def readStats(name: String, v: Int): Seq[FileStat] = {
-    if (!Files.exists(manifestPath(name, v))) return Nil
-    val json = topLevel(Files.readString(manifestPath(name, v)), "stats").getOrElse("")
-    val entry = ("""\{"path": "((?:[^"\\]|\\.)*)", "column": "((?:[^"\\]|\\.)*)", """ +
-      """"mn": "((?:[^"\\]|\\.)*)", "mx": "((?:[^"\\]|\\.)*)"\}""").r
-    entry.findAllMatchIn(json).map(m =>
-      FileStat(unesc(m.group(1)), unesc(m.group(2)), unesc(m.group(3)), unesc(m.group(4))))
-      .toSeq
+    CatalogCodec.readManifest(manifestPath(name, v))
   }
 
   // ------------------------------------------------------ commit journal
@@ -525,20 +321,10 @@ class TableCatalog(spark: SparkSession, val root: String) {
     // skipping a GOOD checkpoint would fall back past it to history
     // its compaction already deleted, returning a wrong snapshot as
     // if it were right. Only successfully-READ-but-unparsable content
-    // is a torn claim. (Bytes decode with replacement, so a partial
-    // multi-byte write classifies as torn rather than throwing.)
-    val body = new String(Files.readAllBytes(p), java.nio.charset.StandardCharsets.UTF_8)
-    val tables = jsonObjBody(body, "tables").map { b =>
-      "\"((?:[^\"\\\\]|\\\\.)*)\"\\s*:\\s*(\\d+)".r.findAllMatchIn(b)
-        .map(m => unesc(m.group(1)) -> m.group(2).toInt).toMap
-    }.getOrElse(Map.empty[String, Int])
-    val dropped = jsonStrArr(body, "dropped")
-    if (tables.isEmpty && dropped.isEmpty) {
-      // every real commit names a table or a drop: an empty parse
-      // is a crashed writer's torn claim — skip it
-      System.err.println(s"[graft] skipping torn journal file $p")
-      None
-    } else Some((tables, dropped))
+    // is a torn claim.
+    val entry = CatalogCodec.readEntry(p)
+    if (entry.isEmpty) System.err.println(s"[graft] skipping torn journal file $p")
+    entry
   }
 
   /** The newest global commit version (0 = nothing ever published). */
@@ -555,10 +341,7 @@ class TableCatalog(spark: SparkSession, val root: String) {
   private def journalAppend(published: Map[String, Int],
       dropped: Seq[String] = Nil): Long = {
     Files.createDirectories(journalDir)
-    val tables = published.map { case (k, v) => s"${esc(k)}: $v" }.mkString("{", ",", "}")
-    val drops = dropped.map(esc).mkString("[", ",", "]")
-    val bytes = s"""{"tables": $tables, "dropped": $drops}"""
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    val bytes = CatalogCodec.entryBytes(published, dropped)
     val cache = TableCatalog.lastG(root)
     var g = math.max(cache.get(), journalVersions().maxOption.getOrElse(0L)) + 1
     var claimed = false
@@ -699,9 +482,7 @@ class TableCatalog(spark: SparkSession, val root: String) {
     }
     val m = foldJournal(foldTo)
     if (m.isEmpty) return gMax // nothing parseable below — nothing to fold
-    val tables = m.map { case (k, v) => s"${esc(k)}: $v" }.mkString("{", ",", "}")
-    val bytes = s"""{"tables": $tables, "dropped": []}"""
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    val bytes = CatalogCodec.entryBytes(m, Nil)
     // tmp + ATOMIC_MOVE REPLACE: healing a stale torn checkpoint never
     // has a window where the slot holds NO checkpoint (a delete-then-
     // recreate shape would let a racing compactor delete the freshly
@@ -723,11 +504,14 @@ class TableCatalog(spark: SparkSession, val root: String) {
   }
 
   // --------------------------------------------------------------- read
-  def currentVersion(name: String): Int = meta(name).version
+  /** The version pointer, read without parsing the schema. */
+  def currentVersion(name: String): Int = {
+    require(exists(name), s"no such table: $name")
+    CatalogCodec.readVersion(metaPath(name))
+  }
 
-  /** Scan the current snapshot. */
   /** Version history still on disk (DESCRIBE HISTORY, minimal form):
-    * one row per retained manifest — version, how many manifest
+    * one row per retained published manifest — version, how many manifest
     * entries its snapshot comprises (`n_dirs`: a data dir, or a single
     * file of one that a pruned copy-on-write DML left untouched while
     * rewriting its siblings), row count, and whether it is current.
@@ -736,7 +520,9 @@ class TableCatalog(spark: SparkSession, val root: String) {
     * recorded in each manifest at publish time (the Iceberg/Delta
     * manifest-statistics design), so no Spark job runs (spec-asserted).
     * Manifests from before counts were recorded fall back to a footer
-    * metadata scan of their dirs — still no Spark job. */
+    * metadata scan of their dirs — still no Spark job. A manifest above
+    * the version pointer is a writer's claim, not a version, and is
+    * not listed. */
   def history(name: String): DataFrame = {
     import spark.implicits._
     val cur = currentVersion(name)
@@ -746,11 +532,10 @@ class TableCatalog(spark: SparkSession, val root: String) {
         .map(_.getFileName.toString)
         .collect { case s if s.startsWith("v") && s.endsWith(".json") =>
           s.stripPrefix("v").stripSuffix(".json").toInt }
-        .toSeq.sorted
+        .filter(_ <= cur).toSeq.sorted
       finally listing.close()
     versions.map { v =>
-      val dirs = readManifest(name, v)
-      val stored = readDirRows(name, v)
+      val Manifest(dirs, stored, _) = manifest(name, v)
       val rows = dirs.map(dr => stored.getOrElse(dr, dirRowCount(name, dr))).sum
       (v, dirs.length, rows, v == cur)
     }.toDF("version", "n_dirs", "n_rows", "is_current")
@@ -766,9 +551,13 @@ class TableCatalog(spark: SparkSession, val root: String) {
     tableDir(name).toAbsolutePath.normalize
   private def resolveDirs(name: String, rels: Seq[String]): Seq[String] =
     rels.map(r => absTableDir(name).resolve(r).toString)
-  /** MVCC time travel: scan the table as of `version`. */
-  def asOf(name: String, version: Int): DataFrame =
-    frameOf(meta(name).schema, resolveDirs(name, readManifest(name, version)))
+  /** MVCC time travel: scan the table as of `version`, a published
+    * version (at most the pointer) that vacuum has not removed. */
+  def asOf(name: String, version: Int): DataFrame = {
+    val m = meta(name)
+    require(version <= m.version, s"no version $version of $name (current ${m.version})")
+    frameOf(m.schema, resolveDirs(name, manifest(name, version).dirs))
+  }
 
   /** Zone-map-pruned scan, the programmatic form of the reference's
     * IndexLookup optimizer pass (plan/mod.rs:42); the SQL front's
@@ -817,8 +606,10 @@ class TableCatalog(spark: SparkSession, val root: String) {
     planFilesAt(meta(name), name, version, filter)
 
   private def planFilesAt(m: TableMeta, name: String, version: Int,
-      filter: Column): (Seq[String], Seq[String]) =
-    pruneFiles(m, name, readManifest(name, version), readStats(name, version), Seq(filter))
+      filter: Column): (Seq[String], Seq[String]) = {
+    val Manifest(dirs, _, stats) = manifest(name, version)
+    pruneFiles(m, name, dirs, stats, Seq(filter))
+  }
 
   /** Bind one table of a SELECT at `version` (the SQL front's read
     * route, the analog of the reference's `KeyLookup`/`IndexLookup`
@@ -836,9 +627,9 @@ class TableCatalog(spark: SparkSession, val root: String) {
     * Returns the frame and the route taken. */
   private[graft] def bindRead(m: TableMeta, name: String, version: Int,
       prune: Option[Column]): (DataFrame, ReadRoute) = {
-    val entries = readManifest(name, version)
+    val Manifest(entries, _, stats) = manifest(name, version)
     val (kept0, all0) = prune match {
-      case Some(f) => planFilesAt(m, name, version, f)
+      case Some(f) => pruneFiles(m, name, entries, stats, Seq(f))
       case None    => (entries, entries)
     }
     val (kept, all) = (kept0.flatMap(expandEntry(name, _)), all0.flatMap(expandEntry(name, _)))
@@ -1303,14 +1094,6 @@ class TableCatalog(spark: SparkSession, val root: String) {
       .filter(f => f.isDirectory && new java.io.File(f, "meta.json").exists())
       .map(_.getName)
 
-  /** Version pointer alone, without the full TableMeta parse — BEGIN
-    * pins every table's version, and paying a schema-JSON parse per
-    * table per BEGIN would make txn startup O(catalog metadata). */
-  private[graft] def quickVersion(name: String): Int = {
-    require(exists(name), s"no such table: $name")
-    jsonInt(Files.readString(metaPath(name)), "version")
-  }
-
   /** (table -> current version) for every table — the consistent
     * snapshot a txn or READ ONLY session pins at BEGIN. Under
     * rootLock: commits move multiple pointers while holding it, so an
@@ -1318,26 +1101,16 @@ class TableCatalog(spark: SparkSession, val root: String) {
     * snapshot whose FK-linked tables disagree), or crash on a table
     * dropped between the listing and the version read. */
   private[graft] def pinVersions(): Map[String, Int] = rootLock.synchronized {
-    listTables().map(n => n -> quickVersion(n)).toMap
+    listTables().map(n => n -> currentVersion(n)).toMap
   }
 
-  /** References map alone, without the full TableMeta parse — the
-    * reverse-FK scan below runs over EVERY table per DML statement
-    * (RESTRICT checks, then the commit's re-check under the lock), and
-    * the schema-JSON parse is the expensive part of meta(). */
-  private def quickReferences(name: String): Map[String, String] = {
-    val json = Files.readString(metaPath(name))
-    val body = jsonObjBody(json, "references").getOrElse("")
-    "\"((?:[^\"\\\\]|\\\\.)*)\"\\s*:\\s*\"((?:[^\"\\\\]|\\\\.)*)\"".r
-      .findAllMatchIn(body)
-      .map(m => unesc(m.group(1)) -> unesc(m.group(2))).toMap
-  }
-
-  /** Tables whose FKs reference `name` (reverse FK index; version-field
-    * style reads — no schema parse). */
+  /** Tables whose FKs reference `name` (reverse FK index). It runs
+    * over EVERY table per DML statement (RESTRICT checks, then the
+    * commit's re-check under the lock), so it reads each `references`
+    * map without parsing the schema. */
   private def referencingTables(name: String): Seq[(String, String)] =
-    listTables().filter(_ != name)
-      .flatMap(t => quickReferences(t).collect { case (c, `name`) => (t, c) })
+    listTables().filter(_ != name).flatMap(t =>
+      CatalogCodec.readReferences(metaPath(t)).collect { case (c, `name`) => (t, c) })
 
   private def applyDefaults(name: String, m: TableMeta, df: DataFrame): DataFrame = {
     val out = m.schema.fields.foldLeft(df) { (acc, f) =>
@@ -1397,7 +1170,7 @@ class TableCatalog(spark: SparkSession, val root: String) {
     // catalog can't be version-fingerprinted here, and don't need to
     // be: the staging catalog is single-writer by construction
     (related - name).iterator.filter(exists)
-      .map(t => t -> quickVersion(t).toLong).toMap +
+      .map(t => t -> currentVersion(t).toLong).toMap +
       (name -> m.version.toLong) +
       ("//ddl-epoch" -> TableCatalog.ddlEpoch(root).get())
   }
@@ -1451,7 +1224,7 @@ class TableCatalog(spark: SparkSession, val root: String) {
       val age =
         try System.currentTimeMillis - Files.getLastModifiedTime(p).toMillis
         catch { case _: java.io.IOException => Long.MaxValue } // gone = free
-      quickVersion(name) == base && age >= StaleClaimMs && {
+      currentVersion(name) == base && age >= StaleClaimMs && {
         Files.deleteIfExists(p)
         tryClaim() // may still lose to a cross-process re-claim
       }
@@ -1468,7 +1241,7 @@ class TableCatalog(spark: SparkSession, val root: String) {
     * alone — one still ours becomes a stale orphan the reclaim path
     * self-heals later. */
   private def movePointers(claims: Seq[(String, TableMeta)]): Boolean =
-    claims.forall { case (name, m) => quickVersion(name) == m.version } && {
+    claims.forall { case (name, m) => currentVersion(name) == m.version } && {
       try {
         claims.foreach { case (name, m) => writeMeta(name, m.copy(version = m.version + 1)) }
         true
@@ -1476,7 +1249,7 @@ class TableCatalog(spark: SparkSession, val root: String) {
         // un-claim so a failed pointer move cannot wedge a table — but
         // only while its pointer still says the claim is ours
         claims.foreach { case (name, m) =>
-          if (quickVersion(name) == m.version)
+          if (currentVersion(name) == m.version)
             Files.deleteIfExists(manifestPath(name, m.version + 1))
         }
         throw e
@@ -1624,8 +1397,8 @@ class TableCatalog(spark: SparkSession, val root: String) {
       val m2 = m.copy(
         schema = StructType(m.schema.fields :+ field),
         defaults = default.map(v => m.defaults + (field.name -> v)).getOrElse(m.defaults))
-      if (!claimPublish(name, m2,
-          readManifest(name, m.version), readStats(name, m.version)))
+      val cur = manifest(name, m.version)
+      if (!claimPublish(name, m2, cur.dirs, cur.stats))
         throw new WriteConflictException(s"ALTER TABLE $name: lost the publish race")
       m.version + 1
     }
@@ -1650,8 +1423,8 @@ class TableCatalog(spark: SparkSession, val root: String) {
         defaults = m.defaults - f.name,
         references = m.references - f.name,
         indexes = m.indexes.filterNot(_ == f.name))
-      if (!claimPublish(name, m2, readManifest(name, m.version),
-          readStats(name, m.version).filterNot(_.column == f.name)))
+      val cur = manifest(name, m.version)
+      if (!claimPublish(name, m2, cur.dirs, cur.stats.filterNot(_.column == f.name)))
         throw new WriteConflictException(s"ALTER TABLE $name: lost the publish race")
       m.version + 1
     }
@@ -2029,8 +1802,8 @@ class TableCatalog(spark: SparkSession, val root: String) {
         s"CREATE INDEX $name: ${f.name} is already indexed")
       require(indexable(f.dataType),
         s"CREATE INDEX $name.${f.name}: unorderable type ${f.dataType}")
-      if (!claimPublish(name, m.copy(indexes = m.indexes :+ f.name),
-          readManifest(name, m.version), readStats(name, m.version)))
+      val cur = manifest(name, m.version)
+      if (!claimPublish(name, m.copy(indexes = m.indexes :+ f.name), cur.dirs, cur.stats))
         throw new WriteConflictException(s"CREATE INDEX $name: lost the publish race")
     }
     // The metadata version above is already PUBLISHED (the index is
@@ -2085,7 +1858,7 @@ class TableCatalog(spark: SparkSession, val root: String) {
       // dir itself, or one of its files listed singly
       val live = liveDirs(name, retained.toSeq
         .filter(v => Files.exists(manifestPath(name, v)))
-        .flatMap(v => readManifest(name, v)))
+        .flatMap(v => manifest(name, v).dirs))
       var removed = 0
       (0 until cutoff).filterNot(retained.contains).foreach { v =>
         if (Files.deleteIfExists(manifestPath(name, v))) removed += 1
@@ -2143,10 +1916,9 @@ class TableCatalog(spark: SparkSession, val root: String) {
       }
       try validate(m, name, restored.cache())
       finally restored.unpersist()
-      val dirs = readManifest(name, version)
-      val stats = readStats(name, version)
+      val old = manifest(name, version)
       val ok = rootLock.synchronized {
-        fkFingerprint(name, meta(name)) == fp && claimPublish(name, m, dirs, stats)
+        fkFingerprint(name, meta(name)) == fp && claimPublish(name, m, old.dirs, old.stats)
       }
       if (ok) Some(m.version + 1) else None
     }
@@ -2171,8 +1943,7 @@ class TableCatalog(spark: SparkSession, val root: String) {
     val m = meta(src)
     Files.createDirectories(tableDir(dst).resolve("versions"))
     Files.createDirectories(tableDir(dst).resolve("data"))
-    val dirs = readManifest(src, m.version)
-    val stats = readStats(src, m.version)
+    val Manifest(dirs, _, stats) = manifest(src, m.version)
     def link(f: Path, t: Path): Unit =
       try Files.createLink(t, f)
       catch {
@@ -2210,9 +1981,9 @@ class TableCatalog(spark: SparkSession, val root: String) {
     val m = meta(name)
     require(m.indexes.exists(_.equalsIgnoreCase(colName)),
       s"DROP INDEX $name: $colName is not indexed")
+    val cur = manifest(name, m.version)
     if (!claimPublish(name,
-        m.copy(indexes = m.indexes.filterNot(_.equalsIgnoreCase(colName))),
-        readManifest(name, m.version), readStats(name, m.version)))
+        m.copy(indexes = m.indexes.filterNot(_.equalsIgnoreCase(colName))), cur.dirs, cur.stats))
       throw new WriteConflictException(s"DROP INDEX $name: lost the publish race")
     m.version + 1
   }
@@ -2413,12 +2184,14 @@ class TableCatalog(spark: SparkSession, val root: String) {
     // any process's vacuum reads (heartbeat-refreshed mtime; a pin
     // whose writer died goes stale and stops counting). Best-effort IO
     // — a pin write failure must not fail BEGIN (the in-process set
-    // still protects same-JVM vacuums, the common case).
+    // still protects same-JVM vacuums, the common case). Written by
+    // tmp + atomic move: a vacuum never reads a half-written pin.
     private val pinPath: Path = Paths.get(root, "pins", s"txn-$txnId.json")
     try {
       Files.createDirectories(pinPath.getParent)
-      val body = snapshot.map { case (t, v) => s"${esc(t)}: $v" }.mkString("{", ",", "}")
-      Files.writeString(pinPath, s"""{"tables": $body}""")
+      val tmp = pinPath.resolveSibling(s".txn-$txnId.tmp")
+      Files.write(tmp, CatalogCodec.pinBytes(snapshot))
+      Files.move(tmp, pinPath, StandardCopyOption.ATOMIC_MOVE)
     } catch { case _: java.io.IOException => () }
 
     /** Refresh the pin's liveness stamp — called from every txn
@@ -2580,7 +2353,7 @@ class TableCatalog(spark: SparkSession, val root: String) {
         case Some((_, dirs)) =>
           frameOf(pinnedMetaOf(name).schema, resolveDirs(name, dirs))
         case None => frameOf(pinnedMetaOf(name).schema,
-          resolveDirs(name, readManifest(name, snapshotVersion(name))))
+          resolveDirs(name, pinnedManifest(name).dirs))
       }
     }
 
@@ -2596,15 +2369,16 @@ class TableCatalog(spark: SparkSession, val root: String) {
     private def baseOf(name: String): Int =
       staged.get(name).map(_._1).getOrElse(snapshotVersion(name))
 
+    private def pinnedManifest(name: String): Manifest = manifest(name, snapshotVersion(name))
+
     private def viewDirs(name: String): Seq[String] =
-      staged.get(name).map(_._2)
-        .getOrElse(readManifest(name, snapshotVersion(name)))
+      staged.get(name).map(_._2).getOrElse(pinnedManifest(name).dirs)
 
     /** Zone maps of the txn view's entries: the pinned manifest's for
       * the entries the view keeps, and those collected for this txn's
       * own dirs — what [[publish]] writes into the next manifest. */
-    private def viewStats(name: String, entries: Seq[String]): Seq[FileStat] =
-      statsFor(entries, readStats(name, snapshotVersion(name)) ++ dirStats.values.flatten)
+    private def viewStats(entries: Seq[String], pinned: Manifest): Seq[FileStat] =
+      statsFor(entries, pinned.stats ++ dirStats.values.flatten)
 
     /** The txn view of `name` split for a statement whose rows each
       * satisfy one of `filters`: (entries it leaves as they are, files
@@ -2615,8 +2389,9 @@ class TableCatalog(spark: SparkSession, val root: String) {
       * skipped file holds no row on which any filter is TRUE. */
     private def candidates(name: String, m: TableMeta,
         filters: Column*): (Seq[String], Seq[String]) = {
-      val entries = viewDirs(name)
-      val (kept, all) = pruneFiles(m, name, entries, viewStats(name, entries), filters)
+      val pinned = pinnedManifest(name)
+      val entries = staged.get(name).map(_._2).getOrElse(pinned.dirs)
+      val (kept, all) = pruneFiles(m, name, entries, viewStats(entries, pinned), filters)
       val rewrite = kept.toSet
       val untouched = entries.flatMap { e =>
         val files = all.filter(f => f == e || f.startsWith(e + "/"))
@@ -2993,7 +2768,8 @@ class TableCatalog(spark: SparkSession, val root: String) {
           // index stats: the pinned manifest's for the entries the new
           // version keeps (its version is m.version — checked above)
           // plus those collected for this txn's own dirs
-          conflictUnless(claimVersion(name, m.version, dirs, viewStats(name, dirs)),
+          conflictUnless(claimVersion(name, m.version, dirs,
+              viewStats(dirs, pinnedManifest(name))),
             s"write-write conflict on $name: version ${m.version + 1} claimed by another writer")
           claims += (name -> m)
         }
@@ -3029,7 +2805,7 @@ class TableCatalog(spark: SparkSession, val root: String) {
       // becomes visible at one global version — the multi-table
       // atomicity the reference gets from its Raft log
       val published = claims.map { case (name, m) => name -> (m.version + 1) }.toMap ++
-        createdTables.map(n => n -> TableCatalog.this.quickVersion(n)).toMap
+        createdTables.map(n => n -> TableCatalog.this.currentVersion(n)).toMap
       journalRecord(published, droppedTables.toSeq)
       // published DDL moves the epoch in-flight commits and
       // fingerprints check, exactly like direct createTable/dropTable
@@ -3095,13 +2871,13 @@ class TableCatalog(spark: SparkSession, val root: String) {
     }
   }
 
-  /** Versions of `name` pinned by ANY process's open transactions. */
+  /** Versions of `name` pinned by ANY process's open transactions. A
+    * pin deleted since the listing is a txn that closed; one that does
+    * not parse raises (see [[CatalogCodec]]). */
   private def pinnedByPinFiles(name: String): Set[Int] =
-    freshPins().flatMap { p =>
-      val json = try Files.readString(p) catch { case _: java.io.IOException => "" }
-      jsonObjBody(json, "tables").toSeq.flatMap(body =>
-        "\"((?:[^\"\\\\]|\\\\.)*)\"\\s*:\\s*(\\d+)".r.findAllMatchIn(body)
-          .collect { case m if unesc(m.group(1)) == name => m.group(2).toInt })
+    freshPins().filter(p => TableCatalog.PinFile.matches(p.getFileName.toString)).flatMap { p =>
+      try CatalogCodec.readPin(p).get(name)
+      catch { case _: java.nio.file.NoSuchFileException => None }
     }.toSet
 
   private def pinnedByOpenTxns(name: String): Set[Int] =
@@ -3336,10 +3112,4 @@ object TableCatalog {
     * immutable parquet (values stored as strings, compared under the
     * column's declared type). */
   case class FileStat(path: String, column: String, min: String, max: String)
-}
-
-/** StructType JSON round-trip without exposing private Spark API. */
-private[sources] object DataTypeBridge {
-  def structFromJson(json: String): StructType =
-    org.apache.spark.sql.types.DataType.fromJson(json).asInstanceOf[StructType]
 }

@@ -1146,6 +1146,9 @@ class CatalogSpec extends AnyFunSuite {
     java.nio.file.Files.writeString(claim, """{"dirs": [], "stats": []}""")
     java.nio.file.Files.setLastModifiedTime(claim,
       java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis - 120000L))
+    // a claim above the version pointer is not a version
+    assert(cat.history("t").collect().map(_.getInt(0)).toSeq.sorted == Seq(0, 1))
+    intercept[IllegalArgumentException](cat.asOf("t", 2))
     // the next write reclaims the orphan and publishes normally
     cat.insert("t", Seq((2L, "b", 0.0)).toDF("id", "name", "balance"))
     assert(cat.currentVersion("t") == 2)
