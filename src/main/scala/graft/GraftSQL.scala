@@ -66,6 +66,10 @@ class GraftSQL(spark: SparkSession, val catalog: TableCatalog) {
   private[graft] var lastRoutes: Map[String, GraftSQL.Route] = Map.empty
   private[graft] var localReads: Long = 0L
   private[graft] var sparkReads: Long = 0L
+  // this session's SELECT statements per route: "driver" when the plan
+  // folded to one LocalTableScanExec, whose collect runs no Spark job
+  private[graft] var driverSelects: Long = 0L
+  private[graft] var sparkSelects: Long = 0L
   // this session's INSERT/MERGE statements per check route, and the
   // write route lines of the statement EXPLAIN ANALYZE last ran
   private[graft] var driverWrites: Long = 0L
@@ -503,7 +507,13 @@ class GraftSQL(spark: SparkSession, val catalog: TableCatalog) {
           "default", "references")
 
       case _ if up.startsWith("SELECT") || up.startsWith("WITH") =>
-        runSelect(s)
+        val df = runSelect(s)
+        // planned here once: the caller's action reuses this plan
+        df.queryExecution.executedPlan match {
+          case _: org.apache.spark.sql.execution.LocalTableScanExec => driverSelects += 1
+          case _ => sparkSelects += 1
+        }
+        df
 
       case other =>
         throw new IllegalArgumentException(s"unsupported statement: $other")

@@ -32,6 +32,10 @@ object GraftSession {
       // set on the context, so every session of it inherits the key,
       // newSession() included, and no operator sets it per call
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // plans over LocalRelations fold through plans.FoldLocalRelations,
+      // interpreted; Spark's own rule compiles each filter it folds
+      .config("spark.sql.optimizer.excludedRules",
+        org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation.ruleName)
 
   def create(master: String = "local[32]"): SparkSession = {
     val spark = builder(master).getOrCreate()
@@ -56,6 +60,15 @@ object GraftSession {
     if (!spark.experimental.extraStrategies.contains(plans.TopKPerGroupStrategy))
       spark.experimental.extraStrategies =
         spark.experimental.extraStrategies :+ plans.TopKPerGroupStrategy
+    // the driver fold, by the same post-hoc route (a builder session
+    // has it from its extensions). Such a session keeps Spark's
+    // ConvertToLocalRelation, which folds filters first, compiled; this
+    // rule then folds the joins, with the same rows either way
+    if (!spark.sessionState.optimizer.extendedOperatorOptimizationRules
+        .contains(plans.FoldLocalRelations) &&
+        !spark.experimental.extraOptimizations.contains(plans.FoldLocalRelations))
+      spark.experimental.extraOptimizations =
+        spark.experimental.extraOptimizations :+ plans.FoldLocalRelations
     spark
   }
 

@@ -99,6 +99,7 @@ object Shell {
           // SELECT table bindings per read route (GraftSQL.bindRead's
           // guard), INSERT/MERGE statements per check route
           out.println(s"Reads:    ${g.localReads} local, ${g.sparkReads} spark")
+          out.println(s"Statements: ${g.driverSelects} driver, ${g.sparkSelects} spark")
           out.println(s"Writes:   ${g.driverWrites} driver-checked, ${g.sparkWrites} spark-checked")
         case ("!table", Seq(name)) => render(g.execute(s"SHOW CREATE TABLE $name"))
         case ("!tables", _) => g.visibleTables.foreach(out.println)

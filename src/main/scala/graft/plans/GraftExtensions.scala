@@ -22,6 +22,7 @@ import org.apache.spark.sql.types.{DoubleType, FloatType}
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectOptimizerRule(_ => FoldSelfCosine)
+    e.injectOptimizerRule(_ => FoldLocalRelations)
     e.injectPlannerStrategy(_ => TopKPerGroupStrategy)
     // function registration happens per-session via Registry (the
     // injectFunction hook needs ExpressionInfo plumbing; Registry

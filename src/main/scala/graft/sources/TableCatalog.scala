@@ -621,8 +621,9 @@ class TableCatalog(spark: SparkSession, val root: String) {
     *    rows, [[LocalReadMaxBytes]] uncompressed bytes and
     *    [[LocalReadMaxFiles]] files, and Spark's vectorized parquet
     *    reader handles the schema. The files are decoded on the calling
-    *    thread ([[readLocal]]) into a `LocalRelation`, which Catalyst
-    *    folds Filter/Project/Limit into and collects with no Spark job;
+    *    thread ([[readLocal]]) into a `LocalRelation`, which
+    *    [[graft.plans.FoldLocalRelations]] folds Filter/Project/Limit and
+    *    equi-joins into and which collects with no Spark job;
     *  - spark: otherwise the frame scans the kept files, as before.
     * Returns the frame and the route taken. */
   private[graft] def bindRead(m: TableMeta, name: String, version: Int,
@@ -3065,8 +3066,8 @@ object TableCatalog {
     * uncompressed row-group bytes bounds the memory of wide rows that
     * the row count alone would admit; each file costs this thread one
     * more open and footer parse. Above any cap the files go to Spark. */
-  private[sources] val LocalReadMaxRows: Long = 1L << 16
-  private[sources] val LocalReadMaxBytes: Long = 16L << 20
+  private[graft] val LocalReadMaxRows: Long = 1L << 16
+  private[graft] val LocalReadMaxBytes: Long = 16L << 20
   private[sources] val LocalReadMaxFiles: Int = 64
 
   /** How [[TableCatalog.bindRead]] bound one table: `kept` of `all`

@@ -45,8 +45,6 @@ object StreamQueries {
       else None
     s.conf.set(key, n.toString)
     ckptRoot.foreach(d => s.conf.set(ckptKey, d.toString))
-    sys.env.get("SPARK_GRAFT_STATE_PROVIDER").foreach(v =>
-      s.conf.set("spark.sql.streaming.stateStore.providerClass", v)) // A/B knob
     // bounded inputs need no wall-clock no-data batches: every
     // watermark advance that matters is driven by a DATA batch (st02's
     // sentinel chunks exist precisely for this), so the extra empty

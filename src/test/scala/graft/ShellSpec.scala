@@ -200,4 +200,24 @@ class ShellSpec extends AnyFunSuite {
       .findFirstMatchIn(out).getOrElse(fail(s"no Storage line in:\n$out"))
     assert(storage.group(1).matches("\\d+\\.\\d{3}") && storage.group(1).toDouble > 0, out)
   }
+
+  test("!status counts SELECTs by route: a one-key join of two small tables runs on the driver") {
+    val join = "SELECT o.id, o.day, l.n, l.price FROM o JOIN l ON o.id = l.oid " +
+      "WHERE o.id = 2 AND l.oid = 2"
+    val out = stripPrompts(script(
+      "CREATE TABLE o (id INTEGER PRIMARY KEY, day STRING);",
+      "CREATE TABLE l (oid INTEGER, n INTEGER, price FLOAT);",
+      "INSERT INTO o VALUES (1, 'mon'), (2, 'tue'), (3, 'wed');",
+      "INSERT INTO l VALUES (1, 1, 1.5), (2, 1, 2.5), (2, 2, 3.5), (3, 1, 4.5);",
+      s"$join;",                          // driver: folds to one local scan
+      "SELECT count(*) AS c FROM l;",      // spark: an aggregate is not folded
+      s"EXPLAIN $join;",
+      "!status"))
+    assert(out.contains("2|tue|1|2.5") && out.contains("2|tue|2|3.5"), out)
+    val statements = raw"Statements:\s+(\d+) driver, (\d+) spark".r
+      .findFirstMatchIn(out).getOrElse(fail(s"no Statements line in:\n$out"))
+    assert((statements.group(1).toInt, statements.group(2).toInt) == ((1, 1)), out)
+    val plan = out.substring(out.indexOf("== Physical Plan =="))
+    assert(plan.contains("LocalTableScan") && !plan.contains("Join"), plan)
+  }
 }
