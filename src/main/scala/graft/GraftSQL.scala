@@ -59,7 +59,8 @@ class GraftSQL(spark: SparkSession, val catalog: TableCatalog) {
     * client's !tables — entanglesql.rs:165-170). */
   def visibleTables: Seq[String] = tableNames
 
-  // views the last SELECT registered (observable registration scope)
+  // catalog tables the last SELECT bound into its plan (observable
+  // binding scope: never the whole catalog)
   private[graft] var lastRegistered: Seq[String] = Nil
   // the read route each table of the last SELECT took (EXPLAIN prints
   // one line per table), and this session's bindings per route
@@ -108,25 +109,23 @@ class GraftSQL(spark: SparkSession, val catalog: TableCatalog) {
         vs.getOrElse(name, sys.error(s"no such table in snapshot: $name")))))
       .getOrElse(catalog.scan(name))
 
-  /** Bind the session's snapshot views for every table / session view
-    * referenced anywhere in `stmt` — notably inside the IN / EXISTS /
-    * scalar subqueries of a DML WHERE or SET expression — for the
-    * duration of `body`. The predicate Column a DML statement carries
-    * is analyzed lazily INSIDE the catalog call (where it is bound to
-    * the target frame); a subquery in it holds UnresolvedRelations
-    * that resolve against the temp-view namespace at that moment, so
-    * the views must be registered around the catalog call, against the
-    * same snapshot a SELECT would see (txn staging / READ ONLY pins /
-    * session views included). The target table itself is bound by the
-    * catalog directly — a subquery naming the target reads the
+  /** The session's snapshot frame for every table / session view
+    * referenced anywhere in `stmt`, for the IN / EXISTS / scalar
+    * subqueries of a DML WHERE, SET or ON expression
+    * ([[referenceExpr]] binds them into each subquery's plan). Built
+    * on first use, once per statement, so every subquery of it reads
+    * one snapshot: the one a SELECT would see (txn staging / READ ONLY
+    * pins / session views included). The target table itself is bound
+    * by the catalog directly — a subquery naming the target reads the
     * pre-statement snapshot, standard SQL's statement-snapshot rule. */
-  private def withStatementBindings[A](stmt: String)(body: => A): A = {
-    val masked = GraftSQL.maskStrings(stmt)
-    val tableBindings = tableNames.filter(GraftSQL.referencedIn(masked, _))
-      .map(n => n -> currentScan(n))
-    val viewBindings = viewDefs.keys.toSeq.filter(GraftSQL.referencedIn(masked, _))
-      .map(n => n -> runSelect(viewDefs(n), Set(n)))
-    GraftSession.withTempViews(spark, tableBindings ++ viewBindings)(body)
+  private def withStatementBindings(stmt: String): () => Seq[(String, DataFrame)] = {
+    lazy val bindings = {
+      val masked = GraftSQL.maskStrings(stmt)
+      tableNames.filter(GraftSQL.referencedIn(masked, _)).map(n => n -> currentScan(n)) ++
+        viewDefs.keys.toSeq.filter(GraftSQL.referencedIn(masked, _))
+          .map(n => n -> runSelect(viewDefs(n), Set(n)))
+    }
+    () => bindings
   }
 
   /** Execute one SQL statement; returns a (possibly empty) DataFrame —
@@ -198,25 +197,23 @@ class GraftSQL(spark: SparkSession, val catalog: TableCatalog) {
               colList, name, "INSERT")))
         case mergeUsingRe(name, tAlias, rest) =>
           val (src, ta, sa, cond, matched, ins, bySrc) =
-            parseMergeUsing(name, tAlias, rest)
-          Some(withStatementBindings(inner)(txn match {
+            parseMergeUsing(name, tAlias, rest, withStatementBindings(inner))
+          Some(txn match {
             case Some(t) =>
               t.explainMergeUsing(name, src, ta, sa, cond, matched, ins, bySrc)
             case None =>
               catalog.explainMergeUsing(name, src, ta, sa, cond, matched, ins, bySrc)
-          }))
+          })
         case mergeRe(name, colList, valuesBody) =>
           Some(exMerge(name,
             alignCols(referenceSql(s"SELECT * FROM VALUES $valuesBody"),
               colList, name, "MERGE")))
         case updateRe(name, body) =>
-          val (sets, where) = parseUpdateBody(body)
-          // bindings wrap the CONSTRUCTOR: the would-be-written frame is
-          // analyzed eagerly, so a WHERE subquery resolves here too
-          Some(withStatementBindings(inner)(exUpdate(name, sets, where)))
+          val (sets, where) = parseUpdateBody(body, withStatementBindings(inner))
+          Some(exUpdate(name, sets, where))
         case deleteRe(name, whereBody) =>
-          Some(withStatementBindings(inner)(exDelete(name,
-            Option(whereBody).map(w => referenceExpr(w.trim)).getOrElse(lit(true)))))
+          Some(exDelete(name, Option(whereBody)
+            .map(w => referenceExpr(w.trim, withStatementBindings(inner))).getOrElse(lit(true))))
         case _ => None
       }
       return dmlFrame match {
@@ -430,20 +427,18 @@ class GraftSQL(spark: SparkSession, val catalog: TableCatalog) {
 
       case mergeUsingRe(name, tAlias, rest) =>
         require(!readOnly, "read-only transaction")
-        val (src, ta, sa, cond, matched, ins, bySrc) =
-          parseMergeUsing(name, tAlias, rest)
         // ON / WHEN ... AND conditions and SET/INSERT values may carry
         // subqueries — bound like UPDATE/DELETE predicates (the source
         // relation itself was already resolved at parse time)
-        withStatementBindings(s) {
-          txn match {
-            case Some(t) =>
-              t.mergeUsing(name, src, ta, sa, cond, matched, ins, bySrc)
-              Seq(s"MERGE INTO $name (staged)").toDF("status")
-            case None =>
-              val v = catalog.mergeUsing(name, src, ta, sa, cond, matched, ins, bySrc)
-              Seq(s"MERGE INTO $name -> v$v").toDF("status")
-          }
+        val (src, ta, sa, cond, matched, ins, bySrc) =
+          parseMergeUsing(name, tAlias, rest, withStatementBindings(s))
+        txn match {
+          case Some(t) =>
+            t.mergeUsing(name, src, ta, sa, cond, matched, ins, bySrc)
+            Seq(s"MERGE INTO $name (staged)").toDF("status")
+          case None =>
+            val v = catalog.mergeUsing(name, src, ta, sa, cond, matched, ins, bySrc)
+            Seq(s"MERGE INTO $name -> v$v").toDF("status")
         }
 
       case mergeRe(name, colList, valuesBody) =>
@@ -459,23 +454,20 @@ class GraftSQL(spark: SparkSession, val catalog: TableCatalog) {
 
       case updateRe(name, body) =>
         require(!readOnly, "read-only transaction")
-        val (sets, where) = parseUpdateBody(body)
-        withStatementBindings(s) {
-          txn match {
-            case Some(t) => t.update(name, sets, where)
-            case None    => catalog.update(name, sets, where)
-          }
+        val (sets, where) = parseUpdateBody(body, withStatementBindings(s))
+        txn match {
+          case Some(t) => t.update(name, sets, where)
+          case None    => catalog.update(name, sets, where)
         }
         Seq(s"UPDATE $name").toDF("status")
 
       case deleteRe(name, whereBody) =>
         require(!readOnly, "read-only transaction")
-        val where = Option(whereBody).map(w => referenceExpr(w.trim)).getOrElse(lit(true))
-        withStatementBindings(s) {
-          txn match {
-            case Some(t) => t.delete(name, where)
-            case None    => catalog.delete(name, where)
-          }
+        val where = Option(whereBody)
+          .map(w => referenceExpr(w.trim, withStatementBindings(s))).getOrElse(lit(true))
+        txn match {
+          case Some(t) => t.delete(name, where)
+          case None    => catalog.delete(name, where)
         }
         Seq(s"DELETE $name").toDF("status")
 
@@ -603,15 +595,16 @@ class GraftSQL(spark: SparkSession, val catalog: TableCatalog) {
 
   /** UPDATE's `SET ... [WHERE ...]` body → (set map, where) — ONE
     * parse shared by the executing path and EXPLAIN UPDATE. */
-  private def parseUpdateBody(body: String): (Map[String, Column], Column) = {
+  private def parseUpdateBody(body: String, bindings: () => Seq[(String, DataFrame)])
+      : (Map[String, Column], Column) = {
     val (setBody, whereBody) = GraftSQL.splitAtTopLevelWhere(body)
     val pairs = splitTopLevel(setBody, ',').map { a =>
       val Array(k, v) = a.split("=", 2)
-      k.trim -> referenceExpr(v.trim)
+      k.trim -> referenceExpr(v.trim, bindings)
     }
     requireDistinctCols(pairs.map(_._1), "UPDATE SET")
     val sets = pairs.toMap
-    val where = whereBody.map(w => referenceExpr(w.trim)).getOrElse(lit(true))
+    val where = whereBody.map(w => referenceExpr(w.trim, bindings)).getOrElse(lit(true))
     (sets, where)
   }
 
@@ -635,7 +628,8 @@ class GraftSQL(spark: SparkSession, val catalog: TableCatalog) {
     * mid-statement), and it is deliberate: re-resolving the source per
     * retry would make a lost race silently change WHICH rows the
     * statement merges. */
-  private def parseMergeUsing(name: String, tAlias0: String, rest: String)
+  private def parseMergeUsing(name: String, tAlias0: String, rest: String,
+      bindings: () => Seq[(String, DataFrame)])
       : (DataFrame, String, String, Column,
          Seq[graft.sources.TableCatalog.MergeClause],
          Seq[graft.sources.TableCatalog.InsertClause],
@@ -695,7 +689,7 @@ class GraftSQL(spark: SparkSession, val catalog: TableCatalog) {
     val maskedCc = GraftSQL.maskStrings(condAndClauses)
     val heads = clauseRe.findAllMatchIn(maskedCc).toList
     require(heads.nonEmpty, s"MERGE INTO $name: at least one WHEN clause required")
-    val cond = referenceExpr(condAndClauses.substring(0, heads.head.start).trim)
+    val cond = referenceExpr(condAndClauses.substring(0, heads.head.start).trim, bindings)
     // ---- WHEN clause bodies (original text between clause heads);
     // each clause: optional `AND <cond>` (quote-masked THEN search —
     // the condition may contain strings/parens), then the action
@@ -716,7 +710,7 @@ class GraftSQL(spark: SparkSession, val catalog: TableCatalog) {
       val body = condAndClauses.substring(h.end + thenEnd, end)
       val clauseCond: Option[Column] = between.trim match {
         case "" => None
-        case andRe(c) => Some(referenceExpr(c.trim))
+        case andRe(c) => Some(referenceExpr(c.trim, bindings))
         case other => throw new IllegalArgumentException(
           s"MERGE INTO $name: expected AND <condition> before THEN: ${other.take(40)}")
       }
@@ -729,7 +723,7 @@ class GraftSQL(spark: SparkSession, val catalog: TableCatalog) {
         case updateSetRe(setBody) =>
           val pairs = splitTopLevel(setBody, ',').map { a =>
             val Array(key, v) = a.split("=", 2)
-            key.trim -> referenceExpr(v.trim)
+            key.trim -> referenceExpr(v.trim, bindings)
           }
           requireDistinctCols(pairs.map(_._1), s"MERGE INTO $name: UPDATE SET")
           MergeAction.Update(pairs.toMap)
@@ -750,7 +744,7 @@ class GraftSQL(spark: SparkSession, val catalog: TableCatalog) {
             source.columns.map(c =>
               c -> org.apache.spark.sql.functions.col(s"$sAlias.$c")).toMap
           case insertValsRe(colList, exprs) =>
-            val vals = splitTopLevel(exprs, ',').map(e => referenceExpr(e.trim))
+            val vals = splitTopLevel(exprs, ',').map(e => referenceExpr(e.trim, bindings))
             val cols = Option(colList) match {
               case Some(cl) => cl.split(",").map(_.trim).toSeq
               case None =>
@@ -841,16 +835,16 @@ class GraftSQL(spark: SparkSession, val catalog: TableCatalog) {
       else parts.mkString("\n"))).mkString("\n")).toDF("plan")
   }
 
-  /** A SELECT/WITH under the session's snapshot view bindings.
-    * Reference semantics for `/` applied AFTER analysis (the dispatch
-    * is type-directed) — see referenceSql. Registers snapshot views at
-    * the txn/as-of version for only the tables the query references
-    * (each registration costs a footer read — the full catalog would
-    * be O(tables) per statement), lets Spark SQL run the whole query,
-    * then restores the namespace: spark.sql analyzes eagerly, so the
-    * returned frame stays valid, and no txn-private snapshot lingers
-    * in the session's shared temp-view namespace for another GraftSQL
-    * to resolve. */
+  /** A SELECT/WITH under the session's snapshot bindings. Reference
+    * semantics for `/` applied AFTER analysis (the dispatch is
+    * type-directed) — see referenceSql. Binds the snapshot frame at the
+    * txn/as-of version of only the tables the query references (each
+    * costs a metadata read — the full catalog would be O(tables) per
+    * statement) into the parsed plan itself, as one CTE per name
+    * ([[GraftSession.bindNames]]): the statement's own CTEs shadow them
+    * by Spark's scoping, and nothing is written to the session's
+    * shared temp-view namespace, so another GraftSQL on the same
+    * SparkSession never resolves this one's txn-private snapshot. */
   private def runSelect(s: String): DataFrame = runSelect(s, Set.empty)
 
   /** Session-scoped SQL views: name → definition TEXT. A view is
@@ -863,7 +857,7 @@ class GraftSQL(spark: SparkSession, val catalog: TableCatalog) {
   private def runSelect(s: String, expanding: Set[String]): DataFrame = {
     // table detection runs over a string-MASKED copy: a table name
     // appearing only inside a string literal ('orders were late') must
-    // not register a spurious snapshot view
+    // not bind a spurious snapshot frame
     val masked = GraftSQL.maskStrings(s)
     val referencedTables = tableNames.filter(GraftSQL.referencedIn(masked, _))
     // referenced session views expand recursively (a view may stack on
@@ -909,15 +903,15 @@ class GraftSQL(spark: SparkSession, val catalog: TableCatalog) {
           currentScan(n)
       })
     }
-    GraftSession.withTempViews(spark, bindings ++ viewBindings)(
-      GraftColumnBridge.ofRows(spark, GraftSQL.refArithmeticPlan(plan)))
+    GraftColumnBridge.ofRows(spark,
+      GraftSession.bindNames(GraftSQL.refArithmeticPlan(plan), bindings ++ viewBindings))
   }
 
   /** Per-table manifest-pruning predicates extracted from the PARSED
     * (unanalyzed) SQL tree — the SQL-front analog of the reference's
     * IndexLookup optimizer pass (plan/mod.rs:42, 77-92), which turns a
     * WHERE over an indexed column into an index scan from SQL text.
-    * Here the equivalent is binding the table's snapshot view to the
+    * Here the equivalent is binding the table's snapshot frame to the
     * manifest-pruned file set ([[TableCatalog.planFiles]]), so the
     * files the index excludes are never handed to Spark at all.
     *
@@ -935,9 +929,9 @@ class GraftSQL(spark: SparkSession, val catalog: TableCatalog) {
     *    alias, or unqualified with every leaf's schema known and
     *    exactly one owning table;
     *  - a table OCCURRING MORE THAN ONCE in the whole tree (self-join,
-    *    CTE body + main body) is never pruned — one shared view cannot
+    *    CTE body + main body) is never pruned — one shared binding cannot
     *    carry two different occurrence constraints;
-    *  - a name that actually resolves to a CTE makes the bound view
+    *  - a name that actually resolves to a CTE makes the binding
     *    unused, so pruning it is vacuously harmless. */
   private def indexPrunes(
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
@@ -1109,10 +1103,19 @@ class GraftSQL(spark: SparkSession, val catalog: TableCatalog) {
     * division. Parses eagerly with the session parser — `expr()`
     * would defer the parse inside a SqlExpression node the rewrite
     * can't see into. The Column stays unresolved; the catalog binds
-    * it. */
-  private def referenceExpr(text: String): org.apache.spark.sql.Column =
+    * it to the target frame. Each subquery's plan gets the statement's
+    * `bindings` ([[withStatementBindings]]), which are built only when
+    * a subquery is present. */
+  private def referenceExpr(text: String,
+      bindings: () => Seq[(String, DataFrame)]): org.apache.spark.sql.Column = {
+    import org.apache.spark.sql.catalyst.expressions.SubqueryExpression
+    val e = GraftSQL.refArithmetic(spark.sessionState.sqlParser.parseExpression(text))
     GraftColumnBridge.column(
-      GraftSQL.refArithmetic(spark.sessionState.sqlParser.parseExpression(text)))
+      if (!e.exists(_.isInstanceOf[SubqueryExpression])) e
+      else e.transform { case sq: SubqueryExpression =>
+        sq.withNewPlan(GraftSession.bindNames(sq.plan, bindings()))
+      })
+  }
 
   // ---------------------------------------------------------- CREATE
   private def createTable(name: String, colsBody: String): Unit = {
@@ -1247,7 +1250,7 @@ object GraftSQL {
   // introspection (reference server.rs:126-127: ListTables/GetTable)
   /** Word-boundary name detection over a string-MASKED statement —
     * the ONE definition of "this statement references relation n",
-    * shared by runSelect's snapshot-view binding and the DML paths'
+    * shared by runSelect's snapshot binding and the DML paths'
     * withStatementBindings so they can never diverge. */
   private[graft] def referencedIn(masked: String, n: String): Boolean =
     ("(?i)\\b" + java.util.regex.Pattern.quote(n) + "\\b").r

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, SubqueryAlias, UnresolvedWith}
 
 /** Session factory for the graft engine.
   *
@@ -79,26 +80,15 @@ object GraftSession {
     df.queryExecution.explainString(
       org.apache.spark.sql.execution.FormattedMode)
 
-  /** Bind `bindings` as temp views for the duration of `body`, then
-    * RESTORE whatever TEMP VIEW each name held before (or drop the
-    * view if none existed): no caller-private snapshot may linger in
-    * the session's shared temp-view namespace, and a permanent catalog
-    * table is never re-materialized as a view (that would pin stale
-    * data over it). Safe because spark.sql/DataFrame ops analyze
-    * eagerly — frames built inside `body` stay valid after restore. */
-  def withTempViews[A](spark: SparkSession, bindings: Seq[(String, DataFrame)])(body: => A): A = {
-    val saved = bindings.flatMap { case (n, _) =>
-      scala.util.Try(spark.catalog.getTable(n)).toOption
-        .filter(_.isTemporary)
-        .map(_ => n -> spark.table(n))
-    }.toMap
-    bindings.foreach { case (n, df) => df.createOrReplaceTempView(n) }
-    try body
-    finally bindings.foreach { case (n, _) =>
-      saved.get(n) match {
-        case Some(prior) => prior.createOrReplaceTempView(n)
-        case None        => spark.catalog.dropTempView(n)
-      }
-    }
-  }
+  /** `plan` with each of `bindings` visible under its name: one
+    * `WITH name AS (<frame>), …` around the parsed statement. The
+    * analyzer resolves the names through its own CTE scoping
+    * (`ctePrecedencePolicy = CORRECTED`), so the statement's own CTE of
+    * the same name shadows a binding at any depth, and nothing is
+    * written to the session: two callers sharing one SparkSession can
+    * bind one name to different frames at the same time. */
+  def bindNames(plan: LogicalPlan, bindings: Seq[(String, DataFrame)]): LogicalPlan =
+    if (bindings.isEmpty) plan
+    else UnresolvedWith(plan, bindings.map { case (n, df) =>
+      (n, SubqueryAlias(n, df.queryExecution.analyzed), None) })
 }

@@ -362,7 +362,7 @@ object Dedup {
     // the count and the self-join are two actions over the signature
     // frame: checkpointed lazily, the count stores its rows and the
     // join reads them back, so the signature kernel runs once
-    val base = Similarity.sigFrame(s, d).localCheckpoint(eager = false)
+    val base = Similarity.sigFrame(Tables.embeddings(s, d)).localCheckpoint(eager = false)
     // bucket width scales with corpus size (target ~16 vectors/bucket):
     // fixed bits would make candidate volume quadratic in corpus growth;
     // adaptive bits keep it ~linear at any SF. The count is the only

@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.GraftSession
 import graft.sources.Tables
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The reference's relational query surface re-expressed Spark-first.
@@ -29,6 +29,13 @@ object Relational {
 
   /** Exact money arithmetic: DOUBLE column → DECIMAL(18,2). */
   private def dec(c: Column): Column = c.cast("decimal(18,2)")
+
+  /** SQL text with each of `bindings` bound to its name inside the
+    * plan ([[GraftSession.bindNames]]): a declared query never rebinds
+    * the caller session's names to its own dataset. */
+  private def sqlOver(s: SparkSession, bindings: Seq[(String, DataFrame)])(text: String): DataFrame =
+    GraftColumnBridge.ofRows(s,
+      GraftSession.bindNames(s.sessionState.sqlParser.parsePlan(text), bindings))
 
   /** The exact integer CENTS of a 2-decimal money double. The stored
     * double is the nearest representation of a value with exactly two
@@ -247,14 +254,8 @@ object Relational {
       |ORDER BY revenue DESC, o_orderkey
       |LIMIT 10""".stripMargin
 
-  def q15SqlInterface(s: SparkSession, d: String): DataFrame = {
-    // register just the referenced tables (each registration costs a
-    // parquet footer read) for the statement's duration — this query
-    // must not permanently rebind a session's views to dataset `d`
-    val names = Seq("customer", "orders", "lineitem")
-    GraftSession.withTempViews(s, names.map(n => n -> Tables.load(s, d, n)))(
-      s.sql(q15Sql))
-  }
+  def q15SqlInterface(s: SparkSession, d: String): DataFrame =
+    sqlOver(s, Seq("customer", "orders", "lineitem").map(n => n -> Tables.load(s, d, n)))(q15Sql)
 
   // ---------------------------------------------------------------- q16
   /** EXPLAIN surface (reference ast.rs:17): formatted physical plans
@@ -668,11 +669,8 @@ object Relational {
       |  ORDER BY o_totalprice DESC, o_orderkey LIMIT 2) o
       |ORDER BY c.c_custkey, o.o_totalprice DESC, o.o_orderkey""".stripMargin
 
-  def q41Lateral(s: SparkSession, d: String): DataFrame = {
-    val names = Seq("customer", "orders")
-    GraftSession.withTempViews(s, names.map(n => n -> Tables.load(s, d, n)))(
-      s.sql(q41Sql))
-  }
+  def q41Lateral(s: SparkSession, d: String): DataFrame =
+    sqlOver(s, Seq("customer", "orders").map(n => n -> Tables.load(s, d, n)))(q41Sql)
 
   // ---------------------------------------------------------------- q42
   /** Explicit GROUPING SETS (the general form behind q24's ROLLUP and
@@ -691,8 +689,7 @@ object Relational {
       |ORDER BY g_flag, g_status, l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin
 
   def q42GroupingSets(s: SparkSession, d: String): DataFrame =
-    GraftSession.withTempViews(s, Seq("lineitem" -> Tables.lineitem(s, d)))(
-      s.sql(q42Sql))
+    sqlOver(s, Seq("lineitem" -> Tables.lineitem(s, d)))(q42Sql)
 
   // ---------------------------------------------------------------- q43
   /** Recursive CTE (WITH RECURSIVE): iterative ancestor walk over a
@@ -746,7 +743,7 @@ object Relational {
         col("b.doc_id") === col("a.doc_id") - 20 && col("b.source") === col("a.source"))
       .select(col("a.doc_id").as("child"), col("b.doc_id").as("parent"))
       .localCheckpoint()
-    GraftSession.withTempViews(s, Seq("edges" -> edges))(s.sql(q43WalkSql))
+    sqlOver(s, Seq("edges" -> edges))(q43WalkSql)
   }
 
   // ---------------------------------------------------------------- q44
@@ -771,8 +768,7 @@ object Relational {
       |ORDER BY op, l_suppkey""".stripMargin
 
   def q44SetOpsAll(s: SparkSession, d: String): DataFrame =
-    GraftSession.withTempViews(s, Seq("lineitem" -> Tables.lineitem(s, d)))(
-      s.sql(q44Sql))
+    sqlOver(s, Seq("lineitem" -> Tables.lineitem(s, d)))(q44Sql)
 
   // ---------------------------------------------------------------- q45
   /** Window DISTRIBUTION functions (ntile/percent_rank/cume_dist) —
@@ -1183,9 +1179,7 @@ object Relational {
     * text because correlation is a parser-level feature the DataFrame
     * API cannot express. */
   def q57CorrelatedScalar(s: SparkSession, d: String): DataFrame =
-    GraftSession.withTempViews(s,
-      Seq("customer" -> Tables.customer(s, d), "orders" -> Tables.orders(s, d)))(
-      s.sql(q57Sql))
+    sqlOver(s, Seq("customer" -> Tables.customer(s, d), "orders" -> Tables.orders(s, d)))(q57Sql)
 
   private val q57Sql: String =
     """SELECT c_custkey, c_name,

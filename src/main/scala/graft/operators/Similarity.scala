@@ -37,19 +37,18 @@ object Similarity {
     * columns written at ingest). Shared with [[Dedup.d05Embedding]],
     * whose LSH buckets are prefix bits of `sig0` — one signature
     * derivation serves both dedup blocking and ANN pruning. */
-  private[operators] def sigFrame(s: SparkSession, d: String): DataFrame =
-    Tables.embeddings(s, d)
-      .select(col("vec_id") +: col("embedding") +: sigCols: _*)
+  private[operators] def sigFrame(emb: DataFrame): DataFrame =
+    emb.select(col("vec_id") +: col("embedding") +: sigCols: _*)
 
-  /** The fixed probe: embedding of vec_id 0, broadcast to all rows. */
-  private def probe(s: SparkSession, d: String): DataFrame = probe(Tables.embeddings(s, d))
+  /** The fixed probe: embedding of vec_id 0, broadcast to all rows.
+    * Every query passes down its one `embeddings` frame, which the
+    * probe reads too: each load is a schema-inference job. */
   private def probe(emb: DataFrame): DataFrame =
     emb.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
 
   /** The fixed probe vector on the driver (one pushed-filter point
     * read). */
   private def probeVec(emb: DataFrame): Array[Float] = probe(emb).head().getSeq[Float](0).toArray
-  private def probeVec(s: SparkSession, d: String): Array[Float] = probeVec(Tables.embeddings(s, d))
 
   // ---------------------------------------------------------------- s01
   /** Exact top-k, oracle-checked: DuckDB's list_cosine_similarity
@@ -58,15 +57,16 @@ object Similarity {
     * by a >20x margin on this data (verified: min distance to any
     * rounding boundary ~1e-6 vs ~6e-8 engine delta), and the top-k
     * membership gap is >9e-4. Ranking happens on the unrounded value. */
-  def s01BruteForce(s: SparkSession, d: String): DataFrame =
-    Tables.embeddings(s, d)
-      .filter(col("vec_id") =!= 0)
-      .crossJoin(broadcast(probe(s, d)))
+  def s01BruteForce(s: SparkSession, d: String): DataFrame = {
+    val emb = Tables.embeddings(s, d)
+    emb.filter(col("vec_id") =!= 0)
+      .crossJoin(broadcast(probe(emb)))
       .select(col("vec_id"), cosine_sim(col("embedding"), col("qv")).as("raw"))
       .orderBy(col("raw").desc, col("vec_id"))
       .limit(K)
       .select(col("vec_id"), round(col("raw"), 4).as("cos"))
       .orderBy(col("cos").desc, col("vec_id"))
+  }
 
   // ---------------------------------------------------------------- s02
   /** LSH-pruned ANN: rank the corpus by hamming distance between its
@@ -75,11 +75,12 @@ object Similarity {
     * Approximate by construction (recall < 1 vs s01); the recall floor
     * is asserted by spec against s01's exact top-k. */
   def s02LshAnn(s: SparkSession, d: String): DataFrame = {
-    val sf = sigFrame(s, d)
+    val emb = Tables.embeddings(s, d)
+    val sf = sigFrame(emb)
     // probe vector: one pushed-filter point read; signature computed
     // driver-side with the same kernel the stored columns used, so the
     // per-row cost is pure hamming against literals
-    val q = probeVec(s, d)
+    val q = probeVec(emb)
     val qSig = (0 until SigWords).map(w =>
       Kernels.hyperplaneSig(UnsafeArrayData.fromPrimitiveArray(q), 64, Seed + w))
     val ham = (0 until SigWords)
@@ -215,9 +216,10 @@ object Similarity {
     * Ranking uses the unrounded value. */
   def s06AnnBatch(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val probes = broadcast(Tables.embeddings(s, d).filter(col("vec_id") < 10)
+    val emb = Tables.embeddings(s, d)
+    val probes = broadcast(emb.filter(col("vec_id") < 10)
       .select(col("vec_id").as("probe_id"), col("embedding").as("qv")))
-    val scored = Tables.embeddings(s, d).filter(col("vec_id") >= 10)
+    val scored = emb.filter(col("vec_id") >= 10)
       .crossJoin(probes)
       .select(col("probe_id"), col("vec_id"),
         cosine_sim(col("embedding"), col("qv")).as("raw"))
@@ -341,16 +343,17 @@ object Similarity {
     * shrinks by the filter's selectivity before any ranking work. */
   private val FilterLabels = Seq(2, 5, 7)
 
-  def s07FilteredAnn(s: SparkSession, d: String): DataFrame =
-    Tables.embeddings(s, d)
-      .filter(col("vec_id") =!= 0 && col("label").isin(FilterLabels: _*))
-      .crossJoin(broadcast(probe(s, d)))
+  def s07FilteredAnn(s: SparkSession, d: String): DataFrame = {
+    val emb = Tables.embeddings(s, d)
+    emb.filter(col("vec_id") =!= 0 && col("label").isin(FilterLabels: _*))
+      .crossJoin(broadcast(probe(emb)))
       .select(col("vec_id"), col("label"),
         cosine_sim(col("embedding"), col("qv")).as("raw"))
       .orderBy(col("raw").desc, col("vec_id"))
       .limit(K)
       .select(col("vec_id"), col("label"), round(col("raw"), 4).as("cos"))
       .orderBy(col("cos").desc, col("vec_id"))
+  }
 
   // ---------------------------------------------------------------- s08
   /** TWO-STAGE quantized search — the production SQ8 serving shape:
@@ -368,10 +371,9 @@ object Similarity {
   private val CoarseC = 50
 
   def s08AnnRerank(s: SparkSession, d: String): DataFrame = {
-    val q = Tables.embeddings(s, d).filter(col("vec_id") === 0)
-      .select("embedding").head().getSeq[Float](0)
-    val qLit = typedLit(q)
-    val coarse = Tables.embeddings(s, d)
+    val emb = Tables.embeddings(s, d)
+    val qLit = typedLit(probeVec(emb).toSeq)
+    val coarse = emb
       .filter(col("vec_id") =!= 0)
       .select(col("vec_id"), col("embedding"),
         array_min(col("embedding")).cast("double").as("mn"),
@@ -429,9 +431,10 @@ object Similarity {
 
   def s09AnnMmr(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val pool = Tables.embeddings(s, d)
+    val emb = Tables.embeddings(s, d)
+    val pool = emb
       .filter(col("vec_id") =!= 0)
-      .crossJoin(broadcast(probe(s, d)))
+      .crossJoin(broadcast(probe(emb)))
       .select(col("vec_id"), cosine_sim(col("embedding"), col("qv")).as("rel"),
         col("embedding"))
       .orderBy(col("rel").desc, col("vec_id"))
@@ -669,8 +672,10 @@ object Similarity {
   private def pqCodes(emb: DataFrame, cbs: Seq[Array[Array[Float]]]): DataFrame =
     emb.select(col("vec_id"), col("embedding"), codesCol(cbs).as("codes"))
 
-  private[graft] def pqCodes(s: SparkSession, d: String): DataFrame =
-    pqCodes(Tables.embeddings(s, d), pqCodebooks(Tables.embeddings(s, d)))
+  private[graft] def pqCodes(s: SparkSession, d: String): DataFrame = {
+    val emb = Tables.embeddings(s, d)
+    pqCodes(emb, pqCodebooks(emb))
+  }
 
   /** One `embeddings` frame serves the trainer, the probe and the code
     * scan: each load is a schema-inference job. */
@@ -721,7 +726,8 @@ object Similarity {
     * so the spec can assert soundness (bound ≥ true cosine on EVERY
     * row) and the prune rate independently of the final filter. */
   private[graft] def s12CertifiedBounds(s: SparkSession, d: String): DataFrame = {
-    val q = probeVec(s, d)
+    val emb = Tables.embeddings(s, d)
+    val q = probeVec(emb)
     // the whole bound — row's affine SQ8 params, decode·q dot, ‖x‖,
     // slack term — is ONE codegen kernel call ([[graft.functions
     // .Sq8CosUb]]): two tight primitive passes per row instead of an
@@ -729,8 +735,7 @@ object Similarity {
     // CodegenFallback; the kernel formulation measured 3.1× on the
     // whole query, 2.08 → 0.67 s at sf0.1). At 100 TB the kernel reads the STORED
     // mn/span/qcode/‖x‖ columns instead of re-deriving them.
-    Tables.embeddings(s, d)
-      .filter(col("vec_id") =!= 0)
+    emb.filter(col("vec_id") =!= 0)
       .select(col("vec_id"), col("embedding"),
         typedLit(q.toSeq).as("qv"),
         graft.functions.sq8_cos_ub(col("embedding"), q.toSeq).as("cos_ub"))
@@ -760,16 +765,18 @@ object Similarity {
     * never influence it, or the incremental-equals-rebuild claim would
     * be circular. */
   private[graft] def s14Cents(s: SparkSession, d: String): Array[Array[Float]] =
-    Ivf.train(Tables.embeddings(s, d).filter(col("vec_id") % 2 === 0), IvfK, IvfIters)
+    s14Cents(Tables.embeddings(s, d))
+  private def s14Cents(emb: DataFrame): Array[Array[Float]] =
+    Ivf.train(emb.filter(col("vec_id") % 2 === 0), IvfK, IvfIters)
 
   /** The corpus half's stored inverted lists under [[s14Cents]]. */
-  private def s14CorpusAssigned(s: SparkSession, d: String,
-      cents: Array[Array[Float]]): DataFrame =
-    Ivf.assign(Tables.embeddings(s, d).filter(col("vec_id") % 2 === 0)
-      .select("vec_id", "embedding"), cents)
+  private def s14CorpusAssigned(emb: DataFrame, cents: Array[Array[Float]]): DataFrame =
+    Ivf.assign(emb.filter(col("vec_id") % 2 === 0).select("vec_id", "embedding"), cents)
 
-  private[graft] def s14CorpusAssigned(s: SparkSession, d: String): DataFrame =
-    s14CorpusAssigned(s, d, s14Cents(s, d))
+  private[graft] def s14CorpusAssigned(s: SparkSession, d: String): DataFrame = {
+    val emb = Tables.embeddings(s, d)
+    s14CorpusAssigned(emb, s14Cents(emb))
+  }
 
   /** s14: INCREMENTAL INDEX ADD — vector-index maintenance without a
     * rebuild (d07's incremental discipline on the serving side): the
@@ -789,12 +796,13 @@ object Similarity {
     * table (d07's stored-signature shape), probes keep pruning to
     * nprobe partitions. */
   def s14AnnAdd(s: SparkSession, d: String): DataFrame = {
-    val cents = s14Cents(s, d)
+    val emb = Tables.embeddings(s, d)
+    val cents = s14Cents(emb)
     // the ADD: only the new batch evaluates the quantizer kernel
-    val added = Ivf.assign(Tables.embeddings(s, d)
+    val added = Ivf.assign(emb
       .filter(col("vec_id") % 2 =!= 0).select("vec_id", "embedding"), cents)
-    val merged = s14CorpusAssigned(s, d, cents).union(added)
-    val q = probeVec(s, d)
+    val merged = s14CorpusAssigned(emb, cents).union(added)
+    val q = probeVec(emb)
     Ivf.topK(merged.filter(col("vec_id") =!= 0), cents, q, IvfNprobe, K)
       .select(col("vec_id"), round(col("cos"), 4).as("cos"))
       .orderBy(col("cos").desc, col("vec_id"))
@@ -876,9 +884,11 @@ object Similarity {
       .withColumn("coarse", adcCosine(cbs, q))
 
   private[graft] def s15CoarseFrameOf(s: SparkSession, d: String,
-      serving: DataFrame): DataFrame =
-    ivfPqQuantizers(Tables.embeddings(s, d)) match {
-      case (cents, cbs) => coarseFrameOf(serving, cents, cbs, probeVec(s, d)) }
+      serving: DataFrame): DataFrame = {
+    val emb = Tables.embeddings(s, d)
+    ivfPqQuantizers(emb) match {
+      case (cents, cbs) => coarseFrameOf(serving, cents, cbs, probeVec(emb)) }
+  }
 
   /** s15's coarse frame (s16's with `labels`): the quantizer and the
     * codebooks train together in one (1 + m)-space call, and the
@@ -892,8 +902,10 @@ object Similarity {
       cents, cbs, q)
   }
 
-  private[graft] def s15CoarseFrame(s: SparkSession, d: String): DataFrame =
-    ivfPqCoarse(Tables.embeddings(s, d), probeVec(s, d), None)
+  private[graft] def s15CoarseFrame(s: SparkSession, d: String): DataFrame = {
+    val emb = Tables.embeddings(s, d)
+    ivfPqCoarse(emb, probeVec(emb), None)
+  }
 
   def s15IvfPq(s: SparkSession, d: String): DataFrame = {
     val emb = Tables.embeddings(s, d)
@@ -930,8 +942,10 @@ object Similarity {
     * the stored label column), so the ADC pass reads probed-fraction ×
     * filter-selectivity of the corpus. Rows-only (trained quantizer +
     * codebooks, like s15). */
-  private[graft] def s16CoarseFrame(s: SparkSession, d: String): DataFrame =
-    ivfPqCoarse(Tables.embeddings(s, d), probeVec(s, d), Some(FilterLabels))
+  private[graft] def s16CoarseFrame(s: SparkSession, d: String): DataFrame = {
+    val emb = Tables.embeddings(s, d)
+    ivfPqCoarse(emb, probeVec(emb), Some(FilterLabels))
+  }
 
   def s16FilteredIvfPq(s: SparkSession, d: String): DataFrame = {
     val emb = Tables.embeddings(s, d)
@@ -1016,14 +1030,15 @@ object Similarity {
     // vector side: fixed-point cosine (see scaladoc) over the corpus
     val xq = transform(col("embedding"),
       x => round(x.cast("double") * lit(1e6), 0).cast("long"))
-    val qq = Tables.embeddings(s, d).filter(col("vec_id") === 0)
+    val emb = Tables.embeddings(s, d)
+    val qq = emb.filter(col("vec_id") === 0)
       .select(xq.as("xq")).head().getSeq[Long](0)
     val sqNq = math.sqrt(qq.map(v => v * v).sum.toDouble)
     val dot = aggregate(zip_with(col("xq"), typedLit(qq), (a, b) => a * b),
       lit(0L), (acc, v) => acc + v)
     val nx = aggregate(col("xq"), lit(0L), (acc, v) => acc + v * v)
     val cosQ = dot.cast("double") / (sqrt(nx.cast("double")) * lit(sqNq))
-    val vc = Tables.embeddings(s, d).filter(col("vec_id") =!= 0)
+    val vc = emb.filter(col("vec_id") =!= 0)
       .select(col("vec_id").as("doc_id"), xq.as("xq"))
       .select(col("doc_id"), round(cosQ, 4).as("cosr"))
       .orderBy(col("cosr").desc, col("doc_id")).limit(HybridPool)

@@ -579,7 +579,7 @@ class TableCatalog(spark: SparkSession, val root: String) {
   }
 
   /** Frame over an explicit kept-file list from [[planFiles]] — how the
-    * SQL front binds an index-pruned snapshot view: its OWN plan carries
+    * SQL front binds an index-pruned snapshot frame: its OWN plan carries
     * the WHERE that justified the pruning, so re-applying the filter
     * here would be redundant. Paths are table-relative, as returned by
     * planFiles. */

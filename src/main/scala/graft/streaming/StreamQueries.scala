@@ -24,38 +24,35 @@ object StreamQueries {
     * START, so the scope covers exactly the streaming run; results
     * are partitioning-independent (every query here is
     * oracle-checked). At production scale this knob goes UP with
-    * volume instead — state stores shard across executors. */
-  private def withStatePartitions[T](s: SparkSession, n: Int)(body: => T): T = {
+    * volume instead — state stores shard across executors.
+    *
+    * `body` gets the writer options its one stream starts with: a
+    * `checkpointLocation` under a FRESH `/dev/shm` root (never reused,
+    * so no accidental resume), deleted after. A bounded verification
+    * run commits offsets/state per micro-batch into its checkpoint;
+    * `/tmp` may be disk-backed while `/dev/shm` is tmpfs, so this keeps
+    * those fsyncs off the disk. It is a per-query option, not session
+    * conf, so concurrent calls on one session never see each other's
+    * root. Production streams pass their own durable checkpoint. */
+  private def withStatePartitions[T](s: SparkSession, n: Int)(body: Map[String, String] => T): T = {
     import java.nio.file.{Files => JFiles, Paths => JPaths}
     val key = "spark.sql.shuffle.partitions"
-    val ckptKey = "spark.sql.streaming.checkpointLocation"
     val noDataKey = "spark.sql.streaming.noDataMicroBatches.enabled"
     val prev = s.conf.get(key)
-    val prevCkpt = s.conf.getOption(ckptKey)
     val prevNoData = s.conf.getOption(noDataKey)
-    // a bounded verification run commits offsets/state per micro-batch
-    // into its checkpoint; on this box /tmp is disk-backed while
-    // /dev/shm is tmpfs — a FRESH root per run (never reused, so no
-    // accidental resume) keeps those fsyncs off the disk. Production
-    // streams pass their own durable checkpointLocation instead.
     val shm = JPaths.get("/dev/shm")
     val ckptRoot =
       if (JFiles.isDirectory(shm) && JFiles.isWritable(shm))
         Some(JFiles.createTempDirectory(shm, "graft-ckpt"))
       else None
     s.conf.set(key, n.toString)
-    ckptRoot.foreach(d => s.conf.set(ckptKey, d.toString))
     // bounded inputs need no wall-clock no-data batches: every
     // watermark advance that matters is driven by a DATA batch (st02's
     // sentinel chunks exist precisely for this), so the extra empty
     // micro-batch per query is pure fixed overhead here
     s.conf.set(noDataKey, "false")
-    try body finally {
+    try body(ckptRoot.map(d => "checkpointLocation" -> d.toString).toMap) finally {
       s.conf.set(key, prev)
-      prevCkpt match {
-        case Some(v) => s.conf.set(ckptKey, v)
-        case None    => s.conf.unset(ckptKey)
-      }
       prevNoData match {
         case Some(v) => s.conf.set(noDataKey, v)
         case None    => s.conf.unset(noDataKey)
@@ -91,8 +88,8 @@ object StreamQueries {
       .select(col("window.start").as("hour_start"), col("event_type"),
         col("n_events"), col("sum_value"))
 
-    withStatePartitions(s, 8) {
-      val q = agg.writeStream
+    withStatePartitions(s, 8) { ckpt =>
+      val q = agg.writeStream.options(ckpt)
         .format("memory").queryName("graft_st01_sink")
         .outputMode(OutputMode.Complete)
         .start()
@@ -120,9 +117,9 @@ object StreamQueries {
         .select(col("user_id"), col("ts"), col("event_type"),
           col("value").cast("double").as("value"))
         .as[Streams.Event]
-      withStatePartitions(s, 8) {
+      withStatePartitions(s, 8) { ckpt =>
         val q = Streams.sessionize(typed, gapMinutes = 30, watermark = "10 minutes")
-          .writeStream.format("memory").queryName("graft_st02_sink")
+          .writeStream.options(ckpt).format("memory").queryName("graft_st02_sink")
           .outputMode(OutputMode.Append)
           .start()
         try q.processAllAvailable()
@@ -286,8 +283,8 @@ object StreamQueries {
           round(sum(dec2(col("value"))).cast("double"), 2).as("total_value"))
         .select(col("user_id"), col("sw.start").as("start_ts"),
           col("n_events"), col("total_value"))
-      withStatePartitions(s, 8) {
-        val q = agg.writeStream
+      withStatePartitions(s, 8) { ckpt =>
+        val q = agg.writeStream.options(ckpt)
           .format("memory").queryName("graft_st12_sink")
           .outputMode(OutputMode.Append)
           .start()
@@ -318,11 +315,11 @@ object StreamQueries {
       .schema(schema)
       .option("pathGlobFilter", "documents.parquet")
       .parquet(d)
-    withStatePartitions(s, 8) {
+    withStatePartitions(s, 8) { ckpt =>
       val q = stream
         .dropDuplicates("text")
         .select(col("text"))
-        .writeStream.format("memory").queryName("graft_st03_sink")
+        .writeStream.options(ckpt).format("memory").queryName("graft_st03_sink")
         .outputMode(OutputMode.Append)
         .start()
       try q.processAllAvailable()
@@ -391,8 +388,8 @@ object StreamQueries {
             .dropDuplicatesWithinWatermark("event_id")
             .select(col("event_id"), col("user_id"), col("event_type"),
               col("value"))
-          withStatePartitions(s, 8) {
-            val q = deduped.writeStream
+          withStatePartitions(s, 8) { ckpt =>
+            val q = deduped.writeStream.options(ckpt)
               .format("memory").queryName("graft_st14_sink")
               .outputMode(OutputMode.Append)
               .start()
@@ -434,8 +431,8 @@ object StreamQueries {
 
   def st04StreamJoin(s: SparkSession, d: String): DataFrame = {
     val agg = st04Agg(s, d)
-    withStatePartitions(s, 8) {
-      val q = agg.writeStream
+    withStatePartitions(s, 8) { ckpt =>
+      val q = agg.writeStream.options(ckpt)
         .format("memory").queryName("graft_st04_sink")
         .outputMode(OutputMode.Complete)
         .start()
@@ -480,8 +477,8 @@ object StreamQueries {
     // shuffle partition, so its fixed commit cost scales 4× faster
     // with this knob than any other query here (measured: 2 beats 8
     // by ~20% on the bounded run)
-    withStatePartitions(s, 2) {
-      val q = agg.writeStream
+    withStatePartitions(s, 2) { ckpt =>
+      val q = agg.writeStream.options(ckpt)
         .format("memory").queryName("graft_st05_sink")
         .outputMode(OutputMode.Append)
         .start()
@@ -517,8 +514,8 @@ object StreamQueries {
       .join(broadcast(evalGrams), "gh")
       .groupBy("doc_id")
       .agg(count(lit(1)).cast("int").as("n_shared_8grams"))
-    withStatePartitions(s, 8) {
-      val q = flagged.writeStream
+    withStatePartitions(s, 8) { ckpt =>
+      val q = flagged.writeStream.options(ckpt)
         .format("memory").queryName("graft_st06_sink")
         .outputMode(OutputMode.Complete)
         .start()
@@ -549,8 +546,8 @@ object StreamQueries {
     val stream = rawEventsStream(s, d)
       .select(col("event_id"), col("user_id"), col("event_type"),
         col("value").cast("double").as("value"))
-    withStatePartitions(s, 8) {
-      val q = stream.writeStream
+    withStatePartitions(s, 8) { ckpt =>
+      val q = stream.writeStream.options(ckpt)
         .foreachBatch { (batch: DataFrame, _: Long) =>
           cat.insert("events_ingest", batch): Unit
         }
@@ -578,8 +575,8 @@ object StreamQueries {
       .groupBy("term").agg(count(lit(1)).as("n"))
       .orderBy(col("n").desc, col("term"))
       .limit(20)
-    withStatePartitions(s, 8) {
-      val q = agg.writeStream
+    withStatePartitions(s, 8) { ckpt =>
+      val q = agg.writeStream.options(ckpt)
         .format("memory").queryName("graft_st08_sink")
         .outputMode(OutputMode.Complete)
         .start()
@@ -607,7 +604,7 @@ object StreamQueries {
       .schema(schema)
       .option("pathGlobFilter", "documents.parquet")
       .parquet(d)
-    withStatePartitions(s, 8) {
+    withStatePartitions(s, 8) { ckpt =>
       val q = stream
         .select(col("text"),
           TextAnalysis.nTokensCol.cast("int").as("n_tokens"),
@@ -616,7 +613,7 @@ object StreamQueries {
         .filter(col("quality_score") >= TextAnalysis.qualityGate && col("n_blocked") === 0)
         .dropDuplicates("text")
         .select("text", "n_tokens", "quality_score")
-        .writeStream.format("memory").queryName("graft_st09_sink")
+        .writeStream.options(ckpt).format("memory").queryName("graft_st09_sink")
         .outputMode(OutputMode.Append)
         .start()
       try q.processAllAvailable()
@@ -652,7 +649,7 @@ object StreamQueries {
       .schema(schema)
       .option("pathGlobFilter", "documents.parquet")
       .parquet(d)
-    withStatePartitions(s, 8) {
+    withStatePartitions(s, 8) { ckpt =>
       val q = stream
         .select(col("text"),
           TextAnalysis.nTokensCol.cast("int").as("n_tokens"),
@@ -661,7 +658,7 @@ object StreamQueries {
         .filter(col("quality_score") >= TextAnalysis.qualityGate && col("n_blocked") === 0)
         .dropDuplicates("text")
         .select("text", "n_tokens", "quality_score")
-        .writeStream
+        .writeStream.options(ckpt)
         .foreachBatch { (batch: DataFrame, bid: Long) =>
           idempotentIngest(s, cat, "curated_stream", batch, bid)
         }
@@ -715,8 +712,8 @@ object StreamQueries {
       .parquet(d)
     val agg = stream.select(TextAnalysis.termCol)
       .agg(SketchAgg.cmsSketch(col("term")).as("cms"))
-    withStatePartitions(s, 1) {
-      val q = agg.writeStream
+    withStatePartitions(s, 1) { ckpt =>
+      val q = agg.writeStream.options(ckpt)
         .format("memory").queryName("graft_st11_sink")
         .outputMode(OutputMode.Complete)
         .start()
@@ -751,8 +748,8 @@ object StreamQueries {
         .agg(count(lit(1)).cast("int").as("n_events"),
           round(sum(col("value").cast("decimal(18,2)")).cast("double"), 2)
             .as("total_value"))
-      withStatePartitions(s, 8) {
-        val q = agg.writeStream
+      withStatePartitions(s, 8) { ckpt =>
+        val q = agg.writeStream.options(ckpt)
           .outputMode(OutputMode.Complete)
           .foreachBatch { (batch: DataFrame, _: Long) =>
             cat.merge("user_stats", batch): Unit
@@ -807,8 +804,8 @@ object StreamQueries {
       .join(lm, "term") // stateless broadcast lookup, no stream shuffle
       .groupBy("doc_id")
       .agg((round(sum(col("llr")), 4) + lit(0.0)).as("dsir_score"))
-    withStatePartitions(s, 8) {
-      val q = agg.writeStream
+    withStatePartitions(s, 8) { ckpt =>
+      val q = agg.writeStream.options(ckpt)
         .format("memory").queryName("graft_st15_sink")
         .outputMode(OutputMode.Complete)
         .start()
@@ -934,8 +931,8 @@ object StreamQueries {
       .groupBy("doc_id")
       .agg(count(lit(1)).cast("int").as("n_feats"),
         (round(sum(col("w")) + lit(prior), 4) + lit(0.0)).as("nb_score"))
-    withStatePartitions(s, 8) {
-      val q = agg.writeStream
+    withStatePartitions(s, 8) { ckpt =>
+      val q = agg.writeStream.options(ckpt)
         .format("memory").queryName("graft_st17_sink")
         .outputMode(OutputMode.Complete)
         .start()
@@ -1008,8 +1005,8 @@ object StreamQueries {
         graft.operators.TextAnalysis.nTokensCol.cast("long").as("n_tokens"))
       .as[(Long, String, Long)]
     val packed = packStream(rows)
-    withStatePartitions(s, 8) {
-      val q = packed.writeStream
+    withStatePartitions(s, 8) { ckpt =>
+      val q = packed.writeStream.options(ckpt)
         .format("memory").queryName("graft_st19_sink")
         .outputMode(OutputMode.Append)
         .start()

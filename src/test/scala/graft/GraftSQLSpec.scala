@@ -1463,4 +1463,48 @@ class GraftSQLSpec extends AnyFunSuite {
     g.execute("COMMIT")
     assert(g.execute("SELECT count(*) FROM st").collect()(0).getLong(0) == 7)
   }
+
+  test("bound names follow SQL scoping: CTE shadowing, recursion, self-joins, DML subqueries") {
+    val g = session()
+    val other = new GraftSQL(spark, g.catalog) // never in a txn
+    def rows(on: GraftSQL, sql: String): Seq[String] =
+      on.execute(sql).collect().map(_.toSeq.mkString(",")).toSeq
+    g.execute("CREATE TABLE sp_t (k INTEGER PRIMARY KEY, v INTEGER)")
+    g.execute("CREATE TABLE sp_o (k INTEGER PRIMARY KEY, v INTEGER)")
+    g.execute("INSERT INTO sp_t VALUES (1, 10), (2, 20), (3, 30), (4, 40)")
+    g.execute("INSERT INTO sp_o VALUES (2, 200), (3, 300)")
+    // a statement's own CTE shadows the catalog table of its name, at
+    // the top level and inside a scalar subquery; a CTE body that names
+    // the table reads the table
+    assert(rows(g, "WITH sp_t AS (SELECT 100 AS k) SELECT k FROM sp_t") == Seq("100"))
+    assert(rows(g, "SELECT (WITH sp_t AS (SELECT 7 AS k) SELECT max(k) FROM sp_t), max(k) " +
+      "FROM sp_t") == Seq("7,4"))
+    assert(rows(g, "WITH sp_t AS (SELECT k FROM sp_t WHERE k > 2) SELECT count(*) FROM sp_t") ==
+      Seq("2"))
+    val walk = "WITH RECURSIVE r(k, d) AS (SELECT k, 0 FROM sp_t WHERE k = 1 UNION ALL " +
+      "SELECT t.k, r.d + 1 FROM r JOIN sp_t t ON t.k = r.k + 1) SELECT max(k), max(d) FROM r"
+    assert(rows(g, walk) == Seq("4,3"))
+    assert(rows(g, "SELECT a.k, b.k FROM sp_t a JOIN sp_t b ON a.k = b.k + 1 ORDER BY a.k") ==
+      Seq("2,1", "3,2", "4,3"))
+    assert(rows(g, "SELECT k, (SELECT max(v) FROM sp_o WHERE sp_o.k = sp_t.k) FROM sp_t " +
+      "ORDER BY k") == Seq("1,null", "2,200", "3,300", "4,null"))
+    // DML subqueries outside a txn read the published tables
+    g.execute("UPDATE sp_t SET v = (SELECT max(v) FROM sp_o) WHERE k = 1")
+    g.execute("DELETE FROM sp_t WHERE k IN (SELECT k FROM sp_o)")
+    assert(rows(g, "SELECT k, v FROM sp_t ORDER BY k") == Seq("1,300", "4,40"))
+    // inside BEGIN they read the txn's staged rows, and the recursive
+    // walk its staged table; the other session sees none of it
+    g.execute("BEGIN")
+    g.execute("INSERT INTO sp_o VALUES (1, 1000)")
+    g.execute("INSERT INTO sp_t VALUES (5, 50)")
+    g.execute("UPDATE sp_t SET v = (SELECT max(v) FROM sp_o) WHERE k = 4")
+    g.execute("DELETE FROM sp_t WHERE k IN (SELECT k FROM sp_o)")
+    assert(rows(g, "SELECT k, v FROM sp_t ORDER BY k") == Seq("4,1000", "5,50"))
+    assert(rows(g, "WITH RECURSIVE r(k, d) AS (SELECT k, 0 FROM sp_t WHERE k = 4 UNION ALL " +
+      "SELECT t.k, r.d + 1 FROM r JOIN sp_t t ON t.k = r.k + 1) SELECT max(k), max(d) FROM r") ==
+      Seq("5,1"))
+    assert(rows(other, "SELECT k, v FROM sp_t ORDER BY k") == Seq("1,300", "4,40"))
+    g.execute("COMMIT")
+    assert(rows(other, "SELECT k, v FROM sp_t ORDER BY k") == Seq("4,1000", "5,50"))
+  }
 }

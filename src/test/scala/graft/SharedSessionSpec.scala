@@ -1,0 +1,80 @@
+package graft
+
+import graft.sources.TableCatalog
+import org.apache.spark.sql.DataFrame
+import org.scalatest.funsuite.AnyFunSuite
+
+import scala.jdk.CollectionConverters._
+
+/** Callers that share one SparkSession never see each other's name
+  * bindings or session settings: the Shark setting, many concurrent
+  * SQL users on one Spark context. */
+class SharedSessionSpec extends AnyFunSuite {
+  private lazy val spark = TestSpark.spark
+
+  /** Runs each body on its own thread, all released at once; returns
+    * every failure they raised. */
+  private def concurrently(bodies: (() => Unit)*): Seq[Throwable] = {
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val threads = bodies.map(b => new Thread(() => {
+      start.await()
+      try b() catch { case t: Throwable => errors.add(t) }
+    }))
+    threads.foreach(_.start())
+    start.countDown()
+    threads.foreach(_.join())
+    errors.asScala.toSeq
+  }
+
+  test("two GraftSQL sessions on one SparkSession each read only their own snapshot") {
+    val cat = new TableCatalog(spark,
+      java.nio.file.Files.createTempDirectory("graft-shared").toString)
+    val inTxn = new GraftSQL(spark, cat)
+    val outside = new GraftSQL(spark, cat)
+    inTxn.execute("CREATE TABLE rt (id INTEGER PRIMARY KEY)")
+    inTxn.execute("INSERT INTO rt VALUES (1)")
+    inTxn.execute("BEGIN")
+    inTxn.execute("INSERT INTO rt VALUES (2), (3)") // staged, uncommitted
+    val tablesBefore = spark.catalog.listTables().collect().map(_.name).sorted.toSeq
+    val confBefore = spark.conf.getAll
+    val wrong = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    // every statement's literal is distinct: no statement reuses another's plan
+    def reader(g: GraftSQL, want: Long, base: Int)(): Unit = (1 to 150).foreach { i =>
+      val sql = s"SELECT count(*) FROM rt WHERE id > ${-(base + i)}"
+      try {
+        val n = g.execute(sql).collect()(0).getLong(0)
+        if (n != want) wrong.add(s"$sql: $n rows, not $want")
+      } catch { case e: Exception => wrong.add(s"$sql: $e") }
+    }
+    val errors = concurrently(reader(inTxn, 3L, 0), reader(outside, 1L, 1000))
+    assert(errors.isEmpty, errors.mkString("\n"))
+    assert(wrong.isEmpty, s"${wrong.size} of 300 statements: " + wrong.asScala.take(5).mkString("; "))
+    assert(spark.catalog.listTables().collect().map(_.name).sorted.toSeq == tablesBefore)
+    assert(spark.conf.getAll == confBefore)
+    inTxn.execute("ROLLBACK")
+    assert(outside.execute("SELECT count(*) FROM rt").collect()(0).getLong(0) == 1L)
+  }
+
+  test("st01 and st12 on two threads of one session set no checkpoint location in its conf") {
+    import graft.streaming.StreamQueries
+    val key = "spark.sql.streaming.checkpointLocation"
+    def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
+    def st01() = rows(StreamQueries.st01StreamWindow(spark, TestSpark.sf))
+    def st12() = rows(StreamQueries.st12StreamSessionWindow(spark, TestSpark.sf))
+    assert(spark.conf.getOption(key).isEmpty)
+    val (solo01, solo12) = (st01(), st12())
+    // shuffle.partitions and noDataMicroBatches are still saved and
+    // restored around each stream, so two interleaved streams can leave
+    // either one changed; reset both for the suites that run after
+    val kept = Seq("spark.sql.shuffle.partitions",
+      "spark.sql.streaming.noDataMicroBatches.enabled").map(k => k -> spark.conf.getOption(k))
+    var (got01, got12) = (Seq.empty[String], Seq.empty[String])
+    try {
+      val errors = concurrently(() => got01 = st01(), () => got12 = st12())
+      assert(errors.isEmpty, errors.mkString("\n"))
+      assert(spark.conf.getOption(key).isEmpty, spark.conf.getOption(key))
+    } finally kept.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+    assert(got01 == solo01 && got12 == solo12)
+  }
+}
