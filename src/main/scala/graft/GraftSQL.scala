@@ -71,10 +71,14 @@ class GraftSQL(spark: SparkSession, val catalog: TableCatalog) {
   // folded to one LocalTableScanExec, whose collect runs no Spark job
   private[graft] var driverSelects: Long = 0L
   private[graft] var sparkSelects: Long = 0L
-  // this session's INSERT/MERGE statements per check route, and the
-  // write route lines of the statement EXPLAIN ANALYZE last ran
+  // this session's INSERT/MERGE statements per check route, its DML
+  // statements per write route (rows written on the driver or by a
+  // Spark job), and the write route lines of the statement EXPLAIN
+  // ANALYZE last ran
   private[graft] var driverWrites: Long = 0L
   private[graft] var sparkWrites: Long = 0L
+  private[graft] var driverWritten: Long = 0L
+  private[graft] var sparkWritten: Long = 0L
   private var lastWriteLines: Seq[String] = Nil
   // (kept files, total files) per table the last SELECT index-pruned —
   // plan observability for specs, like the reference's EXPLAIN showing
@@ -432,14 +436,15 @@ class GraftSQL(spark: SparkSession, val catalog: TableCatalog) {
         // relation itself was already resolved at parse time)
         val (src, ta, sa, cond, matched, ins, bySrc) =
           parseMergeUsing(name, tAlias, rest, withStatementBindings(s))
-        txn match {
+        val status = txn match {
           case Some(t) =>
             t.mergeUsing(name, src, ta, sa, cond, matched, ins, bySrc)
-            Seq(s"MERGE INTO $name (staged)").toDF("status")
+            s"MERGE INTO $name (staged)"
           case None =>
-            val v = catalog.mergeUsing(name, src, ta, sa, cond, matched, ins, bySrc)
-            Seq(s"MERGE INTO $name -> v$v").toDF("status")
+            s"MERGE INTO $name -> v${catalog.mergeUsing(name, src, ta, sa, cond, matched, ins, bySrc)}"
         }
+        noteWrite(name)
+        Seq(status).toDF("status")
 
       case mergeRe(name, colList, valuesBody) =>
         require(!readOnly, "read-only transaction")
@@ -459,6 +464,7 @@ class GraftSQL(spark: SparkSession, val catalog: TableCatalog) {
           case Some(t) => t.update(name, sets, where)
           case None    => catalog.update(name, sets, where)
         }
+        noteWrite(name)
         Seq(s"UPDATE $name").toDF("status")
 
       case deleteRe(name, whereBody) =>
@@ -469,6 +475,7 @@ class GraftSQL(spark: SparkSession, val catalog: TableCatalog) {
           case Some(t) => t.delete(name, where)
           case None    => catalog.delete(name, where)
         }
+        noteWrite(name)
         Seq(s"DELETE $name").toDF("status")
 
       // catalog introspection — the reference's ListTables / GetTable
@@ -570,10 +577,12 @@ class GraftSQL(spark: SparkSession, val catalog: TableCatalog) {
   private def valuesRowCount(df: DataFrame): Long =
     TableCatalog.localBatch(df).map(_.data.size.toLong).getOrElse(df.count())
 
-  /** Count the write route of the INSERT or MERGE just staged into
-    * `name`, and keep its line for EXPLAIN ANALYZE. */
+  /** Count the routes of the DML statement just staged into `name` —
+    * its check route (INSERT and MERGE batches) and its write route —
+    * and keep its line for EXPLAIN ANALYZE. */
   private def noteWrite(name: String): Unit = catalog.lastWrite.foreach { w =>
-    if (w.driverChecked) driverWrites += 1 else sparkWrites += 1
+    w.checked.foreach(d => if (d) driverWrites += 1 else sparkWrites += 1)
+    if (w.onDriver) driverWritten += 1 else sparkWritten += 1
     lastWriteLines :+= w.line(name)
   }
 
@@ -826,12 +835,12 @@ class GraftSQL(spark: SparkSession, val catalog: TableCatalog) {
       s"== Execution ${i + 1}: $fn ==\n" + GraftSQL.renderMetrics(qe.executedPlan)
     }
     // a SELECT's report opens with the read route of each bound table,
-    // an INSERT's or MERGE's with its check route and write parts
+    // a DML statement's with its check route, write parts and write route
     val routes =
       if (isSelect) lastRoutes.toSeq.sortBy(_._1).map { case (t, r) => r.line(t) }
       else lastWriteLines
     Seq((routes :+ (
-      if (parts.isEmpty) "== No Spark execution (metadata-only statement) =="
+      if (parts.isEmpty) "== No Spark execution (metadata only, or run on the driver) =="
       else parts.mkString("\n"))).mkString("\n")).toDF("plan")
   }
 

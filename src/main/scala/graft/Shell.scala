@@ -97,10 +97,12 @@ object Shell {
           out.println("Storage:  %.3f MB disk".formatLocal(java.util.Locale.ROOT, bytes / 1e6))
           out.println(s"Session:  $txnState")
           // SELECT table bindings per read route (GraftSQL.bindRead's
-          // guard), INSERT/MERGE statements per check route
+          // guard), INSERT/MERGE statements per check route, DML
+          // statements per write route (TableCatalog.writeData's guard)
           out.println(s"Reads:    ${g.localReads} local, ${g.sparkReads} spark")
           out.println(s"Statements: ${g.driverSelects} driver, ${g.sparkSelects} spark")
           out.println(s"Writes:   ${g.driverWrites} driver-checked, ${g.sparkWrites} spark-checked")
+          out.println(s"Written:  ${g.driverWritten} driver, ${g.sparkWritten} spark")
         case ("!table", Seq(name)) => render(g.execute(s"SHOW CREATE TABLE $name"))
         case ("!tables", _) => g.visibleTables.foreach(out.println)
         case ("!exit" | "!quit", _) => done = true

@@ -35,6 +35,16 @@ object GraftColumnBridge {
         s"classic SparkSession required, got ${other.getClass.getName}")
     }
 
+  /** The schema checks a `DataFrameWriter` file write runs before its
+    * job (`DataSource.planForWriting`, then `FileFormatWriter.write`),
+    * for a write that skips the job (`TableCatalog.writeLocal`). */
+  def checkWriteSchema(s: SparkSession, format: execution.datasources.FileFormat,
+      schema: types.StructType): Unit = {
+    execution.datasources.DataSource.validateSchema(format.toString, schema, s.sessionState.conf)
+    execution.datasources.DataSourceUtils.verifySchema(format, schema)
+    execution.datasources.DataSourceUtils.checkFieldNames(format, schema)
+  }
+
   /** The physical plan of a streaming query's most recent micro-batch
     * (StreamingQueryWrapper / StreamExecution are private[sql]) — how
     * a spec asserts what a STREAMING query actually executed (e.g.

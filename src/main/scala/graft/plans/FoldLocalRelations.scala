@@ -13,7 +13,7 @@ import org.apache.spark.sql.catalyst.planning.ExtractEquiJoinKeys
 import org.apache.spark.sql.catalyst.plans.{
   FullOuter, Inner, JoinType, LeftAnti, LeftOuter, LeftSemi, RightOuter}
 import org.apache.spark.sql.catalyst.plans.logical.{
-  Filter, GlobalLimit, Join, JoinHint, LocalLimit, LocalRelation, LogicalPlan, Project}
+  Filter, GlobalLimit, Join, JoinHint, LocalLimit, LocalRelation, LogicalPlan, Project, Union}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.trees.TreePattern.LOCAL_RELATION
 import org.apache.spark.sql.catalyst.util.UnsafeRowUtils
@@ -40,6 +40,10 @@ import org.apache.spark.sql.catalyst.util.UnsafeRowUtils
   *    are counted from the hash before any row is built; a join whose
   *    output would pass the local-read caps ([[LocalReadMaxRows]] rows,
   *    [[LocalReadMaxBytes]] bytes) stays a Spark join.
+  *  - Union (positional, as the analyzer leaves `unionByName`) of local
+  *    relations: the children's rows in child order, as Spark's union
+  *    concatenates its children's partitions — a MERGE's kept rows and
+  *    its source. A union past the local-read caps stays with Spark.
   *
   * ExistenceJoin, joins with no equi-key and hinted joins stay with
   * Spark. [[graft.GraftSession.builder]] excludes
@@ -83,7 +87,38 @@ object FoldLocalRelations extends Rule[LogicalPlan] {
             hashJoin(j, jt, leftKeys, rightKeys, residual, l, r).getOrElse(j)
           case _ => j
         }
+
+      case u @ Union(children, false, false) if children.forall {
+            case r: LocalRelation => !r.isStreaming
+            case _ => false
+          } =>
+        val data = children.view.flatMap(_.asInstanceOf[LocalRelation].data)
+        if (fitsCaps(u.output, data)) LocalRelation(u.output, data.toVector) else u
     }
+
+  /** Whether `rows` (with columns `attrs`) fit the local-read caps:
+    * at most [[LocalReadMaxRows]] rows and [[LocalReadMaxBytes]] bytes
+    * as `UnsafeRow`s. Reads no row past either cap. */
+  private[graft] def fitsCaps(attrs: Seq[Attribute], rows: Iterable[InternalRow]): Boolean = {
+    val size = sizeOf(attrs)
+    var (n, bytes) = (0L, 0L)
+    val it = rows.iterator
+    while (it.hasNext && n <= LocalReadMaxRows && bytes <= LocalReadMaxBytes) {
+      bytes += size(it.next())
+      n += 1
+    }
+    n <= LocalReadMaxRows && bytes <= LocalReadMaxBytes
+  }
+
+  /** A row's size as an `UnsafeRow` with columns `attrs`; only rows of
+    * another class are projected to find it. */
+  private def sizeOf(attrs: Seq[Attribute]): InternalRow => Long = {
+    lazy val unsafe = unsafeRow(attrs)
+    row => row match {
+      case u: UnsafeRow => u.getSizeInBytes.toLong
+      case _ => unsafe(row).getSizeInBytes.toLong
+    }
+  }
 
   /** An interpreted projection of a row with columns `attrs` into an
     * (reused) `UnsafeRow`. */
@@ -109,16 +144,9 @@ object FoldLocalRelations extends Rule[LogicalPlan] {
     def keyOf(keys: Seq[Expression], side: LocalRelation) =
       InterpretedUnsafeProjection.createProjection(
         keys.map(BindReferences.bindReference(_, side.output)))
-    def sizeOf(side: LocalRelation): InternalRow => Long = {
-      lazy val unsafe = unsafeRow(side.output)
-      row => row match {
-        case u: UnsafeRow => u.getSizeInBytes.toLong
-        case _ => unsafe(row).getSizeInBytes.toLong
-      }
-    }
     val buildRows = build.data.toIndexedSeq
     val buildKey = keyOf(if (swap) leftKeys else rightKeys, build)
-    val buildSize = sizeOf(build)
+    val buildSize = sizeOf(build.output)
     val buckets = new java.util.HashMap[UnsafeRow, Bucket]()
     buildRows.indices.foreach { i =>
       val k = buildKey(buildRows(i))
@@ -138,7 +166,7 @@ object FoldLocalRelations extends Rule[LogicalPlan] {
     // the output's size from the match counts alone: a pair per match,
     // an unmatched outer row padded, every build row once more for a
     // full outer join, at most the stream side for semi and anti joins
-    val streamSize = sizeOf(stream)
+    val streamSize = sizeOf(stream.output)
     var rows = if (jt == FullOuter) buildRows.size.toLong else 0L
     var bytes = if (jt == FullOuter) buildRows.iterator.map(buildSize).sum else 0L
     var i = 0

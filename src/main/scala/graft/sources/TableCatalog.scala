@@ -139,7 +139,8 @@ class TableCatalog(spark: SparkSession, val root: String) {
   private def indexable(dt: org.apache.spark.sql.types.DataType): Boolean = dt match {
     case _: org.apache.spark.sql.types.NumericType => true
     case org.apache.spark.sql.types.StringType => true
-    case org.apache.spark.sql.types.TimestampType | org.apache.spark.sql.types.DateType => true
+    case org.apache.spark.sql.types.TimestampType | org.apache.spark.sql.types.TimestampNTZType |
+        org.apache.spark.sql.types.DateType => true
     case _ => false
   }
 
@@ -641,7 +642,11 @@ class TableCatalog(spark: SparkSession, val root: String) {
   /** A frame over `files` (table-relative parquet files), decoded on
     * the driver ([[readLocal]], dropping rows `prune` rejects) when they
     * fit the local-read caps, else a Spark scan of them. The one guard
-    * behind SELECT binding ([[bindRead]]) and the key probes of DML.
+    * behind SELECT binding ([[bindRead]]), the key probes of DML and
+    * the files a copy-on-write UPDATE, DELETE or MERGE rewrites
+    * (`Txn.rewrittenFrame`, with no `prune`: a rewrite needs every
+    * row); a rewrite bound here whose result stays a `LocalRelation` is
+    * written with no job ([[writeData]]).
     * Returns the frame, the files' footer row total (None when the file
     * count alone ruled the driver out) and the rows decoded (None on
     * the Spark route). */
@@ -1267,7 +1272,7 @@ class TableCatalog(spark: SparkSession, val root: String) {
       true
     }
 
-  // the route of the last INSERT or MERGE this thread staged through
+  // the route of the last DML statement this thread staged through
   // this catalog, for EXPLAIN ANALYZE and the session's write counters
   private val lastWriteRoute = new ThreadLocal[WriteRoute]
   private[graft] def lastWrite: Option[WriteRoute] = Option(lastWriteRoute.get)
@@ -1996,24 +2001,81 @@ class TableCatalog(spark: SparkSession, val root: String) {
     * reference's B-tree secondary index: on immutable columnar files,
     * an index IS sort order + zone metadata.) `parts` caps the range
     * partitions, and the files of an unclustered write given a cap;
-    * one partition needs no range sample and no shuffle. Returns the
-    * partition count used, None when an uncapped unclustered write
-    * keeps the frame's own partitioning. */
+    * one partition needs no range sample and no shuffle.
+    *
+    * One guard writes small frames with no Spark job: when `df`
+    * optimizes to a non-streaming `LocalRelation` ([[TableCatalog.localBatch]],
+    * as a VALUES batch or a rewrite [[bindFiles]] read on the driver
+    * does), the write is one part in the table's own layout (no
+    * `layoutOverride`, no [[TableCatalog.ZCol]]) and its rows fit the
+    * local-read caps, [[writeLocal]] writes the rows on the calling
+    * thread as the one file the job would write. Every other write is
+    * a Spark job. Returns the route: the partition count used (None
+    * when an uncapped unclustered write keeps the frame's own
+    * partitioning) and whether the rows were written on the driver. */
   private def writeData(m: TableMeta, df: DataFrame, dir: String,
-      layoutOverride: Seq[String] = Nil, parts: Int = Int.MaxValue): Option[Int] = {
+      layoutOverride: Seq[String] = Nil, parts: Int = Int.MaxValue): WriteRoute = {
     val layout = if (layoutOverride.nonEmpty) layoutOverride else m.indexes
     val n = math.max(1, math.min(parts, spark.sparkContext.defaultParallelism))
-    val (out, used) =
-      if (layout.isEmpty) { if (parts == Int.MaxValue) (df, None) else (df.coalesce(n), Some(n)) }
-      else {
-        val cols = layout.map(col)
-        ((if (n == 1) df.coalesce(1) else df.repartitionByRange(n, cols: _*))
-          .sortWithinPartitions(cols: _*), Some(n))
-      }
-    // a computed clustering key (ZORDER) orders the write but is not
-    // part of the table: drop is a no-op for every other layout
-    out.drop(TableCatalog.ZCol).write.mode("overwrite").parquet(dir)
-    used
+    val onePart = n == 1 && (layout.nonEmpty || parts != Int.MaxValue)
+    val local = if (!onePart || layoutOverride.nonEmpty) None else TableCatalog.localBatch(df)
+      .filter(r => !r.output.exists(_.name.equalsIgnoreCase(TableCatalog.ZCol)) &&
+        graft.plans.FoldLocalRelations.fitsCaps(r.output, r.data))
+    local match {
+      case Some(r) =>
+        writeLocal(r, df.schema, layout, dir)
+        WriteRoute(None, Some(1), onDriver = true)
+      case None =>
+        val (out, used) =
+          if (layout.isEmpty) { if (parts == Int.MaxValue) (df, None) else (df.coalesce(n), Some(n)) }
+          else {
+            val cols = layout.map(col)
+            ((if (n == 1) df.coalesce(1) else df.repartitionByRange(n, cols: _*))
+              .sortWithinPartitions(cols: _*), Some(n))
+          }
+        // a computed clustering key (ZORDER) orders the write but is not
+        // part of the table: drop is a no-op for every other layout
+        out.drop(TableCatalog.ZCol).write.mode("overwrite").parquet(dir)
+        WriteRoute(None, used, onDriver = false)
+    }
+  }
+
+  /** Write the rows of `r`, sorted by the `layout` columns, as one
+    * parquet file `part-00000-<uuid>-c000<ext>` in `dir` on the calling
+    * thread: what the one-part job of [[writeData]] writes, through the
+    * writer its task runs. The order is the job's `sortWithinPartitions`
+    * — the analyzer's own sort order over the columns (ascending, nulls
+    * first), evaluated interpreted — and the sort is stable, as the
+    * job's one in-memory sort of rows in input order is. `schema` is
+    * the written frame's own (analyzed) schema, the one a job over the
+    * frame cached for its checks writes; optimizing can only narrow its
+    * nullability. It passes the checks the job's write runs first, and
+    * `ParquetFileFormat.prepareWrite` configures the writer from the
+    * session conf (compression, timestamp type, rebase modes, the Spark
+    * row metadata) exactly as for the job. */
+  private def writeLocal(r: LocalRelation, schema: StructType, layout: Seq[String],
+      dir: String): Unit = {
+    import org.apache.spark.sql.catalyst.expressions.{BindReferences, InterpretedOrdering}
+    import org.apache.spark.sql.catalyst.plans.logical.Sort
+    import org.apache.hadoop.mapreduce.{Job, TaskAttemptID, TaskType}
+    val rows = if (layout.isEmpty) r.data else {
+      val order = GraftColumnBridge.ofRows(spark, r).sortWithinPartitions(layout.map(col): _*)
+        .queryExecution.analyzed.collectFirst { case s: Sort => s.order }.get
+      r.data.sorted(new InterpretedOrdering(order.map(BindReferences.bindReference(_, r.output))))
+    }
+    val format = new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat()
+    GraftColumnBridge.checkWriteSchema(spark, format, schema)
+    // Job.getInstance copies the conf, so what prepareWrite sets on the
+    // job stays off the cached one
+    val job = Job.getInstance(footerConf())
+    val factory = format.prepareWrite(spark, job, Map.empty, schema)
+    val task = new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(job.getConfiguration,
+      new TaskAttemptID("graft", 0, TaskType.MAP, 0, 0))
+    Files.createDirectories(Paths.get(dir))
+    val file = Paths.get(dir).resolve(
+      s"part-00000-${java.util.UUID.randomUUID()}-c000${factory.getFileExtension(task)}")
+    val writer = factory.newInstance(file.toUri.toString, schema, task)
+    try rows.foreach(writer.write) finally writer.close()
   }
 
   /** Columns whose manifest zone maps can soundly drive [[planFiles]]
@@ -2439,10 +2501,9 @@ class TableCatalog(spark: SparkSession, val root: String) {
           checkLocal(m, name, batch, probe)
           // the rows checked are the rows written: the relation itself,
           // not a re-optimized copy of the VALUES plan
-          WriteRoute(driverChecked = true,
-            writeData(m, GraftColumnBridge.ofRows(spark, batch), dir,
-              parts = shareParts(batch.data.size,
-                batch.data.size + dirs.map(dirRowCount(name, _)).sum)))
+          writeData(m, GraftColumnBridge.ofRows(spark, batch), dir,
+            parts = shareParts(batch.data.size, batch.data.size + dirs.map(dirRowCount(name, _)).sum))
+            .copy(checked = Some(true))
         case None =>
           // cache across validation + write: the batch is often an
           // expensive upstream plan, and without the cache the
@@ -2457,7 +2518,7 @@ class TableCatalog(spark: SparkSession, val root: String) {
             frameOf(m.schema, resolveDirs(name, candidates(name, m, f)._2))
           try {
             validateInsert(m, name, cached, pruned = pruned, fkResolve = fkScan)
-            WriteRoute(driverChecked = false, writeData(m, cached, dir))
+            writeData(m, cached, dir).copy(checked = Some(false))
           } finally cached.unpersist() // failed validation must not leak cache
       }
       dirStats(rel) = collectStats(m, name, rel)
@@ -2488,14 +2549,17 @@ class TableCatalog(spark: SparkSession, val root: String) {
       * dir). With `check`, the whole new view (untouched plus fresh
       * rows) is validated first. No `fresh` (nothing to rewrite) keeps
       * the view as it is; the statement still publishes its version.
-      * Returns the write's part count ([[writeData]]). */
+      * Returns the write's route ([[writeData]]), 0 parts on the driver
+      * when nothing was written. */
     private def stageRewrite(name: String, m: TableMeta, untouched: Seq[String],
-        rewritten: Seq[String], fresh: Option[DataFrame], check: Boolean): Option[Int] = {
+        rewritten: Seq[String], fresh: Option[DataFrame], check: Boolean): WriteRoute = {
       val base = baseOf(name)
       val written = fresh.map { df0 =>
-        val df = if (check) df0.cache() else df0
+        // rows already on the driver have nothing to cache, and a cached
+        // plan is no `LocalRelation` the write's guard could take
+        val df = if (check && TableCatalog.localBatch(df0).isEmpty) df0.cache() else df0
         val rel = freshDir(name)
-        val parts = try {
+        val route = try {
           if (check) validate(m, name,
             if (untouched.isEmpty) df
             else frameOf(m.schema, resolveDirs(name, untouched)).unionByName(df), fkScan)
@@ -2503,10 +2567,10 @@ class TableCatalog(spark: SparkSession, val root: String) {
             parts = rewriteParts(name, untouched, rewritten))
         } finally df.unpersist() // failed validation must not leak cache
         dirStats(rel) = collectStats(m, name, rel)
-        (rel, parts)
+        (rel, route)
       }
       staged(name) = (base, written.map(_._1).toSeq ++ untouched)
-      written.flatMap(_._2)
+      written.fold(WriteRoute(None, Some(0), onDriver = true))(_._2)
     }
 
     /** Files a copy-on-write rewrite writes back: a full rewrite
@@ -2543,11 +2607,15 @@ class TableCatalog(spark: SparkSession, val root: String) {
       * the correlated outer reference `t.k` needs the alias to resolve). */
     def update(name: String, set0: Map[String, Column], where: Column): Unit = {
       open(); visible(name)
-      if (createdTables.contains(name)) { stagedCat.update(name, set0, where); return }
+      if (createdTables.contains(name)) {
+        stagedCat.update(name, set0, where)
+        lastWriteRoute.set(stagedCat.lastWrite.orNull)
+        return
+      }
       val m = pinnedMetaOf(name)
       val set = resolveSetKeys(m, name, set0)
       val (untouched, rewritten) = candidates(name, m, where)
-      val current = frameOf(m.schema, resolveDirs(name, rewritten)).alias(name)
+      val current = rewrittenFrame(name, m, rewritten).alias(name)
       for (pk <- m.primaryKey if set.contains(pk)) {
         val changedKeys = current.filter(coalesce(where, lit(false)))
           .filter(!(set(pk).cast(m.schema(pk).dataType) <=> col(pk)))
@@ -2555,10 +2623,18 @@ class TableCatalog(spark: SparkSession, val root: String) {
         restrictReferenced(name, changedKeys, refsOf(name), scan, "UPDATE")
       }
       val constrained = m.primaryKey.toSet ++ m.unique ++ m.notNull ++ m.references.keys
-      stageRewrite(name, m, untouched, rewritten,
+      lastWriteRoute.set(stageRewrite(name, m, untouched, rewritten,
         Option.when(rewritten.nonEmpty)(updatedFrame(m, set, where, current)),
-        check = set.keys.exists(constrained))
+        check = set.keys.exists(constrained)))
     }
+
+    /** The rows of the `rewritten` files, bound through the local-read
+      * guard ([[bindFiles]]): decoded on the driver when they fit its
+      * caps, so the statement's projection or filter folds
+      * ([[graft.plans.FoldLocalRelations]]) and [[writeData]] writes the
+      * result with no job; else a Spark scan of them. */
+    private def rewrittenFrame(name: String, m: TableMeta, rewritten: Seq[String]): DataFrame =
+      bindFiles(m, name, rewritten.flatMap(expandEntry(name, _)), None)._1
 
     /** Staged MERGE (upsert on the primary key) against the txn view
       * (shared [[mergedFrame]]): only the files that may hold a source
@@ -2594,10 +2670,9 @@ class TableCatalog(spark: SparkSession, val root: String) {
         val pk = mergeKey(m, name)
         checkLocal(m, name, batch, probe, retained = !keyIn(pk, keys), clashFree = Set(pk))
       }
-      val parts = stageRewrite(name, m, untouched, rewritten, Some(mergedFrame(m, name, aligned,
-        frameOf(m.schema, resolveDirs(name, rewritten)), local.map(_._2))),
-        check = local.isEmpty)
-      lastWriteRoute.set(WriteRoute(local.isDefined, parts))
+      lastWriteRoute.set(stageRewrite(name, m, untouched, rewritten, Some(mergedFrame(m, name,
+        aligned, rewrittenFrame(name, m, rewritten), local.map(_._2))), check = local.isEmpty)
+        .copy(checked = Some(local.isDefined)))
     }
 
     /** Staged clause-form MERGE (USING source) against the txn view
@@ -2613,6 +2688,7 @@ class TableCatalog(spark: SparkSession, val root: String) {
       if (createdTables.contains(name)) {
         stagedCat.mergeUsing(name, source, tAlias, sAlias, cond, matched,
           insert, bySource)
+        lastWriteRoute.set(stagedCat.lastWrite.orNull)
         return
       }
       val m = pinnedMetaOf(name)
@@ -2620,8 +2696,8 @@ class TableCatalog(spark: SparkSession, val root: String) {
       val current = frameOf(m.schema, resolveDirs(name, rewritten))
       mergeUsingRestrict(m, name, current, source, tAlias, sAlias,
         cond, matched, bySource, refsOf(name), scan)
-      stageRewrite(name, m, untouched, rewritten, Some(mergeUsingFrame(m, name, current,
-        source, tAlias, sAlias, cond, matched, insert, bySource)), check = true)
+      lastWriteRoute.set(stageRewrite(name, m, untouched, rewritten, Some(mergeUsingFrame(m, name,
+        current, source, tAlias, sAlias, cond, matched, insert, bySource)), check = true))
     }
 
     def explainMergeUsing(name: String, source: DataFrame, tAlias: String,
@@ -2640,17 +2716,21 @@ class TableCatalog(spark: SparkSession, val root: String) {
       * every referencing table. */
     def delete(name: String, where: Column): Unit = {
       open(); visible(name)
-      if (createdTables.contains(name)) { stagedCat.delete(name, where); return }
+      if (createdTables.contains(name)) {
+        stagedCat.delete(name, where)
+        lastWriteRoute.set(stagedCat.lastWrite.orNull)
+        return
+      }
       val m = pinnedMetaOf(name)
       val (untouched, rewritten) = candidates(name, m, where)
-      val current = frameOf(m.schema, resolveDirs(name, rewritten)).alias(name)
+      val current = rewrittenFrame(name, m, rewritten).alias(name)
       for (pk <- m.primaryKey) {
         val removedKeys = current.filter(coalesce(where, lit(false)))
           .select(col(pk)).distinct()
         restrictReferenced(name, removedKeys, refsOf(name), scan, "DELETE")
       }
-      stageRewrite(name, m, untouched, rewritten,
-        Option.when(rewritten.nonEmpty)(deletedFrame(current, where)), check = false)
+      lastWriteRoute.set(stageRewrite(name, m, untouched, rewritten,
+        Option.when(rewritten.nonEmpty)(deletedFrame(current, where)), check = false))
     }
 
     // ------------------------------------------- txn-aware EXPLAIN DML
@@ -3077,13 +3157,23 @@ object TableCatalog {
     * driver, None when Spark scans them. */
   case class ReadRoute(kept: Int, all: Int, footerRows: Option[Long], localRows: Option[Int])
 
-  /** How an INSERT or MERGE batch was checked and written: on the
-    * driver (its rows were a `LocalRelation`, see [[localBatch]]) or by
-    * Spark aggregates and joins, and the parts the write used. */
-  case class WriteRoute(driverChecked: Boolean, parts: Option[Int]) {
+  /** How a DML statement's rows were checked and written:
+    *  - `checked`: for an INSERT or MERGE batch, Some(true) when it was
+    *    checked on the driver (its rows were a `LocalRelation`, see
+    *    [[localBatch]]), Some(false) when Spark aggregates and joins
+    *    checked it; None for UPDATE, DELETE and clause-form MERGE;
+    *  - `parts`: the parts the write used, Some(0) when a rewrite found
+    *    no file to rewrite;
+    *  - `onDriver`: whether the rows were written on the calling thread
+    *    ([[TableCatalog.writeData]]'s guard) or by a Spark job. A
+    *    statement that writes nothing starts no job, so it counts as
+    *    written on the driver. */
+  case class WriteRoute(checked: Option[Boolean], parts: Option[Int], onDriver: Boolean) {
+    def driverChecked: Boolean = checked.contains(true)
     def line(table: String): String =
-      s"Write: $table ${if (driverChecked) "driver" else "spark"}-checked, " +
-        parts.fold("the batch's own partitioning")(n => s"$n part${if (n == 1) "" else "s"}")
+      s"Write: $table " + checked.fold("")(d => s"${if (d) "driver" else "spark"}-checked, ") +
+        parts.fold("the batch's own partitioning")(n => s"$n part${if (n == 1) "" else "s"}") +
+        s", written ${if (onDriver) "on the driver" else "by a Spark job"}"
   }
 
   /** The rows of `df` when its optimized plan is a `LocalRelation`: a

@@ -150,6 +150,16 @@ class FoldLocalRelationsSpec extends AnyFunSuite {
       .isInstanceOf[LocalRelation])
   }
 
+  test("a union of local relations folds to Spark's rows in child order, within the caps") {
+    val rows = parity("union")((a, b) => a.filter(col("k") =!= 2).unionByName(b.select(b.columns.map(col): _*)))
+    assert(rows.size == 12)
+    val u = left.union(right).union(left)
+    assert(folded(u) && u.collect().toSeq == (left.collect() ++ right.collect() ++ left.collect()).toSeq)
+    val half = spark.createDataFrame(java.util.Arrays.asList(
+      (0L to TableCatalog.LocalReadMaxRows / 2).map(Row(_)): _*), StructType(Seq(StructField("id", LongType))))
+    assert(folded(half) && !folded(half.union(half)), "a union past the row cap stays with Spark")
+  }
+
   test("point, range and join SELECTs with new literals compile no class and run no job") {
     // CodegenMetrics is JVM-global: this reads it safely only because
     // `Test / fork` runs the suites one after another in one JVM

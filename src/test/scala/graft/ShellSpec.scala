@@ -220,4 +220,27 @@ class ShellSpec extends AnyFunSuite {
     val plan = out.substring(out.indexOf("== Physical Plan =="))
     assert(plan.contains("LocalTableScan") && !plan.contains("Join"), plan)
   }
+
+  test("!status counts DML statements by write route; EXPLAIN ANALYZE names an UPDATE's") {
+    val eight = (1 to 8).map(i => s"($i, 'v$i')").mkString(", ")
+    val out = stripPrompts(script(
+      "CREATE TABLE w (id INTEGER PRIMARY KEY, v STRING);",
+      s"INSERT INTO w VALUES $eight;",          // an empty table's load: one part per core, a job
+      "INSERT INTO w VALUES (100, 'x');",        // one part: driver
+      "UPDATE w SET v = 'y' WHERE id = 100;",    // rewrites that part: driver
+      "BEGIN;",
+      "DELETE FROM w WHERE id = 100;",           // driver, staged
+      "COMMIT;",
+      "EXPLAIN ANALYZE UPDATE w SET v = 'z' WHERE id = 1;", // driver
+      "SELECT id, v FROM w WHERE id <= 2;",
+      "!status"))
+    assert(out.contains("Write: w 1 part, written on the driver"), out)
+    assert(out.contains("1|z") && out.contains("2|v2") && !out.contains("100|"), out)
+    val written = raw"Written:\s+(\d+) driver, (\d+) spark".r
+      .findFirstMatchIn(out).getOrElse(fail(s"no Written line in:\n$out"))
+    assert((written.group(1).toInt, written.group(2).toInt) == ((4, 1)), out)
+    val writes = raw"Writes:\s+(\d+) driver-checked, (\d+) spark-checked".r
+      .findFirstMatchIn(out).getOrElse(fail(s"no Writes line in:\n$out"))
+    assert((writes.group(1).toInt, writes.group(2).toInt) == ((2, 0)), out)
+  }
 }
