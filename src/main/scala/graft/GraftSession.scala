@@ -73,6 +73,32 @@ object GraftSession {
     spark
   }
 
+  /** The session one bounded stream runs on
+    * ([[graft.streaming.StreamQueries]]'s runner): a clone of `s`
+    * (`cloneSession`), so it sees the caller's conf, functions, temp
+    * views and optimizer extensions, with two settings of its own that
+    * the caller never sees:
+    *  - `spark.sql.shuffle.partitions` = `statePartitions` when given
+    *    (None keeps the caller's). A stateful operator keeps one state
+    *    store per shuffle partition (a stream-stream join keeps four),
+    *    each committing a delta file per micro-batch, and a query pins
+    *    its state partitioning from this value when it starts. At the
+    *    default that is fixed overhead for a bounded input (at
+    *    production scale the count goes up with volume instead); results
+    *    do not depend on it.
+    *  - `spark.sql.streaming.noDataMicroBatches.enabled` = false:
+    *    every watermark advance a bounded input needs comes from a data
+    *    batch (st02's sentinel chunks exist for this), so an extra
+    *    empty micro-batch per query is overhead.
+    * Writing these on the clone, never on `s`, is what lets two streams
+    * share one caller session: there is nothing to restore. */
+  def streamSession(s: SparkSession, statePartitions: Option[Int]): SparkSession = {
+    val clone = org.apache.spark.sql.GraftSessionBridge.cloneSession(s)
+    statePartitions.foreach(n => clone.conf.set("spark.sql.shuffle.partitions", n.toString))
+    clone.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
+    clone
+  }
+
   /** EXPLAIN analog (reference: ast.rs:17 `Explain`). Returns the
     * formatted physical plan, the artifact a user would inspect for
     * pushdown / join strategy / codegen spans. */

@@ -140,3 +140,16 @@ object GraftListenerBridge {
     case _ => ()
   }
 }
+
+/** Bridge to the private[sql] `SparkSession.cloneSession`: a new
+  * session over the same SparkContext that starts with a copy of the
+  * caller's conf, temp views, functions, query-execution listeners and
+  * optimizer extensions (not its streaming listeners), and whose later
+  * changes stay its own. */
+object GraftSessionBridge {
+  def cloneSession(s: SparkSession): SparkSession = s match {
+    case c: classic.SparkSession => c.cloneSession()
+    case other => throw new UnsupportedOperationException(
+      s"classic SparkSession required, got ${other.getClass.getName}")
+  }
+}

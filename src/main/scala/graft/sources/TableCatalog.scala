@@ -921,33 +921,60 @@ class TableCatalog(spark: SparkSession, val root: String) {
     else spark.read.schema(schema).parquet(dirs: _*)
 
   // --------------------------------------------------------------- DML
+  /** Constraint validation on the Spark route: NOT NULL, key
+    * uniqueness and FKs of `df`, by Spark aggregates and joins.
+    *  - Without `existing`, `df` is the whole new table (RESTORE, a
+    *    copy-on-write rewrite's new view).
+    *  - With `existing`, `df` is an APPEND, checked for only what an
+    *    append can break, against only the data that can conflict with
+    *    it. Existing rows already satisfied their constraints, so NOT
+    *    NULL and FK run on `df` alone. Key uniqueness is duplicates
+    *    WITHIN `df` plus a semi-join of its keys against the existing
+    *    rows, read through `existing`: the manifest's range pruning
+    *    restricted to `df`'s `[min, max]` of the key. Appends with
+    *    monotone keys (the common ingest shape) then validate against
+    *    ~zero existing files, the reference's per-row index probe in
+    *    distributed form.
+    * `resolve` supplies an FK parent's rows (a txn passes its own view).
+    *
+    * ONE aggregation action over `df` serves every per-column check
+    * (null counts, in-`df` duplicates, key bounds): `df` is often an
+    * expensive upstream plan (a curation cascade, a signature kernel
+    * pass), so a job per check would re-evaluate it per key.
+    * count/count_distinct/min/max all skip NULLs, as the joins do (a
+    * NaN key is a value, never dropped), so `count != distinct` is a
+    * duplicate among the non-NULL keys. The requires fire in a fixed
+    * order with fixed messages. */
   private def validate(m: TableMeta, name: String, df: DataFrame,
+      existing: Option[Column => DataFrame] = None,
       resolve: String => DataFrame = scan): Unit = {
-    val keys = m.primaryKey.toSeq ++ m.unique
     val nullKeys = m.primaryKey.toSeq ++ m.notNull
-    // ONE aggregation action for every per-column check (null counts,
-    // duplicate detection) instead of one Spark job per key: the job
-    // count of a DML validation is fixed overhead per published
-    // version, and each extra action re-evaluates (or at best re-reads)
-    // the snapshot frame. NULLs are excluded from the duplicate count
-    // exactly as before — count/count_distinct both skip NULLs, so
-    // `count != distinct` ⇔ the old na.drop + groupBy + count>1 check.
+    val keys = m.primaryKey.toSeq ++ m.unique
     if (nullKeys.nonEmpty || keys.nonEmpty) {
       val aggs =
         nullKeys.map(k => count(when(col(k).isNull, lit(1))).as(s"__null_$k")) ++
           keys.flatMap(k => Seq(count(col(k)).as(s"__cnt_$k"),
-            countDistinct(col(k)).as(s"__dst_$k")))
+            countDistinct(col(k)).as(s"__dst_$k")) ++
+            existing.toSeq.flatMap(_ =>
+              Seq(min(col(k)).as(s"__lo_$k"), max(col(k)).as(s"__hi_$k"))))
       val row = df.agg(aggs.head, aggs.tail: _*).head()
       for (k <- nullKeys)
         require(row.getAs[Long](s"__null_$k") == 0L, s"$name.$k: NOT NULL violated")
-      for (k <- keys)
+      for (k <- keys) {
         require(row.getAs[Long](s"__cnt_$k") == row.getAs[Long](s"__dst_$k"),
           s"$name.$k: UNIQUE/PRIMARY KEY violated")
+        for (pruned <- existing if !row.isNullAt(row.fieldIndex(s"__lo_$k"))) {
+          val (lo, hi) = (row.get(row.fieldIndex(s"__lo_$k")),
+            row.get(row.fieldIndex(s"__hi_$k")))
+          val clashes = pruned(col(k) >= lit(lo) && col(k) <= lit(hi)).select(col(k))
+            .join(df.select(col(k)).filter(col(k).isNotNull), Seq(k), "left_semi")
+          require(clashes.isEmpty, s"$name.$k: UNIQUE/PRIMARY KEY violated")
+        }
+      }
     }
     // referential integrity: every non-null FK value must exist in the
     // referenced table's PK — one distinct + anti-join per FK, the
-    // distributed form of the reference's per-row FK probe. `resolve`
-    // supplies the parent's view (a txn passes its own snapshot).
+    // distributed form of the reference's per-row FK probe
     for ((c, parent) <- m.references) {
       val pk = fkTargetMeta(parent)
         .getOrElse(sys.error(s"FK $name.$c: unknown table $parent")).primaryKey.get
@@ -957,62 +984,7 @@ class TableCatalog(spark: SparkSession, val root: String) {
     }
   }
 
-  /** INSERT-specialized validation: checks only what an APPEND can
-    * break, against only the data that can conflict with it. Existing
-    * rows already satisfied their constraints, so NOT NULL and FK run
-    * on the new batch alone; key uniqueness = duplicates WITHIN the
-    * batch + a semi-join of the batch's keys against the existing
-    * table, whose side reads through the manifest's range pruning
-    * restricted to the batch's [min,max]. Appends with monotone keys
-    * (the common ingest shape) then validate against ~zero existing
-    * files instead of scanning the whole table — the reference's
-    * per-row index probe, in distributed form. `pruned` supplies the
-    * files of the txn's view of the table, staged dirs included. */
-  private def validateInsert(
-      m: TableMeta, name: String, batch: DataFrame,
-      pruned: Column => DataFrame,
-      fkResolve: String => DataFrame): Unit = {
-    val nullKeys = m.primaryKey.toSeq ++ m.notNull
-    val keys = m.primaryKey.toSeq ++ m.unique
-    // ONE aggregation action over the batch for every per-column check
-    // (null counts, within-batch duplicates, key bounds) — the batch
-    // frame is often an expensive upstream plan (a curation cascade, a
-    // signature kernel pass), and the old one-job-per-check shape
-    // re-evaluated it up to 3× per key before the write even started.
-    // count/count_distinct/min/max all skip NULLs, as the joins below
-    // do (a NaN key is a value, never dropped), and the requires fire
-    // in the same order with the same messages.
-    if (nullKeys.nonEmpty || keys.nonEmpty) {
-      val aggs =
-        nullKeys.map(k => count(when(col(k).isNull, lit(1))).as(s"__null_$k")) ++
-          keys.flatMap(k => Seq(count(col(k)).as(s"__cnt_$k"),
-            countDistinct(col(k)).as(s"__dst_$k"),
-            min(col(k)).as(s"__lo_$k"), max(col(k)).as(s"__hi_$k")))
-      val row = batch.agg(aggs.head, aggs.tail: _*).head()
-      for (k <- nullKeys)
-        require(row.getAs[Long](s"__null_$k") == 0L, s"$name.$k: NOT NULL violated")
-      for (k <- keys) {
-        require(row.getAs[Long](s"__cnt_$k") == row.getAs[Long](s"__dst_$k"),
-          s"$name.$k: UNIQUE/PRIMARY KEY violated")
-        if (!row.isNullAt(row.fieldIndex(s"__lo_$k"))) {
-          val (lo, hi) = (row.get(row.fieldIndex(s"__lo_$k")),
-            row.get(row.fieldIndex(s"__hi_$k")))
-          val clashes = pruned(col(k) >= lit(lo) && col(k) <= lit(hi)).select(col(k))
-            .join(batch.select(col(k)).filter(col(k).isNotNull), Seq(k), "left_semi")
-          require(clashes.isEmpty, s"$name.$k: UNIQUE/PRIMARY KEY violated")
-        }
-      }
-    }
-    for ((c, parent) <- m.references) {
-      val pk = fkTargetMeta(parent)
-        .getOrElse(sys.error(s"FK $name.$c: unknown table $parent")).primaryKey.get
-      val orphans = batch.select(col(c)).filter(col(c).isNotNull).distinct()
-        .join(fkResolve(parent).select(col(pk).as(c)), Seq(c), "left_anti")
-      require(orphans.isEmpty, s"$name.$c: FK into $parent.$pk violated")
-    }
-  }
-
-  /** [[validateInsert]] for a batch already on the driver
+  /** [[validate]] of an append, for a batch already on the driver
     * ([[TableCatalog.localBatch]]): the same checks in the same order
     * with the same messages, with no batch aggregate. NOT NULL,
     * in-batch duplicates and each key's `[min, max]` come from the
@@ -2482,7 +2454,7 @@ class TableCatalog(spark: SparkSession, val root: String) {
       *    share of the view's rows ([[shareParts]]), so a one-row append
       *    is one unshuffled write task;
       *  - any other batch is cached and checked by Spark aggregates and
-      *    joins ([[validateInsert]]), then written over every core. */
+      *    joins ([[validate]]), then written over every core. */
     def insert(name: String, df: DataFrame): Unit = {
       open(); visible(name)
       if (createdTables.contains(name)) {
@@ -2517,7 +2489,7 @@ class TableCatalog(spark: SparkSession, val root: String) {
           val pruned = (f: Column) =>
             frameOf(m.schema, resolveDirs(name, candidates(name, m, f)._2))
           try {
-            validateInsert(m, name, cached, pruned = pruned, fkResolve = fkScan)
+            validate(m, name, cached, Some(pruned), fkScan)
             writeData(m, cached, dir).copy(checked = Some(false))
           } finally cached.unpersist() // failed validation must not leak cache
       }
@@ -2562,7 +2534,8 @@ class TableCatalog(spark: SparkSession, val root: String) {
         val route = try {
           if (check) validate(m, name,
             if (untouched.isEmpty) df
-            else frameOf(m.schema, resolveDirs(name, untouched)).unionByName(df), fkScan)
+            else frameOf(m.schema, resolveDirs(name, untouched)).unionByName(df),
+            resolve = fkScan)
           writeData(m, df, absTableDir(name).resolve(rel).toString,
             parts = rewriteParts(name, untouched, rewritten))
         } finally df.unpersist() // failed validation must not leak cache

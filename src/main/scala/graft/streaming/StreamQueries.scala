@@ -1,9 +1,9 @@
 package graft.streaming
 
-import graft.sources.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.sources.{TableCatalog, Tables}
+import org.apache.spark.sql.{DataFrame, Dataset, GraftColumnBridge, GraftListenerBridge, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode}
 
 /** Driver-visible streaming queries: real Structured Streaming
   * executions (readStream → stateful agg → memory sink) whose result
@@ -14,52 +14,63 @@ import org.apache.spark.sql.streaming.OutputMode
   */
 object StreamQueries {
 
-  /** Runs `body` (a streaming start→drain→stop) with the session's
-    * shuffle partitions dialed down to `n`, restoring the previous
-    * value after. Stateful streaming operators keep ONE state store
-    * per shuffle partition (a stream-stream join keeps four), each
-    * committing a delta file per micro-batch — at the default 32
-    * partitions that is pure fixed overhead for bounded inputs. The
-    * streaming query pins its state partitioning from this conf AT
-    * START, so the scope covers exactly the streaming run; results
-    * are partitioning-independent (every query here is
-    * oracle-checked). At production scale this knob goes UP with
-    * volume instead — state stores shard across executors.
-    *
-    * `body` gets the writer options its one stream starts with: a
-    * `checkpointLocation` under a FRESH `/dev/shm` root (never reused,
-    * so no accidental resume), deleted after. A bounded verification
-    * run commits offsets/state per micro-batch into its checkpoint;
-    * `/tmp` may be disk-backed while `/dev/shm` is tmpfs, so this keeps
-    * those fsyncs off the disk. It is a per-query option, not session
-    * conf, so concurrent calls on one session never see each other's
-    * root. Production streams pass their own durable checkpoint. */
-  private def withStatePartitions[T](s: SparkSession, n: Int)(body: Map[String, String] => T): T = {
+  /** Runs one bounded stream to its end and returns the session clone
+    * it ran on: the one place a graft stream starts, drains and stops.
+    *  - The stream runs on [[graft.GraftSession.streamSession]], a clone
+    *    of `s` with the query's own state partition count, so nothing is
+    *    written to `s`, neither conf nor temp view, and two streams can
+    *    run on one caller session at once. `stream`, built on `s`, is
+    *    rebound into the clone; the query is named `graft_<id>` there.
+    *  - A stream posts its events only to the listeners of the session
+    *    it runs on, so the caller's `StreamingQueryListener`s are added
+    *    to the clone before the start and removed only after the stop
+    *    and a listener-bus drain: they see every event of the run.
+    *  - Its `checkpointLocation` is a writer option naming a fresh root
+    *    on `/dev/shm` (never reused, so no accidental resume), deleted
+    *    after. A bounded run commits offsets and state per micro-batch,
+    *    and `/tmp` may be disk-backed where `/dev/shm` is tmpfs.
+    *    Production streams pass their own durable checkpoint. */
+  private def drain(s: SparkSession, id: String, stream: Dataset[_], statePartitions: Option[Int])
+      (sink: DataStreamWriter[Row] => DataStreamWriter[Row]): SparkSession = {
     import java.nio.file.{Files => JFiles, Paths => JPaths}
-    val key = "spark.sql.shuffle.partitions"
-    val noDataKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val prev = s.conf.get(key)
-    val prevNoData = s.conf.getOption(noDataKey)
+    val clone = graft.GraftSession.streamSession(s, statePartitions)
+    val listeners = s.streams.listListeners()
+    listeners.foreach(clone.streams.addListener)
     val shm = JPaths.get("/dev/shm")
-    val ckptRoot =
-      if (JFiles.isDirectory(shm) && JFiles.isWritable(shm))
-        Some(JFiles.createTempDirectory(shm, "graft-ckpt"))
-      else None
-    s.conf.set(key, n.toString)
-    // bounded inputs need no wall-clock no-data batches: every
-    // watermark advance that matters is driven by a DATA batch (st02's
-    // sentinel chunks exist precisely for this), so the extra empty
-    // micro-batch per query is pure fixed overhead here
-    s.conf.set(noDataKey, "false")
-    try body(ckptRoot.map(d => "checkpointLocation" -> d.toString).toMap) finally {
-      s.conf.set(key, prev)
-      prevNoData match {
-        case Some(v) => s.conf.set(noDataKey, v)
-        case None    => s.conf.unset(noDataKey)
+    val ckptRoot = Option.when(JFiles.isDirectory(shm) && JFiles.isWritable(shm))(
+      JFiles.createTempDirectory(shm, "graft-ckpt"))
+    try {
+      val q = sink(GraftColumnBridge.ofRows(clone, stream.queryExecution.logical)
+        .writeStream.queryName(s"graft_$id")
+        .options(ckptRoot.map(d => "checkpointLocation" -> d.toString).toMap)).start()
+      try q.processAllAvailable()
+      finally q.stop()
+      clone
+    } finally {
+      try if (listeners.nonEmpty) GraftListenerBridge.flush(s)
+      finally {
+        listeners.foreach(clone.streams.removeListener)
+        ckptRoot.foreach(TableCatalog.deleteRecursively)
       }
-      ckptRoot.foreach(graft.sources.TableCatalog.deleteRecursively)
     }
   }
+
+  /** [[drain]] into a memory sink, returning the sink's rows as a frame
+    * of `s`: the sink's own plan rebound into `s`, so nothing is copied.
+    * The clone's sink view is dropped, so a clone that outlives the call
+    * holds no rows. */
+  private def toMemory(s: SparkSession, id: String, stream: Dataset[_],
+      mode: OutputMode, statePartitions: Option[Int]): DataFrame = {
+    val clone = drain(s, id, stream, statePartitions)(_.format("memory").outputMode(mode))
+    val rows = GraftColumnBridge.ofRows(s, clone.table(s"graft_$id").queryExecution.analyzed)
+    clone.catalog.dropTempView(s"graft_$id")
+    rows
+  }
+
+  /** [[drain]] through `f`, once per micro-batch (`foreachBatch`). */
+  private def toBatches(s: SparkSession, id: String, stream: Dataset[_],
+      mode: OutputMode, statePartitions: Option[Int])(f: (DataFrame, Long) => Unit): Unit =
+    drain(s, id, stream, statePartitions)(_.outputMode(mode).foreachBatch(f))
 
   /** The raw events file-stream with `ts` normalized to µs
     * TimestampType — the shared front of every event-driven streaming
@@ -88,16 +99,8 @@ object StreamQueries {
       .select(col("window.start").as("hour_start"), col("event_type"),
         col("n_events"), col("sum_value"))
 
-    withStatePartitions(s, 8) { ckpt =>
-      val q = agg.writeStream.options(ckpt)
-        .format("memory").queryName("graft_st01_sink")
-        .outputMode(OutputMode.Complete)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
-
-    s.table("graft_st01_sink").orderBy("hour_start", "event_type")
+    toMemory(s, "st01", agg, OutputMode.Complete, Some(8))
+      .orderBy("hour_start", "event_type")
   }
 
   /** st02: the q26 sessionization executed by the streaming engine
@@ -117,15 +120,8 @@ object StreamQueries {
         .select(col("user_id"), col("ts"), col("event_type"),
           col("value").cast("double").as("value"))
         .as[Streams.Event]
-      withStatePartitions(s, 8) { ckpt =>
-        val q = Streams.sessionize(typed, gapMinutes = 30, watermark = "10 minutes")
-          .writeStream.options(ckpt).format("memory").queryName("graft_st02_sink")
-          .outputMode(OutputMode.Append)
-          .start()
-        try q.processAllAvailable()
-        finally q.stop() // the memory sink holds the rows
-      }
-      s.table("graft_st02_sink")
+      toMemory(s, "st02", Streams.sessionize(typed, gapMinutes = 30, watermark = "10 minutes"),
+          OutputMode.Append, Some(8))
         .filter(col("user_id") >= 0)
         .select(col("user_id"), col("start_ts"), col("end_ts"), col("n_events"),
           // values are money-like 2-decimal doubles; rounding removes the
@@ -283,15 +279,7 @@ object StreamQueries {
           round(sum(dec2(col("value"))).cast("double"), 2).as("total_value"))
         .select(col("user_id"), col("sw.start").as("start_ts"),
           col("n_events"), col("total_value"))
-      withStatePartitions(s, 8) { ckpt =>
-        val q = agg.writeStream.options(ckpt)
-          .format("memory").queryName("graft_st12_sink")
-          .outputMode(OutputMode.Append)
-          .start()
-        try q.processAllAvailable()
-        finally q.stop()
-      }
-      s.table("graft_st12_sink")
+      toMemory(s, "st12", agg, OutputMode.Append, Some(8))
         .filter(col("user_id") >= 0)
         .orderBy("user_id", "start_ts")
     }
@@ -315,23 +303,9 @@ object StreamQueries {
       .schema(schema)
       .option("pathGlobFilter", "documents.parquet")
       .parquet(d)
-    withStatePartitions(s, 8) { ckpt =>
-      val q = stream
-        .dropDuplicates("text")
-        .select(col("text"))
-        .writeStream.options(ckpt).format("memory").queryName("graft_st03_sink")
-        .outputMode(OutputMode.Append)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
-    s.table("graft_st03_sink").orderBy("text")
+    toMemory(s, "st03", stream.dropDuplicates("text").select(col("text")),
+      OutputMode.Append, Some(8)).orderBy("text")
   }
-
-  /** State rows the streaming engine held after st14's LAST micro-batch
-    * — spec observability for the watermark-bounded-state claim. −1
-    * until st14 runs. */
-  @volatile private[graft] var st14StateRowsAfterLastBatch: Long = -1L
 
   /** st14: streaming dedup with WATERMARK-BOUNDED state — st03's
     * production form (`dropDuplicatesWithinWatermark`): the state
@@ -349,7 +323,7 @@ object StreamQueries {
     * as late — both correct), so the output equals the source rows
     * exactly (the DuckDB oracle), and after the last batch the state
     * store holds only the not-yet-expired sentinel keys — asserted by
-    * spec via [[st14StateRowsAfterLastBatch]]. */
+    * spec from the run's last progress event. */
   def st14StreamDedupWatermark(s: SparkSession, d: String): DataFrame = {
     import java.nio.file.{Files => JFiles, Paths => JPaths}
     import s.implicits._
@@ -388,18 +362,7 @@ object StreamQueries {
             .dropDuplicatesWithinWatermark("event_id")
             .select(col("event_id"), col("user_id"), col("event_type"),
               col("value"))
-          withStatePartitions(s, 8) { ckpt =>
-            val q = deduped.writeStream.options(ckpt)
-              .format("memory").queryName("graft_st14_sink")
-              .outputMode(OutputMode.Append)
-              .start()
-            try {
-              q.processAllAvailable()
-              st14StateRowsAfterLastBatch = q.recentProgress
-                .flatMap(_.stateOperators.map(_.numRowsTotal)).lastOption.getOrElse(-1L)
-            } finally q.stop()
-          }
-          s.table("graft_st14_sink")
+          toMemory(s, "st14", deduped, OutputMode.Append, Some(8))
             .filter(col("user_id") >= 0) // sentinel rows out
             .orderBy("event_id")
         } finally graft.sources.TableCatalog.deleteTree(tmp)
@@ -430,17 +393,8 @@ object StreamQueries {
   }
 
   def st04StreamJoin(s: SparkSession, d: String): DataFrame = {
-    val agg = st04Agg(s, d)
-    withStatePartitions(s, 8) { ckpt =>
-      val q = agg.writeStream.options(ckpt)
-        .format("memory").queryName("graft_st04_sink")
-        .outputMode(OutputMode.Complete)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
-
-    s.table("graft_st04_sink").orderBy("hour_start", "c_mktsegment")
+    toMemory(s, "st04", st04Agg(s, d), OutputMode.Complete, Some(8))
+      .orderBy("hour_start", "c_mktsegment")
   }
 
   /** The st05 streaming frame, unstarted (split out for the spec's
@@ -471,22 +425,13 @@ object StreamQueries {
   /** st05: the stream-stream join executed live; bounded input ⇒ the
     * emitted pair set equals the batch inequality join, which the
     * DuckDB oracle checks. */
-  def st05StreamStreamJoin(s: SparkSession, d: String): DataFrame = {
-    val agg = st05Agg(s, d)
+  def st05StreamStreamJoin(s: SparkSession, d: String): DataFrame =
     // 2, not 8: a stream-stream join keeps FOUR state stores per
     // shuffle partition, so its fixed commit cost scales 4× faster
     // with this knob than any other query here (measured: 2 beats 8
     // by ~20% on the bounded run)
-    withStatePartitions(s, 2) { ckpt =>
-      val q = agg.writeStream.options(ckpt)
-        .format("memory").queryName("graft_st05_sink")
-        .outputMode(OutputMode.Append)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
-    s.table("graft_st05_sink").orderBy("click_id", "error_id")
-  }
+    toMemory(s, "st05", st05Agg(s, d), OutputMode.Append, Some(2))
+      .orderBy("click_id", "error_id")
 
   /** st06: streaming DECONTAMINATION at ingest — the streaming twin of
     * batch d08: documents stream in, their word-8-gram hash sets
@@ -514,15 +459,7 @@ object StreamQueries {
       .join(broadcast(evalGrams), "gh")
       .groupBy("doc_id")
       .agg(count(lit(1)).cast("int").as("n_shared_8grams"))
-    withStatePartitions(s, 8) { ckpt =>
-      val q = flagged.writeStream.options(ckpt)
-        .format("memory").queryName("graft_st06_sink")
-        .outputMode(OutputMode.Complete)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
-    s.table("graft_st06_sink").orderBy("doc_id")
+    toMemory(s, "st06", flagged, OutputMode.Complete, Some(8)).orderBy("doc_id")
   }
 
   /** st07: streaming ingest INTO the versioned catalog — the write
@@ -546,14 +483,8 @@ object StreamQueries {
     val stream = rawEventsStream(s, d)
       .select(col("event_id"), col("user_id"), col("event_type"),
         col("value").cast("double").as("value"))
-    withStatePartitions(s, 8) { ckpt =>
-      val q = stream.writeStream.options(ckpt)
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          cat.insert("events_ingest", batch): Unit
-        }
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
+    toBatches(s, "st07", stream, OutputMode.Append, Some(8)) { (batch, _) =>
+      cat.insert("events_ingest", batch)
     }
     cat.scan("events_ingest").orderBy("event_id")
   }
@@ -575,15 +506,8 @@ object StreamQueries {
       .groupBy("term").agg(count(lit(1)).as("n"))
       .orderBy(col("n").desc, col("term"))
       .limit(20)
-    withStatePartitions(s, 8) { ckpt =>
-      val q = agg.writeStream.options(ckpt)
-        .format("memory").queryName("graft_st08_sink")
-        .outputMode(OutputMode.Complete)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
-    s.table("graft_st08_sink").orderBy(col("n").desc, col("term"))
+    toMemory(s, "st08", agg, OutputMode.Complete, Some(8))
+      .orderBy(col("n").desc, col("term"))
   }
 
   /** st09: streaming CURATION at ingest — the streaming twin of the
@@ -604,22 +528,15 @@ object StreamQueries {
       .schema(schema)
       .option("pathGlobFilter", "documents.parquet")
       .parquet(d)
-    withStatePartitions(s, 8) { ckpt =>
-      val q = stream
-        .select(col("text"),
-          TextAnalysis.nTokensCol.cast("int").as("n_tokens"),
-          TextAnalysis.qualityScoreCol.as("quality_score"),
-          TextAnalysis.nBlockedCol.as("n_blocked"))
-        .filter(col("quality_score") >= TextAnalysis.qualityGate && col("n_blocked") === 0)
-        .dropDuplicates("text")
-        .select("text", "n_tokens", "quality_score")
-        .writeStream.options(ckpt).format("memory").queryName("graft_st09_sink")
-        .outputMode(OutputMode.Append)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
-    s.table("graft_st09_sink").orderBy("text")
+    val curated = stream
+      .select(col("text"),
+        TextAnalysis.nTokensCol.cast("int").as("n_tokens"),
+        TextAnalysis.qualityScoreCol.as("quality_score"),
+        TextAnalysis.nBlockedCol.as("n_blocked"))
+      .filter(col("quality_score") >= TextAnalysis.qualityGate && col("n_blocked") === 0)
+      .dropDuplicates("text")
+      .select("text", "n_tokens", "quality_score")
+    toMemory(s, "st09", curated, OutputMode.Append, Some(8)).orderBy("text")
   }
 
   /** st10: streaming curation INTO the versioned catalog — the
@@ -649,22 +566,16 @@ object StreamQueries {
       .schema(schema)
       .option("pathGlobFilter", "documents.parquet")
       .parquet(d)
-    withStatePartitions(s, 8) { ckpt =>
-      val q = stream
-        .select(col("text"),
-          TextAnalysis.nTokensCol.cast("int").as("n_tokens"),
-          TextAnalysis.qualityScoreCol.as("quality_score"),
-          TextAnalysis.nBlockedCol.as("n_blocked"))
-        .filter(col("quality_score") >= TextAnalysis.qualityGate && col("n_blocked") === 0)
-        .dropDuplicates("text")
-        .select("text", "n_tokens", "quality_score")
-        .writeStream.options(ckpt)
-        .foreachBatch { (batch: DataFrame, bid: Long) =>
-          idempotentIngest(s, cat, "curated_stream", batch, bid)
-        }
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
+    val curated = stream
+      .select(col("text"),
+        TextAnalysis.nTokensCol.cast("int").as("n_tokens"),
+        TextAnalysis.qualityScoreCol.as("quality_score"),
+        TextAnalysis.nBlockedCol.as("n_blocked"))
+      .filter(col("quality_score") >= TextAnalysis.qualityGate && col("n_blocked") === 0)
+      .dropDuplicates("text")
+      .select("text", "n_tokens", "quality_score")
+    toBatches(s, "st10", curated, OutputMode.Append, Some(8)) { (batch, bid) =>
+      idempotentIngest(s, cat, "curated_stream", batch, bid)
     }
     cat.scan("curated_stream").orderBy("text")
   }
@@ -712,15 +623,7 @@ object StreamQueries {
       .parquet(d)
     val agg = stream.select(TextAnalysis.termCol)
       .agg(SketchAgg.cmsSketch(col("term")).as("cms"))
-    withStatePartitions(s, 1) { ckpt =>
-      val q = agg.writeStream.options(ckpt)
-        .format("memory").queryName("graft_st11_sink")
-        .outputMode(OutputMode.Complete)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
-    TextAnalysis.cmsProbeFrame(s, s.table("graft_st11_sink"))
+    TextAnalysis.cmsProbeFrame(s, toMemory(s, "st11", agg, OutputMode.Complete, Some(1)))
   }
 
   /** st13: STREAMING MATERIALIZED VIEW into the lakehouse — the
@@ -748,15 +651,8 @@ object StreamQueries {
         .agg(count(lit(1)).cast("int").as("n_events"),
           round(sum(col("value").cast("decimal(18,2)")).cast("double"), 2)
             .as("total_value"))
-      withStatePartitions(s, 8) { ckpt =>
-        val q = agg.writeStream.options(ckpt)
-          .outputMode(OutputMode.Complete)
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            cat.merge("user_stats", batch): Unit
-          }
-          .start()
-        try q.processAllAvailable()
-        finally q.stop()
+      toBatches(s, "st13", agg, OutputMode.Complete, Some(8)) { (batch, _) =>
+        cat.merge("user_stats", batch)
       }
       cat.scan("user_stats").filter(col("user_id") >= 0).orderBy("user_id")
     }
@@ -804,22 +700,10 @@ object StreamQueries {
       .join(lm, "term") // stateless broadcast lookup, no stream shuffle
       .groupBy("doc_id")
       .agg((round(sum(col("llr")), 4) + lit(0.0)).as("dsir_score"))
-    withStatePartitions(s, 8) { ckpt =>
-      val q = agg.writeStream.options(ckpt)
-        .format("memory").queryName("graft_st15_sink")
-        .outputMode(OutputMode.Complete)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
-    s.table("graft_st15_sink")
+    toMemory(s, "st15", agg, OutputMode.Complete, Some(8))
       .select(col("doc_id"), col("dsir_score"), (col("dsir_score") > 0).as("keep"))
       .orderBy("doc_id")
   }
-
-  /** State-operator count of st16's last run — spec observability for
-    * the statelessness claim (−1 until st16 runs). */
-  @volatile private[graft] var st16StateOperators: Int = -1
 
   /** st16: STREAMING TOKENIZATION — the steady-state twin of t20 and
     * the production serving shape of the tokenizer arc (t19 trains →
@@ -848,19 +732,9 @@ object StreamQueries {
     val toks = stream.select(col("doc_id"), enc.as("e"))
       .select(col("doc_id"), col("e.n_bpe_tokens").as("n_bpe_tokens"),
         concat_ws(",", col("e.token_ids")).as("token_ids"))
-    val q = toks.writeStream
-      .format("memory").queryName("graft_st16_sink")
-      .outputMode(OutputMode.Append)
-      .start()
-    try {
-      q.processAllAvailable()
-      st16StateOperators = q.recentProgress
-        .map(_.stateOperators.length).maxOption.getOrElse(-1)
-    } finally q.stop()
-    s.table("graft_st16_sink").orderBy("doc_id")
+    // stateless: no state partitions to set
+    toMemory(s, "st16", toks, OutputMode.Append, None).orderBy("doc_id")
   }
-
-  @volatile private[graft] var st18StateOperators: Int = -1
 
   /** st18: STREAMING IMAGE-TEXT PAIR FILTERING — the streaming twin
     * of batch m08 and the serving shape of the LAION gate: a crawler
@@ -894,16 +768,7 @@ object StreamQueries {
         round(graft.functions.cosine_sim(col("ivec"), col("tvec")), 4)
           .as("align_score"))
       .withColumn("kept", col("align_score") >= Multimodal.PairTau)
-    val q = scored.writeStream
-      .format("memory").queryName("graft_st18_sink")
-      .outputMode(OutputMode.Append)
-      .start()
-    try {
-      q.processAllAvailable()
-      st18StateOperators = q.recentProgress
-        .map(_.stateOperators.length).maxOption.getOrElse(-1)
-    } finally q.stop()
-    s.table("graft_st18_sink").orderBy("doc_id")
+    toMemory(s, "st18", scored, OutputMode.Append, None).orderBy("doc_id")
   }
 
   /** st17: STREAMING QUALITY CLASSIFICATION — the streaming twin of
@@ -931,15 +796,7 @@ object StreamQueries {
       .groupBy("doc_id")
       .agg(count(lit(1)).cast("int").as("n_feats"),
         (round(sum(col("w")) + lit(prior), 4) + lit(0.0)).as("nb_score"))
-    withStatePartitions(s, 8) { ckpt =>
-      val q = agg.writeStream.options(ckpt)
-        .format("memory").queryName("graft_st17_sink")
-        .outputMode(OutputMode.Complete)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
-    s.table("graft_st17_sink")
+    toMemory(s, "st17", agg, OutputMode.Complete, Some(8))
       .withColumn("pred_trusted", col("nb_score") > 0)
       .orderBy("doc_id")
   }
@@ -1004,16 +861,7 @@ object StreamQueries {
       .select(col("doc_id"),  col("source"),
         graft.operators.TextAnalysis.nTokensCol.cast("long").as("n_tokens"))
       .as[(Long, String, Long)]
-    val packed = packStream(rows)
-    withStatePartitions(s, 8) { ckpt =>
-      val q = packed.writeStream.options(ckpt)
-        .format("memory").queryName("graft_st19_sink")
-        .outputMode(OutputMode.Append)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
-    s.table("graft_st19_sink")
+    toMemory(s, "st19", packStream(rows), OutputMode.Append, Some(8))
       .select(col("doc_id"), col("source"), col("n_tokens"), col("tokens_before"),
         shiftright(col("tokens_before"), 8).as("pack_id"),
         (col("tokens_before") % 256).as("pack_offset"))
@@ -1063,13 +911,11 @@ object StreamQueries {
       .option("pathGlobFilter", "documents.parquet")
       .parquet(d)
       .filter(col("doc_id") % 2 =!= 0)
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        Dedup.d17Maintain(s, cat, Dedup.signatureOf(batch), bid)
-      }
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
+    // the caller's partition count: the batch function's own jobs
+    // run under it, and the stream keeps no state
+    toBatches(s, "st20", stream, OutputMode.Append, None) { (batch, bid) =>
+      Dedup.d17Maintain(s, cat, Dedup.signatureOf(batch), bid)
+    }
     cat.scan("corpus_cluster_map").orderBy("doc_id")
   }
 

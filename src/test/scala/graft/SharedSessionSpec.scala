@@ -64,17 +64,33 @@ class SharedSessionSpec extends AnyFunSuite {
     def st12() = rows(StreamQueries.st12StreamSessionWindow(spark, TestSpark.sf))
     assert(spark.conf.getOption(key).isEmpty)
     val (solo01, solo12) = (st01(), st12())
-    // shuffle.partitions and noDataMicroBatches are still saved and
-    // restored around each stream, so two interleaved streams can leave
-    // either one changed; reset both for the suites that run after
-    val kept = Seq("spark.sql.shuffle.partitions",
-      "spark.sql.streaming.noDataMicroBatches.enabled").map(k => k -> spark.conf.getOption(k))
+    // each stream sets its state partitions and no-data flag on a clone
+    // of the session, so two interleaved streams leave both untouched
+    val keys = Seq(key, "spark.sql.shuffle.partitions",
+      "spark.sql.streaming.noDataMicroBatches.enabled")
+    def settings() = keys.map(k => k -> spark.conf.getOption(k))
+    def tables() = spark.catalog.listTables().collect().map(_.name).sorted.toSeq
+    val (settingsBefore, tablesBefore) = (settings(), tables())
     var (got01, got12) = (Seq.empty[String], Seq.empty[String])
-    try {
-      val errors = concurrently(() => got01 = st01(), () => got12 = st12())
-      assert(errors.isEmpty, errors.mkString("\n"))
-      assert(spark.conf.getOption(key).isEmpty, spark.conf.getOption(key))
-    } finally kept.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+    val errors = concurrently(() => got01 = st01(), () => got12 = st12())
+    assert(errors.isEmpty, errors.mkString("\n"))
+    assert(settings() == settingsBefore)
+    assert(tables() == tablesBefore)
     assert(got01 == solo01 && got12 == solo12)
+  }
+
+  test("st01 over two scale factors on two threads of one session: each gets its own rows") {
+    import graft.streaming.StreamQueries
+    def st01(sf: String)(): Seq[String] =
+      StreamQueries.st01StreamWindow(spark, sf).collect().map(_.toString).toSeq.sorted
+    val (small, large) = (TestSpark.sf,
+      java.nio.file.Path.of(TestSpark.sf).resolveSibling("sf0.01").toString)
+    val (soloSmall, soloLarge) = (st01(small)(), st01(large)())
+    assert(soloSmall != soloLarge)
+    var (gotSmall, gotLarge) = (Seq.empty[String], Seq.empty[String])
+    val errors = concurrently(() => gotSmall = st01(small)(), () => gotLarge = st01(large)())
+    assert(errors.isEmpty, errors.mkString("\n"))
+    assert(gotSmall == soloSmall, "the sf0.001 stream's rows")
+    assert(gotLarge == soloLarge, "the sf0.01 stream's rows")
   }
 }

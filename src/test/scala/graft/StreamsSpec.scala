@@ -3,13 +3,30 @@ package graft
 import graft.streaming.Streams
 import graft.streaming.Streams.{Event, Session}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQueryListener, StreamingQueryProgress}
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Structured Streaming semantics with a MemoryStream source and
   * memory sink (SURVEY.md §2 st01/st02). */
-class StreamsSpec extends AnyFunSuite {
+class StreamsSpec extends AnyFunSuite with BeforeAndAfterAll {
   private lazy val spark = TestSpark.spark
+
+  /** The progress events of the latest run of each named stream, from a
+    * listener on the suite's own session: a declared stream runs on a
+    * clone of the session, which forwards every event to it. */
+  private object progress extends StreamingQueryListener {
+    private val runs = new java.util.concurrent.ConcurrentHashMap[String, Vector[StreamingQueryProgress]]()
+    override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit =
+      Option(e.name).foreach(runs.put(_, Vector.empty))
+    override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
+      Option(e.progress.name).foreach(runs.merge(_, Vector(e.progress), _ ++ _))
+    override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+    def of(name: String): Vector[StreamingQueryProgress] =
+      Option(runs.get(name)).getOrElse(Vector.empty)
+  }
+  override def beforeAll(): Unit = spark.streams.addListener(progress)
+  override def afterAll(): Unit = spark.streams.removeListener(progress)
 
   private def ts(minutes: Long): java.sql.Timestamp =
     new java.sql.Timestamp(1700000000000L + minutes * 60000L)
@@ -289,7 +306,8 @@ class StreamsSpec extends AnyFunSuite {
     // sentinel batches push the watermark past every real event, the
     // state store holds only not-yet-expired sentinel keys — NOT the
     // corpus's distinct count (st03's unbounded-state contrast)
-    val stateRows = streaming.StreamQueries.st14StateRowsAfterLastBatch
+    val stateRows = progress.of("graft_st14")
+      .flatMap(_.stateOperators.map(_.numRowsTotal)).lastOption.getOrElse(-1L)
     assert(stateRows >= 0, "no state metrics recorded")
     assert(stateRows < expect.length / 10,
       s"state not evicted under the watermark: $stateRows rows held " +
@@ -304,8 +322,10 @@ class StreamsSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSeq
     assert(got == want, "streamed tokenization must equal the batch t20 output")
     // the stream is STATELESS: one kernel call per doc, no state store
-    assert(streaming.StreamQueries.st16StateOperators == 0,
-      s"expected zero state operators, saw ${streaming.StreamQueries.st16StateOperators}")
+    val st16StateOperators = progress.of("graft_st16")
+      .map(_.stateOperators.length).maxOption.getOrElse(-1)
+    assert(st16StateOperators == 0,
+      s"expected zero state operators, saw ${st16StateOperators}")
   }
 
   test("st19 DRIVER QUERY: streamed packing equals the per-source batch prefix sum") {
@@ -357,8 +377,10 @@ class StreamsSpec extends AnyFunSuite {
     assert(got == want, "streamed pair scoring must equal the batch m08 output")
     assert(got.exists(_._3) && got.exists(!_._3), "both verdicts present")
     // stateless: descriptor + broadcast lookup + verdict, no state store
-    assert(streaming.StreamQueries.st18StateOperators == 0,
-      s"expected zero state operators, saw ${streaming.StreamQueries.st18StateOperators}")
+    val st18StateOperators = progress.of("graft_st18")
+      .map(_.stateOperators.length).maxOption.getOrElse(-1)
+    assert(st18StateOperators == 0,
+      s"expected zero state operators, saw ${st18StateOperators}")
   }
 
   test("st15 DRIVER QUERY: streamed DSIR scores equal the batch t18 importance weights") {
