@@ -17,6 +17,10 @@ object GraftTypes {
     * reference-arithmetic expressions whose long-vs-double dispatch
     * must read the raw child type. */
   val numeric: AbstractType = types.NumericType
+
+  /** `s` with every field nullable at every depth, as a file source
+    * reads it (`asNullable` is private[spark]). */
+  def asNullable(s: types.StructType): types.StructType = s.asNullable
 }
 
 object GraftColumnBridge {

@@ -4,7 +4,7 @@ import com.fasterxml.jackson.core.JsonProcessingException
 import com.fasterxml.jackson.core.util.{DefaultPrettyPrinter, Separators}
 import com.fasterxml.jackson.databind.{DeserializationFeature, JsonMappingException, JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
-import graft.sources.TableCatalog.{FileStat, TableMeta}
+import graft.sources.TableCatalog.{FileRecord, FileStat, TableMeta}
 import java.nio.file.{Files, Path}
 import org.apache.spark.sql.types.{DataType, StructType}
 import scala.jdk.CollectionConverters._
@@ -16,8 +16,13 @@ import scala.jdk.CollectionConverters._
   *    `indexes` (string arrays), `defaults` (column → string, boolean
   *    or number) and `references` (column → table). The user-keyed
   *    objects come last;
-  *  - `versions/vN.json`, the manifest of version N: `dirs`, `dirRows`
-  *    (entry → footer row count) and `stats` (per-file zone maps);
+  *  - `versions/vN.json`, the manifest of version N: `files`, one
+  *    record per data file (`rows`, its footer row count; `bytes`, its
+  *    uncompressed row-group bytes; `path`, table-relative), and `stats`
+  *    (per-file zone maps). A record names its path last, so no record
+  *    begins as a stat does (`{"path": …`). The old shape, `dirs`
+  *    (entries: data dirs, or single files of one) and `dirRows` (entry
+  *    → footer row count), is still read, never written;
   *  - `commits/gN.json`, a journal entry, and `commits/cN.json`, a
   *    checkpoint: `tables` (table → version) and `dropped`;
   *  - `pins/txn-<id>.json`, an open txn's pin: `tables`.
@@ -46,9 +51,11 @@ private[graft] object CatalogCodec {
     .withObjectIndenter(new DefaultPrettyPrinter.NopIndenter)
     .withArrayIndenter(new DefaultPrettyPrinter.NopIndenter))
 
-  /** Manifest of one table version: its entries (data dirs, or single
-    * files of one), their footer row counts, and per-file zone maps. */
-  case class Manifest(dirs: Seq[String], dirRows: Map[String, Long], stats: Seq[FileStat])
+  /** Manifest of one table version: a record per data file and per-file
+    * zone maps. `entries` holds an old-shape manifest's entries with
+    * their stored row counts, and `files` is then empty. */
+  case class Manifest(files: Seq[FileRecord], stats: Seq[FileStat],
+      entries: Seq[(String, Long)] = Nil)
 
   def metaBytes(m: TableMeta): Array[Byte] = {
     val o = mapper.createObjectNode()
@@ -92,10 +99,10 @@ private[graft] object CatalogCodec {
     strict(p)(o => entries(o.path("references")).map { case (k, v) => k -> text(v) }.toMap)
 
   def manifestBytes(m: Manifest): Array[Byte] = {
+    require(m.entries.isEmpty, "an old-shape manifest is written only as file records")
     val o = mapper.createObjectNode()
-    strings(o.putArray("dirs"), m.dirs)
-    val rows = o.putObject("dirRows")
-    m.dirs.foreach(d => rows.put(d, m.dirRows(d)))
+    val files = o.putArray("files")
+    m.files.foreach(f => files.addObject().put("rows", f.rows).put("bytes", f.bytes).put("path", f.path))
     val stats = o.putArray("stats")
     m.stats.foreach { f =>
       stats.addObject().put("path", f.path).put("column", f.column).put("mn", f.min).put("mx", f.max)
@@ -103,13 +110,19 @@ private[graft] object CatalogCodec {
     writer.writeValueAsBytes(o)
   }
 
-  /** A manifest; `dirRows` and `stats` are empty where the file has none. */
+  /** A manifest of either shape; `stats` is empty where the file has
+    * none. Each old-shape entry must have its row count. */
   def readManifest(p: Path): Manifest = strict(p) { o =>
-    Manifest(
-      dirs = texts(field(o, "dirs")),
-      dirRows = entries(o.path("dirRows")).map { case (k, v) => k -> long(v) }.toMap,
-      stats = elements(o.path("stats")).map(s => FileStat(text(field(s, "path")),
-        text(field(s, "column")), text(field(s, "mn")), text(field(s, "mx")))).toSeq)
+    val stats = elements(o.path("stats")).map(s => FileStat(text(field(s, "path")),
+      text(field(s, "column")), text(field(s, "mn")), text(field(s, "mx")))).toSeq
+    if (o.has("files"))
+      Manifest(elements(o.get("files")).map(f => FileRecord(text(field(f, "path")),
+        long(field(f, "rows")), long(field(f, "bytes")))).toSeq, stats)
+    else {
+      val rows = entries(o.path("dirRows")).map { case (k, v) => k -> long(v) }.toMap
+      Manifest(Nil, stats, texts(field(o, "dirs")).map(d =>
+        d -> rows.getOrElse(d, bad(s"absent row count of $d"))))
+    }
   }
 
   /** A journal entry or checkpoint: tables published, tables dropped. */

@@ -18,13 +18,16 @@ import scala.jdk.CollectionConverters._
   * a distributed filesystem, so the same semantics are re-expressed as
   * manifest-versioned parquet (the Iceberg/Delta design, minimal form):
   *
-  *  - a table = a directory of immutable parquet data dirs + one JSON
-  *    manifest per version listing the dirs that version comprises
-  *  - INSERT appends a new data dir and a manifest that extends the
-  *    previous one (no rewrite of existing data — at 100 TB an insert
-  *    moves only the new bytes)
-  *  - UPDATE / DELETE are copy-on-write: rewrite the affected rows
-  *    into a fresh snapshot dir (what Delta/Iceberg CoW does)
+  *  - a table = immutable parquet files in data dirs + one JSON
+  *    manifest per version with one record per file of that version
+  *    (path, footer row count, uncompressed bytes) and per-file zone
+  *    maps, written once by the writer of the file and read by every
+  *    reader of the version (Delta's `add` actions, minimal form)
+  *  - INSERT writes a new data dir and a manifest that extends the
+  *    previous one's records (no rewrite of existing data — at 100 TB
+  *    an insert moves only the new bytes)
+  *  - UPDATE / DELETE are copy-on-write: rewrite the files that may
+  *    hold affected rows into a fresh dir (what Delta/Iceberg CoW does)
   *  - the version pointer is bumped last, atomically — readers never
   *    see a half-written version
   *  - time travel = reading an old manifest ([[TableCatalog.asOf]])
@@ -39,7 +42,7 @@ import scala.jdk.CollectionConverters._
 class TableCatalog(spark: SparkSession, val root: String) {
 
   import CatalogCodec.Manifest
-  import TableCatalog.{FileStat, LocalReadMaxBytes, LocalReadMaxFiles, LocalReadMaxRows, ReadRoute, TableMeta, WriteConflictException, WriteRoute}
+  import TableCatalog.{FileRecord, FileStat, LocalReadMaxBytes, LocalReadMaxFiles, LocalReadMaxRows, ReadRoute, TableMeta, WriteConflictException, WriteRoute}
 
   Files.createDirectories(Paths.get(root))
 
@@ -123,7 +126,7 @@ class TableCatalog(spark: SparkSession, val root: String) {
     }
     Files.createDirectories(tableDir(name).resolve("versions"))
     Files.createDirectories(tableDir(name).resolve("data"))
-    writeManifest(name, 0, Nil)
+    writeManifest(name, 0, Manifest(Nil, Nil))
     writeMeta(name,
       TableMeta(schema, primaryKey, notNull, unique, defaults, references, 0, indexes))
     journalRecord(Map(name -> 0))
@@ -170,53 +173,18 @@ class TableCatalog(spark: SparkSession, val root: String) {
     * concurrent writer in ANOTHER process (the JVM rootLock can't see
     * it) that lost the race fails here with a conflict instead of
     * silently overwriting the winner's manifest. */
-  private def writeManifest(name: String, v: Int, dirs: Seq[String],
-      stats: Seq[FileStat] = Nil): Unit = {
-    // per-dir row counts recorded AT PUBLISH (parquet footer metadata —
-    // no Spark job; a dir already counted by this process is cached,
-    // CoW dirs are immutable so the cache can never go stale). SHOW
-    // HISTORY then reads counts from the manifest instead of running
-    // one count job per retained version. The PREVIOUS version's
-    // stored counts seed the cache first: publishes run inside
-    // rootLock, and without the seed a fresh process's first append
-    // would footer-scan every retained dir under the lock — an
-    // O(table-files) critical section; with it, only THIS publish's
-    // new dirs are scanned (one JSON read + O(new files)).
-    if (v > 0 && Files.exists(manifestPath(name, v - 1)))
-      manifest(name, v - 1).dirRows.foreach { case (dr, n) =>
-        dirRowsCache.putIfAbsent(s"$name|$dr", n)
-      }
-    val body = CatalogCodec.manifestBytes(
-      Manifest(dirs, dirs.map(dr => dr -> dirRowCount(name, dr)).toMap, stats))
-    try Files.write(manifestPath(name, v), body, java.nio.file.StandardOpenOption.CREATE_NEW)
+  private def writeManifest(name: String, v: Int, m: Manifest): Unit =
+    try Files.write(manifestPath(name, v), CatalogCodec.manifestBytes(m),
+      java.nio.file.StandardOpenOption.CREATE_NEW)
     catch {
       case _: java.nio.file.FileAlreadyExistsException =>
         throw new WriteConflictException(
           s"write-write conflict on $name: version $v already published by another writer")
     }
-  }
 
-  /** Row count of one immutable manifest entry — a data dir, or a
-    * single file of one — from its parquet FOOTERS: pure metadata
-    * reads, never a Spark job. Cached per (table, entry): copy-on-write
-    * files never change after publish. */
-  private val dirRowsCache = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-  private def dirRowCount(name: String, rel: String): Long = {
-    val cached = dirRowsCache.get(s"$name|$rel")
-    if (cached != null) cached else footerTotals(name, rel)._1
-  }
-
-  /** Uncompressed bytes of one manifest entry's row groups, from the
-    * same footer read as [[dirRowCount]] and cached beside it. */
-  private val entryBytesCache = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-  private def entryBytes(name: String, rel: String): Long = {
-    val cached = entryBytesCache.get(s"$name|$rel")
-    if (cached != null) cached else footerTotals(name, rel)._2
-  }
-
-  // the Hadoop conf footer reads go through: building one parses
-  // Hadoop's XML resources, so it is rebuilt only when the session
-  // conf changes (the guard of `localReaders`)
+  // the Hadoop conf footer reads and driver writes go through: building
+  // one parses Hadoop's XML resources, so it is rebuilt only when the
+  // session conf changes (the guard of `localReaders`)
   private val footerConfs = new java.util.concurrent.atomic.AtomicReference[
     (Map[String, String], org.apache.hadoop.conf.Configuration)]()
 
@@ -227,38 +195,29 @@ class TableCatalog(spark: SparkSession, val root: String) {
       else (conf, spark.sessionState.newHadoopConf()))._2
   }
 
-  /** (rows, uncompressed bytes) of one entry's parquet footers; fills
-    * both caches. */
-  private def footerTotals(name: String, rel: String): (Long, Long) = {
-    val key = s"$name|$rel"
-    val abs = absTableDir(name).resolve(rel)
-    val files =
-      if (Files.isDirectory(abs)) {
-        val listing = Files.list(abs)
-        try listing.iterator().asScala.toList finally listing.close()
-      } else if (Files.isRegularFile(abs)) List(abs)
-      else Nil
-    var total = 0L
-    var bytes = 0L
-    val conf = footerConf()
-    files.filter(_.getFileName.toString.endsWith(".parquet")).foreach { p =>
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(p.toUri), conf)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try {
-        total += r.getRecordCount
-        r.getFooter.getBlocks.asScala.foreach(b => bytes += b.getTotalByteSize)
-      } finally r.close()
-    }
-    dirRowsCache.put(key, total)
-    entryBytesCache.put(key, bytes)
-    (total, bytes)
-  }
-
-  /** Version `v`'s manifest: its entries, row counts and zone maps in one read. */
+  /** Version `v`'s manifest: its file records and zone maps in one read.
+    * An old-shape manifest's entries (data dirs, or single files of
+    * one) are expanded into records here, by a listing of each dir and
+    * one footer read per file ([[readFooters]]); the table's next
+    * publish writes the records. */
   private def manifest(name: String, v: Int): Manifest = {
     require(Files.exists(manifestPath(name, v)), s"no version $v of $name")
-    CatalogCodec.readManifest(manifestPath(name, v))
+    val m = CatalogCodec.readManifest(manifestPath(name, v))
+    if (m.entries.isEmpty) m
+    else Manifest(readFooters(name, m.entries.flatMap(e => parquetFiles(name, e._1)), Nil).files,
+      m.stats)
+  }
+
+  /** The parquet files of data dir `rel`, table-relative and in name
+    * order; a path that is no dir names itself, so that reading it
+    * fails once it is gone. */
+  private def parquetFiles(name: String, rel: String): Seq[String] = {
+    val abs = absTableDir(name).resolve(rel)
+    if (!Files.isDirectory(abs)) return Seq(rel)
+    val listing = Files.list(abs)
+    try listing.iterator().asScala.map(_.getFileName.toString)
+      .filter(_.endsWith(".parquet")).toSeq.sorted.map(f => s"$rel/$f")
+    finally listing.close()
   }
 
   // ------------------------------------------------------ commit journal
@@ -512,18 +471,16 @@ class TableCatalog(spark: SparkSession, val root: String) {
   }
 
   /** Version history still on disk (DESCRIBE HISTORY, minimal form):
-    * one row per retained published manifest — version, how many manifest
-    * entries its snapshot comprises (`n_dirs`: a data dir, or a single
-    * file of one that a pruned copy-on-write DML left untouched while
-    * rewriting its siblings), row count, and whether it is current.
-    * Vacuumed versions disappear from the listing, exactly as they do
-    * from time travel. Cost: a PURE FILE LISTING — row counts were
-    * recorded in each manifest at publish time (the Iceberg/Delta
-    * manifest-statistics design), so no Spark job runs (spec-asserted).
-    * Manifests from before counts were recorded fall back to a footer
-    * metadata scan of their dirs — still no Spark job. A manifest above
-    * the version pointer is a writer's claim, not a version, and is
-    * not listed. */
+    * one row per retained published manifest — version, how many data
+    * files its snapshot comprises (`n_files`, its file records), row
+    * count, and whether it is current. Vacuumed versions disappear from
+    * the listing, exactly as they do from time travel. Cost: a PURE
+    * FILE LISTING — each file record carries its row count (the
+    * Iceberg/Delta manifest-statistics design), so no Spark job runs
+    * and no footer is read (spec-asserted). An old-shape manifest
+    * counts its entries (dirs, or single files of one) and sums their
+    * stored row counts, unexpanded. A manifest above the version
+    * pointer is a writer's claim, not a version, and is not listed. */
   def history(name: String): DataFrame = {
     import spark.implicits._
     val cur = currentVersion(name)
@@ -536,28 +493,26 @@ class TableCatalog(spark: SparkSession, val root: String) {
         .filter(_ <= cur).toSeq.sorted
       finally listing.close()
     versions.map { v =>
-      val Manifest(dirs, stored, _) = manifest(name, v)
-      val rows = dirs.map(dr => stored.getOrElse(dr, dirRowCount(name, dr))).sum
-      (v, dirs.length, rows, v == cur)
-    }.toDF("version", "n_dirs", "n_rows", "is_current")
+      val m = CatalogCodec.readManifest(manifestPath(name, v))
+      (v, m.files.size + m.entries.size, m.files.map(_.rows).sum + m.entries.map(_._2).sum,
+        v == cur)
+    }.toDF("version", "n_files", "n_rows", "is_current")
   }
 
   def scan(name: String): DataFrame = asOf(name, currentVersion(name))
 
-  // Manifests store dirs and stat file paths RELATIVE to the table
+  // Manifests store record and stat file paths RELATIVE to the table
   // dir, so a table (or a whole catalog) is relocatable — a staged
   // CREATE TABLE publishes by atomically moving its directory into the
   // catalog root, and every manifest it carries stays valid.
   private def absTableDir(name: String): Path =
     tableDir(name).toAbsolutePath.normalize
-  private def resolveDirs(name: String, rels: Seq[String]): Seq[String] =
-    rels.map(r => absTableDir(name).resolve(r).toString)
   /** MVCC time travel: scan the table as of `version`, a published
     * version (at most the pointer) that vacuum has not removed. */
   def asOf(name: String, version: Int): DataFrame = {
     val m = meta(name)
     require(version <= m.version, s"no version $version of $name (current ${m.version})")
-    frameOf(m.schema, resolveDirs(name, manifest(name, version).dirs))
+    frameOf(m.schema, name, manifest(name, version).files.map(_.path))
   }
 
   /** Zone-map-pruned scan, the programmatic form of the reference's
@@ -576,7 +531,7 @@ class TableCatalog(spark: SparkSession, val root: String) {
     * `scan(name).filter(filter)` for any predicate, prunable or not. */
   def scan(name: String, filter: Column): DataFrame = {
     val (kept, _) = planFiles(name, filter)
-    frameOf(meta(name).schema, resolveDirs(name, kept)).filter(filter)
+    frameOf(meta(name).schema, name, kept).filter(filter)
   }
 
   /** Frame over an explicit kept-file list from [[planFiles]] — how the
@@ -585,17 +540,17 @@ class TableCatalog(spark: SparkSession, val root: String) {
     * here would be redundant. Paths are table-relative, as returned by
     * planFiles. */
   def scanFiles(name: String, rels: Seq[String]): DataFrame =
-    frameOf(meta(name).schema, resolveDirs(name, rels))
+    frameOf(meta(name).schema, name, rels)
 
   /** (paths the pruned scan reads, all paths in the current manifest).
     * Exposed for plan inspection/specs.
     *
-    * SOUNDNESS: the universe is the manifest's DIR list, never the
-    * stats list — a dir with no stats (written by an older layout or a
-    * path that skipped stats) contributes itself wholesale, and a file
-    * whose stats are null-markers (all-NULL column, or untrustworthy
-    * footer statistics) is always kept. Only a file with real stats
-    * that provably exclude the predicate is dropped. */
+    * SOUNDNESS: the universe is the manifest's FILE RECORDS, never the
+    * stats list — a file with no stats (written by an older layout)
+    * is always kept, and so is a file whose stats are null-markers
+    * (all-NULL column, or untrustworthy footer statistics). Only a
+    * file with real stats that provably exclude the predicate is
+    * dropped. */
   def planFiles(name: String, filter: Column): (Seq[String], Seq[String]) =
     planFilesAt(name, meta(name).version, filter)
 
@@ -608,8 +563,8 @@ class TableCatalog(spark: SparkSession, val root: String) {
 
   private def planFilesAt(m: TableMeta, name: String, version: Int,
       filter: Column): (Seq[String], Seq[String]) = {
-    val Manifest(dirs, _, stats) = manifest(name, version)
-    pruneFiles(m, name, dirs, stats, Seq(filter))
+    val (kept, all) = pruneFiles(m, manifest(name, version), Seq(filter))
+    (kept.map(_.path), all.map(_.path))
   }
 
   /** Bind one table of a SELECT at `version` (the SQL front's read
@@ -618,7 +573,7 @@ class TableCatalog(spark: SparkSession, val root: String) {
     * read once for the whole statement. The zone maps prune the files
     * by `prune`, the conjuncts the SQL front attributed to this table;
     * then one guard picks the route:
-    *  - local: the kept files' footers total at most [[LocalReadMaxRows]]
+    *  - local: the kept files' records total at most [[LocalReadMaxRows]]
     *    rows, [[LocalReadMaxBytes]] uncompressed bytes and
     *    [[LocalReadMaxFiles]] files, and Spark's vectorized parquet
     *    reader handles the schema. The files are decoded on the calling
@@ -629,17 +584,13 @@ class TableCatalog(spark: SparkSession, val root: String) {
     * Returns the frame and the route taken. */
   private[graft] def bindRead(m: TableMeta, name: String, version: Int,
       prune: Option[Column]): (DataFrame, ReadRoute) = {
-    val Manifest(entries, _, stats) = manifest(name, version)
-    val (kept0, all0) = prune match {
-      case Some(f) => pruneFiles(m, name, entries, stats, Seq(f))
-      case None    => (entries, entries)
-    }
-    val (kept, all) = (kept0.flatMap(expandEntry(name, _)), all0.flatMap(expandEntry(name, _)))
+    val view = manifest(name, version)
+    val (kept, all) = prune.fold((view.files, view.files))(f => pruneFiles(m, view, Seq(f)))
     val (df, rows, local) = bindFiles(m, name, kept, prune)
     (df, ReadRoute(kept.size, all.size, rows, local))
   }
 
-  /** A frame over `files` (table-relative parquet files), decoded on
+  /** A frame over `files` (file records of the table), decoded on
     * the driver ([[readLocal]], dropping rows `prune` rejects) when they
     * fit the local-read caps, else a Spark scan of them. The one guard
     * behind SELECT binding ([[bindRead]]), the key probes of DML and
@@ -647,20 +598,19 @@ class TableCatalog(spark: SparkSession, val root: String) {
     * (`Txn.rewrittenFrame`, with no `prune`: a rewrite needs every
     * row); a rewrite bound here whose result stays a `LocalRelation` is
     * written with no job ([[writeData]]).
-    * Returns the frame, the files' footer row total (None when the file
-    * count alone ruled the driver out) and the rows decoded (None on
-    * the Spark route). */
-  private def bindFiles(m: TableMeta, name: String, files: Seq[String],
+    * Returns the frame, the files' recorded row total (None when the
+    * file count alone ruled the driver out) and the rows decoded (None
+    * on the Spark route). */
+  private def bindFiles(m: TableMeta, name: String, files: Seq[FileRecord],
       prune: Option[Column]): (DataFrame, Option[Long], Option[Int]) = {
-    // footers are read (once per file, cached) only under the file cap
-    val rows = if (files.size > LocalReadMaxFiles) None else Some(files.map(dirRowCount(name, _)).sum)
+    val rows = Option.when(files.size <= LocalReadMaxFiles)(files.map(_.rows).sum)
     val fits = rows.exists(_ <= LocalReadMaxRows) &&
-      files.map(entryBytes(name, _)).sum <= LocalReadMaxBytes &&
+      files.map(_.bytes).sum <= LocalReadMaxBytes &&
       org.apache.spark.sql.execution.datasources.parquet.ParquetUtils
         .isBatchReadSupportedForSchema(spark.sessionState.conf, m.schema)
-    if (!fits) (frameOf(m.schema, resolveDirs(name, files)), rows, None)
+    if (!fits) (frameOf(m.schema, name, files.map(_.path)), rows, None)
     else {
-      val data = readLocal(m, name, files, prune)
+      val data = readLocal(m, name, files.map(_.path), prune)
       (GraftColumnBridge.ofRows(spark, LocalRelation(
           org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(readSchema(m)), data)),
         rows, Some(data.size))
@@ -741,21 +691,17 @@ class TableCatalog(spark: SparkSession, val root: String) {
   }
 
   /** The zone-map pruning behind [[planFilesAt]], over any manifest
-    * view — a published version's entries and stats, or a [[Txn]]'s
-    * view with its staged dirs — so reads and copy-on-write DML pick
+    * view — a published version's records and stats, or a [[Txn]]'s
+    * view with its staged files — so reads and copy-on-write DML pick
     * their files by ONE rule. A file is kept when its zone maps admit
     * at least one of `filters` (a driver MERGE passes one per source
-    * key). Entries are dirs or single files; returns (kept file paths,
-    * every file path), both table-relative. With no stats at all the
-    * entries themselves come back, unexpanded. */
-  private def pruneFiles(m: TableMeta, name: String, entries: Seq[String],
-      stats: Seq[FileStat], filters: Seq[Column]): (Seq[String], Seq[String]) = {
-    if (stats.isEmpty) return (entries, entries)
-    // universe: the ACTUAL parquet files on disk per dir (a driver-side
-    // listing — what Spark's scan planning does anyway), never the
-    // stats list: a dir whose stats cover only some files (older
-    // layout, partial write) must still contribute every file
-    val allPaths = entries.flatMap(expandEntry(name, _))
+    * key). Returns (kept records, every record). The universe is the
+    * view's records, never its stats: a file without stats (an older
+    * layout) is always kept. */
+  private def pruneFiles(m: TableMeta, view: Manifest,
+      filters: Seq[Column]): (Seq[FileRecord], Seq[FileRecord]) = {
+    val all = view.files
+    if (view.stats.isEmpty) return (all, all)
     // prune on ANY numeric/string column — the manifest carries zone
     // maps for all of them since they're free at publish (footer
     // reads); an INDEX adds the sorted/clustered layout that makes
@@ -789,10 +735,10 @@ class TableCatalog(spark: SparkSession, val root: String) {
           }
         }
       })
-    if (perFilter.exists(_.isEmpty)) return (allPaths, allPaths)
-    val byFile = stats.groupBy(_.path)
-    val kept = allPaths.filter { f =>
-      perFilter.exists(ranges => byFile.get(f).forall(_.forall { st =>
+    if (perFilter.exists(_.isEmpty)) return (all, all)
+    val byFile = view.stats.groupBy(_.path)
+    val kept = all.filter { f =>
+      perFilter.exists(ranges => byFile.get(f.path).forall(_.forall { st =>
         // empty min/max = null-marker (no non-null values seen): keep
         st.min.isEmpty || st.max.isEmpty || ranges.get(st.column).forall { case (lo, hi) =>
           val dt = m.schema(st.column).dataType
@@ -810,35 +756,8 @@ class TableCatalog(spark: SparkSession, val root: String) {
         }
       }))
     }
-    (kept, allPaths)
+    (kept, all)
   }
-
-  /** The parquet files of one manifest entry, table-relative: a data
-    * dir's listing, or the entry itself when it is a single file (or
-    * is gone, so that reading it fails). */
-  private def expandEntry(name: String, d: String): Seq[String] = {
-    val abs = absTableDir(name).resolve(d)
-    if (!Files.isDirectory(abs)) return Seq(d)
-    val listing = Files.list(abs)
-    try listing.iterator().asScala
-      .filter(_.getFileName.toString.endsWith(".parquet"))
-      .map(p => d + "/" + p.getFileName.toString).toSeq
-    finally listing.close()
-  }
-
-  /** The stats of `all` that describe files a manifest view keeps:
-    * a stat's path is itself a kept (file) entry, or lies in a kept dir. */
-  private def statsFor(entries: Seq[String], all: Seq[FileStat]): Seq[FileStat] = {
-    val kept = entries.toSet
-    all.filter(st => kept(st.path) || kept(st.path.take(st.path.lastIndexOf('/'))))
-  }
-
-  /** Data dirs (absolute) a manifest view references: a dir entry
-    * itself, a file entry through its parent dir. */
-  private def liveDirs(name: String, entries: Seq[String]): Set[Path] =
-    entries.map(r => absTableDir(name).resolve(r).normalize).flatMap { p =>
-      if (p.getFileName.toString.endsWith(".parquet")) Seq(p, p.getParent) else Seq(p)
-    }.toSet
 
   private case class Bound(value: String, inclusive: Boolean, isString: Boolean)
 
@@ -915,10 +834,33 @@ class TableCatalog(spark: SparkSession, val root: String) {
     }
   }
 
-  private def frameOf(schema: StructType, dirs: Seq[String]): DataFrame =
-    if (dirs.isEmpty) spark.createDataFrame(
+  /** A Spark scan of `rels` (table-relative parquet files), the
+    * relation `spark.read.schema(schema).parquet(files)` builds, but
+    * over file statuses known here: one `Files.size` per file (a
+    * vacuumed file fails the bind, never shrinks the scan), so planning
+    * lists nothing. Spark lists more than
+    * `parallelPartitionDiscovery.threshold` root paths with a job. */
+  private def frameOf(schema: StructType, name: String, rels: Seq[String]): DataFrame =
+    if (rels.isEmpty) spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else spark.read.schema(schema).parquet(dirs: _*)
+    else {
+      import org.apache.hadoop.fs.{FileStatus, Path => HPath}
+      import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
+      val statuses = rels.map { r =>
+        val p = absTableDir(name).resolve(r)
+        new FileStatus(Files.size(p), false, 0, 0, 0, new HPath(p.toUri))
+      }
+      val known = statuses.map(f => f.getPath -> Array(f)).toMap
+      val index = new InMemoryFileIndex(spark, statuses.map(_.getPath), Map.empty, Some(schema),
+        new FileStatusCache {
+          override def getLeafFiles(path: HPath): Option[Array[FileStatus]] = known.get(path)
+          override def putLeafFiles(path: HPath, files: Array[FileStatus]): Unit = ()
+          override def invalidateAll(): Unit = ()
+        }, None, None)
+      spark.baseRelationToDataFrame(HadoopFsRelation(index, index.partitionSchema,
+        org.apache.spark.sql.GraftTypes.asNullable(schema), None,
+        new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat(), Map.empty)(spark))
+    }
 
   // --------------------------------------------------------------- DML
   /** Constraint validation on the Spark route: NOT NULL, key
@@ -1183,11 +1125,10 @@ class TableCatalog(spark: SparkSession, val root: String) {
   /** Claim version `base + 1`'s manifest. Call ONLY inside rootLock.
     * Returns false when another PROCESS holds a fresh claim (its
     * publish is in-flight; the JVM lock cannot see it). */
-  private def claimVersion(name: String, base: Int, dirs: Seq[String],
-      stats: Seq[FileStat]): Boolean = {
+  private def claimVersion(name: String, base: Int, view: Manifest): Boolean = {
     val next = base + 1
     def tryClaim(): Boolean =
-      try { writeManifest(name, next, dirs, stats); true }
+      try { writeManifest(name, next, view); true }
       catch { case _: WriteConflictException => false }
     tryClaim() || {
       // conflict: v_next's manifest already exists. It is reclaimable
@@ -1237,9 +1178,8 @@ class TableCatalog(spark: SparkSession, val root: String) {
   /** Claim version m.version+1's manifest and move the pointer — the
     * one-table publish of COMPACT, RESTORE, ALTER and CREATE/DROP INDEX.
     * Call ONLY inside rootLock with the fingerprint verified. */
-  private def claimPublish(name: String, m: TableMeta, dirs: Seq[String],
-      stats: Seq[FileStat]): Boolean =
-    claimVersion(name, m.version, dirs, stats) && movePointers(Seq(name -> m)) && {
+  private def claimPublish(name: String, m: TableMeta, view: Manifest): Boolean =
+    claimVersion(name, m.version, view) && movePointers(Seq(name -> m)) && {
       journalRecord(Map(name -> (m.version + 1)))
       true
     }
@@ -1344,7 +1284,7 @@ class TableCatalog(spark: SparkSession, val root: String) {
     autocommit(s"DELETE FROM $name", name)(_.delete(name, where))
 
   /** Metadata-only schema evolution, publish-atomic: the new schema
-    * ships as a NEW VERSION whose manifest lists the SAME data dirs —
+    * ships as a NEW VERSION whose manifest lists the SAME data files —
     * no bytes move (the Iceberg/Delta ADD COLUMN property; at 100 TB a
     * rewrite would be a full-table job). Existing rows read NULL for
     * the new column (Delta semantics — a declared DEFAULT applies to
@@ -1376,7 +1316,7 @@ class TableCatalog(spark: SparkSession, val root: String) {
         schema = StructType(m.schema.fields :+ field),
         defaults = default.map(v => m.defaults + (field.name -> v)).getOrElse(m.defaults))
       val cur = manifest(name, m.version)
-      if (!claimPublish(name, m2, cur.dirs, cur.stats))
+      if (!claimPublish(name, m2, cur))
         throw new WriteConflictException(s"ALTER TABLE $name: lost the publish race")
       m.version + 1
     }
@@ -1402,7 +1342,7 @@ class TableCatalog(spark: SparkSession, val root: String) {
         references = m.references - f.name,
         indexes = m.indexes.filterNot(_ == f.name))
       val cur = manifest(name, m.version)
-      if (!claimPublish(name, m2, cur.dirs, cur.stats.filterNot(_.column == f.name)))
+      if (!claimPublish(name, m2, cur.copy(stats = cur.stats.filterNot(_.column == f.name))))
         throw new WriteConflictException(s"ALTER TABLE $name: lost the publish race")
       m.version + 1
     }
@@ -1696,11 +1636,10 @@ class TableCatalog(spark: SparkSession, val root: String) {
       // deletes the rewrite and retries against the new state
       val next = m.version + 1
       val rel = s"data/snap-$next-${TableCatalog.freshSuffix()}"
-      writeData(m, df, absTableDir(name).resolve(rel).toString, layoutCols)
-      val stats = collectStats(m, name, rel)
+      val (_, written) = writeData(m, name, rel, df, layoutCols)
       val ok =
         try rootLock.synchronized {
-          fkFingerprint(name, meta(name)) == fp && claimPublish(name, m, Seq(rel), stats)
+          fkFingerprint(name, meta(name)) == fp && claimPublish(name, m, written)
         } catch { case scala.util.control.NonFatal(e) =>
           TableCatalog.deleteRecursively(absTableDir(name).resolve(rel))
           throw e
@@ -1781,7 +1720,7 @@ class TableCatalog(spark: SparkSession, val root: String) {
       require(indexable(f.dataType),
         s"CREATE INDEX $name.${f.name}: unorderable type ${f.dataType}")
       val cur = manifest(name, m.version)
-      if (!claimPublish(name, m.copy(indexes = m.indexes :+ f.name), cur.dirs, cur.stats))
+      if (!claimPublish(name, m.copy(indexes = m.indexes :+ f.name), cur))
         throw new WriteConflictException(s"CREATE INDEX $name: lost the publish race")
     }
     // The metadata version above is already PUBLISHED (the index is
@@ -1807,20 +1746,21 @@ class TableCatalog(spark: SparkSession, val root: String) {
   }
 
   /** MVCC garbage collection: retain the newest `keep` versions,
-    * delete older manifests, and remove data dirs that no retained
-    * manifest references. Time travel to a vacuumed version then
-    * errors; retained versions are untouched. Unreferenced dirs
-    * YOUNGER than `graceMs` are kept — an optimistic writer's data dir
-    * exists before any manifest references it, and an open txn's
-    * staged dirs (`data/txn-*`, skipped entirely) live until COMMIT.
-    * Returns the number of versions removed. */
-  /** Default vacuum grace: how long an UNREFERENCED data dir is left
+    * delete older manifests, and delete each parquet file under `data/`
+    * (with its `.crc` sidecar) that no retained manifest lists, then
+    * each data dir left holding no parquet file. Time travel to a
+    * vacuumed version then errors; retained versions are untouched.
+    * Unlisted files and dirs YOUNGER than `graceMs` are kept — an
+    * optimistic writer's files exist before any manifest lists them,
+    * and an open txn's staged dirs (`data/txn-*`, skipped entirely)
+    * live until COMMIT. Returns the number of versions removed. */
+  /** Default vacuum grace: how long an UNLISTED data file is left
     * alone. Must cover a writer's longest write→publish window — the
-    * dir exists from writeData until claimPublish, and collectStats
-    * alone can run minutes on a large indexed batch — NOT the
+    * file exists from writeData until claimPublish, and its footer
+    * read alone can run minutes on a large indexed batch — NOT the
     * millisecond claim→pointer window StaleClaimMs bounds. Deleting a
-    * younger dir would let an in-flight insert publish a manifest over
-    * vanished files. */
+    * younger file would let an in-flight insert publish a manifest
+    * over vanished files. */
   private val VacuumGraceMs = 30L * 60 * 1000
 
   def vacuum(name: String, keep: Int = 1, graceMs: Long = VacuumGraceMs): Int =
@@ -1832,11 +1772,10 @@ class TableCatalog(spark: SparkSession, val root: String) {
       // isolation promises their reads keep working until they close
       val pinned = pinnedByOpenTxns(name)
       val retained = (cutoff to cur).toSet ++ pinned
-      // a dir is live while any retained entry lies under it — the
-      // dir itself, or one of its files listed singly
-      val live = liveDirs(name, retained.toSeq
+      val live = retained.toSeq
         .filter(v => Files.exists(manifestPath(name, v)))
-        .flatMap(v => manifest(name, v).dirs))
+        .flatMap(v => manifest(name, v).files.map(f => absTableDir(name).resolve(f.path)))
+        .toSet
       var removed = 0
       (0 until cutoff).filterNot(retained.contains).foreach { v =>
         if (Files.deleteIfExists(manifestPath(name, v))) removed += 1
@@ -1845,27 +1784,36 @@ class TableCatalog(spark: SparkSession, val root: String) {
       // that txn is open — in this process, or in any process holding
       // a fresh pin file; a committed one's dirs are ordinary data
       val openTxns = openTxnIds()
-      val dataDir = tableDir(name).resolve("data")
-      if (Files.exists(dataDir)) {
-        val children = Files.list(dataDir)
-        try children.iterator().asScala.toList.foreach { p =>
-          val abs = p.toAbsolutePath.normalize
-          val isStaged = p.getFileName.toString match {
-            case TableCatalog.StagedDir(id) => openTxns(id)
-            case _ => false
+      val now = System.currentTimeMillis
+      def aged(p: Path): Boolean =
+        try now - Files.getLastModifiedTime(p).toMillis >= graceMs
+        catch { case _: java.io.IOException => false }
+      def list(p: Path): List[Path] = {
+        val children = Files.list(p)
+        try children.iterator().asScala.toList finally children.close()
+      }
+      val dataDir = absTableDir(name).resolve("data")
+      if (Files.exists(dataDir)) list(dataDir).foreach { dir =>
+        val isStaged = dir.getFileName.toString match {
+          case TableCatalog.StagedDir(id) => openTxns(id)
+          case _ => false
+        }
+        if (Files.isDirectory(dir) && !isStaged) {
+          val dirAged = aged(dir)
+          val (dead, left) = list(dir).filter(_.getFileName.toString.endsWith(".parquet"))
+            .partition(f => !live(f) && aged(f))
+          dead.foreach { f =>
+            Files.deleteIfExists(f)
+            Files.deleteIfExists(f.resolveSibling(s".${f.getFileName}.crc"))
           }
-          val age =
-            try System.currentTimeMillis - Files.getLastModifiedTime(p).toMillis
-            catch { case _: java.io.IOException => 0L }
-          if (!live.contains(abs) && !isStaged && age >= graceMs)
-            TableCatalog.deleteRecursively(abs)
-        } finally children.close()
+          if (left.isEmpty && dirAged) TableCatalog.deleteRecursively(dir)
+        }
       }
       removed
     }
 
   /** RESTORE to an earlier version: re-publishes that version's
-    * manifest (the SAME data dirs and stats) as a NEW current version —
+    * manifest (the SAME file records and stats) as a NEW current version —
     * rollback with no data rewrite, the lakehouse time-travel write
     * (Delta RESTORE semantics: history is preserved, the bad versions
     * stay inspectable, and the restore itself is just one more
@@ -1896,7 +1844,7 @@ class TableCatalog(spark: SparkSession, val root: String) {
       finally restored.unpersist()
       val old = manifest(name, version)
       val ok = rootLock.synchronized {
-        fkFingerprint(name, meta(name)) == fp && claimPublish(name, m, old.dirs, old.stats)
+        fkFingerprint(name, meta(name)) == fp && claimPublish(name, m, old)
       }
       if (ok) Some(m.version + 1) else None
     }
@@ -1921,31 +1869,21 @@ class TableCatalog(spark: SparkSession, val root: String) {
     val m = meta(src)
     Files.createDirectories(tableDir(dst).resolve("versions"))
     Files.createDirectories(tableDir(dst).resolve("data"))
-    val Manifest(dirs, _, stats) = manifest(src, m.version)
-    def link(f: Path, t: Path): Unit =
-      try Files.createLink(t, f)
+    val view = manifest(src, m.version)
+    // each file links to its own table-relative path, so the records
+    // and stats hold for the clone unchanged
+    view.files.foreach { f =>
+      val (from, to) = (absTableDir(src).resolve(f.path), absTableDir(dst).resolve(f.path))
+      Files.createDirectories(to.getParent)
+      try Files.createLink(to, from)
       catch {
         // links unsupported (FS) or cross-device: degrade to copy
         case _: UnsupportedOperationException |
              _: java.nio.file.FileSystemException =>
-          Files.copy(f, t): Unit
-      }
-    dirs.foreach { rel =>
-      val from = absTableDir(src).resolve(rel)
-      val to = absTableDir(dst).resolve(rel)
-      if (Files.isDirectory(from)) {
-        Files.createDirectories(to)
-        val listing = Files.list(from)
-        try listing.iterator().asScala.filter(Files.isRegularFile(_))
-          .foreach(f => link(f, to.resolve(f.getFileName.toString)))
-        finally listing.close()
-      } else {
-        // a file entry links into its own parent dir, at the same path
-        Files.createDirectories(to.getParent)
-        link(from, to)
+          Files.copy(from, to): Unit
       }
     }
-    writeManifest(dst, 0, dirs, stats)
+    writeManifest(dst, 0, view)
     writeMeta(dst, m.copy(version = 0))
     journalRecord(Map(dst -> 0))
     TableCatalog.ddlEpoch(root).incrementAndGet()
@@ -1961,7 +1899,7 @@ class TableCatalog(spark: SparkSession, val root: String) {
       s"DROP INDEX $name: $colName is not indexed")
     val cur = manifest(name, m.version)
     if (!claimPublish(name,
-        m.copy(indexes = m.indexes.filterNot(_.equalsIgnoreCase(colName))), cur.dirs, cur.stats))
+        m.copy(indexes = m.indexes.filterNot(_.equalsIgnoreCase(colName))), cur))
       throw new WriteConflictException(s"DROP INDEX $name: lost the publish race")
     m.version + 1
   }
@@ -1982,18 +1920,22 @@ class TableCatalog(spark: SparkSession, val root: String) {
     * `layoutOverride`, no [[TableCatalog.ZCol]]) and its rows fit the
     * local-read caps, [[writeLocal]] writes the rows on the calling
     * thread as the one file the job would write. Every other write is
-    * a Spark job. Returns the route: the partition count used (None
-    * when an uncapped unclustered write keeps the frame's own
-    * partitioning) and whether the rows were written on the driver. */
-  private def writeData(m: TableMeta, df: DataFrame, dir: String,
-      layoutOverride: Seq[String] = Nil, parts: Int = Int.MaxValue): WriteRoute = {
+    * a Spark job. Either way `rel`, a fresh table-relative dir, then
+    * holds only the files written, and their records and zone maps come
+    * from one footer read per file ([[readFooters]]). Returns the route
+    * — the partition count used (None when an uncapped unclustered
+    * write keeps the frame's own partitioning) and whether the rows
+    * were written on the driver — and the written files' manifest. */
+  private def writeData(m: TableMeta, name: String, rel: String, df: DataFrame,
+      layoutOverride: Seq[String] = Nil, parts: Int = Int.MaxValue): (WriteRoute, Manifest) = {
+    val dir = absTableDir(name).resolve(rel).toString
     val layout = if (layoutOverride.nonEmpty) layoutOverride else m.indexes
     val n = math.max(1, math.min(parts, spark.sparkContext.defaultParallelism))
     val onePart = n == 1 && (layout.nonEmpty || parts != Int.MaxValue)
     val local = if (!onePart || layoutOverride.nonEmpty) None else TableCatalog.localBatch(df)
       .filter(r => !r.output.exists(_.name.equalsIgnoreCase(TableCatalog.ZCol)) &&
         graft.plans.FoldLocalRelations.fitsCaps(r.output, r.data))
-    local match {
+    val route = local match {
       case Some(r) =>
         writeLocal(r, df.schema, layout, dir)
         WriteRoute(None, Some(1), onDriver = true)
@@ -2010,6 +1952,7 @@ class TableCatalog(spark: SparkSession, val root: String) {
         out.drop(TableCatalog.ZCol).write.mode("overwrite").parquet(dir)
         WriteRoute(None, used, onDriver = false)
     }
+    (route, readFooters(name, parquetFiles(name, rel), prunableCols(m)))
   }
 
   /** Write the rows of `r`, sorted by the `layout` columns, as one
@@ -2063,14 +2006,15 @@ class TableCatalog(spark: SparkSession, val root: String) {
         || f.dataType == org.apache.spark.sql.types.StringType => f.name -> f.dataType
     }
 
-  /** Per-file min/max ZONE MAPS for EVERY prunable column — not just
-    * declared indexes — read from the parquet FOOTERS the write just
-    * produced: column-chunk statistics already hold exact min/max per
-    * row group, so this is pure driver-side metadata IO, no Spark job
-    * (the [[dirRowCount]] machinery's template; the same pass feeds
-    * the dir's row count into [[dirRowsCache]], one footer open per
-    * file per publish). Values render in the same string forms
-    * [[cmpTyped]] compares at prune time. Paths stored table-relative.
+  /** The file records and zone maps of `files` (table-relative parquet
+    * files a write just produced, or an old-shape manifest's files):
+    * ONE footer read per file, pure driver-side metadata IO with no
+    * Spark job, gives its row count, its uncompressed row-group bytes
+    * and, for each of `cols`, per-file min/max ZONE MAPS — for EVERY
+    * prunable column, not just declared indexes ([[prunableCols]]):
+    * column-chunk statistics already hold exact min/max per row group.
+    * Values render in the same string forms [[cmpTyped]] compares at
+    * prune time. Paths stay table-relative.
     *
     * SOUNDNESS: a (file, column) whose footer stats are absent or
     * untrustworthy (parquet-mr returns empty statistics for legacy
@@ -2079,26 +2023,16 @@ class TableCatalog(spark: SparkSession, val root: String) {
     * null-marker — [[planFiles]] always KEEPS such files. Truncated
     * binary footer stats (writer-configured) stay sound: parquet
     * truncates min down and max up, so they remain valid bounds. */
-  private def collectStats(m: TableMeta, name: String, relDir: String): Seq[FileStat] = {
-    val cols = prunableCols(m)
-    if (cols.isEmpty) return Nil
-    val abs = absTableDir(name).resolve(relDir)
-    if (!Files.isDirectory(abs)) return Nil
-    val listing = Files.list(abs)
-    val files =
-      try listing.iterator().asScala
-        .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
-      finally listing.close()
-    var dirRows = 0L
+  private def readFooters(name: String, files: Seq[String],
+      cols: Seq[(String, org.apache.spark.sql.types.DataType)]): Manifest = {
     val conf = footerConf()
-    val out = files.flatMap { p =>
+    val read = files.map { rel =>
       val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(p.toUri), conf)
+        new org.apache.hadoop.fs.Path(absTableDir(name).resolve(rel).toUri), conf)
       val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
       try {
-        dirRows += reader.getRecordCount
         val blocks = reader.getFooter.getBlocks.asScala.toSeq
-        val rel = relDir + "/" + p.getFileName.toString
+        FileRecord(rel, reader.getRecordCount, blocks.map(_.getTotalByteSize).sum) ->
         cols.map { case (c, dt) =>
           // fold row-group chunk stats into one per-file range; any
           // gap in any block → null-marker (file always read)
@@ -2132,8 +2066,7 @@ class TableCatalog(spark: SparkSession, val root: String) {
         }
       } finally reader.close()
     }
-    dirRowsCache.put(s"$name|$relDir", dirRows)
-    out
+    Manifest(read.map(_._1), read.flatMap(_._2))
   }
 
   /** One footer stat value rendered under the column's DECLARED Spark
@@ -2274,8 +2207,9 @@ class TableCatalog(spark: SparkSession, val root: String) {
       heartbeatTask.cancel(false)
       try Files.deleteIfExists(pinPath) catch { case _: java.io.IOException => () }
     }
-    // table -> (base version at first write, rel-dir list composing the txn view)
-    private val staged = scala.collection.mutable.LinkedHashMap[String, (Int, Seq[String])]()
+    // table -> (base version at first write, the txn view: the file
+    // records and zone maps the next version publishes)
+    private val staged = scala.collection.mutable.LinkedHashMap[String, (Int, Manifest)]()
     private val createdDirs = scala.collection.mutable.ArrayBuffer[Path]()
     private val droppedTables = scala.collection.mutable.LinkedHashSet[String]()
     private var seq = 0
@@ -2298,8 +2232,6 @@ class TableCatalog(spark: SparkSession, val root: String) {
               else None)
       }
     private val createdTables = scala.collection.mutable.LinkedHashSet[String]()
-    // index stats collected for each staged dir at write time
-    private val dirStats = scala.collection.mutable.Map[String, Seq[FileStat]]()
 
     private def open(): Unit = { require(!closed, "transaction closed"); heartbeat() }
     private def visible(name: String): Unit =
@@ -2378,18 +2310,13 @@ class TableCatalog(spark: SparkSession, val root: String) {
       snapshot.getOrElse(name,
         throw new IllegalArgumentException(s"no such table in txn snapshot: $name"))
 
-    /** The txn's view of `name`: txn-created table, staged dirs if
+    /** The txn's view of `name`: txn-created table, staged files if
       * written, else the version pinned at BEGIN. */
     def scan(name: String): DataFrame = {
       visible(name)
       heartbeat()
       if (createdTables.contains(name)) stagedCat.scan(name)
-      else staged.get(name) match {
-        case Some((_, dirs)) =>
-          frameOf(pinnedMetaOf(name).schema, resolveDirs(name, dirs))
-        case None => frameOf(pinnedMetaOf(name).schema,
-          resolveDirs(name, pinnedManifest(name).dirs))
-      }
+      else frameOf(pinnedMetaOf(name).schema, name, view(name).files.map(_.path))
     }
 
     /** FK-parent resolution: the txn view, except for a table not
@@ -2404,35 +2331,22 @@ class TableCatalog(spark: SparkSession, val root: String) {
     private def baseOf(name: String): Int =
       staged.get(name).map(_._1).getOrElse(snapshotVersion(name))
 
-    private def pinnedManifest(name: String): Manifest = manifest(name, snapshotVersion(name))
-
-    private def viewDirs(name: String): Seq[String] =
-      staged.get(name).map(_._2).getOrElse(pinnedManifest(name).dirs)
-
-    /** Zone maps of the txn view's entries: the pinned manifest's for
-      * the entries the view keeps, and those collected for this txn's
-      * own dirs — what [[publish]] writes into the next manifest. */
-    private def viewStats(entries: Seq[String], pinned: Manifest): Seq[FileStat] =
-      statsFor(entries, pinned.stats ++ dirStats.values.flatten)
+    /** The txn view of `name`: its staged manifest once written, else
+      * the version pinned at BEGIN — what [[publish]] publishes. */
+    private def view(name: String): Manifest =
+      staged.get(name).map(_._2).getOrElse(manifest(name, snapshotVersion(name)))
 
     /** The txn view of `name` split for a statement whose rows each
-      * satisfy one of `filters`: (entries it leaves as they are, files
-      * it rewrites). A file is rewritten unless its zone maps prove
-      * every filter false on every row ([[pruneFiles]]); a dir with
-      * some rewritten files keeps its others as single-file entries.
+      * satisfy one of `filters`: (files it leaves as they are, files it
+      * rewrites). A file is rewritten unless its zone maps prove every
+      * filter false on every row ([[pruneFiles]]).
       * SOUNDNESS: only the top-level conjuncts of a filter prune, so a
       * skipped file holds no row on which any filter is TRUE. */
     private def candidates(name: String, m: TableMeta,
-        filters: Column*): (Seq[String], Seq[String]) = {
-      val pinned = pinnedManifest(name)
-      val entries = staged.get(name).map(_._2).getOrElse(pinned.dirs)
-      val (kept, all) = pruneFiles(m, name, entries, viewStats(entries, pinned), filters)
+        filters: Column*): (Seq[FileRecord], Seq[FileRecord]) = {
+      val (kept, all) = pruneFiles(m, view(name), filters)
       val rewrite = kept.toSet
-      val untouched = entries.flatMap { e =>
-        val files = all.filter(f => f == e || f.startsWith(e + "/"))
-        if (files.exists(rewrite)) files.filterNot(rewrite) else Seq(e)
-      }
-      (untouched, kept)
+      (all.filterNot(rewrite), kept)
     }
 
     // an explicit txn stages under `data/txn-*`, which vacuum leaves
@@ -2464,18 +2378,17 @@ class TableCatalog(spark: SparkSession, val root: String) {
       }
       val m = pinnedMetaOf(name)
       val base = baseOf(name)
-      val dirs = viewDirs(name)
+      val before = view(name)
       val aligned = applyDefaults(name, m, df)
       val rel = freshDir(name)
-      val dir = absTableDir(name).resolve(rel).toString
-      val route = TableCatalog.localBatch(aligned) match {
+      val local = TableCatalog.localBatch(aligned)
+      val (route, written) = local match {
         case Some(batch) =>
           checkLocal(m, name, batch, probe)
           // the rows checked are the rows written: the relation itself,
           // not a re-optimized copy of the VALUES plan
-          writeData(m, GraftColumnBridge.ofRows(spark, batch), dir,
-            parts = shareParts(batch.data.size, batch.data.size + dirs.map(dirRowCount(name, _)).sum))
-            .copy(checked = Some(true))
+          writeData(m, name, rel, GraftColumnBridge.ofRows(spark, batch),
+            parts = shareParts(batch.data.size, batch.data.size + before.files.map(_.rows).sum))
         case None =>
           // cache across validation + write: the batch is often an
           // expensive upstream plan, and without the cache the
@@ -2487,15 +2400,14 @@ class TableCatalog(spark: SparkSession, val root: String) {
           // or Catalyst would infer it onto the cached batch, whose
           // in-memory partition stats cannot bound a NaN key
           val pruned = (f: Column) =>
-            frameOf(m.schema, resolveDirs(name, candidates(name, m, f)._2))
+            frameOf(m.schema, name, candidates(name, m, f)._2.map(_.path))
           try {
             validate(m, name, cached, Some(pruned), fkScan)
-            writeData(m, cached, dir).copy(checked = Some(false))
+            writeData(m, name, rel, cached)
           } finally cached.unpersist() // failed validation must not leak cache
       }
-      dirStats(rel) = collectStats(m, name, rel)
-      staged(name) = (base, dirs :+ rel)
-      lastWriteRoute.set(route)
+      staged(name) = (base, Manifest(before.files ++ written.files, before.stats ++ written.stats))
+      lastWriteRoute.set(route.copy(checked = Some(local.isDefined)))
     }
 
     /** The rows satisfying `exact` in the txn view of `name`, read from
@@ -2510,40 +2422,40 @@ class TableCatalog(spark: SparkSession, val root: String) {
           !TableCatalog.this.exists(name)) Some(fkScan(name).filter(exact))
       else {
         val m = pinnedMetaOf(name)
-        val kept = candidates(name, m, range)._2.flatMap(expandEntry(name, _))
+        val kept = candidates(name, m, range)._2
         Option.when(kept.nonEmpty)(bindFiles(m, name, kept, Some(exact))._1.filter(exact))
       }
 
     /** Stage one copy-on-write statement: `fresh` — the rows it
       * publishes in place of the `rewritten` files — goes to one new
-      * txn dir, and the view becomes that dir followed by `untouched`
-      * (newest rows first, so a plan over the view names its staged
-      * dir). With `check`, the whole new view (untouched plus fresh
-      * rows) is validated first. No `fresh` (nothing to rewrite) keeps
-      * the view as it is; the statement still publishes its version.
-      * Returns the write's route ([[writeData]]), 0 parts on the driver
-      * when nothing was written. */
-    private def stageRewrite(name: String, m: TableMeta, untouched: Seq[String],
-        rewritten: Seq[String], fresh: Option[DataFrame], check: Boolean): WriteRoute = {
+      * txn dir, and the view becomes that dir's files followed by
+      * `untouched` (newest rows first, so a plan over the view names
+      * its staged dir). With `check`, the whole new view (untouched plus
+      * fresh rows) is validated first. No `fresh` (nothing to rewrite)
+      * keeps the view as it is; the statement still publishes its
+      * version. Returns the write's route ([[writeData]]), 0 parts on
+      * the driver when nothing was written. */
+    private def stageRewrite(name: String, m: TableMeta, untouched: Seq[FileRecord],
+        rewritten: Seq[FileRecord], fresh: Option[DataFrame], check: Boolean): WriteRoute = {
       val base = baseOf(name)
-      val written = fresh.map { df0 =>
-        // rows already on the driver have nothing to cache, and a cached
-        // plan is no `LocalRelation` the write's guard could take
-        val df = if (check && TableCatalog.localBatch(df0).isEmpty) df0.cache() else df0
-        val rel = freshDir(name)
-        val route = try {
-          if (check) validate(m, name,
-            if (untouched.isEmpty) df
-            else frameOf(m.schema, resolveDirs(name, untouched)).unionByName(df),
-            resolve = fkScan)
-          writeData(m, df, absTableDir(name).resolve(rel).toString,
-            parts = rewriteParts(name, untouched, rewritten))
-        } finally df.unpersist() // failed validation must not leak cache
-        dirStats(rel) = collectStats(m, name, rel)
-        (rel, route)
+      val stay = untouched.map(_.path).toSet
+      val before = view(name)
+      val (route, out) = fresh.fold((WriteRoute(None, Some(0), onDriver = true), Manifest(Nil, Nil))) {
+        df0 =>
+          // rows already on the driver have nothing to cache, and a cached
+          // plan is no `LocalRelation` the write's guard could take
+          val df = if (check && TableCatalog.localBatch(df0).isEmpty) df0.cache() else df0
+          try {
+            if (check) validate(m, name,
+              if (untouched.isEmpty) df
+              else frameOf(m.schema, name, untouched.map(_.path)).unionByName(df),
+              resolve = fkScan)
+            writeData(m, name, freshDir(name), df, parts = rewriteParts(untouched, rewritten))
+          } finally df.unpersist() // failed validation must not leak cache
       }
-      staged(name) = (base, written.map(_._1).toSeq ++ untouched)
-      written.fold(WriteRoute(None, Some(0), onDriver = true))(_._2)
+      staged(name) = (base, Manifest(out.files ++ untouched,
+        out.stats ++ before.stats.filter(st => stay(st.path))))
+      route
     }
 
     /** Files a copy-on-write rewrite writes back: a full rewrite
@@ -2551,16 +2463,15 @@ class TableCatalog(spark: SparkSession, val root: String) {
       * files of about the view's average size ([[shareParts]]), never
       * more than it replaces — so rewriting one file of four is one
       * unshuffled write task, not a range sample plus a shuffle. */
-    private def rewriteParts(name: String, untouched: Seq[String],
-        rewritten: Seq[String]): Int =
+    private def rewriteParts(untouched: Seq[FileRecord], rewritten: Seq[FileRecord]): Int =
       if (untouched.isEmpty) Int.MaxValue
       else {
-        val rows = rewritten.map(dirRowCount(name, _)).sum
-        math.min(rewritten.size, shareParts(rows, rows + untouched.map(dirRowCount(name, _)).sum))
+        val rows = rewritten.map(_.rows).sum
+        math.min(rewritten.size, shareParts(rows, rows + untouched.map(_.rows).sum))
       }
 
     /** Parts for writing `rows` of a view that then holds `total` rows
-      * (footer row counts): the rows' share of `defaultParallelism`,
+      * (recorded footer row counts): the rows' share of `defaultParallelism`,
       * at least 1, so the files stay about the view's average size. A
       * small append is one part; a bulk load into an empty table
       * spreads over every core. */
@@ -2606,8 +2517,8 @@ class TableCatalog(spark: SparkSession, val root: String) {
       * caps, so the statement's projection or filter folds
       * ([[graft.plans.FoldLocalRelations]]) and [[writeData]] writes the
       * result with no job; else a Spark scan of them. */
-    private def rewrittenFrame(name: String, m: TableMeta, rewritten: Seq[String]): DataFrame =
-      bindFiles(m, name, rewritten.flatMap(expandEntry(name, _)), None)._1
+    private def rewrittenFrame(name: String, m: TableMeta, rewritten: Seq[FileRecord]): DataFrame =
+      bindFiles(m, name, rewritten, None)._1
 
     /** Staged MERGE (upsert on the primary key) against the txn view
       * (shared [[mergedFrame]]): only the files that may hold a source
@@ -2666,7 +2577,7 @@ class TableCatalog(spark: SparkSession, val root: String) {
       }
       val m = pinnedMetaOf(name)
       val (untouched, rewritten) = candidates(name, m, lit(true))
-      val current = frameOf(m.schema, resolveDirs(name, rewritten))
+      val current = frameOf(m.schema, name, rewritten.map(_.path))
       mergeUsingRestrict(m, name, current, source, tAlias, sAlias,
         cond, matched, bySource, refsOf(name), scan)
       lastWriteRoute.set(stageRewrite(name, m, untouched, rewritten, Some(mergeUsingFrame(m, name,
@@ -2817,13 +2728,9 @@ class TableCatalog(spark: SparkSession, val root: String) {
       // and aborts with nothing published.
       val claims = scala.collection.mutable.ArrayBuffer[(String, TableMeta)]()
       try {
-        staged.foreach { case (name, (_, dirs)) =>
+        staged.foreach { case (name, (_, view)) =>
           val m = stagedMeta(name)
-          // index stats: the pinned manifest's for the entries the new
-          // version keeps (its version is m.version — checked above)
-          // plus those collected for this txn's own dirs
-          conflictUnless(claimVersion(name, m.version, dirs,
-              viewStats(dirs, pinnedManifest(name))),
+          conflictUnless(claimVersion(name, m.version, view),
             s"write-write conflict on $name: version ${m.version + 1} claimed by another writer")
           claims += (name -> m)
         }
@@ -2865,9 +2772,10 @@ class TableCatalog(spark: SparkSession, val root: String) {
       // fingerprints check, exactly like direct createTable/dropTable
       if (createdTables.nonEmpty) TableCatalog.ddlEpoch(root).incrementAndGet()
       closed = true
-      // staged dirs replaced mid-txn (e.g. insert then update) are
-      // unreferenced by the committed manifests — MVCC garbage; drop
-      val live = staged.flatMap { case (name, (_, dirs)) => liveDirs(name, dirs) }.toSet
+      // staged dirs replaced mid-txn (e.g. insert then update) hold no
+      // file the committed manifests list — MVCC garbage; drop
+      val live = staged.flatMap { case (name, (_, view)) =>
+        view.files.map(f => absTableDir(name).resolve(f.path).getParent) }.toSet
       cleanupCandidates.filterNot(live.contains).foreach(deleteDir)
       deleteDir(Paths.get(root, s".txn-$txnId"))
       TableCatalog.releaseLock(Paths.get(root, s".txn-$txnId").toString)
@@ -3170,6 +3078,12 @@ object TableCatalog {
     references: Map[String, String], // column -> referenced table (FK to its PK)
     version: Int,
     indexes: Seq[String] = Nil) // secondary-indexed columns (schema.rs:154-155)
+
+  /** One data file of a table version, as its manifest records it:
+    * the table-relative path, the footer row count and the uncompressed
+    * row-group bytes (what [[LocalReadMaxBytes]] caps), written once
+    * when the file is staged. */
+  case class FileRecord(path: String, rows: Long, bytes: Long)
 
   /** Per-file column statistics recorded in the manifest for indexed
     * columns — the pruning metadata a secondary index reduces to on

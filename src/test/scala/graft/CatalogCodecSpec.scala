@@ -2,11 +2,13 @@ package graft
 
 import graft.sources.{CatalogCodec, TableCatalog}
 import graft.sources.CatalogCodec.Manifest
-import graft.sources.TableCatalog.{FileStat, TableMeta}
+import graft.sources.TableCatalog.{FileRecord, FileStat, TableMeta}
 import java.nio.file.{Files, Path, Paths}
 import java.nio.file.attribute.FileTime
+import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** The catalog's on-disk JSON records ([[CatalogCodec]]): files in the
   * layout of the earlier hand-written writer read back to the same
@@ -73,10 +75,14 @@ class CatalogCodecSpec extends AnyFunSuite {
     references = Map("fk" -> "par"),
     version = 1,
     indexes = Seq("ctl\u0001x", "id"))
-  private val expectedManifest = Manifest(Seq("data/stmt-1"), Map("data/stmt-1" -> 3L),
+  private val expectedManifest = Manifest(Nil,
     Seq("id" -> ("1", "9"), "q\"b" -> ("v\"1", "v\"1"), "back\\slash" -> ("v\\2", "v\\2"),
       "new\nline" -> ("v\n3", "v\n3"), "ctl\u0001x" -> ("z}\u0001\"", "z}\u0001\""))
-      .map { case (c, (mn, mx)) => FileStat("data/stmt-1/part-0.parquet", c, mn, mx) })
+      .map { case (c, (mn, mx)) => FileStat("data/stmt-1/part-0.parquet", c, mn, mx) },
+    Seq("data/stmt-1" -> 3L))
+  // the same version as the codec writes it: one record per data file
+  private val expectedRecords = Manifest(
+    Seq(FileRecord("data/stmt-1/part-0.parquet", 3L, 1234L)), expectedManifest.stats)
 
   test("records in the earlier writers' layout read back to the same values") {
     val root = Files.createTempDirectory("graft-codec")
@@ -96,7 +102,7 @@ class CatalogCodecSpec extends AnyFunSuite {
     assert(cat.meta("par").primaryKey.isEmpty && cat.meta("par").defaults.isEmpty)
     assert(cat.currentVersion(t) == 1)
     assert(CatalogCodec.readManifest(tdir.resolve("versions/v1.json")) == expectedManifest)
-    assert(CatalogCodec.readManifest(tdir.resolve("versions/v0.json")) == Manifest(Nil, Map.empty, Nil))
+    assert(CatalogCodec.readManifest(tdir.resolve("versions/v0.json")) == Manifest(Nil, Nil))
     // the stored row counts serve history with no data on disk
     val h = cat.history(t).collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2), r.getBoolean(3)))
     assert(h.toSeq == Seq((0, 0, 0L, false), (1, 1, 3L, true)))
@@ -125,16 +131,17 @@ class CatalogCodecSpec extends AnyFunSuite {
     assert(back == narrow.copy(defaults =
       Map("i" -> 3L, "f" -> 0.1, "big" -> Long.MaxValue, "neg" -> -1.5e300)))
     assert(back.defaults.values.map(_.getClass.getSimpleName).toSet == Set("Long", "Double"))
-    assert(roundTrip("v1.json", CatalogCodec.manifestBytes(expectedManifest))(CatalogCodec.readManifest) ==
-      expectedManifest)
+    assert(roundTrip("v1.json", CatalogCodec.manifestBytes(expectedRecords))(CatalogCodec.readManifest) ==
+      expectedRecords)
     val entry = (Map(t -> 4, "a" -> 0), Seq("new\nline"))
     assert(roundTrip("g.json", CatalogCodec.entryBytes(entry._1, entry._2))(CatalogCodec.readEntry) ==
       Some(entry))
     assert(roundTrip("pin.json", CatalogCodec.pinBytes(Map(t -> 2)))(CatalogCodec.readPin) == Map(t -> 2))
     // the manifest keeps the earlier layout's `"key": value` spacing
-    val text = new String(CatalogCodec.manifestBytes(Manifest(Seq("data/a", "data/b"),
-      Map("data/a" -> 1L, "data/b" -> 2L), Nil)), "UTF-8")
-    assert(text == """{"dirs": ["data/a","data/b"],"dirRows": {"data/a": 1,"data/b": 2},"stats": []}""")
+    val text = new String(CatalogCodec.manifestBytes(Manifest(Seq(
+      FileRecord("data/a/p.parquet", 1L, 10L), FileRecord("data/b/p.parquet", 2L, 20L)), Nil)), "UTF-8")
+    assert(text == """{"files": [{"rows": 1,"bytes": 10,"path": "data/a/p.parquet"},""" +
+      """{"rows": 2,"bytes": 20,"path": "data/b/p.parquet"}],"stats": []}""")
     TableCatalog.deleteRecursively(dir)
   }
 
@@ -181,5 +188,70 @@ class CatalogCodecSpec extends AnyFunSuite {
     cat.vacuum("t", keep = 1, graceMs = 0)
     assert(!Files.exists(pinFile))
     assert(!Files.exists(Paths.get(cat.root, "t", "versions", "v0.json")))
+  }
+
+  test("an old-shape manifest over real files scans, prunes, takes an UPDATE and vacuums") {
+    val root = Files.createTempDirectory("graft-codec-old")
+    val tdir = root.resolve("o")
+    val schema = StructType(Seq(StructField("k", LongType, nullable = false),
+      StructField("s", StringType)))
+    def files(dir: String): Set[String] =
+      if (!Files.isDirectory(tdir.resolve(dir))) Set.empty
+      else {
+        val l = Files.list(tdir.resolve(dir))
+        try l.iterator().asScala.map(_.getFileName.toString).filter(_.endsWith(".parquet")).toSet
+        finally l.close()
+      }
+    /** One parquet file of keys [from, until) added to `dir`. */
+    def load(dir: String, from: Long, until: Long): String = {
+      val before = files(dir)
+      spark.range(from, until).select(col("id").as("k"), format_string("s%03d", col("id")).as("s"))
+        .coalesce(1).write.mode("append").parquet(tdir.resolve(dir).toString)
+      s"$dir/${(files(dir) -- before).head}"
+    }
+    // data/a: k 0-49 and 50-99; data/b: k 100-119 and 120-139, of which
+    // the manifest lists only the first, as a single-file entry
+    val (a0, a1) = (load("data/a", 0, 50), load("data/a", 50, 100))
+    val (b0, b1) = (load("data/b", 100, 120), load("data/b", 120, 140))
+    write(tdir.resolve("meta.json"), new String(CatalogCodec.metaBytes(
+      TableMeta(schema, Some("k"), Nil, Nil, Map.empty, Map.empty, 1, Seq("k"))), "UTF-8"))
+    write(tdir.resolve("versions/v0.json"), manifestV0)
+    write(tdir.resolve("versions/v1.json"), s"""{"dirs": ["data/a","$b0"], """ +
+      s""""dirRows": {"data/a": 100,"$b0": 20}, "stats": [""" +
+      s"""{"path": "$a0", "column": "k", "mn": "0", "mx": "49"},""" +
+      s"""{"path": "$a1", "column": "k", "mn": "50", "mx": "99"},""" +
+      s"""{"path": "$b0", "column": "k", "mn": "100", "mx": "119"}]}""")
+    val cat = new TableCatalog(spark, root.toString)
+    def keys(df: org.apache.spark.sql.DataFrame): Seq[Long] =
+      df.select("k").as[Long].collect().toSeq.sorted
+    // history counts the stored entries, unexpanded
+    val h = cat.history("o").collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2)))
+    assert(h.toSeq == Seq((0, 0, 0L), (1, 2, 120L)))
+    assert(keys(cat.scan("o")) == (0L until 120L))
+    val (kept, all) = cat.planFiles("o", col("k") === 60L)
+    assert(kept == Seq(a1) && all.toSet == Set(a0, a1, b0), (kept, all))
+    assert(cat.planFiles("o", col("k") === 130L)._1.isEmpty)
+    assert(keys(cat.scan("o", col("k") >= 45L && col("k") <= 105L)) == (45L to 105L))
+
+    cat.update("o", Map("s" -> lit("u")), col("k") === 60L)
+    val v2 = CatalogCodec.readManifest(tdir.resolve("versions/v2.json"))
+    assert(Files.readString(tdir.resolve("versions/v2.json")).startsWith("{\"files\": ["))
+    assert(v2.entries.isEmpty && v2.files.size == 3 &&
+      v2.files.map(_.path).toSet.intersect(Set(a0, a1, b0)) == Set(a0, b0), v2)
+    assert(v2.files.map(_.rows).sum == 120L && v2.files.forall(_.bytes > 0))
+    assert(v2.stats.map(_.path).toSet == v2.files.map(_.path).toSet)
+    val updated = cat.scan("o").filter(col("s") === "u").select("k").as[Long].collect().toSeq
+    assert(updated == Seq(60L) && keys(cat.asOf("o", 1)) == (0L until 120L))
+
+    cat.vacuum("o", keep = 1, graceMs = 0)
+    // the rewritten file and the never-listed one go with their sidecars
+    for (f <- Seq(a1, b1)) {
+      val p = tdir.resolve(f)
+      assert(!Files.exists(p) && !Files.exists(p.resolveSibling(s".${p.getFileName}.crc")), f)
+    }
+    assert(Seq(a0, b0).forall(f => Files.exists(tdir.resolve(f))))
+    assert(keys(cat.scan("o")) == (0L until 120L))
+    assert(cat.scan("o").filter(col("s") === "u").count() == 1)
+    TableCatalog.deleteRecursively(root)
   }
 }

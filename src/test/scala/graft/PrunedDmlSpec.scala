@@ -1,6 +1,6 @@
 package graft
 
-import graft.sources.TableCatalog
+import graft.sources.{CatalogCodec, TableCatalog}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -59,15 +59,14 @@ class PrunedDmlSpec extends AnyFunSuite {
   private def delete(cat: TableCatalog) =
     (t: String, w: Column) => { cat.delete(t, w); () }
 
-  private def versionFile(cat: TableCatalog, name: String, v: Int): String =
-    java.nio.file.Files.readString(java.nio.file.Paths.get(cat.root, name, "versions", s"v$v.json"))
+  /** The paths of a version's file records. */
+  private def files(cat: TableCatalog, name: String, v: Int): Seq[String] =
+    CatalogCodec.readManifest(java.nio.file.Paths.get(cat.root, name, "versions", s"v$v.json"))
+      .files.map(_.path)
 
-  /** The entries (dirs and single files) of a version's manifest. */
-  private def entries(cat: TableCatalog, name: String, v: Int): Seq[String] = {
-    val body = versionFile(cat, name, v)
-    val dirs = body.substring(body.indexOf("\"dirs\": [") + 9, body.indexOf("]"))
-    "\"([^\"]+)\"".r.findAllMatchIn(dirs).map(_.group(1)).toSeq
-  }
+  /** The data dirs of a version's file records, in record order. */
+  private def entries(cat: TableCatalog, name: String, v: Int): Seq[String] =
+    files(cat, name, v).map(f => f.take(f.lastIndexOf('/'))).distinct
 
   test("a one-key DELETE on a 4-file indexed table publishes 3 untouched entries plus 1 new dir") {
     val cat = freshCatalog()
@@ -79,17 +78,18 @@ class PrunedDmlSpec extends AnyFunSuite {
       s"a freshly loaded table is one dir of 4 files: ${cat.planFiles("t", lit(true))._2}")
     // SQL text: the predicate arrives as a parsed expression, not the Column API
     g.execute("DELETE FROM t WHERE k = 1234")
-    val now = entries(cat, "t", v0 + 1)
-    val (files, dirs) = now.partition(_.endsWith(".parquet"))
-    assert(files.size == 3 && files.forall(_.startsWith(loadDir.head + "/")), now)
-    assert(dirs.size == 1 && dirs.head.startsWith("data/stmt-"), now)
+    // 3 untouched load files + 1 new file under a `data/stmt-` dir
+    val now = files(cat, "t", v0 + 1)
+    val (untouched, fresh) = now.partition(_.startsWith(loadDir.head + "/"))
+    assert(untouched.size == 3, now)
+    assert(fresh.size == 1 && fresh.head.startsWith("data/stmt-"), now)
     assert(cat.scan("t").count() == 3999 && cat.scan("t", col("k") === 1234L).count() == 0)
     // the rewritten file went back as one file, not one per core
     assert(cat.planFiles("t", lit(true))._2.size == 4)
     // the next statement prunes over the file entries too
     g.execute("UPDATE t SET d = -1 WHERE k BETWEEN 3990 AND 3999")
-    val after = entries(cat, "t", v0 + 2)
-    assert(after.size == 4 && after.count(_.endsWith(".parquet")) == 2, after)
+    val after = files(cat, "t", v0 + 2)
+    assert(after.size == 4 && after.count(_.startsWith(loadDir.head + "/")) == 2, after)
     assert(cat.scan("t").filter(col("d") === -1.0).count() == 10)
   }
 
@@ -97,11 +97,12 @@ class PrunedDmlSpec extends AnyFunSuite {
     val cat = freshCatalog()
     loaded(cat, "t", 4000)
     val v0 = cat.currentVersion("t")
+    val loadDir = entries(cat, "t", v0).head
     val before = rows(cat, "t")
     cat.merge("t", Seq((10L, 99.0, "up"), (20L, 98.0, "up2"))
       .toDF("k", "d", "s"))
-    val now = entries(cat, "t", v0 + 1)
-    assert(now.count(_.endsWith(".parquet")) == 3 && now.size == 4, now)
+    val now = files(cat, "t", v0 + 1)
+    assert(now.count(_.startsWith(loadDir + "/")) == 3 && now.size == 4, now)
     val want = before.filterNot(r => r.startsWith("10|") || r.startsWith("20|")) ++
       Seq("10|99.0|up", "20|98.0|up2")
     assert(rows(cat, "t") == want.sorted)
@@ -248,18 +249,19 @@ class PrunedDmlSpec extends AnyFunSuite {
     val cat = freshCatalog()
     loaded(cat, "t", 4000)
     val v0 = cat.currentVersion("t")
+    val loadDir = entries(cat, "t", v0).head
     val before = rows(cat, "t")
     cat.update("t", Map("d" -> lit(7.0)), col("k") === 100L)
     cat.delete("t", col("k") === 3000L)
     val v2 = cat.currentVersion("t")
     val now = rows(cat, "t")
-    assert(entries(cat, "t", v2).count(_.endsWith(".parquet")) == 2)
+    assert(files(cat, "t", v2).count(_.startsWith(loadDir + "/")) == 2)
     // asOf the pre-update version, and a pinned pruned read of it
     assert(rows(cat.asOf("t", v0)) == before)
     assert(cat.planFilesAt("t", v0, col("k") === 100L)._1.size == 1)
-    // history: n_dirs counts entries, n_rows stays the row count
+    // history: n_files counts file records, n_rows stays the row count
     val h = cat.history("t").collect().map(r => r.getInt(0) -> (r.getInt(1), r.getLong(2))).toMap
-    assert(h(v0) == (1, 4000L) && h(v2) == (4, 3999L), h)
+    assert(h(v0) == (4, 4000L) && h(v2) == (4, 3999L), h)
     // clone links file entries into their parent dirs
     cat.cloneTable("t", "c")
     assert(rows(cat, "c") == now)
