@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.scheduler._
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 /** Per-job profile of one declared query (optimization-round dev tool):
   * runs `<query>` once against `<sfDir>` through the bench's noop sink
@@ -9,7 +11,9 @@ import org.apache.spark.scheduler._
   * time and the jobs into construct (until `fn(spark, dir)` returns:
   * the driver-side actions that build the frame) and execute (the
   * drain); a job's phase is the local property its submitting thread
-  * carried. Args: <sfDir> <name> [runs]. */
+  * carried, and its label is the action of the SQL execution it runs
+  * under, so an AQE stage job reads like the `collect` that started it.
+  * Args: <sfDir> <name> [runs]. */
 object JobProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
@@ -25,16 +29,27 @@ object JobProfile {
     val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String, String)]()
     val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val jobs = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+    // each SQL execution's description (its action's call site, such as
+    // `collect at Scale.scala:85`) by execution id; the bus delivers an
+    // execution's start before any job it runs
+    val actions = new java.util.concurrent.ConcurrentHashMap[Long, String]()
     val phaseKey = "graft.jobprofile.phase"
     val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => actions.put(s.executionId, s.description)
+        case _ =>
+      }
       override def onJobStart(j: SparkListenerJobStart): Unit = {
-        // the final stage's name carries the action's call site — the
-        // only per-job attribution available without descriptions
+        def prop(k: String) = Option(j.properties).flatMap(p => Option(p.getProperty(k)))
+        // a job is named by its description, else by the action of the
+        // SQL execution it runs under (its root execution's, when nested),
+        // else by its final stage's call site — which for an AQE stage job
+        // is only the pool thread that submitted it
+        val action = Seq(SQLExecution.EXECUTION_ROOT_ID_KEY, SQLExecution.EXECUTION_ID_KEY)
+          .flatMap(prop).flatMap(_.toLongOption).flatMap(id => Option(actions.get(id))).headOption
         val site = j.stageInfos.lastOption.map(_.name).getOrElse("")
-        val desc = Option(j.properties.getProperty("spark.job.description"))
-          .filter(_.nonEmpty).getOrElse(site)
-        val phase = Option(j.properties).flatMap(p => Option(p.getProperty(phaseKey)))
-        starts.put(j.jobId, (System.nanoTime(), desc, phase.getOrElse("unscoped")))
+        val desc = prop("spark.job.description").filter(_.nonEmpty).orElse(action).getOrElse(site)
+        starts.put(j.jobId, (System.nanoTime(), desc, prop(phaseKey).getOrElse("unscoped")))
       }
       override def onJobEnd(j: SparkListenerJobEnd): Unit =
         Option(starts.remove(j.jobId)).foreach { case (t0, desc, phase) =>
@@ -48,6 +63,7 @@ object JobProfile {
     (1 to runs).foreach { r =>
       lines.clear()
       jobs.clear()
+      actions.clear()
       sc.addSparkListener(listener)
       sc.setLocalProperty(phaseKey, "construct")
       val t0 = System.nanoTime()

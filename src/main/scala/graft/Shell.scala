@@ -3,7 +3,9 @@ package graft
 import java.io.{BufferedReader, InputStreamReader, PrintStream}
 
 import graft.sources.TableCatalog
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.execution.{LocalTableScanExec, SQLExecution}
 import scala.util.control.NonFatal
 
 /** Interactive SQL client over [[GraftSQL]] — the analog of the
@@ -55,7 +57,7 @@ object Shell {
       // toLocalIterator would hold the session across prints; a client
       // result set is human-scale — collect like the reference's
       // row-stream drain (entanglesql.rs:193-198)
-      df.collect().foreach { row =>
+      resultRows(df).foreach { row =>
         out.println(row.toSeq.map {
           case null => "NULL"
           case true => "TRUE"
@@ -158,6 +160,22 @@ object Shell {
         drainStatements()
       }
     }
+  }
+
+  /** `df`'s rows, as `df.collect()` returns them. A plan that ran on the
+    * driver (a folded SELECT, a statement's status rows) is a
+    * `LocalTableScanExec` whose rows are already computed: they are
+    * converted interpreted, with no Row encoder and no projection
+    * codegen, inside the one SQL execution `collect()` opens, so
+    * listeners see the same execution id, start and end events and
+    * `onSuccess("collect", qe)`. Any other plan is collected. */
+  private[graft] def resultRows(df: DataFrame): Seq[Row] = df.queryExecution.executedPlan match {
+    case scan: LocalTableScanExec =>
+      SQLExecution.withNewExecutionId(df.queryExecution, Some("collect")) {
+        val toRow = CatalystTypeConverters.createToScalaConverter(df.schema)
+        scan.rows.map(toRow(_).asInstanceOf[Row])
+      }
+    case _ => df.collect().toSeq
   }
 
   private def dirBytes(p: java.nio.file.Path): Long =

@@ -645,7 +645,8 @@ class TableCatalog(spark: SparkSession, val root: String) {
   protected def readLocal(m: TableMeta, name: String, files: Seq[String],
       prune: Option[Column]): Seq[org.apache.spark.sql.catalyst.InternalRow] = {
     import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.sql.catalyst.expressions.{BindReferences, Predicate, UnsafeProjection}
+    import org.apache.spark.sql.catalyst.expressions.{BindReferences, BoundReference,
+      InterpretedUnsafeProjection, Predicate}
     import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation}
     import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
     val schema = readSchema(m)
@@ -671,7 +672,10 @@ class TableCatalog(spark: SparkSession, val root: String) {
       else (conf, new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat()
         .buildReaderWithPartitionValues(spark, schema, new StructType(), schema, Nil,
           Map(FileFormat.OPTION_RETURNING_BATCH -> "false"), spark.sessionState.newHadoopConf())))._2
-    val copy = UnsafeProjection.create(schema)
+    // interpreted: it only copies the few rows `keep` passes, which is
+    // less than generating a projection per statement
+    val copy = InterpretedUnsafeProjection.createProjection(
+      attrs.zipWithIndex.map { case (a, i) => BoundReference(i, a.dataType, a.nullable) })
     val out = Vector.newBuilder[InternalRow]
     files.foreach { rel =>
       val p = absTableDir(name).resolve(rel)

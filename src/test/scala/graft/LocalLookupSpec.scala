@@ -3,7 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import graft.sources.{CatalogCodec, TableCatalog}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -90,15 +90,31 @@ class LocalLookupSpec extends AnyFunSuite {
 
   /** Rows of `sql` on both catalogs, asserting that `t`, when the
     * statement binds it, went local on A and to Spark on B. */
-  private def both(sql: String): (Seq[String], Seq[String]) = {
+  private def both(sql: String, t: String = "t"): (Seq[String], Seq[String]) = {
     val a = sorted(small.execute(sql))
-    val aRoute = small.lastRoutes.get("t").map(_ => route(small, "t"))
+    val aRoute = small.lastRoutes.get(t).map(_ => route(small, t))
     val b = sorted(big.execute(sql))
-    val bRoute = big.lastRoutes.get("t").map(_ => route(big, "t"))
-    aRoute.foreach(r => assert(r.localRows.isDefined, s"A must read t locally: $sql $r"))
+    val bRoute = big.lastRoutes.get(t).map(_ => route(big, t))
+    aRoute.foreach(r => assert(r.localRows.isDefined, s"A must read $t locally: $sql $r"))
     bRoute.foreach(r => assert(r.localRows.isEmpty && r.footerRows.exists(_ > (1L << 16)),
-      s"B must scan t on Spark: $sql $r"))
+      s"B must scan $t on Spark: $sql $r"))
     (a, b)
+  }
+
+  /** `DriverWriteSpec`'s hostile types over ids in [0, n): keys
+    * `id % 1000`, NULL/NaN/−0.0/0.0 doubles, DECIMALs, STRINGs with NUL,
+    * é, 日本 and emoji, TIMESTAMP_NTZ before 1901 and in a leap year, and
+    * an all-NULL column. */
+  private def hostile(n: Long, pad: Boolean): DataFrame = {
+    val id = col("id")
+    def pick(vals: Column*) = element_at(array(vals: _*), (id % vals.size + 1).cast(IntegerType))
+    session.range(0, n).select((id % 1000).as("k"),
+      pick(lit(null).cast(DoubleType), lit(Double.NaN), lit(-0.0), lit(0.0), lit(1.5), lit(-2.0)).as("d"),
+      pick(Seq("1.000", null, "-0.5", "99999.999").map(v => lit(v).cast(DecimalType(12, 3))): _*).as("dec"),
+      pick(Seq(null, "", "a\u0000", "é", "日本", "😀").map(v => lit(v).cast(StringType)): _*).as("s"),
+      pick(lit(null).cast(TimestampNTZType), lit(java.time.LocalDateTime.of(1900, 1, 1, 0, 0)),
+        lit(java.time.LocalDateTime.of(2024, 2, 29, 12, 34, 56, 789000000))).as("ts"),
+      lit(null).cast(StringType).as("z"), lit(pad).as("pad"))
   }
 
   private def jobsOf[A](tag: String)(body: => A): (A, Int) = {
@@ -180,6 +196,22 @@ class LocalLookupSpec extends AnyFunSuite {
         assert(k5 == Seq(if (begin.contains("AS OF")) "5|2.5" else "5|99.5"), s"$begin: $k5")
       } finally { small.execute("ROLLBACK"); big.execute("ROLLBACK") }
     }
+
+    // the local copy of hostile-typed rows equals Spark's scan of them
+    for ((g, padded) <- Seq(small -> false, big -> true)) {
+      val rows = hostile(1000, pad = false)
+      g.catalog.createTable("h", rows.schema, indexes = Seq("k"))
+      g.catalog.insert("h", if (padded) rows.unionByName(hostile(100000L * 4, pad = true)) else rows)
+    }
+    for (sql <- Seq("SELECT * FROM h WHERE k = 17 AND NOT pad",
+        "SELECT * FROM h WHERE k BETWEEN 100 AND 160 AND NOT pad",
+        "SELECT k, d, s FROM h WHERE k < 300 AND d = NAN AND NOT pad")) {
+      val (a, b) = both(sql, "h")
+      assert(a == b && a.nonEmpty, s"routes disagree on $sql\nlocal: ${a.take(5)}\nspark: ${b.take(5)}")
+    }
+    val (hr, _) = both("SELECT d, s, z FROM h WHERE k BETWEEN 0 AND 59 AND NOT pad", "h")
+    assert(hr.size == 60 && hr.exists(_.startsWith("-0.0|")) && hr.exists(_.contains("|a\u0000|")) &&
+      hr.exists(_.contains("|😀|")) && hr.forall(_.endsWith("|null")), hr)
   }
 
   test("point, range and AS OF SELECTs under the cap run no Spark job; above it they do") {
