@@ -30,7 +30,7 @@ object JobProfile {
     val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val jobs = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
     // each SQL execution's description (its action's call site, such as
-    // `collect at Scale.scala:85`) by execution id; the bus delivers an
+    // `collect at Scale.scala:84`) by execution id; the bus delivers an
     // execution's start before any job it runs
     val actions = new java.util.concurrent.ConcurrentHashMap[Long, String]()
     val phaseKey = "graft.jobprofile.phase"
@@ -41,14 +41,15 @@ object JobProfile {
       }
       override def onJobStart(j: SparkListenerJobStart): Unit = {
         def prop(k: String) = Option(j.properties).flatMap(p => Option(p.getProperty(k)))
-        // a job is named by its description, else by the action of the
-        // SQL execution it runs under (its root execution's, when nested),
-        // else by its final stage's call site — which for an AQE stage job
-        // is only the pool thread that submitted it
+        // a job is named by the action of the SQL execution it runs under
+        // (its root execution's, when nested), else by its description,
+        // else by its final stage's call site. An AQE stage job's call
+        // site, and the description Spark gives a recursive CTE's loop
+        // job, are only the pool thread that submitted it.
         val action = Seq(SQLExecution.EXECUTION_ROOT_ID_KEY, SQLExecution.EXECUTION_ID_KEY)
           .flatMap(prop).flatMap(_.toLongOption).flatMap(id => Option(actions.get(id))).headOption
         val site = j.stageInfos.lastOption.map(_.name).getOrElse("")
-        val desc = prop("spark.job.description").filter(_.nonEmpty).orElse(action).getOrElse(site)
+        val desc = action.orElse(prop("spark.job.description").filter(_.nonEmpty)).getOrElse(site)
         starts.put(j.jobId, (System.nanoTime(), desc, prop(phaseKey).getOrElse("unscoped")))
       }
       override def onJobEnd(j: SparkListenerJobEnd): Unit =

@@ -672,8 +672,9 @@ class TableCatalog(spark: SparkSession, val root: String) {
       else (conf, new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat()
         .buildReaderWithPartitionValues(spark, schema, new StructType(), schema, Nil,
           Map(FileFormat.OPTION_RETURNING_BATCH -> "false"), spark.sessionState.newHadoopConf())))._2
-    // interpreted: it only copies the few rows `keep` passes, which is
-    // less than generating a projection per statement
+    // interpreted, with no per-statement codegen: it copies only the
+    // rows `keep` passes, a handful for a point read (a rewrite, with no
+    // `prune`, copies its files' rows, within the local-read caps)
     val copy = InterpretedUnsafeProjection.createProjection(
       attrs.zipWithIndex.map { case (a, i) => BoundReference(i, a.dataType, a.nullable) })
     val out = Vector.newBuilder[InternalRow]
